@@ -26,13 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Rounds the last [[connectedComponents]] call took (0 when the
-    * bounded driver solve answered) — profiling / regression-test
-    * observability only (ProfileCC, the chain spec); single-threaded
-    * use assumed, like the rest of a driver program.
-    */
-  @volatile private[graft] var lastRounds: Int = 0
-
   /** Distinct-edge bar under which [[connectedComponents]] solves on
     * the driver instead of iterating Spark rounds. 100k oriented
     * edges collect to ~1.6 MB of longs — meta-sized by the same
@@ -72,7 +65,21 @@ object ConnectedComponents {
       dstCol: String = "dst",
       maxIter: Int = 50,
       jumpSteps: Int = 2,
-      driverSolveMax: Int = DefaultDriverSolveMax): DataFrame = {
+      driverSolveMax: Int = DefaultDriverSolveMax): DataFrame =
+    componentsWithRounds(edges, srcCol, dstCol, maxIter, jumpSteps, driverSolveMax)._1
+
+  /** [[connectedComponents]] together with the number of alternation
+    * rounds it ran (0 when the bounded driver solve answered) — for the
+    * round-count specs and ProfileCC. The count is a local of the call,
+    * so concurrent callers never see each other's rounds.
+    */
+  private[graft] def componentsWithRounds(
+      edges: DataFrame,
+      srcCol: String = "src",
+      dstCol: String = "dst",
+      maxIter: Int = 50,
+      jumpSteps: Int = 2,
+      driverSolveMax: Int = DefaultDriverSolveMax): (DataFrame, Int) = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -127,10 +134,9 @@ object ConnectedComponents {
       val labels: Seq[(Long, Long)] = arr.iterator
         .flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
         .map((x: Long) => (x, find(x)))
-      lastRounds = 0
-      return nodes
+      return (nodes
         .join(labels.toDF("id", "__root"), Seq("id"), "left")
-        .select($"id", coalesce($"__root", $"id").as("component"))
+        .select($"id", coalesce($"__root", $"id").as("component")), 0)
     }
 
     while (!converged && iter < maxIter) {
@@ -189,7 +195,6 @@ object ConnectedComponents {
       star = cur
       iter += 1
     }
-    lastRounds = iter
     // A non-converged star can map one node to SEVERAL labels — the
     // final join would then fan out to duplicate (id, component) rows
     // and silently corrupt downstream dedup. Fail loudly instead;
@@ -199,8 +204,8 @@ object ConnectedComponents {
       s"connectedComponents did not converge within $maxIter iterations — " +
         "raise maxIter (diameter of the pair graph exceeds the bound)")
 
-    nodes.join(star.select($"u".as("id"), $"v".as("__root")), Seq("id"), "left")
-      .select($"id", coalesce($"__root", $"id").as("component"))
+    (nodes.join(star.select($"u".as("id"), $"v".as("__root")), Seq("id"), "left")
+      .select($"id", coalesce($"__root", $"id").as("component")), iter)
   }
 
   /** Cheap order-independent edge-set signature for the convergence

@@ -1,130 +1,60 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Persistable SimHash index: fingerprint the kept corpus once, probe
-  * many times with incoming batches — the Hamming-distance member of
-  * the build-once/probe-many family ([[LshIndex]] = text Jaccard,
-  * [[IvfIndex]] = embedding cosine, this = text Hamming). The one-shot
+  * many times with incoming batches — the text member of the Hamming
+  * family ([[LshIndex]] = text Jaccard, [[IvfIndex]] = embedding
+  * cosine, this = text Hamming). The one-shot
   * [[TextDedup.simHashPairsSelfBlocked]] re-tokenizes and re-signs the
-  * whole corpus per call; here [[build]] stores one 32-bit fingerprint
-  * plus `segments` pigeonhole entry rows per document, and
-  * [[pairsAgainst]] signs only the incoming batch.
+  * whole corpus per call; here only the incoming batch is signed.
   *
-  * Exactness: candidate generation keeps the pigeonhole guarantee —
-  * two hashes within Hamming distance `d < segments` agree exactly on
-  * at least one segment — so a probe returns EXACTLY the brute-force
-  * cross-corpus pairs at `maxDistance`, modulo buckets suppressed by
-  * the frozen cap (pinned by SimHashIndexSpec). Unlike [[LshIndex]]
-  * there is NO stop set and therefore no staleness trade-off: the only
-  * frozen statistics are bucket counts, and [[compact]] repairs those
-  * from stored rows alone.
+  * This object is a signing step over [[HammingIndex]], the one
+  * pigeonhole kernel: every method projects `TextDedup.simHash(text,
+  * hasher) AS h` — a 32-bit fingerprint, cut into `segments` near-equal
+  * bit ranges — and hands it to the kernel, which owns the segment
+  * rows, bucket counts, cap accounting, verification and lifecycle. The
+  * token hasher is frozen in the meta row (`hasher=murmur3|md5`), so
+  * probes, appends and gates re-sign with the build's recipe. Exactness,
+  * cap accounting (over-cap buckets kept at build and reported per
+  * probe; deleted and recorded by compact/merge) and the stored layout
+  * `(id, seg, value, cnt, h, params)` are the kernel's.
   *
   * The segment count is frozen at build (entry rows are per-segment);
   * `maxDistance` stays a PROBE argument bounded by `segments - 1` —
   * build with more segments than the largest distance any future probe
   * will ask for.
-  *
-  * Index layout: ONE DataFrame, row kind discriminated by `seg`:
-  *   - `seg == -1` (one row): metadata — `params` holds the frozen
-  *     build parameters as a `v1;k=v;...` string.
-  *   - `seg == -2` (one row per doc): `h` = the 32-bit SimHash
-  *     fingerprint (verification compares these; 8 bytes per doc).
-  *   - `seg in [0, segments)` (one row per doc per segment): `value` =
-  *     the segment's bit value, `cnt` = that bucket's size at build.
-  *     Buckets past `maxBucketSize` are dropped HERE, exactly as the
-  *     one-shot cap would (a degenerate segment value shared by a huge
-  *     corpus fraction carries no signal and unbounded join cost).
   */
 object SimHashIndex {
 
   /** `seg` value of the single metadata row. */
-  val MetaSeg: Int = -1
+  val MetaSeg: Int = HammingIndex.MetaSeg
   /** `seg` value of per-document fingerprint rows. */
-  val DocSeg: Int = -2
+  val DocSeg: Int = HammingIndex.DocSeg
 
   /** Frozen build parameters, parsed back from the index's meta row. */
   final case class Meta(
       segments: Int, hasherName: String, maxBucketSize: Int,
       builtDroppedBuckets: Long, nDocs: Long) {
-    def hasher: TextDedup.TokenHasher = hasherName match {
-      case "murmur3" => TextDedup.TokenHasher.Murmur3
-      case "md5"     => TextDedup.TokenHasher.PortableMd5
-      case other     => throw new IllegalArgumentException(
-        s"unknown token hasher in SimHash index meta: $other")
-    }
+    def hasher: TextDedup.TokenHasher = TextDedup.TokenHasher.named(hasherName)
   }
 
-  /** Probe result: `pairs` = (id_existing, id_incoming, hamming),
-    * `droppedBuckets` = buckets suppressed at probe time by the
-    * combined cap (build-time drops are in the meta row).
-    */
-  final case class Probe(pairs: DataFrame, droppedBuckets: Long) {
-    def unpersist(): Unit = pairs.unpersist()
-  }
+  type Probe = HammingIndex.Probe
+  val Probe: HammingIndex.Probe.type = HammingIndex.Probe
+  type CapDriftReport = HammingIndex.CapDriftReport
+  val CapDriftReport: HammingIndex.CapDriftReport.type = HammingIndex.CapDriftReport
 
-  private def hasherName(h: TextDedup.TokenHasher): String = h match {
-    case TextDedup.TokenHasher.Murmur3     => "murmur3"
-    case TextDedup.TokenHasher.PortableMd5 => "md5"
-  }
-
-  private def metaString(m: Meta): String =
-    s"v1;segments=${m.segments};hasher=${m.hasherName};cap=${m.maxBucketSize};" +
-      s"builtDropped=${m.builtDroppedBuckets};nDocs=${m.nDocs}"
+  private val K = HammingIndex.SimHash
 
   /** Meta row of `index`. Fails typed on a frame that is not a v1
     * SimHash index.
     */
   def readMeta(index: DataFrame): Meta = {
-    require(index.columns.contains("seg") && index.columns.contains("params"),
-      "not a SimHash index: expected columns (id, seg, value, cnt, h, params)")
-    val rows = index.filter(col("seg") === MetaSeg).select(col("params")).collect()
-    require(rows.length == 1,
-      s"not a SimHash index: expected exactly one meta row (seg = $MetaSeg), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown SimHash index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
-    Meta(
-      segments = kv("segments").toInt, hasherName = kv("hasher"),
-      maxBucketSize = kv("cap").toInt,
-      builtDroppedBuckets = kv("builtDropped").toLong, nDocs = kv("nDocs").toLong)
+    val p = K.params(index)
+    Meta(p.m.segments, p.hasher.get, p.m.maxBucketSize, p.m.builtDroppedBuckets, p.m.nDocs)
   }
 
-  /** (id, seg, value) entry rows for a fingerprint frame. */
-  private def segRows(docs: DataFrame, idCol: String, k: Int): DataFrame =
-    docs.select(col(idCol),
-      posexplode(array(TextDedup.simHashSegments(col("h"), k): _*))
-        .as(Seq("seg", "value")))
-
-  private def indexRows(
-      src: DataFrame, idCol: String, meta: Meta,
-      docs: DataFrame, entries: DataFrame): DataFrame = {
-    val idType = src.schema(idCol).dataType
-    val metaRow = src.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaSeg).as("seg"),
-      lit(null).cast("long").as("value"),
-      lit(null).cast("long").as("cnt"),
-      lit(null).cast("long").as("h"),
-      lit(metaString(meta)).as("params"))
-    val docRows = docs.select(
-      col(idCol), lit(DocSeg).as("seg"),
-      lit(null).cast("long").as("value"), lit(null).cast("long").as("cnt"),
-      col("h"), lit(null).cast("string").as("params"))
-    val entryRows = entries.select(
-      col(idCol), col("seg"), col("value"), col("cnt"),
-      lit(null).cast("long").as("h"), lit(null).cast("string").as("params"))
-    metaRow.unionAll(docRows).unionAll(entryRows)
-  }
-
-  /** Build the index over the kept corpus. Returned frame is persisted
-    * (call `.unpersist()` once written); write it with
-    * `index.write.parquet(path)` and read it back with
-    * `spark.read.parquet` — the probe needs nothing else.
-    *
+  /** Build the index over the kept corpus (see [[HammingIndex.build]]).
     * `segments` bounds every future probe's `maxDistance` (strictly
     * below it — the pigeonhole guarantee); `maxBucketSize` is frozen as
     * the cap every probe enforces on COMBINED (stored + incoming)
@@ -139,364 +69,69 @@ object SimHashIndex {
       hasher: TextDedup.TokenHasher = TextDedup.TokenHasher.Murmur3,
       maxBucketSize: Int = 2000): DataFrame = {
     require(segments > 0 && segments <= 32, "segments must be in [1, 32]")
-    val docs = df
-      .select(col(idCol), TextDedup.simHash(col(textCol), hasher).as("h"))
-      .persist()
-    val nDocs = docs.count()
-    val entriesRaw = segRows(docs, idCol, segments)
-    // persisted: the dropped count and the final index materialization
-    // both read it — left lazy, the bucket aggregate ran twice (r14)
-    val counts = entriesRaw.groupBy("seg", "value").agg(count(lit(1)).as("cnt"))
-      .persist()
-    val builtDropped = counts.filter(col("cnt") > maxBucketSize).count()
-    val entries = entriesRaw
-      .join(counts.filter(col("cnt") <= maxBucketSize), Seq("seg", "value"))
-    val meta = Meta(segments, hasherName(hasher), maxBucketSize, builtDropped, nDocs)
-    val index = indexRows(df, idCol, meta, docs, entries).persist()
-    index.count()
-    counts.unpersist()
-    docs.unpersist()
-    index
+    HammingIndex.buildWith(HammingIndex.Params(
+      HammingIndex.Meta(segments, maxBucketSize, 0L, 0L), Some(hasher.name)), df, idCol, textCol)
   }
 
-  /** Sign and segment the incoming batch — the probe-side CPU. Both
-    * returned frames persisted; callers unpersist.
-    */
-  private def signIncoming(
-      m: Meta, incoming: DataFrame, idCol: String, textCol: String)
-    : (DataFrame, DataFrame) = {
-    val inH = incoming
-      .select(col(idCol).as("id_incoming"),
-        TextDedup.simHash(col(textCol), m.hasher).as("h"))
-      .persist()
-    inH.count()
-    val inSeg = segRows(inH, "id_incoming", m.segments).persist()
-    inSeg.count()
-    (inH, inSeg)
-  }
-
-  /** Cross-corpus near-dup pairs against the stored index:
-    * (`id_existing`, `id_incoming`, `hamming`) with
-    * `hamming <= maxDistance` — exactly the brute-force cross pairs
-    * modulo capped buckets (see object doc). Only the incoming batch is
-    * tokenized and signed; the stored side is a columnar scan. A bucket
-    * is suppressed when its COMBINED size (stored `cnt` + incoming
-    * count) exceeds the frozen cap. Ids must be unique across both
-    * corpora.
+  /** Cross-corpus near-dup pairs (`id_existing`, `id_incoming`,
+    * `hamming`) with `hamming <= maxDistance` — exactly the brute-force
+    * cross pairs modulo capped buckets ([[HammingIndex.pairsAgainst]]).
     */
   def pairsAgainst(
-      index: DataFrame,
-      incoming: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDistance: Int): Probe = {
-    val m = readMeta(index)
-    require(maxDistance >= 0 && maxDistance < m.segments,
-      s"maxDistance must be in [0, ${m.segments - 1}] for the pigeonhole " +
-        s"guarantee (index built with segments = ${m.segments})")
-    val (inH, inSeg) = signIncoming(m, incoming, idCol, textCol)
-    val inCnt = inSeg.groupBy("seg", "value").agg(count(lit(1)).as("cnt_i"))
-    val entries = index.filter(col("seg") >= 0)
-      .select(col(idCol).as("id_existing"), col("seg"), col("value"), col("cnt"))
-    val joined = entries.join(inCnt, Seq("seg", "value")).persist()
-    val droppedBuckets = joined
-      .filter(col("cnt") + col("cnt_i") > m.maxBucketSize)
-      .select("seg", "value").distinct().count()
-    val cands = joined.filter(col("cnt") + col("cnt_i") <= m.maxBucketSize)
-      .join(inSeg, Seq("seg", "value"))
-      .select("id_existing", "id_incoming").distinct()
-    val docsH = index.filter(col("seg") === DocSeg)
-      .select(col(idCol).as("id_existing"), col("h").as("__h_a"))
-    val result = cands
-      .join(docsH, "id_existing")
-      .join(inH.withColumnRenamed("h", "__h_b"), "id_incoming")
-      .withColumn("hamming",
-        TextDedup.hamming(col("__h_a"), col("__h_b")).cast("int"))
-      .filter(col("hamming") <= maxDistance)
-      .select(col("id_existing"), col("id_incoming"), col("hamming"))
-      .persist()
-    result.count()
-    joined.unpersist()
-    inSeg.unpersist()
-    inH.unpersist()
-    Probe(result, droppedBuckets)
-  }
+      index: DataFrame, incoming: DataFrame, idCol: String, textCol: String,
+      maxDistance: Int): Probe =
+    K.pairsAgainst(index, incoming, idCol, textCol, maxDistance)
 
-  /** `incoming` minus near-dups of the indexed corpus (Hamming distance
-    * <= `maxDistance` to ANY stored fingerprint), preserving
-    * `incoming`'s columns and order. No separate exact-text rail is
-    * needed: identical text has identical fingerprints (Hamming 0), so
-    * exact duplicates are always caught — including the degenerate
-    * empty/null-token texts, which all share fingerprint 0 (the
-    * one-shot operator's semantics too).
+  /** `incoming` minus near-dups of the indexed corpus, preserving
+    * `incoming`'s columns and order. Identical text has identical
+    * fingerprints (Hamming 0), so exact duplicates are always caught —
+    * including the degenerate empty/null-token texts, which all share
+    * fingerprint 0.
     */
   def dedupAgainst(
-      index: DataFrame,
-      incoming: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDistance: Int): DataFrame = {
-    val probe = pairsAgainst(index, incoming, idCol, textCol, maxDistance)
-    val dupIds = probe.pairs.select(col("id_incoming").as(idCol))
-      .distinct().localCheckpoint()
-    probe.unpersist()
-    incoming.join(dupIds, Seq(idCol), "left_anti")
-      .select(incoming.columns.map(col): _*)
-  }
+      index: DataFrame, incoming: DataFrame, idCol: String, textCol: String,
+      maxDistance: Int): DataFrame =
+    K.dedupAgainst(index, incoming, idCol, textCol, maxDistance)
 
-  /** Append new documents (the caller's survivors) to the index,
-    * signing ONLY the new docs with the frozen recipe. Appended entry
-    * rows carry BATCH-LOCAL bucket counts — the same honest
-    * under-suppression contract as [[LshIndex.append]] (a probe may
-    * verify pairs the exact cap would skip, never miss one); run
-    * [[compact]] to restore exact counts. Ids must stay unique.
+  /** Append new documents, signing ONLY them with the frozen recipe;
+    * batch-local bucket counts ([[HammingIndex.append]]).
     */
-  def append(
-      index: DataFrame,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String): DataFrame = {
-    val m = readMeta(index)
-    val docs = newDocs
-      .select(col(idCol), TextDedup.simHash(col(textCol), m.hasher).as("h"))
-      .persist()
-    val nNew = docs.count()
-    val entriesRaw = segRows(docs, idCol, m.segments)
-    val entries = entriesRaw.join(
-      entriesRaw.groupBy("seg", "value").agg(count(lit(1)).as("cnt")),
-      Seq("seg", "value"))
-    val appended = index.filter(col("seg") =!= MetaSeg)
-      .unionAll(indexRows(newDocs, idCol, m.copy(nDocs = m.nDocs + nNew), docs, entries))
-      .persist()
-    appended.count()
-    docs.unpersist()
-    appended
-  }
+  def append(index: DataFrame, newDocs: DataFrame, idCol: String, textCol: String): DataFrame =
+    K.append(index, newDocs, idCol, textCol)
 
-  /** Exact-count repair from stored rows — zero text access, the
-    * nightly-compaction step. Recomputes every bucket's corpus-wide
-    * count from the surviving entry rows, re-applies the frozen cap,
-    * rewrites the meta row's doc count. Same build-dropped-bucket edge
-    * as [[LshIndex.compact]]: entries dropped at build are gone, so a
-    * bucket refilled past the cap purely by appends is suppressed, but
-    * one straddling the build drop is not — a fresh [[build]] restores
-    * strict parity.
+  /** Exact-count repair from stored rows, zero text access
+    * ([[HammingIndex.compact]]).
     */
-  def compact(index: DataFrame, idCol: String): DataFrame = {
-    val m = readMeta(index)
-    val docs = index.filter(col("seg") === DocSeg)
-      .select(col(idCol), col("h")).persist()
-    val nDocs = docs.count()
-    val entries = index.filter(col("seg") >= 0)
-      .select(col(idCol), col("seg"), col("value"))
-    val counts = entries.groupBy("seg", "value").agg(count(lit(1)).as("cnt"))
-    val dropped = counts.filter(col("cnt") > m.maxBucketSize).count()
-    val entryRows = entries
-      .join(counts.filter(col("cnt") <= m.maxBucketSize), Seq("seg", "value"))
-    val compacted = indexRows(index, idCol,
-        m.copy(nDocs = nDocs, builtDroppedBuckets = dropped), docs, entryRows)
-      .persist()
-    compacted.count()
-    docs.unpersist()
-    compacted
-  }
+  def compact(index: DataFrame, idCol: String): DataFrame = K.compact(index, idCol)
 
-  /** One recipe across generations: segment layout, token hasher and
-    * cap must agree or stored values/counts share no comparable space.
+  /** Merge same-recipe generations, zero text access
+    * ([[HammingIndex.mergeMany]]).
     */
-  private def requireOneRecipe(metas: Seq[Meta]): Unit = {
-    val base = metas.head
-    require(metas.forall(m => m.segments == base.segments &&
-      m.hasherName == base.hasherName && m.maxBucketSize == base.maxBucketSize),
-      "index generations disagree on build parameters " +
-        "(segments/hasher/cap) — rebuild with one recipe")
-  }
+  def mergeMany(indexes: Seq[DataFrame], idCol: String): DataFrame = K.mergeMany(indexes, idCol)
 
-  /** Merge several same-recipe generations into ONE index artifact —
-    * stored-row union + [[compact]], zero text access (the
-    * [[LshIndex.mergeMany]] lifecycle applied to the Hamming family;
-    * simpler here, since no stop set exists to disagree).
-    * `mergeMany(Seq(build(a), build(b)))` probes identically to
-    * `build(a union b)` when neither generation dropped buckets at its
-    * own build — pinned by SimHashIndexSpec.
+  /** Cap-drift monitor ([[HammingIndex.capDriftReport]]). */
+  def capDriftReport(index: DataFrame, maxBuckets: Int = 100): CapDriftReport =
+    K.capDriftReportMany(Seq(index), maxBuckets)
+
+  /** Monitor-then-repair ([[HammingIndex.compactIfDrifted]]). */
+  def compactIfDrifted(index: DataFrame, idCol: String): (DataFrame, CapDriftReport) =
+    K.compactIfDrifted(index, idCol)
+
+  /** Union-wide cap-drift monitor ([[HammingIndex.capDriftReportMany]]). */
+  def capDriftReportMany(indexes: Seq[DataFrame], maxBuckets: Int = 100): CapDriftReport =
+    K.capDriftReportMany(indexes, maxBuckets)
+
+  /** Probe several generations with one signed batch
+    * ([[HammingIndex.pairsAgainstMany]]).
     */
-  def mergeMany(indexes: Seq[DataFrame], idCol: String): DataFrame = {
-    require(indexes.nonEmpty, "need at least one index generation")
-    requireOneRecipe(indexes.map(readMeta))
-    val combined = indexes.head.filter(col("seg") === MetaSeg)
-      .unionAll(indexes.map(_.filter(col("seg") =!= MetaSeg)).reduce(_ unionAll _))
-    compact(combined, idCol)
-  }
-
-  /** Probe several generations with one signed batch. Default: per-
-    * generation caps (generations fully independent) — opt-in
-    * strictness is the family-wide default; the rationale and cost
-    * model live on [[LshIndex.pairsAgainstMany]] (the r9 decision) and
-    * in SCALE.md, and this family follows it verbatim. `globalCap =
-    * true` runs the cross-generation count pass over the touched
-    * buckets' entry rows and enforces the one-shot union cap exactly —
-    * and, like [[LshIndex.pairsAgainstMany]], is exact even over
-    * un-compacted appended generations (stored counts are never
-    * trusted there). Ids must be unique across all generations and the
-    * batch.
-    */
-  /** The Hamming family's staleness monitor (r9, the
-    * [[LshIndex.stalenessReport]] twin): this family freezes no stop
-    * set, so its one drifting statistic is BUCKET COUNTS — [[append]]
-    * stores batch-local `cnt`s, and the probe's combined-size cap test
-    * (`cnt + cnt_i > cap`) evaluates per stored row, so a bucket grown
-    * past the frozen cap across several appends is never suppressed as
-    * long as each append's share stayed under it. That is documented
-    * under-suppression (probes only ever verify MORE pairs, never miss
-    * one), but the unbounded join cost the cap exists to bound grows
-    * with it. This report recounts every bucket from entry rows (one
-    * columnar scan, no text) and lists buckets whose TRUE size exceeds
-    * the frozen cap while every stored row still claims under-cap —
-    * exactly the buckets [[compact]] would repair (recount) and a
-    * rebuild would drop. Run nightly; `compact` when it fires.
-    */
-  final case class CapDriftReport(
-      nDocs: Long,
-      cap: Int,
-      crossed: Boolean,
-      drifted: Seq[(Int, Long, Long, Long)]) // (seg, value, true size, max stored cnt), size desc
-
-  def capDriftReport(index: DataFrame, maxBuckets: Int = 100): CapDriftReport = {
-    require(maxBuckets >= 1, s"maxBuckets must be >= 1, got $maxBuckets")
-    val m = readMeta(index)
-    val drifted = index.filter(col("seg") >= 0)
-      .groupBy("seg", "value")
-      .agg(count(lit(1)).as("__true"), max(col("cnt")).as("__stored"))
-      .filter(col("__true") > m.maxBucketSize && col("__stored") <= m.maxBucketSize)
-      .orderBy(col("__true").desc, col("seg"), col("value"))
-      .limit(maxBuckets)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    CapDriftReport(m.nDocs, m.maxBucketSize, drifted.nonEmpty, drifted)
-  }
-
-  /** The monitor-then-repair nightly loop as one call (the
-    * [[LshIndex.rebuildIfStale]] shape for the Hamming family, where
-    * the remedy is cheaper: no raw text, no refit — [[compact]]'s
-    * stored-row recount IS the exact repair for cap drift). Runs
-    * [[capDriftReport]]; compacts iff it fires, returns the index
-    * untouched otherwise. The report is the evidence either way — log
-    * it.
-    */
-  def compactIfDrifted(
-      index: DataFrame, idCol: String): (DataFrame, CapDriftReport) = {
-    val report = capDriftReport(index)
-    if (!report.crossed) (index, report)
-    else (compact(index, idCol), report)
-  }
-
-  /** [[capDriftReport]] over SEVERAL generations, WITHOUT materializing
-    * [[mergeMany]] (the merge recounts and rewrites every entry row;
-    * the monitor needs one read-only groupBy over the unioned entry
-    * rows). Surfaces buckets whose UNION-WIDE true size exceeds the
-    * shared frozen cap while every stored row still claims under-cap —
-    * exactly the buckets a default (`globalCap = false`)
-    * [[pairsAgainstMany]] keeps verifying pairs in (each generation's
-    * share is under the cap, so no per-generation probe suppresses
-    * them) but the one-shot union cap would suppress. When it fires,
-    * the measured remedies are `pairsAgainstMany(globalCap = true)`
-    * (exact union semantics, no rebuild) or [[mergeMany]] (one
-    * artifact, recounted); staying on the default is also legitimate —
-    * the cost is bounded extra verification, never a missed pair.
-    */
-  def capDriftReportMany(
-      indexes: Seq[DataFrame], maxBuckets: Int = 100): CapDriftReport = {
-    require(indexes.nonEmpty, "need at least one index generation")
-    require(maxBuckets >= 1, s"maxBuckets must be >= 1, got $maxBuckets")
-    val metas = indexes.map(readMeta)
-    requireOneRecipe(metas)
-    val m = metas.head
-    val drifted = indexes.map(_.filter(col("seg") >= 0)
-        .select(col("seg"), col("value"), col("cnt")))
-      .reduce(_ unionAll _)
-      .groupBy("seg", "value")
-      .agg(count(lit(1)).as("__true"), max(col("cnt")).as("__stored"))
-      .filter(col("__true") > m.maxBucketSize && col("__stored") <= m.maxBucketSize)
-      .orderBy(col("__true").desc, col("seg"), col("value"))
-      .limit(maxBuckets)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    CapDriftReport(metas.map(_.nDocs).sum, m.maxBucketSize, drifted.nonEmpty, drifted)
-  }
-
   def pairsAgainstMany(
-      indexes: Seq[DataFrame],
-      incoming: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDistance: Int,
-      globalCap: Boolean = false): Probe = {
-    require(indexes.nonEmpty, "need at least one index generation")
-    val metas = indexes.map(readMeta)
-    requireOneRecipe(metas)
-    val m = metas.head
-    if (!globalCap) {
-      val probes = indexes.map(ix =>
-        pairsAgainst(ix, incoming, idCol, textCol, maxDistance))
-      val pairs = probes.map(_.pairs).reduce(_ unionAll _).localCheckpoint()
-      probes.foreach(_.unpersist())
-      Probe(pairs, probes.map(_.droppedBuckets).sum)
-    } else {
-      require(maxDistance >= 0 && maxDistance < m.segments,
-        s"maxDistance must be in [0, ${m.segments - 1}]")
-      val (inH, inSeg) = signIncoming(m, incoming, idCol, textCol)
-      val inCnt = inSeg.groupBy("seg", "value").agg(count(lit(1)).as("cnt_i"))
-      val touched = indexes.map(_.filter(col("seg") >= 0)
-          .select(col(idCol).as("id_existing"), col("seg"), col("value")))
-        .reduce(_ unionAll _)
-        .join(inCnt, Seq("seg", "value"))
-        .persist()
-      val counts = touched.groupBy("seg", "value")
-        .agg(count(lit(1)).as("cnt_g"), first("cnt_i").as("cnt_i"))
-      val droppedBuckets = counts
-        .filter(col("cnt_g") + col("cnt_i") > m.maxBucketSize).count()
-      val cands = touched
-        .join(counts.filter(col("cnt_g") + col("cnt_i") <= m.maxBucketSize)
-          .select("seg", "value"), Seq("seg", "value"))
-        .join(inSeg, Seq("seg", "value"))
-        .select("id_existing", "id_incoming").distinct()
-      val docsH = indexes.map(_.filter(col("seg") === DocSeg)
-          .select(col(idCol).as("id_existing"), col("h").as("__h_a")))
-        .reduce(_ unionAll _)
-      val result = cands
-        .join(docsH, "id_existing")
-        .join(inH.withColumnRenamed("h", "__h_b"), "id_incoming")
-        .withColumn("hamming",
-          TextDedup.hamming(col("__h_a"), col("__h_b")).cast("int"))
-        .filter(col("hamming") <= maxDistance)
-        .select(col("id_existing"), col("id_incoming"), col("hamming"))
-        .persist()
-      result.count()
-      touched.unpersist()
-      inSeg.unpersist()
-      inH.unpersist()
-      Probe(result, droppedBuckets)
-    }
-  }
+      indexes: Seq[DataFrame], incoming: DataFrame, idCol: String, textCol: String,
+      maxDistance: Int, globalCap: Boolean = false): Probe =
+    K.pairsAgainstMany(indexes, incoming, idCol, textCol, maxDistance, globalCap)
 
-  /** [[dedupAgainst]] over several generations: `incoming` minus
-    * near-dups of ANY generation, columns and order preserved.
-    */
+  /** [[dedupAgainst]] over several generations. */
   def dedupAgainstMany(
-      indexes: Seq[DataFrame],
-      incoming: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDistance: Int,
-      globalCap: Boolean = false): DataFrame =
-    if (!globalCap)
-      indexes.foldLeft(incoming)((acc, ix) =>
-        dedupAgainst(ix, acc, idCol, textCol, maxDistance))
-    else {
-      val probe = pairsAgainstMany(indexes, incoming, idCol, textCol,
-        maxDistance, globalCap = true)
-      val dupIds = probe.pairs.select(col("id_incoming").as(idCol))
-        .distinct().localCheckpoint()
-      probe.unpersist()
-      incoming.join(dupIds, Seq(idCol), "left_anti")
-        .select(incoming.columns.map(col): _*)
-    }
+      indexes: Seq[DataFrame], incoming: DataFrame, idCol: String, textCol: String,
+      maxDistance: Int, globalCap: Boolean = false): DataFrame =
+    K.dedupAgainstMany(indexes, incoming, idCol, textCol, maxDistance, globalCap)
 }

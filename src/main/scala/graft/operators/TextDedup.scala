@@ -594,16 +594,24 @@ object TextDedup {
     * generation) and the compiled per-token JVM form the kernel uses.
     */
   sealed trait TokenHasher extends Serializable {
+    /** The name an index meta row records (`hasher=<name>`). */
+    def name: String
     /** Column-level hash — what an external SQL engine replays. */
     def expr: Column => Column
     /** The same hash as a compiled JVM function over the token string. */
     def hashToken(t: String): Long
   }
   object TokenHasher {
+    /** The hasher recorded as `name` in an index meta row. */
+    def named(name: String): TokenHasher = Seq(Murmur3, PortableMd5).find(_.name == name)
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown token hasher in SimHash index meta: $name"))
+
     /** Production default: Spark's `hash()` (murmur3_x86_32, seed 42,
       * over the token's UTF-8 bytes) — fastest, not SQL-portable.
       */
     case object Murmur3 extends TokenHasher {
+      val name = "murmur3"
       val expr: Column => Column = w => hash(w)
       def hashToken(t: String): Long = {
         val u = org.apache.spark.unsafe.types.UTF8String.fromString(t)
@@ -615,6 +623,7 @@ object TextDedup {
       * mode the DuckDB oracle replays bit-for-bit.
       */
     case object PortableMd5 extends TokenHasher {
+      val name = "md5"
       val expr: Column => Column = w => md5TokenHash(w)
       private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
         override def initialValue(): java.security.MessageDigest =
@@ -698,18 +707,6 @@ object TextDedup {
   /** Hamming distance between two simhashes. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Near-equal bit ranges `[32i/k, 32(i+1)/k)` of a 32-bit simhash —
-    * the pigeonhole segment values. Shared by the self-blocked one-shot
-    * and [[SimHashIndex]] so the two candidate generators provably use
-    * one segment layout.
-    */
-  private[operators] def simHashSegments(h: Column, k: Int): Seq[Column] =
-    (0 until k).map { i =>
-      val start = 32 * i / k
-      val width = 32 * (i + 1) / k - start
-      shiftright(h, start).bitwiseAND(lit((1L << width) - 1))
-    }
-
   /** Near-dup pairs by SimHash: block on the high byte-s of the hash
     * (cheap LSH: near hashes share high bits for small distances is NOT
     * guaranteed — so block on provided keys instead) and verify
@@ -738,7 +735,8 @@ object TextDedup {
   /** Self-blocking SimHash near-dup pairs — no external block columns.
     *
     * Standard Hamming-LSH: split the 32-bit hash into `segments`
-    * near-equal bit segments; two hashes within Hamming distance
+    * near-equal bit segments ([[HammingIndex.segmentValues]], the layout
+    * [[SimHashIndex]] stores); two hashes within Hamming distance
     * `maxDistance` differ in at most `maxDistance` segments, so with
     * `segments > maxDistance` (pigeonhole) they agree EXACTLY on at
     * least one segment — candidate generation has 100% recall, and the
@@ -771,7 +769,7 @@ object TextDedup {
     withH.count()
     val exploded = withH.select(
       col(idCol),
-      posexplode(array(simHashSegments(col("__h"), k): _*)).as(Seq("__seg", "__val")))
+      posexplode(array(HammingIndex.segmentValues(col("__h"), k, bits = 32): _*)).as(Seq("__seg", "__val")))
     val bucketSizes = exploded.groupBy("__seg", "__val").count()
     // cnt >= 2: singleton segment buckets cannot pair (same argument as
     // the MinHash path — the pair set is unchanged, the window shuffle

@@ -4,21 +4,28 @@ import org.apache.spark.sql.DataFrame
 
 import graft.operators.HammingIndex
 
-/** Streaming near-duplicate ingest gate over CALLER-SUPPLIED 64-bit
-  * fingerprints — [[graft.operators.HammingIndex]] wired into
-  * Structured Streaming, the generic member of the gate set (r9): where
-  * [[HammingDupGate]] fingerprints TEXT internally (SimHash), this
-  * gates any precomputed hash column — the streaming path for image
-  * ingest (`Multimodal.imageDHash` upstream in the same micro-batch),
-  * audio fingerprints, or externally computed signatures.
+/** Streaming near-duplicate ingest gate over a Hamming-family index —
+  * [[graft.operators.HammingIndex]] wired into Structured Streaming,
+  * the one gate class behind both Hamming gates (r9). The index's meta
+  * row names its family, and the gate follows it:
+  *   - a [[graft.operators.HammingIndex]] gates a CALLER-SUPPLIED
+  *     64-bit hash column — the streaming path for image ingest
+  *     (`Multimodal.imageDHash` upstream in the same micro-batch),
+  *     audio fingerprints, or externally computed signatures;
+  *   - a [[graft.operators.SimHashIndex]] signs the column as TEXT with
+  *     the index's frozen token hasher ([[HammingDupGate]]).
   *
-  * Per micro-batch: probe the index with the batch's hashes (only
-  * segment extraction per row — the cheapest probe in the family),
-  * drop rows within `maxDistance` bits of ANY indexed fingerprint,
-  * append the survivors. Null-hash rows pass through unprobed and are
-  * NOT appended (no fingerprint, no identity — the family null rule).
-  * State is the index, local-checkpointed per batch;
-  * [[GateCheckpoints]] provides the durable hook.
+  * Per micro-batch: sign the batch (only the batch pays fingerprint
+  * CPU — the stored side is a columnar scan), drop rows within
+  * `maxDistance` bits of ANY indexed fingerprint, append the survivors.
+  * Null-hash rows pass through unprobed and are NOT appended (no
+  * fingerprint, no identity — the family null rule). State is the
+  * index, local-checkpointed per batch; [[GateCheckpoints]] provides
+  * the durable hook, under `hamming_index_<seq>` or, for a SimHash
+  * index, `simhash_index_<seq>`. Appended entry rows carry batch-local
+  * bucket counts (the documented `append` under-suppression);
+  * `capDriftReport` is the monitor and `compact` the repair, on
+  * crossing — not on a timer.
   *
   * Wiring (image ingest):
   * {{{
@@ -30,13 +37,19 @@ import graft.operators.HammingIndex
   * }.start()
   * }}}
   *
-  * Semantics pinned by FingerprintDupGateSpec: streaming batch-by-batch
-  * equals replaying [[HammingIndex.dedupAgainst]] grow-as-you-go over
-  * the same batch sequence.
+  * Semantics pinned by FingerprintDupGateSpec and HammingDupGateSpec:
+  * streaming batch-by-batch equals replaying the index's
+  * `dedupAgainst` grow-as-you-go over the same batch sequence.
+  * Within-batch duplicates are NOT deduped against each other (a batch
+  * is gated only against the corpus kept so far).
   */
 object FingerprintDupGate {
 
-  /** Mutable gate state: call [[filterBatch]] from `foreachBatch`. */
+  /** Mutable gate state: call [[filterBatch]] from `foreachBatch` (Spark
+    * invokes it serially per stream; the lock also makes sharing one
+    * gate across streams safe). `hashCol` is the fingerprint column —
+    * or, over a SimHash index, the text column to sign.
+    */
   final class Gate(
       initialIndex: DataFrame,
       idCol: String,
@@ -45,6 +58,9 @@ object FingerprintDupGate {
       checkpointPath: Option[String] = None,
       checkpointEvery: Int = 0) {
 
+    private val family = HammingIndex.familyOf(initialIndex)
+    private val prefix =
+      if (family eq HammingIndex.SimHash) HammingDupGate.CheckpointPrefix else CheckpointPrefix
     private var index: DataFrame = initialIndex
     private var owned = false // never unpersist the caller's initial index
     private var batches = 0L
@@ -57,13 +73,13 @@ object FingerprintDupGate {
     def lastCheckpoint: Option[String] = synchronized(lastCkpt)
 
     /** Returns the batch rows that survive the gate (batch columns and
-      * order preserved) and appends the hashed survivors to the index.
+      * order preserved) and appends the signed survivors to the index.
       */
     def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val survivors = HammingIndex
+      val survivors = family
         .dedupAgainst(index, batch, idCol, hashCol, maxDistance)
         .localCheckpoint() // materialize BEFORE the index moves on
-      val appended = HammingIndex.append(index, survivors, idCol, hashCol)
+      val appended = family.append(index, survivors, idCol, hashCol)
       val next = appended.localCheckpoint() // sever lineage: state stays flat
       appended.unpersist()
       if (owned) index.unpersist()
@@ -71,13 +87,15 @@ object FingerprintDupGate {
       owned = true
       batches += 1
       GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        "hamming_index_", batches).foreach(p => lastCkpt = Some(p))
+        prefix, batches).foreach(p => lastCkpt = Some(p))
       survivors
     }
   }
 
+  private[streaming] val CheckpointPrefix = "hamming_index_"
+
   /** Newest `hamming_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "hamming_index_")
+    GateCheckpoints.latest(spark, path, CheckpointPrefix)
 }

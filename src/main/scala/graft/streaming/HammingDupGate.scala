@@ -2,27 +2,20 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.SimHashIndex
-
-/** Streaming Hamming near-duplicate ingest gate — the
+/** Streaming Hamming near-duplicate ingest gate over TEXT — the
   * [[graft.operators.SimHashIndex]] probe wired into Structured
   * Streaming, completing the gate-per-index-family set (r9):
   * [[NearDupGate]] is the Jaccard gate (MinHash-LSH),
   * [[EmbeddingDupGate]] the cosine gate (IVF), this the HAMMING gate —
-  * the cheapest of the three (one 64-bit fingerprint per doc, pigeonhole
-  * segment buckets, no signature array), the right default when the
-  * near-dup definition is "small token edits" rather than "shingle
-  * overlap" or "semantic similarity".
+  * the cheapest of the three (one 32-bit SimHash fingerprint per doc,
+  * pigeonhole segment buckets, no signature array), the right default
+  * when the near-dup definition is "small token edits" rather than
+  * "shingle overlap" or "semantic similarity".
   *
-  * Per micro-batch: fingerprint the batch (only the batch pays hashing
-  * CPU — the stored side is a columnar scan), drop docs within
-  * `maxDistance` bits of ANY indexed fingerprint, append the survivors.
-  * State is the index itself, local-checkpointed each batch so lineage
-  * stays flat; the durable-checkpoint hook is the [[GateCheckpoints]]
-  * family contract. Appended entry rows carry batch-local bucket counts
-  * (the documented [[SimHashIndex.append]] under-suppression);
-  * [[SimHashIndex.capDriftReport]] is the monitor and
-  * [[SimHashIndex.compact]] the repair, on crossing — not on a timer.
+  * The gate is [[FingerprintDupGate.Gate]]: over a SimHash index it
+  * signs the text column with the index's frozen token hasher, then
+  * runs the one Hamming kernel's probe and append; durable checkpoints
+  * are written as `simhash_index_<seq>`.
   *
   * Wiring:
   * {{{
@@ -35,58 +28,17 @@ import graft.operators.SimHashIndex
   *
   * Semantics pinned by HammingDupGateSpec: streaming the corpus through
   * the gate batch-by-batch equals replaying
-  * [[SimHashIndex.dedupAgainst]] grow-as-you-go over the same batch
-  * sequence. Within-batch duplicates are NOT deduped against each other
-  * (same contract as the other gates — a batch is gated only against
-  * the corpus kept so far).
+  * [[graft.operators.SimHashIndex.dedupAgainst]] grow-as-you-go over
+  * the same batch sequence.
   */
 object HammingDupGate {
 
-  /** Mutable gate state: call [[filterBatch]] from `foreachBatch` (Spark
-    * invokes it serially per stream; the lock also makes sharing one
-    * gate across streams safe).
-    */
-  final class Gate(
-      initialIndex: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxDistance: Int = 3,
-      checkpointPath: Option[String] = None,
-      checkpointEvery: Int = 0) {
+  type Gate = FingerprintDupGate.Gate
 
-    private var index: DataFrame = initialIndex
-    private var owned = false // never unpersist the caller's initial index
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
-
-    /** The live index (initial corpus + all survivors so far). */
-    def currentIndex: DataFrame = synchronized(index)
-
-    /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
-
-    /** Returns the batch rows that survive the gate (batch columns and
-      * order preserved) and appends them to the index.
-      */
-    def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val survivors = SimHashIndex
-        .dedupAgainst(index, batch, idCol, textCol, maxDistance)
-        .localCheckpoint() // materialize BEFORE the index moves on
-      val appended = SimHashIndex.append(index, survivors, idCol, textCol)
-      val next = appended.localCheckpoint() // sever lineage: state stays flat
-      appended.unpersist()
-      if (owned) index.unpersist()
-      index = next
-      owned = true
-      batches += 1
-      GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        "simhash_index_", batches).foreach(p => lastCkpt = Some(p))
-      survivors
-    }
-  }
+  private[streaming] val CheckpointPrefix = "simhash_index_"
 
   /** Newest `simhash_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "simhash_index_")
+    GateCheckpoints.latest(spark, path, CheckpointPrefix)
 }

@@ -3,7 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Prints formatted physical plans for selected SparkEntry queries —
-  * the iterate-until-it's-the-plan-you-want loop.
+  * the iterate-until-it's-the-plan-you-want loop. Cached data is
+  * cleared between queries, so each plan is built against a clean
+  * cache and indexes persisted by one query do not pile up for the
+  * whole dump.
   * Usage: runMain graft.tools.Explain [queryName ...]
   */
 object Explain {
@@ -21,6 +24,8 @@ object Explain {
     names.foreach { n =>
       println(s"\n======== $n ========")
       graft.SparkEntry.queries(n)(spark, dir).explain("formatted")
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     }
     spark.stop()
   }

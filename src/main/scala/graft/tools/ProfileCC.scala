@@ -34,12 +34,12 @@ object ProfileCC {
 
     val jumpSteps = sys.env.get("CC_JUMP_STEPS").map(_.toInt).getOrElse(2)
     val t0 = System.nanoTime()
-    val cc = graft.operators.ConnectedComponents.connectedComponents(
+    val (cc, rounds) = graft.operators.ConnectedComponents.componentsWithRounds(
       edges, jumpSteps = jumpSteps)
     val (nNodes, nComponents) = (cc.count(),
       cc.select("component").distinct().count())
     println(f"[cc] edges=$nEdges nodes=$nNodes components=$nComponents " +
-      f"rounds=${graft.operators.ConnectedComponents.lastRounds} " +
+      f"rounds=$rounds " +
       f"jumpSteps=$jumpSteps ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }

@@ -38,11 +38,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     }
     // the same graph through the FORCED distributed alternation: the
     // driver fast path is a latency knob, never a semantics knob
-    val distributed = ConnectedComponents
-      .connectedComponents(edges.toDF("src", "dst"), driverSolveMax = 0)
-      .as[(Long, Long)].collect().toMap
+    val (distributedCc, rounds) = ConnectedComponents
+      .componentsWithRounds(edges.toDF("src", "dst"), driverSolveMax = 0)
+    val distributed = distributedCc.as[(Long, Long)].collect().toMap
     assert(distributed == got)
-    assert(ConnectedComponents.lastRounds > 0)
+    assert(rounds > 0)
   }
 
   test("driver solve fires at the bar (inclusive) and reports zero rounds") {
@@ -51,35 +51,34 @@ class ConnectedComponentsSpec extends SparkSpec {
     // path (<= is inclusive), bar 2 forces the alternation — identical
     // answers, self-loop-only node 9 a singleton on both
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L)
-    val atBar = ConnectedComponents
-      .connectedComponents(edges.toDF("src", "dst"), driverSolveMax = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(atBar == want && ConnectedComponents.lastRounds == 0)
-    val below = ConnectedComponents
-      .connectedComponents(edges.toDF("src", "dst"), driverSolveMax = 2)
-      .as[(Long, Long)].collect().toMap
-    assert(below == want && ConnectedComponents.lastRounds > 0)
+    val (atBarCc, atBarRounds) = ConnectedComponents
+      .componentsWithRounds(edges.toDF("src", "dst"), driverSolveMax = 3)
+    val atBar = atBarCc.as[(Long, Long)].collect().toMap
+    assert(atBar == want && atBarRounds == 0)
+    val (belowCc, belowRounds) = ConnectedComponents
+      .componentsWithRounds(edges.toDF("src", "dst"), driverSolveMax = 2)
+    val below = belowCc.as[(Long, Long)].collect().toMap
+    assert(below == want && belowRounds > 0)
   }
 
   test("converges on a 1000-node chain (worst-case diameter)") {
     // driverSolveMax = 0 throughout: this spec measures the
     // DISTRIBUTED alternation's round counts
     val edges = (1L until 1000L).map(i => (i, i + 1))
-    val got = ConnectedComponents
-      .connectedComponents(edges.toDF("src", "dst"), driverSolveMax = 0)
-      .as[(Long, Long)].collect().toMap
+    val (gotCc, withJump) = ConnectedComponents
+      .componentsWithRounds(edges.toDF("src", "dst"), driverSolveMax = 0)
+    val got = gotCc.as[(Long, Long)].collect().toMap
     assert(got.size == 1000 && got.values.forall(_ == 1L))
-    val withJump = ConnectedComponents.lastRounds
 
     // same chain without pointer jumping: the pure alternating-star
     // schedule (the pre-jump baseline, ~2x contraction per round)
     val noJump = {
-      val r = ConnectedComponents
-        .connectedComponents(edges.toDF("src", "dst"), jumpSteps = 0,
+      val (cc, rounds) = ConnectedComponents
+        .componentsWithRounds(edges.toDF("src", "dst"), jumpSteps = 0,
           driverSolveMax = 0)
-        .as[(Long, Long)].collect().toMap
+      val r = cc.as[(Long, Long)].collect().toMap
       assert(r == got) // identical labeling either way
-      ConnectedComponents.lastRounds
+      rounds
     }
     // path halving contracts ~4x per round vs ~2x: the adversarial
     // diameter case must finish in at most half the rounds

@@ -161,6 +161,31 @@ class SimHashIndexSpec extends SparkSpec {
     merged.unpersist(); rebuilt.unpersist(); gen1.unpersist(); gen2.unpersist()
   }
 
+  test("over-cap buckets stay visible after build, compact and mergeMany") {
+    // 12 copies of one page share all 4 segment buckets: over the cap of
+    // 10. Whichever lifecycle step removed them, the suppression must
+    // show up either in the meta record or in the probe's own count —
+    // reading 0 would hide the pairs the cap leaves unverified.
+    val boiler = "the same exact boilerplate page"
+    val kept = ((0 until 12).map(i => (i.toLong, boiler)) ++
+      (100 until 110).map(i => (i.toLong, s"distinct page $i about w${i * 7} and z${i * 13}")))
+      .toDF("doc_id", "text")
+    val batch = Seq((500L, boiler), (501L, "an unrelated incoming page")).toDF("doc_id", "text")
+    def seen(ix: DataFrame): Long = {
+      val probe = SimHashIndex.pairsAgainst(ix, batch, "doc_id", "text", 3)
+      val n = SimHashIndex.readMeta(ix).builtDroppedBuckets + probe.droppedBuckets
+      probe.unpersist()
+      n
+    }
+    val built = SimHashIndex.build(kept, "doc_id", "text", segments = 4, maxBucketSize = 10)
+    val compacted = SimHashIndex.compact(built, "doc_id")
+    val merged = SimHashIndex.mergeMany(Seq(built), "doc_id")
+    assert(seen(built) > 0, "after build")
+    assert(seen(compacted) > 0, "after compact")
+    assert(seen(merged) > 0, "after mergeMany")
+    built.unpersist(); compacted.unpersist(); merged.unpersist()
+  }
+
   test("mixed recipes refuse typed; readMeta refuses non-index frames") {
     val gen1 = SimHashIndex.build(existing, "doc_id", "text", segments = 4)
     val gen2 = SimHashIndex.build(incoming, "doc_id", "text", segments = 5)
