@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
 
 /** Persistable Hamming index — the one pigeonhole kernel behind both
   * Hamming-family artifacts: this object over CALLER-SUPPLIED 64-bit
@@ -100,13 +101,24 @@ object HammingIndex {
     def family: Family = if (hasher.isEmpty) Hamming else SimHash
     def bits: Int = if (hasher.isEmpty) 64 else 32
 
-    /** The signing projection `(idCol, h)`: the caller's hash column
-      * cast to long, or the SimHash of text column `c` under the frozen
-      * hasher. Null fingerprints are dropped.
+    /** The signing projection `(idCol, h)`: the caller's integral hash
+      * column widened to long, or the SimHash of string column `c` under
+      * the frozen hasher. A column of the other kind fails typed — an
+      * implicit cast would dedup on a meaningless fingerprint. Null
+      * fingerprints are dropped.
       */
     def sign(df: DataFrame, idCol: String, c: String): DataFrame = {
-      val h = hasher.fold(col(c).cast("long"))(name =>
-        TextDedup.simHash(col(c), TextDedup.TokenHasher.named(name)))
+      val t = df.select(col(c)).schema.head.dataType
+      val h = hasher match {
+        case None =>
+          require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+            s"a Hamming index signs an integral fingerprint column; `$c` is ${t.simpleString}")
+          col(c).cast("long")
+        case Some(name) =>
+          require(t.isInstanceOf[StringType],
+            s"a SimHash index signs a string text column; `$c` is ${t.simpleString}")
+          TextDedup.simHash(col(c), TextDedup.TokenHasher.named(name))
+      }
       df.select(col(idCol), h.as("h")).filter(col("h").isNotNull)
     }
 
@@ -273,13 +285,10 @@ object HammingIndex {
       val touched = index.filter(col("seg") >= 0)
         .select(col(idCol).as("id_existing"), col("seg"), col("value"), col("cnt"))
         .join(broadcast(inCnt), Seq("seg", "value"))
-        .persist()
       val over = col("cnt") + col("cnt_i") > p.m.maxBucketSize
       val dropped = touched.filter(over).select("seg", "value").distinct().count()
       val cands = touched.filter(!over).join(inSeg, Seq("seg", "value"))
-      val pairs = verify(cands, Seq(index), idCol, inDocs, maxDistance)
-      touched.unpersist()
-      Probe(pairs, dropped)
+      Probe(verify(cands, Seq(index), idCol, inDocs, maxDistance), dropped)
     }
 
     def dedupAgainst(index: DataFrame, incoming: DataFrame, idCol: String, c: String,
@@ -460,31 +469,10 @@ object HammingIndex {
   /** [[capDriftReport]] over SEVERAL generations WITHOUT materializing
     * [[mergeMany]]: one read-only groupBy over the unioned entry rows,
     * surfacing buckets whose union-wide true size exceeds the shared
-    * frozen cap while every stored row still claims under-cap — the
-    * buckets a default [[pairsAgainstMany]] keeps verifying but the
-    * one-shot union cap would suppress. Remedies when it fires:
-    * `pairsAgainstMany(globalCap = true)` or [[mergeMany]].
+    * frozen cap while every stored row still claims under-cap. Remedy
+    * when it fires: [[mergeMany]] (one artifact, recounted, past-cap
+    * buckets deleted into the carried `builtDroppedBuckets`).
     */
   def capDriftReportMany(indexes: Seq[DataFrame], maxBuckets: Int = 100): CapDriftReport =
     Hamming.capDriftReportMany(indexes, maxBuckets)
-
-  /** Probe several generations with one batch. Default: per-generation
-    * caps (generations fully independent — the family rule, rationale
-    * on [[LshIndex.pairsAgainstMany]]). `globalCap = true` recounts the
-    * touched buckets across generations and enforces the one-shot union
-    * cap exactly, even over un-compacted appended generations. Ids must
-    * be unique across all generations and the batch.
-    */
-  def pairsAgainstMany(
-      indexes: Seq[DataFrame], incoming: DataFrame, idCol: String, hashCol: String,
-      maxDistance: Int, globalCap: Boolean = false): Probe =
-    Hamming.pairsAgainstMany(indexes, incoming, idCol, hashCol, maxDistance, globalCap)
-
-  /** [[dedupAgainst]] over several generations: `incoming` minus
-    * near-dups of ANY generation, columns and order preserved.
-    */
-  def dedupAgainstMany(
-      indexes: Seq[DataFrame], incoming: DataFrame, idCol: String, hashCol: String,
-      maxDistance: Int, globalCap: Boolean = false): DataFrame =
-    Hamming.dedupAgainstMany(indexes, incoming, idCol, hashCol, maxDistance, globalCap)
 }

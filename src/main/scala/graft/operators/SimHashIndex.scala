@@ -121,15 +121,21 @@ object SimHashIndex {
   def capDriftReportMany(indexes: Seq[DataFrame], maxBuckets: Int = 100): CapDriftReport =
     K.capDriftReportMany(indexes, maxBuckets)
 
-  /** Probe several generations with one signed batch
-    * ([[HammingIndex.pairsAgainstMany]]).
+  /** Probe several generations with one batch. Default: per-generation
+    * caps (generations fully independent — the family rule, rationale
+    * on [[LshIndex.pairsAgainstMany]]). `globalCap = true` recounts the
+    * touched buckets across generations and enforces the one-shot union
+    * cap exactly, even over un-compacted appended generations. Ids must
+    * be unique across all generations and the batch.
     */
   def pairsAgainstMany(
       indexes: Seq[DataFrame], incoming: DataFrame, idCol: String, textCol: String,
       maxDistance: Int, globalCap: Boolean = false): Probe =
     K.pairsAgainstMany(indexes, incoming, idCol, textCol, maxDistance, globalCap)
 
-  /** [[dedupAgainst]] over several generations. */
+  /** [[dedupAgainst]] over several generations: `incoming` minus
+    * near-dups of ANY generation, columns and order preserved.
+    */
   def dedupAgainstMany(
       indexes: Seq[DataFrame], incoming: DataFrame, idCol: String, textCol: String,
       maxDistance: Int, globalCap: Boolean = false): DataFrame =

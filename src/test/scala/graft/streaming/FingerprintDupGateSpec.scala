@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
-import graft.operators.HammingIndex
+import graft.operators.{HammingIndex, SimHashIndex}
 
 /** The generic fingerprint gate's batch-equivalence contract: streaming
   * micro-batches of precomputed hashes through the gate equals a
@@ -83,5 +83,25 @@ class FingerprintDupGateSpec extends SparkSpec {
     val ckptIds = reopened.get.filter($"seg" === HammingIndex.DocSeg)
       .select("id").as[Long].collect().toSet
     assert(ckptIds == kept.select("id").as[Long].collect().toSet)
+  }
+
+  test("a column of the wrong kind for the index family fails typed, gate or direct call") {
+    val docs = Seq((1L, 5L, "red fox jumps"), (2L, 6L, "blue fox sleeps")).toDF("id", "h", "text")
+    val hamming = HammingIndex.build(docs, "id", "h")
+    val simhash = SimHashIndex.build(docs, "id", "text")
+    val textIntoHamming = intercept[IllegalArgumentException] {
+      new FingerprintDupGate.Gate(hamming, "id", "text").filterBatch(docs)
+    }
+    assert(textIntoHamming.getMessage.contains("integral fingerprint column"))
+    val hashIntoSimHash = intercept[IllegalArgumentException] {
+      new HammingDupGate.Gate(simhash, "id", "h").filterBatch(docs)
+    }
+    assert(hashIntoSimHash.getMessage.contains("string text column"))
+    intercept[IllegalArgumentException] {
+      HammingIndex.pairsAgainst(hamming, docs, "id", "text", 1)
+    }
+    intercept[IllegalArgumentException] {
+      SimHashIndex.append(simhash, docs, "id", "h")
+    }
   }
 }
