@@ -142,8 +142,10 @@ object HammingIndex {
       kv.getOrElse("builtDropped", "0").toLong, kv("nDocs").toLong), kv.get("hasher"))
   }
 
-  /** The family `index` was built for, read from its meta row. */
-  private[graft] def familyOf(index: DataFrame): Family = parse(index, Hamming.name).family
+  /** The recipe `index` was built with, read from its meta row; its
+    * `family` is the family the index was built for.
+    */
+  private[graft] def paramsOf(index: DataFrame): Params = parse(index, Hamming.name)
 
   /** (id, seg, value) entry rows of a signed `(idCol, h)` frame. */
   private def segRows(docs: DataFrame, idCol: String, p: Params): DataFrame =
@@ -278,9 +280,13 @@ object HammingIndex {
       pairs
     }
 
-    def pairsAgainst(index: DataFrame, incoming: DataFrame, idCol: String, c: String,
+    // The probe/dedup/append calls take `index`'s recipe `p` from the
+    // caller, who has read it once (`params`) or carries it from the
+    // previous append (the streaming gate): re-reading the meta row is a
+    // Spark job per call.
+
+    def pairsAgainst(p: Params, index: DataFrame, incoming: DataFrame, idCol: String, c: String,
         maxDistance: Int): Probe = {
-      val p = params(index)
       val (inDocs, inSeg, inCnt) = signIncoming(p, incoming, idCol, c, maxDistance)
       val touched = index.filter(col("seg") >= 0)
         .select(col(idCol).as("id_existing"), col("seg"), col("value"), col("cnt"))
@@ -291,12 +297,13 @@ object HammingIndex {
       Probe(verify(cands, Seq(index), idCol, inDocs, maxDistance), dropped)
     }
 
-    def dedupAgainst(index: DataFrame, incoming: DataFrame, idCol: String, c: String,
+    def dedupAgainst(p: Params, index: DataFrame, incoming: DataFrame, idCol: String, c: String,
         maxDistance: Int): DataFrame =
-      without(incoming, idCol, pairsAgainst(index, incoming, idCol, c, maxDistance))
+      without(incoming, idCol, pairsAgainst(p, index, incoming, idCol, c, maxDistance))
 
-    def append(index: DataFrame, newDocs: DataFrame, idCol: String, c: String): DataFrame = {
-      val p = params(index)
+    /** The grown index (persisted) and its recipe. */
+    def append(p: Params, index: DataFrame, newDocs: DataFrame, idCol: String,
+        c: String): (DataFrame, Params) = {
       val docs = p.sign(newDocs, idCol, c).persist()
       val nNew = docs.count()
       val grown = p.copy(m = p.m.copy(nDocs = p.m.nDocs + nNew))
@@ -305,7 +312,7 @@ object HammingIndex {
         .persist()
       appended.count()
       docs.unpersist()
-      appended
+      (appended, grown)
     }
 
     def compact(index: DataFrame, idCol: String): DataFrame =
@@ -342,9 +349,12 @@ object HammingIndex {
 
     def pairsAgainstMany(indexes: Seq[DataFrame], incoming: DataFrame, idCol: String,
         c: String, maxDistance: Int, globalCap: Boolean): Probe = {
-      val p = recipe(indexes).head
+      val ps = recipe(indexes)
+      val p = ps.head
       if (!globalCap) {
-        val probes = indexes.map(ix => pairsAgainst(ix, incoming, idCol, c, maxDistance))
+        val probes = indexes.zip(ps).map { case (ix, pi) =>
+          pairsAgainst(pi, ix, incoming, idCol, c, maxDistance)
+        }
         val pairs = probes.map(_.pairs).reduce(_ unionAll _).localCheckpoint()
         probes.foreach(_.unpersist())
         Probe(pairs, probes.map(_.droppedBuckets).sum)
@@ -374,7 +384,8 @@ object HammingIndex {
     def dedupAgainstMany(indexes: Seq[DataFrame], incoming: DataFrame, idCol: String,
         c: String, maxDistance: Int, globalCap: Boolean): DataFrame =
       if (!globalCap)
-        indexes.foldLeft(incoming)((acc, ix) => dedupAgainst(ix, acc, idCol, c, maxDistance))
+        indexes.foldLeft(incoming)((acc, ix) =>
+          dedupAgainst(params(ix), ix, acc, idCol, c, maxDistance))
       else
         without(incoming, idCol,
           pairsAgainstMany(indexes, incoming, idCol, c, maxDistance, globalCap = true))
@@ -415,7 +426,7 @@ object HammingIndex {
   def pairsAgainst(
       index: DataFrame, incoming: DataFrame, idCol: String, hashCol: String,
       maxDistance: Int): Probe =
-    Hamming.pairsAgainst(index, incoming, idCol, hashCol, maxDistance)
+    Hamming.pairsAgainst(Hamming.params(index), index, incoming, idCol, hashCol, maxDistance)
 
   /** `incoming` minus rows within `maxDistance` of ANY indexed
     * fingerprint, columns and order preserved. Null-hash incoming rows
@@ -424,13 +435,13 @@ object HammingIndex {
   def dedupAgainst(
       index: DataFrame, incoming: DataFrame, idCol: String, hashCol: String,
       maxDistance: Int): DataFrame =
-    Hamming.dedupAgainst(index, incoming, idCol, hashCol, maxDistance)
+    Hamming.dedupAgainst(Hamming.params(index), index, incoming, idCol, hashCol, maxDistance)
 
   /** Append survivors with batch-local bucket counts (run [[compact]]
     * to restore exact counts). Ids must stay unique.
     */
   def append(index: DataFrame, newDocs: DataFrame, idCol: String, hashCol: String): DataFrame =
-    Hamming.append(index, newDocs, idCol, hashCol)
+    Hamming.append(Hamming.params(index), index, newDocs, idCol, hashCol)._1
 
   /** Exact-count repair from stored rows — no fingerprints recomputed.
     * Buckets past the frozen cap are deleted (probes can no longer be

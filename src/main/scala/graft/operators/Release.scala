@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.DriverThreads
+
 /** The one-call release turn (T80) — the delivery composition every
   * training-corpus build ends with, chaining the operators that already
   * exist into the order production runs them:
@@ -217,31 +219,29 @@ object Release {
     // sequentially — one artifact's job tail backfills the others'
     // task slots). Per-artifact ordering (checkpoint, then write, then
     // the card derived from the checkpointed cardix) is preserved
-    // inside each thread; a failure surfaces through Await exactly as
-    // it would sequentially, with the same partial-overwrite exposure.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val fm = Future {
+    // inside each thread. A failed artifact does NOT stop the other
+    // two: DriverThreads.all returns only after all three threads have
+    // finished, then rethrows the first failure with the rest
+    // suppressed — so no overwrite outlives the call, but the artifacts
+    // that did succeed are the new turn's while the failed one is left
+    // as its aborted write leaves it.
+    val Seq(m, g, c) = DriverThreads.all(Seq(
+      () => {
         val m = manifest.localCheckpoint()
         m.write.mode("overwrite").parquet(s"$path/manifest"); m
-      }
-      val fg = Future {
+      },
+      () => {
         val g = evalGrams.localCheckpoint()
         g.write.mode("overwrite").parquet(s"$path/evalgrams"); g
-      }
-      val fc = Future {
+      },
+      () => {
         val c = cardIndex.localCheckpoint()
         c.write.mode("overwrite").parquet(s"$path/cardix")
         TextAnalysis.dataCardOf(c, langCol)
           .write.mode("overwrite").parquet(s"$path/card")
         c
-      }
-      (Await.result(fm, Duration.Inf), Await.result(fg, Duration.Inf),
-        Await.result(fc, Duration.Inf))
-    } finally pool.shutdown()
+      }))
+    (m, g, c)
   }
 
   /** First turn of an incremental release: the [[build]] stages minus

@@ -80,7 +80,7 @@ object SimHashIndex {
   def pairsAgainst(
       index: DataFrame, incoming: DataFrame, idCol: String, textCol: String,
       maxDistance: Int): Probe =
-    K.pairsAgainst(index, incoming, idCol, textCol, maxDistance)
+    K.pairsAgainst(K.params(index), index, incoming, idCol, textCol, maxDistance)
 
   /** `incoming` minus near-dups of the indexed corpus, preserving
     * `incoming`'s columns and order. Identical text has identical
@@ -91,13 +91,13 @@ object SimHashIndex {
   def dedupAgainst(
       index: DataFrame, incoming: DataFrame, idCol: String, textCol: String,
       maxDistance: Int): DataFrame =
-    K.dedupAgainst(index, incoming, idCol, textCol, maxDistance)
+    K.dedupAgainst(K.params(index), index, incoming, idCol, textCol, maxDistance)
 
   /** Append new documents, signing ONLY them with the frozen recipe;
     * batch-local bucket counts ([[HammingIndex.append]]).
     */
   def append(index: DataFrame, newDocs: DataFrame, idCol: String, textCol: String): DataFrame =
-    K.append(index, newDocs, idCol, textCol)
+    K.append(K.params(index), index, newDocs, idCol, textCol)._1
 
   /** Exact-count repair from stored rows, zero text access
     * ([[HammingIndex.compact]]).

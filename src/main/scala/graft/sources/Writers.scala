@@ -4,6 +4,7 @@ import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
+import graft.DriverThreads
 import graft.etl.{Pipeline, StarLoader}
 
 /** Sinks (SURVEY.md §2.1 S6/S7).
@@ -24,6 +25,17 @@ object Writers {
 
   /** Write every star-schema table under `root/<table>`, facts
     * partitioned by `ano` when present.
+    *
+    * The ten writes are independent (distinct frames, distinct
+    * directories), so each runs on its own driver thread
+    * ([[graft.DriverThreads.all]]): one table's job tail no longer
+    * leaves the task slots idle until the next table's write starts.
+    * The threads inherit the caller's Spark local properties, so job
+    * groups and tags cover every write. A failed table does not stop the
+    * others: the call returns only after every write has finished, then
+    * rethrows the first failure (in the table order below) with the rest
+    * attached as suppressed. The failed table's directory is left as its
+    * aborted write leaves it; the other nine are complete.
     */
   def writeStar(star: StarLoader.Star, root: String, format: String = "parquet"): Unit = {
     def w(df: DataFrame, name: String): Unit = {
@@ -32,16 +44,18 @@ object Writers {
         if (df.columns.contains("ano")) base.partitionBy("ano") else base
       withPart.save(s"$root/$name")
     }
-    w(star.fatoInquerito, "fato_inquerito")
-    w(star.dimFormacao, "dim_formacao")
-    w(star.fatoFormacao, "fato_formacao_inquerito")
-    w(star.dimAreaTematica, "dim_area_tematica")
-    w(star.fatoInteresse, "fato_interesse_area")
-    w(star.comentario, "comentario")
-    w(star.dimPreferencia, "dim_preferencia_ensino")
-    w(star.fatoPreferencia, "fato_preferencia_ensino")
-    w(star.dimHorario, "dim_horario")
-    w(star.fatoDisponibilidade, "fato_disponibilidade_horaria")
+    DriverThreads.all(Seq(
+      star.fatoInquerito -> "fato_inquerito",
+      star.dimFormacao -> "dim_formacao",
+      star.fatoFormacao -> "fato_formacao_inquerito",
+      star.dimAreaTematica -> "dim_area_tematica",
+      star.fatoInteresse -> "fato_interesse_area",
+      star.comentario -> "comentario",
+      star.dimPreferencia -> "dim_preferencia_ensino",
+      star.fatoPreferencia -> "fato_preferencia_ensino",
+      star.dimHorario -> "dim_horario",
+      star.fatoDisponibilidade -> "fato_disponibilidade_horaria"
+    ).map { case (df, name) => () => w(df, name) })
   }
 
   /** S7 multi-sheet export: one csv directory per logical sheet —
@@ -65,7 +79,8 @@ object Writers {
   /** S7 export in the reference's actual artifact shape: ONE .xlsx
     * workbook with a tab per logical sheet (`pd.ExcelWriter`,
     * etl_ui.py:2144-2159) — the per-group frames plus `duplicados` /
-    * `entidades_invalidas` / `all_data`.
+    * `entidades_invalidas` / `all_data`. Sheets are counted and rendered
+    * concurrently; see [[Xlsx.writeSheets]] for the thread model.
     */
   def exportSheetsXlsx(result: Pipeline.EtlResult, path: String): Unit = {
     val groupSheets = result.plans.map(_.group).distinct.map { g =>

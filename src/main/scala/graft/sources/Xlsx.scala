@@ -1,14 +1,17 @@
 package graft.sources
 
 import java.io.InputStream
+import java.nio.file.{Files, Path, Paths}
 import java.util.zip.ZipFile
 
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
+
+import graft.DriverThreads
 
 /** Dependency-free Excel source (SURVEY.md S1). The reference ingests one
   * survey workbook per year (`pd.read_excel`, etl_ui.py:861); workbooks
@@ -27,20 +30,21 @@ object Xlsx {
 
   /** Read sheet `sheet` (1-based) of an .xlsx into a DataFrame: first row
     * = headers, all-string schema, ingest `row_id` attached (file order).
+    * The driver already holds the rows in sheet order, so `row_id` (the
+    * 0-based data-row index) is appended here while the rows are built
+    * and the rows are parallelized once: reading runs no Spark job.
     */
   def read(spark: SparkSession, path: String, sheet: Int = 1): DataFrame = {
     val rows = readRows(path, sheet)
     require(rows.nonEmpty, s"empty workbook: $path")
     val headers = rows.head.map(h => if (h == null) "" else h)
     val width = headers.length
-    val data = rows.tail.map { r =>
-      val padded = r.padTo(width, null).take(width)
-      Row.fromSeq(padded)
+    val data = rows.tail.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(r.padTo(width, null).take(width).toSeq :+ i.toLong)
     }
     val schema = StructType(headers.map(h => StructField(h, StringType, nullable = true)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(data.toSeq), schema)
-    Readers.withRowId(df)
+      .add(Readers.RowId, LongType, nullable = false)
+    spark.createDataFrame(spark.sparkContext.parallelize(data), schema)
   }
 
   /** Raw cell grid of sheet `sheet` (1-based; driver-side). Numeric cells
@@ -301,10 +305,21 @@ object Xlsx {
   def write(df: DataFrame, path: String, sheetName: String = "Sheet1"): Unit =
     writeSheets(Seq(sheetName -> df), path)
 
+  /** Hard cap on rows per exported sheet. XLSX assembly is a driver-side
+    * operation for MB-scale human artifacts (see [[writeSheets]]); a
+    * caller handing it a corpus-sized DataFrame would OOM the driver
+    * after minutes of streaming, so misuse fails fast instead. The value
+    * is Excel's own worksheet row limit (2^20), which any workbook this
+    * writer could produce must respect anyway — spreadsheets past it
+    * belong in parquet/CSV sinks.
+    */
+  val MaxExportRows: Long = 1048576L
+
   /** Multi-sheet workbook export — the writer complement of [[read]].
     * Like the reader, the workbook is assembled on the driver (MB-scale
     * artifact for humans, not cluster data); rows stream through
-    * `toLocalIterator`, so only one partition is resident at a time.
+    * `toLocalIterator`, so only one partition per sheet is resident at a
+    * time.
     * The output is a minimal but complete OPC package ([Content_Types],
     * rels, workbook manifest, styles, one worksheet part per sheet)
     * that [[read]]/[[readRows]] round-trip and spreadsheet tools accept.
@@ -320,39 +335,31 @@ object Xlsx {
     * strings, so the write->read round trip is lossless for dates and
     * millisecond-precision for timestamps (sub-millisecond digits —
     * which Excel's own UI never shows — round at read time).
+    *
+    * Thread model ([[graft.DriverThreads.all]], one driver thread per
+    * sheet, inheriting the caller's Spark local properties):
+    *  1. every sheet's row count runs concurrently, and all of them pass
+    *     the [[MaxExportRows]] guard before any byte is written;
+    *  2. every sheet is then streamed and rendered concurrently to its
+    *     own temporary part in a hidden directory beside `path`;
+    *  3. the zip is assembled at `path` from those parts in sheet order.
+    * A failed count or render fails the call only after every sheet's
+    * thread has finished, with the first failure in sheet order rethrown
+    * and the rest suppressed; `path` is then not opened at all. The
+    * temporary parts are deleted on success and on failure.
     */
-  /** Hard cap on rows per exported sheet. XLSX assembly is a driver-side
-    * operation for MB-scale human artifacts (see [[writeSheets]]); a
-    * caller handing it a corpus-sized DataFrame would OOM the driver
-    * after minutes of streaming, so misuse fails fast instead. The value
-    * is Excel's own worksheet row limit (2^20), which any workbook this
-    * writer could produce must respect anyway — spreadsheets past it
-    * belong in parquet/CSV sinks.
-    */
-  val MaxExportRows: Long = 1048576L
-
   def writeSheets(sheets: Seq[(String, DataFrame)], path: String): Unit = {
     require(sheets.nonEmpty, "writeSheets needs at least one sheet")
     // One count per sheet before any byte is written: cheap next to the
     // export itself (column-pruned to a count-star scan) and it turns a
     // driver OOM into an actionable error naming the offending sheet.
-    sheets.foreach { case (name, df) =>
+    DriverThreads.all(sheets.map { case (name, df) => () =>
       val n = df.count()
       require(n + 1 <= MaxExportRows, // +1: the header row the writer adds
         s"sheet '$name' has $n rows; XLSX export is a driver-side artifact " +
           s"capped at ${MaxExportRows - 1} data rows (Excel's sheet limit) — " +
           "write parquet/CSV for corpus-scale data")
-    }
-    val out = new java.util.zip.ZipOutputStream(
-      new java.io.BufferedOutputStream(new java.io.FileOutputStream(path)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    def entry(name: String)(body: StringBuilder => Unit): Unit = {
-      out.putNextEntry(new java.util.zip.ZipEntry(name))
-      val sb = new StringBuilder
-      body(sb)
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.closeEntry()
-    }
+    })
     val n = sheets.length
     // Sanitize AND deduplicate up front: two names that sanitize/truncate
     // to the same 31-char string would otherwise emit duplicate <sheet
@@ -372,122 +379,153 @@ object Xlsx {
         cand
       }
     }
+    val target = Paths.get(path).toAbsolutePath
+    val partsDir = Files.createTempDirectory(target.getParent, s".${target.getFileName}.parts")
+    val parts = (1 to n).map(i => partsDir.resolve(s"sheet$i.xml"))
     try {
-      entry("[Content_Types].xml") { sb =>
-        sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
-        sb ++= """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">"""
-        sb ++= """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>"""
-        sb ++= """<Default Extension="xml" ContentType="application/xml"/>"""
-        sb ++= """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>"""
-        sb ++= """<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>"""
-        (1 to n).foreach(i => sb ++=
-          s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
-        sb ++= "</Types>"
-      }
-      entry("_rels/.rels") { sb =>
-        sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
-        sb ++= """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">"""
-        sb ++= """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>"""
-        sb ++= "</Relationships>"
-      }
-      entry("xl/workbook.xml") { sb =>
-        sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
-        sb ++= """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>"""
-        tabNames.zipWithIndex.foreach { case (name, i) =>
-          sb ++= s"""<sheet name="${escapeXml(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
-        }
-        sb ++= "</sheets></workbook>"
-      }
-      entry("xl/_rels/workbook.xml.rels") { sb =>
-        sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
-        sb ++= """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">"""
-        (1 to n).foreach(i => sb ++=
-          s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""")
-        sb ++= s"""<Relationship Id="rId${n + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>"""
-        sb ++= "</Relationships>"
-      }
-      // style 0: General; 1: builtin date (14); 2: builtin datetime (22)
-      // — the same indices StyleDate/StyleDateTime below write on cells
-      entry("xl/styles.xml") { sb =>
-        sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
-        sb ++= """<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">"""
-        sb ++= """<fonts count="1"><font/></fonts>"""
-        sb ++= """<fills count="1"><fill><patternFill patternType="none"/></fill></fills>"""
-        sb ++= """<borders count="1"><border/></borders>"""
-        sb ++= """<cellStyleXfs count="1"><xf numFmtId="0"/></cellStyleXfs>"""
-        sb ++= """<cellXfs count="3">"""
-        sb ++= """<xf numFmtId="0" fontId="0" fillId="0" borderId="0" xfId="0"/>"""
-        sb ++= """<xf numFmtId="14" fontId="0" fillId="0" borderId="0" xfId="0" applyNumberFormat="1"/>"""
-        sb ++= """<xf numFmtId="22" fontId="0" fillId="0" borderId="0" xfId="0" applyNumberFormat="1"/>"""
-        sb ++= """</cellXfs></styleSheet>"""
-      }
-      sheets.zipWithIndex.foreach { case ((_, df), i) =>
-        out.putNextEntry(new java.util.zip.ZipEntry(s"xl/worksheets/sheet${i + 1}.xml"))
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          out, java.nio.charset.StandardCharsets.UTF_8))
-        w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-        w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
-        def text(rowIdx: Int, c: Int, v: Any): Unit = {
-          w.write(s"""<c r="${colName(c)}$rowIdx" t="inlineStr"><is><t>""")
-          w.write(escapeXml(String.valueOf(v)))
-          w.write("</t></is></c>")
-        }
-        def num(rowIdx: Int, c: Int, v: String, style: Int): Unit = {
-          val s = if (style > 0) s""" s="$style"""" else ""
-          w.write(s"""<c r="${colName(c)}$rowIdx"$s><v>$v</v></c>""")
-        }
-        def writeRow(rowIdx: Int, cells: Seq[Any]): Unit = {
-          w.write(s"""<row r="$rowIdx">""")
-          cells.zipWithIndex.foreach { case (v, c) =>
-            v match {
-              case null =>
-              case n: java.lang.Byte => num(rowIdx, c, n.toString, 0)
-              case n: java.lang.Short => num(rowIdx, c, n.toString, 0)
-              case n: java.lang.Integer => num(rowIdx, c, n.toString, 0)
-              case n: java.lang.Long => num(rowIdx, c, n.toString, 0)
-              case n: java.lang.Float if !n.isNaN && !n.isInfinite =>
-                num(rowIdx, c, n.toString, 0)
-              case n: java.lang.Double if !n.isNaN && !n.isInfinite =>
-                num(rowIdx, c, n.toString, 0)
-              case n: java.math.BigDecimal =>
-                // Spark widens decimals (e.g. to (38,18)); the padded
-                // zeros are representation, not value — strip them
-                num(rowIdx, c, n.stripTrailingZeros.toPlainString, 0)
-              case d: java.sql.Date =>
-                dateToSerial(d.toLocalDate) match {
-                  case Some(serial) => num(rowIdx, c, serial.toString, StyleDate)
-                  case None => text(rowIdx, c, d) // pre-1900: no valid serial
-                }
-              case t: java.sql.Timestamp =>
-                val ldt = t.toLocalDateTime
-                dateToSerial(ldt.toLocalDate) match {
-                  case Some(serial) =>
-                    // nano-precision fraction; Locale.ROOT: the f""
-                    // interpolator uses the default locale, and a
-                    // decimal-comma locale would emit a corrupt cell
-                    val frac = ldt.toLocalTime.toNanoOfDay / 86400.0e9
-                    num(rowIdx, c,
-                      String.format(java.util.Locale.ROOT, "%.10f", Double.box(serial + frac)),
-                      StyleDateTime)
-                  case None => // pre-1900 fallback keeps ms precision too
-                    text(rowIdx, c,
-                      (if (ldt.getNano != 0) IsoDateTimeMsFmt else IsoDateTimeFmt)
-                        .format(ldt))
-                }
-              case other => text(rowIdx, c, other)
-            }
-          }
-          w.write("</row>")
-        }
-        writeRow(1, df.columns.toSeq)
-        var r = 2
-        val it = df.toLocalIterator()
-        while (it.hasNext) { writeRow(r, it.next().toSeq); r += 1 }
-        w.write("</sheetData></worksheet>")
-        w.flush()
+      DriverThreads.all(sheets.zip(parts).map { case ((_, df), part) =>
+        () => renderSheet(df, part)
+      })
+      val out = new java.util.zip.ZipOutputStream(
+        new java.io.BufferedOutputStream(new java.io.FileOutputStream(path)),
+        java.nio.charset.StandardCharsets.UTF_8)
+      def entry(name: String)(body: StringBuilder => Unit): Unit = {
+        out.putNextEntry(new java.util.zip.ZipEntry(name))
+        val sb = new StringBuilder
+        body(sb)
+        out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         out.closeEntry()
       }
-    } finally out.close()
+      try {
+        entry("[Content_Types].xml") { sb =>
+          sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+          sb ++= """<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">"""
+          sb ++= """<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>"""
+          sb ++= """<Default Extension="xml" ContentType="application/xml"/>"""
+          sb ++= """<Override PartName="/xl/workbook.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>"""
+          sb ++= """<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>"""
+          (1 to n).foreach(i => sb ++=
+            s"""<Override PartName="/xl/worksheets/sheet$i.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
+          sb ++= "</Types>"
+        }
+        entry("_rels/.rels") { sb =>
+          sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+          sb ++= """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">"""
+          sb ++= """<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>"""
+          sb ++= "</Relationships>"
+        }
+        entry("xl/workbook.xml") { sb =>
+          sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+          sb ++= """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"><sheets>"""
+          tabNames.zipWithIndex.foreach { case (name, i) =>
+            sb ++= s"""<sheet name="${escapeXml(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+          }
+          sb ++= "</sheets></workbook>"
+        }
+        entry("xl/_rels/workbook.xml.rels") { sb =>
+          sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+          sb ++= """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">"""
+          (1 to n).foreach(i => sb ++=
+            s"""<Relationship Id="rId$i" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet$i.xml"/>""")
+          sb ++= s"""<Relationship Id="rId${n + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>"""
+          sb ++= "</Relationships>"
+        }
+        // style 0: General; 1: builtin date (14); 2: builtin datetime (22)
+        // — the same indices StyleDate/StyleDateTime below write on cells
+        entry("xl/styles.xml") { sb =>
+          sb ++= """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""
+          sb ++= """<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">"""
+          sb ++= """<fonts count="1"><font/></fonts>"""
+          sb ++= """<fills count="1"><fill><patternFill patternType="none"/></fill></fills>"""
+          sb ++= """<borders count="1"><border/></borders>"""
+          sb ++= """<cellStyleXfs count="1"><xf numFmtId="0"/></cellStyleXfs>"""
+          sb ++= """<cellXfs count="3">"""
+          sb ++= """<xf numFmtId="0" fontId="0" fillId="0" borderId="0" xfId="0"/>"""
+          sb ++= """<xf numFmtId="14" fontId="0" fillId="0" borderId="0" xfId="0" applyNumberFormat="1"/>"""
+          sb ++= """<xf numFmtId="22" fontId="0" fillId="0" borderId="0" xfId="0" applyNumberFormat="1"/>"""
+          sb ++= """</cellXfs></styleSheet>"""
+        }
+        parts.zipWithIndex.foreach { case (part, i) =>
+          out.putNextEntry(new java.util.zip.ZipEntry(s"xl/worksheets/sheet${i + 1}.xml"))
+          Files.copy(part, out)
+          out.closeEntry()
+        }
+      } finally out.close()
+    } finally {
+      parts.foreach(Files.deleteIfExists)
+      Files.deleteIfExists(partsDir)
+    }
+  }
+
+  /** One worksheet part: the header row, then `df`'s rows streamed
+    * through `toLocalIterator`.
+    */
+  private def renderSheet(df: DataFrame, part: Path): Unit = {
+    // an OutputStreamWriter, not Files.newBufferedWriter: it replaces an
+    // unpaired surrogate instead of failing the export on it
+    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      new java.io.FileOutputStream(part.toFile), java.nio.charset.StandardCharsets.UTF_8))
+    try {
+      w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+      w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+      def text(rowIdx: Int, c: Int, v: Any): Unit = {
+        w.write(s"""<c r="${colName(c)}$rowIdx" t="inlineStr"><is><t>""")
+        w.write(escapeXml(String.valueOf(v)))
+        w.write("</t></is></c>")
+      }
+      def num(rowIdx: Int, c: Int, v: String, style: Int): Unit = {
+        val s = if (style > 0) s""" s="$style"""" else ""
+        w.write(s"""<c r="${colName(c)}$rowIdx"$s><v>$v</v></c>""")
+      }
+      def writeRow(rowIdx: Int, cells: Seq[Any]): Unit = {
+        w.write(s"""<row r="$rowIdx">""")
+        cells.zipWithIndex.foreach { case (v, c) =>
+          v match {
+            case null =>
+            case n: java.lang.Byte => num(rowIdx, c, n.toString, 0)
+            case n: java.lang.Short => num(rowIdx, c, n.toString, 0)
+            case n: java.lang.Integer => num(rowIdx, c, n.toString, 0)
+            case n: java.lang.Long => num(rowIdx, c, n.toString, 0)
+            case n: java.lang.Float if !n.isNaN && !n.isInfinite =>
+              num(rowIdx, c, n.toString, 0)
+            case n: java.lang.Double if !n.isNaN && !n.isInfinite =>
+              num(rowIdx, c, n.toString, 0)
+            case n: java.math.BigDecimal =>
+              // Spark widens decimals (e.g. to (38,18)); the padded
+              // zeros are representation, not value — strip them
+              num(rowIdx, c, n.stripTrailingZeros.toPlainString, 0)
+            case d: java.sql.Date =>
+              dateToSerial(d.toLocalDate) match {
+                case Some(serial) => num(rowIdx, c, serial.toString, StyleDate)
+                case None => text(rowIdx, c, d) // pre-1900: no valid serial
+              }
+            case t: java.sql.Timestamp =>
+              val ldt = t.toLocalDateTime
+              dateToSerial(ldt.toLocalDate) match {
+                case Some(serial) =>
+                  // nano-precision fraction; Locale.ROOT: the f""
+                  // interpolator uses the default locale, and a
+                  // decimal-comma locale would emit a corrupt cell
+                  val frac = ldt.toLocalTime.toNanoOfDay / 86400.0e9
+                  num(rowIdx, c,
+                    String.format(java.util.Locale.ROOT, "%.10f", Double.box(serial + frac)),
+                    StyleDateTime)
+                case None => // pre-1900 fallback keeps ms precision too
+                  text(rowIdx, c,
+                    (if (ldt.getNano != 0) IsoDateTimeMsFmt else IsoDateTimeFmt)
+                      .format(ldt))
+              }
+            case other => text(rowIdx, c, other)
+          }
+        }
+        w.write("</row>")
+      }
+      writeRow(1, df.columns.toSeq)
+      var r = 2
+      val it = df.toLocalIterator()
+      while (it.hasNext) { writeRow(r, it.next().toSeq); r += 1 }
+      w.write("</sheetData></worksheet>")
+    } finally w.close()
   }
 
   /** cellXfs indices the writer's styles part defines. */

@@ -58,7 +58,10 @@ object FingerprintDupGate {
       checkpointPath: Option[String] = None,
       checkpointEvery: Int = 0) {
 
-    private val family = HammingIndex.familyOf(initialIndex)
+    // the index's recipe, read once here and then carried forward by
+    // every append (which grows its nDocs) instead of re-read per batch
+    private var params = HammingIndex.paramsOf(initialIndex)
+    private val family = params.family
     private val prefix =
       if (family eq HammingIndex.SimHash) HammingDupGate.CheckpointPrefix else CheckpointPrefix
     private var index: DataFrame = initialIndex
@@ -77,13 +80,14 @@ object FingerprintDupGate {
       */
     def filterBatch(batch: DataFrame): DataFrame = synchronized {
       val survivors = family
-        .dedupAgainst(index, batch, idCol, hashCol, maxDistance)
+        .dedupAgainst(params, index, batch, idCol, hashCol, maxDistance)
         .localCheckpoint() // materialize BEFORE the index moves on
-      val appended = family.append(index, survivors, idCol, hashCol)
+      val (appended, grown) = family.append(params, index, survivors, idCol, hashCol)
       val next = appended.localCheckpoint() // sever lineage: state stays flat
       appended.unpersist()
       if (owned) index.unpersist()
       index = next
+      params = grown
       owned = true
       batches += 1
       GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,

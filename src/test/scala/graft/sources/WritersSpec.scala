@@ -2,6 +2,10 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.util.Try
+
+import org.apache.spark.sql.functions.{col, lit, raise_error}
+
 import graft.SparkSpec
 import graft.etl.{Fixtures, Pipeline, StarLoader}
 
@@ -50,5 +54,42 @@ class WritersSpec extends SparkSpec {
     // quarantine tab holds the duplicate row
     val dupIdx = names.indexOf("duplicados") + 1
     assert(Xlsx.read(spark, path, sheet = dupIdx).count() == 1)
+  }
+
+  private val starTables = Seq(
+    "fato_inquerito", "dim_formacao", "fato_formacao_inquerito", "dim_area_tematica",
+    "fato_interesse_area", "comentario", "dim_preferencia_ensino", "fato_preferencia_ensino",
+    "dim_horario", "fato_disponibilidade_horaria")
+
+  test("concurrent writeStar writes exactly the ten star frames") {
+    val root = Files.createTempDirectory("graft-star-all").toString
+    val star = StarLoader.load(result)
+    Writers.writeStar(star, root)
+    val frames = Seq(
+      star.fatoInquerito, star.dimFormacao, star.fatoFormacao, star.dimAreaTematica,
+      star.fatoInteresse, star.comentario, star.dimPreferencia, star.fatoPreferencia,
+      star.dimHorario, star.fatoDisponibilidade)
+    starTables.zip(frames).foreach { case (name, df) =>
+      val back = spark.read.parquet(s"$root/$name").select(df.columns.map(col): _*)
+      assert(back.except(df).isEmpty && df.except(back).isEmpty, name)
+    }
+  }
+
+  test("a failing star table fails writeStar only after every other table's write finished") {
+    val root = Files.createTempDirectory("graft-star-fail").toString
+    val star = StarLoader.load(result)
+    val bad = star.copy(comentario =
+      star.comentario.withColumn("boom", raise_error(lit("star boom")).cast("string")))
+    // jobsDuring also fails if a job of the call is still running once
+    // it has thrown
+    val (thrown, jobs) = jobsDuring(Try(Writers.writeStar(bad, root)))
+    assert(jobs > 0)
+    val e = thrown.failed.get
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("star boom")))
+    // and all nine other tables were written in full
+    starTables.filter(_ != "comentario").foreach { t =>
+      assert(new java.io.File(s"$root/$t/_SUCCESS").exists(), t)
+    }
   }
 }

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 
 /** Builds a minimal .xlsx by hand (zip of XML parts) and reads it back —
@@ -309,5 +311,54 @@ class XlsxSpec extends SparkSpec {
     assert(e.getMessage.contains("huge") && e.getMessage.contains("parquet"))
     // nothing was written: the guard ran before assembly started
     assert(Files.size(java.nio.file.Paths.get(f)) == 0L)
+  }
+
+  test("read attaches row_id 0..n-1 in sheet order on the driver: zero Spark jobs (.xlsx and .xls)") {
+    import spark.implicits._
+    val f = Files.createTempFile("graft-rowid", ".xlsx").toString
+    // 2,000 rows: more than one parallelize slice, so order across
+    // partitions is exercised too
+    Xlsx.write(spark.range(2000).selectExpr("cast(id * 7 as string) AS v"), f)
+    val (df, jobs) = jobsDuring(Xlsx.read(spark, f))
+    assert(jobs == 0)
+    assert(df.schema("row_id").dataType == org.apache.spark.sql.types.LongType)
+    assert(df.rdd.getNumPartitions > 1)
+    assert(df.select($"row_id", $"v").as[(Long, String)].collect().toSeq ==
+      (0L until 2000L).map(i => (i, (i * 7).toString)))
+
+    // the .xls route: BiffFixture's grid, first cell of each data row
+    val xls = BiffFixture.write(BiffFixture.cfb(BiffFixture.workbookStream()))
+    val (biff, biffJobs) = jobsDuring(Xlsx.read(spark, xls))
+    assert(biffJobs == 0)
+    assert(biff.select($"row_id", $"header_a").as[(Long, String)].collect().toSeq ==
+      Seq((0L, "3.25"), (1L, "2023-03-15"), (2L, "7.5")))
+  }
+
+  test("writeSheets leaves no temporary sheet part behind, on success or on failure") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    import spark.implicits._
+    def listing(d: java.nio.file.Path): Set[String] = {
+      val s = Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    val ok = Files.createTempDirectory("graft-parts-ok")
+    Xlsx.writeSheets(Seq("a" -> Seq(("x", 1)).toDF("k", "v"), "b" -> spark.range(500).toDF("id")),
+      ok.resolve("out.xlsx").toString)
+    assert(listing(ok) == Set("out.xlsx"))
+    assert(Xlsx.read(spark, ok.resolve("out.xlsx").toString, sheet = 2).count() == 500)
+
+    // the count guard passes (a count prunes the failing projection);
+    // the render of sheet "bad" fails after sheet "a" rendered its part
+    val failed = Files.createTempDirectory("graft-parts-failed")
+    val bad = spark.range(3).select(raise_error(lit("render boom")).cast("string").as("x"))
+    val e = intercept[Exception] {
+      Xlsx.writeSheets(Seq("a" -> spark.range(500).toDF("id"), "bad" -> bad),
+        failed.resolve("out.xlsx").toString)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("render boom")))
+    // neither a part nor a partial workbook: the zip is opened only once
+    // every sheet has rendered
+    assert(listing(failed).isEmpty)
   }
 }

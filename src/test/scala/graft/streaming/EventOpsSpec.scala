@@ -25,26 +25,31 @@ class EventOpsSpec extends SparkSpec {
       case _ => df
     }
 
-  private def eventsBatch = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tsFix(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
+  // the legacy conf goes on a session of this suite's own: the shared
+  // test session stays unmutated
+  private lazy val nanos = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s
   }
+
+  private def eventsBatch =
+    tsFix(nanos.read.parquet("/root/testdata/sf0.001/events.parquet"))
 
   test("hourlyAgg streaming == batch on the same files") {
     val batch = EventOps.hourlyAgg(eventsBatch)
       .orderBy("window_start", "event_type")
       .collect().toSeq
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema
-    val stream = tsFix(spark.readStream.schema(schema)
+    val schema = nanos.read.parquet("/root/testdata/sf0.001/events.parquet").schema
+    val stream = tsFix(nanos.readStream.schema(schema)
       .parquet("/root/testdata/sf0.001/"))
     // complete mode: aggregation over a bounded file stream
     val q = EventOps.hourlyAgg(stream).writeStream
       .outputMode("complete").format("memory").queryName("hourly_out")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
-    val streamed = spark.table("hourly_out")
+    val streamed = nanos.table("hourly_out")
       .orderBy("window_start", "event_type").collect().toSeq
     assert(streamed == batch)
     assert(batch.nonEmpty)

@@ -104,4 +104,31 @@ class FingerprintDupGateSpec extends SparkSpec {
       SimHashIndex.append(simhash, docs, "id", "h")
     }
   }
+
+  test("a gate micro-batch re-reads no meta row: two jobs fewer than the public-call replay, same ids") {
+    val all = (0L until 400L).map(i => (i, hashOf(i))).toDF("id", "h")
+    val initial = all.filter($"id" % 4 === 0)
+    val batch = all.filter($"id" % 4 =!= 0).localCheckpoint()
+
+    val gate = new FingerprintDupGate.Gate(HammingIndex.build(initial, "id", "h"), "id", "h",
+      maxDistance = 1)
+    val (gated, gateJobs) = jobsDuring(gate.filterBatch(batch))
+
+    // the same micro-batch through the public calls the gate is made of
+    // (each of which reads the index's meta row)
+    val ix = HammingIndex.build(initial, "id", "h")
+    val (replayed, replayJobs) = jobsDuring {
+      val survivors = HammingIndex.dedupAgainst(ix, batch, "id", "h", maxDistance = 1)
+        .localCheckpoint()
+      val appended = HammingIndex.append(ix, survivors, "id", "h")
+      appended.localCheckpoint()
+      appended.unpersist()
+      survivors
+    }
+    assert(gateJobs == replayJobs - 2, s"gate $gateJobs jobs, replay $replayJobs")
+    val ids = (df: DataFrame) => df.select("id").as[Long].collect().toSet
+    assert(ids(gated) == ids(replayed))
+    assert(ids(gated).nonEmpty && ids(gated).size < 300)
+    assert(HammingIndex.readMeta(gate.currentIndex).nDocs == 100 + ids(gated).size)
+  }
 }

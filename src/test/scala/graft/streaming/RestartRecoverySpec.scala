@@ -114,8 +114,11 @@ class RestartRecoverySpec extends SparkSpec {
     // duplicate arriving AFTER a restart, of an event committed BEFORE
     // it, must still be dropped with zero caller-side reconstruction.
     val root = java.nio.file.Files.createTempDirectory("dedup_restart").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    // the legacy conf goes on a session of this test's own: the shared
+    // test session stays unmutated
+    val nanos = spark.newSession()
+    nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = nanos.read.parquet("/root/testdata/sf0.001/events.parquet")
     val events = (raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
           raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
