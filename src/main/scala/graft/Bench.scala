@@ -377,14 +377,17 @@ object Bench {
         if (!probesDegraded(b2, a2)) (segName, entries2, false)
         else {
           // Both passes contaminated (VERDICT r14 #7): ship the
-          // per-entry MINIMUM of the two — contention only inflates, so
-          // the lower sample is strictly closer to the quiet truth, and
-          // the segment stays stamped so consumers still know to
-          // distrust it. Failed entries never beat successful ones.
+          // per-entry MINIMUM of the two, cold and warm each taken
+          // separately — contention only inflates, so the lower sample
+          // is strictly closer to the quiet truth, and the segment stays
+          // stamped so consumers still know to distrust it. Failed
+          // entries never beat successful ones.
           val byName = entries2.map(e => e.name -> e).toMap
           val best = entries.map { e1 =>
             byName.get(e1.name) match {
-              case Some(e2) if e2.err.isEmpty && (e1.err.nonEmpty || e2.warm < e1.warm) => e2
+              case Some(e2) if e2.err.isEmpty && e1.err.nonEmpty => e2
+              case Some(e2) if e2.err.isEmpty =>
+                e1.copy(cold = math.min(e1.cold, e2.cold), warm = math.min(e1.warm, e2.warm))
               case _ => e1
             }
           }

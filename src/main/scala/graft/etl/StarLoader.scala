@@ -1,11 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{Cols, TextNorm}
+import graft.functions.{Cols, NormalizeTextExpr, TextNorm}
 import graft.operators.SurrogateKeys
 import graft.sources.Readers
 
@@ -13,10 +16,13 @@ import graft.sources.Readers
   *
   * The reference loads row-at-a-time with `INSERT ... RETURNING id` —
   * O(rows x questions) database round-trips. Here every fact is one
-  * unpivot (narrow, stays in codegen) + one broadcast dim join, and every
-  * dimension is a get-or-create (distinct + anti-join + dimension-sized
-  * window). Write the resulting frames with `df.write.jdbc` (batched) or
-  * parquet partitioned by `ano`.
+  * unpivot (narrow, stays in codegen) + one broadcast dim join over the
+  * one materialized `valid` cache, which already carries `id_inquerito`.
+  * Every dimension is a get-or-create computed on the driver from the
+  * column labels and the collected existing rows (dimension-sized by
+  * construction) and returned as a one-partition local relation. Write
+  * the resulting frames with `df.write.jdbc` (batched) or parquet
+  * partitioned by `ano`.
   *
   * Surrogate ids: the fact-side `inquerito`/`resposta` ids are chosen by
   * [[IdStrategy]]. [[DenseIds]] (default) matches the serial reference —
@@ -26,9 +32,8 @@ import graft.sources.Readers
   * [[SurrogateKeys.scalable]] (unique, non-contiguous, shuffle-free,
   * stays in codegen) — nothing downstream depends on contiguity, so this
   * is the setting for web-scale facts; `Bench.pipeline_1m` and
-  * `tools.ScalePipeline` run it. Dimension get-or-create windows stay
-  * dense regardless: they run over driver-local label relations
-  * (dimension-sized by construction), pinned by PlanSpec.
+  * `tools.ScalePipeline` run it. Dimension ids stay dense regardless:
+  * they are assigned on the driver, never by a Spark window.
   */
 object StarLoader {
 
@@ -53,8 +58,8 @@ object StarLoader {
       dimHorario: DataFrame,
       fatoDisponibilidade: DataFrame,
       private val caches: Seq[DataFrame] = Seq.empty) {
-    /** Release every cache [[load]] created (valid input, inquerito ids,
-      * dims, fused interests) once the star frames are written — same
+    /** Release every cache [[load]] created (valid input with its
+      * inquerito ids, fused interests) once the star frames are written — same
       * lifecycle contract as [[Dedup.Split]]/[[Pipeline.EtlResult]].
       */
     def unpersist(): Unit = caches.foreach(_.unpersist())
@@ -66,9 +71,9 @@ object StarLoader {
       StructType(fields.map { case (n, t) => StructField(n, t) }))
 
   /** Melt the given plans' physical columns into
-    * (row_id, pos, label, value) — `pos` is the column position inside the
-    * group, preserving the reference's (row, column) insertion order for
-    * id assignment.
+    * (id_inquerito, pos, label, value) — `pos` is the column position
+    * inside the group, preserving the reference's (row, column) insertion
+    * order for id assignment.
     */
   private def long(
       df: DataFrame,
@@ -79,37 +84,47 @@ object StarLoader {
       struct(lit(labelOf(p)).as("label"), lit(i).as("pos"),
         col(s"`${p.uniqueName}`").cast(valueType).as("value"))
     }
-    df.select(col(Readers.RowId), explode(array(cols: _*)).as("m"))
-      .select(col(Readers.RowId), col("m.pos").as("pos"),
+    df.select(col("id_inquerito"), explode(array(cols: _*)).as("m"))
+      .select(col("id_inquerito"), col("m.pos").as("pos"),
         col("m.label").as("label"), col("m.value").as("value"))
   }
 
-  /** Dimension get-or-create keyed by `keyFn(nome)`: existing rows keep
-    * their (id, nome); unseen keys get dense ids continuing after
-    * max(existing). Replaces `INSERT ... ON CONFLICT DO NOTHING RETURNING`
-    * (etl_ui.py:446-456,508-520,571-587) without serial round-trips.
+  /** Spark's default string order (UTF-8 bytes, unsigned), which is not
+    * `String.compareTo`'s UTF-16 order once supplementary-plane
+    * characters are involved.
     */
-  private def dimGetOrCreate(
-      existing: Option[DataFrame], // (idCol, nomeCol)
-      incomingNames: DataFrame,    // one column: nomeCol
-      idCol: String,
-      nomeCol: String,
-      keyFn: Column => Column): DataFrame = {
-    val spark = incomingNames.sparkSession
-    val ex = existing
-      .getOrElse(emptyDf(spark, idCol -> LongType, nomeCol -> StringType))
-      .select(col(idCol).cast("long").as(idCol), col(nomeCol))
-    val exKeyed = ex.withColumn("__key", keyFn(col(nomeCol)))
-    val fresh = incomingNames.select(col(nomeCol)).na.drop().distinct()
-      .withColumn("__key", keyFn(col(nomeCol)))
-      .join(exKeyed.select("__key"), Seq("__key"), "left_anti")
-      .drop("__key")
-    val maxId = ex.agg(coalesce(max(col(idCol)), lit(0L)).as("__m"))
-    val created = SurrogateKeys.dense(fresh, idCol, Seq(col(nomeCol).asc))
-      .crossJoin(broadcast(maxId))
-      .select((col(idCol) + col("__m")).cast("long").as(idCol), col(nomeCol))
-    ex.unionByName(created)
+  private val binaryOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** Dimension get-or-create on the driver: `existing` rows (collected
+    * as `schema`: the long id, then the natural-key fields) are kept as
+    * they are; each distinct `incoming` natural key whose `key` matches
+    * no existing row gets a dense id after max(existing id), in `order`.
+    * Replaces `INSERT ... ON CONFLICT DO NOTHING RETURNING`
+    * (etl_ui.py:446-456,508-520,571-587,625-641) without serial
+    * round-trips. Dimensions are label-sized: one partition, one file.
+    */
+  private def dimGetOrCreate(spark: SparkSession, schema: StructType,
+      existing: Option[DataFrame], incoming: Seq[Row], key: Row => Any,
+      order: Ordering[Row]): DataFrame = {
+    val ex = existing.toSeq.flatMap(
+      _.select(schema.map(f => col(f.name).cast(f.dataType)): _*).collect())
+    val exKeys = ex.map(r => key(Row.fromSeq(r.toSeq.tail))).toSet
+    val maxId = ex.flatMap(r => Option(r.get(0))).map(_.asInstanceOf[Long]).maxOption
+    val created = incoming.distinct.filterNot(r => exKeys(key(r))).sorted(order)
+      .zipWithIndex.map { case (r, i) => Row.fromSeq((maxId.getOrElse(0L) + i + 1) +: r.toSeq) }
+    spark.createDataFrame((ex ++ created).asJava, schema).coalesce(1)
   }
+
+  /** An (id, name) dimension keyed by `keyFn(name)`, fresh names in
+    * Spark's string order.
+    */
+  private def nameDim(spark: SparkSession, existing: Option[DataFrame], names: Seq[String],
+      idCol: String, nomeCol: String, keyFn: String => String = identity): DataFrame =
+    dimGetOrCreate(spark,
+      StructType(Seq(StructField(idCol, LongType), StructField(nomeCol, StringType))),
+      existing, names.filter(_ != null).map(Row(_)), r => keyFn(r.getString(0)),
+      Ordering.by[Row, String](_.getString(0))(binaryOrder))
 
   /** @param result           pipeline output; facts load from `result.valid`
     * @param existingFormacao optional (id_formacao, nome_formacao) dim state
@@ -133,54 +148,46 @@ object StarLoader {
       idStrategy: IdStrategy = DenseIds): Star = {
 
     val spark = result.valid.sparkSession
-    import spark.implicits._
     val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cached(df: DataFrame): DataFrame = { caches += df.persist(); df }
-    // Materialize eagerly: the inquerito surrogate-id window is a
-    // single-partition exchange, and without a built cache AQE chains the
-    // whole upstream dedup into that one task (measured 50s vs 2s at 1M
-    // input rows).
-    val valid = cached(result.valid)
+    // ONE cache serves every fact: `valid` with its inquerito ids,
+    // materialized eagerly so the ten concurrent star writes read built
+    // blocks instead of each racing to compute them. Under DenseIds the
+    // id window leaves it in one partition (survey scale, see above).
+    val valid = cached(idStrategy match {
+      case DenseIds => SurrogateKeys.dense(result.valid, "id_inquerito",
+        Seq(col(Readers.RowId).asc), offset = idOffset)
+      case ScalableIds => SurrogateKeys.scalable(result.valid, "id_inquerito",
+        offset = idOffset)
+    })
     valid.count()
 
     // ---- FatoInquerito (X7, X23) -------------------------------------
     val hasResp = result.plans.exists(_.uniqueName == "existe_responsavel")
-    val withInqId = idStrategy match {
-      case DenseIds => SurrogateKeys.dense(valid, "id_inquerito",
-        Seq(col(Readers.RowId).asc), offset = idOffset)
-      case ScalableIds => SurrogateKeys.scalable(valid, "id_inquerito",
-        offset = idOffset)
-    }
-    val inq = withInqId
-      .select(
-        col("id_inquerito"),
-        col(Readers.RowId),
-        col("id_entidade"),
-        col("ano"),
-        to_date(col("data_submissao")).as("data_submissao"),
-        (if (hasResp) Cols.simNaoStrict(col("existe_responsavel"))
-         else lit(null).cast("int")).as("existe_responsavel"),
-        col("nome_responsavel"),
-        col("percentagem_preenchido"),
-        col("tempo_realizacao"))
-    caches += inq.persist()
-    val rid2inq = inq.select(col(Readers.RowId), col("id_inquerito"))
+    val fatoInquerito = valid.select(
+      col("id_inquerito"),
+      col("id_entidade"),
+      col("ano"),
+      to_date(col("data_submissao")).as("data_submissao"),
+      (if (hasResp) Cols.simNaoStrict(col("existe_responsavel"))
+       else lit(null).cast("int")).as("existe_responsavel"),
+      col("nome_responsavel"),
+      col("percentagem_preenchido"),
+      col("tempo_realizacao"))
 
     // ---- M1 formations ----------------------------------------------
     val fPlans = result.colsOfGroup("formacoes")
     // dim rows come from the column labels (the reference inserts every
     // formation column, etl_ui.py:446-456), keyed by normalized name
-    val dimFormacao = cached(dimGetOrCreate(
-      existingFormacao,
-      fPlans.map(_.label).distinct.toDF("nome_formacao"),
-      "id_formacao", "nome_formacao", Cols.normalizeText))
+    val dimFormacao = nameDim(spark, existingFormacao, fPlans.map(_.label),
+      "id_formacao", "nome_formacao",
+      s => NormalizeTextExpr.normalize(UTF8String.fromString(s)).toString)
     val fatoFormacao =
       if (fPlans.isEmpty)
         emptyDf(spark, "id_inquerito" -> LongType, "id_formacao" -> LongType,
           "n_formandos" -> IntegerType)
       else long(valid, fPlans, "int")
         .filter(col("value").isNotNull && col("value") >= 0)
-        .join(rid2inq, Readers.RowId)
         .join(broadcast(dimFormacao
             .select(col("id_formacao"), Cols.normalizeText(col("nome_formacao")).as("__k"))),
           Cols.normalizeText(col("label")) === col("__k"))
@@ -190,9 +197,7 @@ object StarLoader {
     val iPlans = result.colsOfGroup("interesses").filter(_.role == LabelOps.Interest)
     val cPlans = result.colsOfGroup("interesses").filter(_.role == LabelOps.InterestComment)
 
-    val dimArea = cached(dimGetOrCreate(
-      None, iPlans.map(_.label).distinct.toDF("nome_area"),
-      "id_area_tematica", "nome_area", c => c))
+    val dimArea = nameDim(spark, None, iPlans.map(_.label), "id_area_tematica", "nome_area")
 
     val (fatoInteresse, comentario) =
       if (iPlans.isEmpty)
@@ -205,16 +210,15 @@ object StarLoader {
           .filter(col("value").isNotNull && col("value") > 0)
         val cLong =
           if (cPlans.isEmpty)
-            emptyDf(spark, Readers.RowId -> LongType, "label" -> StringType,
+            emptyDf(spark, "id_inquerito" -> LongType, "label" -> StringType,
               "texto_raw" -> StringType)
           else long(valid, cPlans, "string",
               labelOf = p => LabelOps.interestLabelOfComment(p.label, commentKeys))
             .filter(col("value").isNotNull && trim(col("value")) =!= "")
-            .select(col(Readers.RowId), col("label"), trim(col("value")).as("texto_raw"))
+            .select(col("id_inquerito"), col("label"), trim(col("value")).as("texto_raw"))
 
         val fused = iLong
-          .join(cLong, Seq(Readers.RowId, "label"), "left_outer")
-          .join(rid2inq, Readers.RowId)
+          .join(cLong, Seq("id_inquerito", "label"), "left_outer")
           .join(broadcast(dimArea), col("label") === col("nome_area"))
           .withColumn("n_formandos",
             when(col("texto_raw").isNotNull && Cols.isNumericString(col("texto_raw")),
@@ -225,14 +229,15 @@ object StarLoader {
               col("texto_raw")))
 
         // DenseIds: resposta ids follow the reference's (row, column)
-        // insert order — single-partition window, survey-scale only.
+        // insert order — id_inquerito is dense in row order, so it orders
+        // rows; single-partition window, survey-scale only.
         // ScalableIds: unique ids, no window (see object scaladoc).
         val interesse = cached(idStrategy match {
           case DenseIds => fused.withColumn("id_resposta",
             // constant partition key: declared single-task window, same
             // execution as bare orderBy (see SurrogateKeys.dense)
             row_number().over(Window.partitionBy(lit(0))
-                .orderBy(col(Readers.RowId).asc, col("pos").asc))
+                .orderBy(col("id_inquerito").asc, col("pos").asc))
               .cast("long"))
           case ScalableIds => SurrogateKeys.scalable(fused, "id_resposta")
         })
@@ -249,15 +254,13 @@ object StarLoader {
 
     // ---- M3 preferences ---------------------------------------------
     val pPlans = result.colsOfGroup("tipo de ensino")
-    val dimPreferencia = cached(dimGetOrCreate(
-      None, pPlans.map(_.label).distinct.toDF("descricao_preferencia"),
-      "id_preferencia", "descricao_preferencia", c => c))
+    val dimPreferencia = nameDim(spark, None, pPlans.map(_.label),
+      "id_preferencia", "descricao_preferencia")
     val fatoPreferencia =
       if (pPlans.isEmpty)
         emptyDf(spark, "id_inquerito" -> LongType, "id_preferencia" -> LongType,
           "valor_preferencia" -> IntegerType)
       else long(valid, pPlans, "int").filter(col("value").isNotNull)
-        .join(rid2inq, Readers.RowId)
         .join(broadcast(dimPreferencia), col("label") === col("descricao_preferencia"))
         .select(col("id_inquerito"), col("id_preferencia"),
           col("value").as("valor_preferencia"))
@@ -266,37 +269,24 @@ object StarLoader {
     val dPlans = result.colsOfGroup("disponibilidade")
     // label -> (descricao from brackets, tipo from prefix match) is pure
     // label logic, driver-side like the reference (etl_ui.py:613-623)
-    val horarioOfLabel: Map[String, (String, Option[Long])] = dPlans.map { p =>
+    val horarioOfLabel: Map[String, (String, java.lang.Long)] = dPlans.map { p =>
       val tipo = tiposDisp.find(td =>
         p.label.startsWith(TextNorm.normalize(s"${td.descricao} -"))).map(_.id)
-      p.label -> ((TextNorm.extractBrackets(p.label), tipo))
+      p.label -> ((TextNorm.extractBrackets(p.label), tipo.map(Long.box).orNull))
     }.toMap
 
-    val exHor = existingHorario
-      .getOrElse(emptyDf(spark, "id_horario" -> LongType,
-        "descricao_horario" -> StringType, "id_tipo_disp" -> LongType))
-      .select(col("id_horario").cast("long").as("id_horario"),
-        col("descricao_horario"), col("id_tipo_disp").cast("long").as("id_tipo_disp"))
-    val horarioNeeded = dPlans
-      .map(p => horarioOfLabel(p.label))
-      .map { case (d, t) => (d, t.map(java.lang.Long.valueOf).orNull) }
-      .distinct
-      .toDF("descricao_horario", "id_tipo_disp")
-      .select(col("descricao_horario"), col("id_tipo_disp").cast("long").as("id_tipo_disp"))
-    // null-safe keys throughout: a label with no matching type prefix
-    // yields id_tipo_disp = NULL, which must still match its dim row
-    val exHorK = exHor.select(col("descricao_horario").as("__eh_desc"),
-      col("id_tipo_disp").as("__eh_tipo"))
-    val freshHor = horarioNeeded.join(exHorK,
-      col("descricao_horario") <=> col("__eh_desc") &&
-        col("id_tipo_disp") <=> col("__eh_tipo"), "left_anti")
-    val maxHor = exHor.agg(coalesce(max(col("id_horario")), lit(0L)).as("__m"))
-    val dimHorario = cached(exHor.unionByName(
-      SurrogateKeys.dense(freshHor, "id_horario",
-          Seq(col("descricao_horario").asc, col("id_tipo_disp").asc_nulls_last))
-        .crossJoin(broadcast(maxHor))
-        .select((col("id_horario") + col("__m")).cast("long").as("id_horario"),
-          col("descricao_horario"), col("id_tipo_disp"))))
+    // keyed null-safe on (descricao, tipo): a label with no matching type
+    // prefix yields id_tipo_disp = NULL, which must still match its dim
+    // row; fresh rows in (descricao, tipo nulls last) order
+    val horarioOrder = Ordering.by((r: Row) => (Option(r.getString(0)),
+      r.isNullAt(1), Option(r.get(1)).map(_.asInstanceOf[Long])))(Ordering.Tuple3(
+      Ordering.Option(binaryOrder), Ordering.Boolean, Ordering.Option(Ordering.Long)))
+    val dimHorario = dimGetOrCreate(spark,
+      StructType(Seq(StructField("id_horario", LongType),
+        StructField("descricao_horario", StringType), StructField("id_tipo_disp", LongType))),
+      existingHorario,
+      dPlans.map { p => val (d, t) = horarioOfLabel(p.label); Row(d, t) },
+      r => (r.get(0), r.get(1)), horarioOrder)
 
     val fatoDisponibilidade =
       if (dPlans.isEmpty)
@@ -305,13 +295,12 @@ object StarLoader {
       else {
         val descEntries = dPlans.flatMap(p => Seq(lit(p.label), lit(horarioOfLabel(p.label)._1)))
         val tipoEntries = dPlans.flatMap(p => Seq(lit(p.label),
-          lit(horarioOfLabel(p.label)._2.map(java.lang.Long.valueOf).orNull).cast("long")))
+          lit(horarioOfLabel(p.label)._2).cast("long")))
         val dh = dimHorario.select(col("id_horario"),
           col("descricao_horario").as("__dh_desc"), col("id_tipo_disp").as("__dh_tipo"))
         long(valid, dPlans, "int").filter(col("value").isNotNull)
           .withColumn("descricao_horario", element_at(map(descEntries: _*), col("label")))
           .withColumn("id_tipo_disp", element_at(map(tipoEntries: _*), col("label")))
-          .join(rid2inq, Readers.RowId)
           .join(broadcast(dh),
             col("descricao_horario") <=> col("__dh_desc") &&
               col("id_tipo_disp") <=> col("__dh_tipo"))
@@ -320,7 +309,7 @@ object StarLoader {
       }
 
     Star(
-      fatoInquerito = inq.drop(Readers.RowId),
+      fatoInquerito = fatoInquerito,
       dimFormacao = dimFormacao,
       fatoFormacao = fatoFormacao,
       dimAreaTematica = dimArea,

@@ -54,10 +54,21 @@ object Cols {
     when(n === "sim", 1).when(n === "nao", 0).otherwise(-1)
   }
 
-  /** X7 strict accent-sensitive sim/não -> 1/0, miss -> null. */
+  /** X7 strict accent-sensitive sim/não -> 1/0, miss -> null. Same
+    * result as comparing `lower(c)` to "sim"/"não" (pinned in ColsSpec),
+    * but matches the eight case variants of each word instead: Spark's
+    * `lower` builds an ICU case-mapping table the first time it runs in
+    * a JVM, which a cold batch pays inside its first fact write.
+    */
   def simNaoStrict(c: Column): Column =
-    when(lower(c) === "sim", 1).when(lower(c) === "não", 0)
+    when(c.isin(caseVariants("sim"): _*), 1).when(c.isin(caseVariants("não"): _*), 0)
       .otherwise(lit(null).cast("int"))
+
+  /** Every spelling of `word` with each letter in lower or upper case. */
+  private def caseVariants(word: String): Seq[String] =
+    word.foldLeft(Seq("")) { (acc, ch) =>
+      acc.flatMap(p => Seq(p + ch.toLower, p + ch.toUpper))
+    }
 
   /** X8 sentence split -> array of non-empty trimmed sentences. Pure
     * higher-order functions (codegen), Java regex handles the lookarounds.

@@ -79,20 +79,23 @@ object Writers {
   /** S7 export in the reference's actual artifact shape: ONE .xlsx
     * workbook with a tab per logical sheet (`pd.ExcelWriter`,
     * etl_ui.py:2144-2159) — the per-group frames plus `duplicados` /
-    * `entidades_invalidas` / `all_data`. Sheets are counted and rendered
-    * concurrently; see [[Xlsx.writeSheets]] for the thread model.
+    * `entidades_invalidas` / `all_data`. The group sheets and `all_data`
+    * are column views of `result.valid`, so it is counted once and
+    * streamed once for all of them; see [[Xlsx.writeSheets]] for the
+    * thread model.
     */
   def exportSheetsXlsx(result: Pipeline.EtlResult, path: String): Unit = {
+    val valid = result.valid
     val groupSheets = result.plans.map(_.group).distinct.map { g =>
       val cols = "row_id" +: result.colsOfGroup(g).map(_.uniqueName)
-      val present = cols.filter(result.valid.columns.contains)
-      g -> result.valid.selectExpr(present.map(c => s"`$c`"): _*)
+      (g, valid, cols.map(c => valid.columns.indexOf(c)).filter(_ >= 0))
     }
-    Xlsx.writeSheets(
+    def whole(name: String, df: DataFrame) = (name, df, df.columns.indices)
+    Xlsx.writeSheetViews(
       groupSheets ++ Seq(
-        "duplicados" -> result.duplicates,
-        "entidades_invalidas" -> result.unmatched,
-        "all_data" -> result.valid),
+        whole("duplicados", result.duplicates),
+        whole("entidades_invalidas", result.unmatched),
+        whole("all_data", valid)),
       path)
   }
 

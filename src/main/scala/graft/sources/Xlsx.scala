@@ -337,26 +337,44 @@ object Xlsx {
     * which Excel's own UI never shows — round at read time).
     *
     * Thread model ([[graft.DriverThreads.all]], one driver thread per
-    * sheet, inheriting the caller's Spark local properties):
-    *  1. every sheet's row count runs concurrently, and all of them pass
+    * distinct source frame, inheriting the caller's Spark local
+    * properties; a frame passed for several sheets is counted and
+    * streamed once):
+    *  1. every frame's row count runs concurrently, and all of them pass
     *     the [[MaxExportRows]] guard before any byte is written;
-    *  2. every sheet is then streamed and rendered concurrently to its
-    *     own temporary part in a hidden directory beside `path`;
+    *  2. every frame is then streamed and rendered concurrently, each
+    *     sheet to its own temporary part in a hidden directory beside
+    *     `path`;
     *  3. the zip is assembled at `path` from those parts in sheet order.
-    * A failed count or render fails the call only after every sheet's
-    * thread has finished, with the first failure in sheet order rethrown
-    * and the rest suppressed; `path` is then not opened at all. The
-    * temporary parts are deleted on success and on failure.
+    * A failed count or render fails the call only after every thread has
+    * finished, with the first failure in sheet order rethrown and the
+    * rest suppressed; `path` is then not opened at all. The temporary
+    * parts are deleted on success and on failure.
     */
-  def writeSheets(sheets: Seq[(String, DataFrame)], path: String): Unit = {
+  def writeSheets(sheets: Seq[(String, DataFrame)], path: String): Unit =
+    writeSheetViews(sheets.map { case (name, df) => (name, df, df.columns.indices) }, path)
+
+  /** [[writeSheets]] over column views: each sheet is (name, source
+    * frame, positions of the source's columns it shows, in order). Sheets
+    * whose source is the same frame (by reference) share one row-count
+    * guard and one `toLocalIterator` stream, rendered into all of their
+    * parts at once; the thread model and failure semantics are
+    * [[writeSheets]]'s, with one thread per distinct source frame.
+    */
+  private[graft] def writeSheetViews(
+      sheets: Seq[(String, DataFrame, Seq[Int])], path: String): Unit = {
     require(sheets.nonEmpty, "writeSheets needs at least one sheet")
-    // One count per sheet before any byte is written: cheap next to the
+    // distinct source frames in order of first use, each with the
+    // indices of its sheets
+    val firstUse = sheets.map(s => sheets.indexWhere(_._2 eq s._2))
+    val sources = firstUse.distinct.map(f => sheets(f)._2 -> sheets.indices.filter(firstUse(_) == f))
+    // One count per source before any byte is written: cheap next to the
     // export itself (column-pruned to a count-star scan) and it turns a
     // driver OOM into an actionable error naming the offending sheet.
-    DriverThreads.all(sheets.map { case (name, df) => () =>
+    DriverThreads.all(sources.map { case (df, idx) => () =>
       val n = df.count()
       require(n + 1 <= MaxExportRows, // +1: the header row the writer adds
-        s"sheet '$name' has $n rows; XLSX export is a driver-side artifact " +
+        s"sheet '${sheets(idx.head)._1}' has $n rows; XLSX export is a driver-side artifact " +
           s"capped at ${MaxExportRows - 1} data rows (Excel's sheet limit) — " +
           "write parquet/CSV for corpus-scale data")
     })
@@ -367,7 +385,7 @@ object Xlsx {
     // compares names case-insensitively.
     val tabNames: Seq[String] = {
       val used = scala.collection.mutable.Set.empty[String]
-      sheets.map { case (name, _) =>
+      sheets.map { case (name, _, _) =>
         val base = sanitizeSheetName(name)
         var cand = base
         var k = 2
@@ -383,8 +401,8 @@ object Xlsx {
     val partsDir = Files.createTempDirectory(target.getParent, s".${target.getFileName}.parts")
     val parts = (1 to n).map(i => partsDir.resolve(s"sheet$i.xml"))
     try {
-      DriverThreads.all(sheets.zip(parts).map { case ((_, df), part) =>
-        () => renderSheet(df, part)
+      DriverThreads.all(sources.map { case (df, idx) =>
+        () => renderSheets(df, idx.map(i => sheets(i)._3 -> parts(i)))
       })
       val out = new java.util.zip.ZipOutputStream(
         new java.io.BufferedOutputStream(new java.io.FileOutputStream(path)),
@@ -457,75 +475,86 @@ object Xlsx {
     }
   }
 
-  /** One worksheet part: the header row, then `df`'s rows streamed
-    * through `toLocalIterator`.
+  /** Worksheet parts of one source frame: each view's header row, then
+    * `df`'s rows streamed once through `toLocalIterator`, every row
+    * written to every part as that view's columns.
     */
-  private def renderSheet(df: DataFrame, part: Path): Unit = {
+  private def renderSheets(df: DataFrame, views: Seq[(Seq[Int], Path)]): Unit = {
+    val parts = ArrayBuffer.empty[SheetPart]
+    try {
+      views.foreach { case (cols, part) => parts += new SheetPart(part, cols.map(df.columns(_))) }
+      val it = df.toLocalIterator()
+      while (it.hasNext) {
+        val row = it.next()
+        parts.zip(views).foreach { case (p, (cols, _)) => p.writeRow(cols.map(row.get)) }
+      }
+      parts.foreach(_.finish())
+    } finally parts.foreach(_.close())
+  }
+
+  /** One worksheet part being written: the header row on open, then one
+    * `writeRow` per data row, then `finish`.
+    */
+  private final class SheetPart(part: Path, header: Seq[String]) {
     // an OutputStreamWriter, not Files.newBufferedWriter: it replaces an
     // unpaired surrogate instead of failing the export on it
-    val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+    private val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       new java.io.FileOutputStream(part.toFile), java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-      w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
-      def text(rowIdx: Int, c: Int, v: Any): Unit = {
-        w.write(s"""<c r="${colName(c)}$rowIdx" t="inlineStr"><is><t>""")
-        w.write(escapeXml(String.valueOf(v)))
-        w.write("</t></is></c>")
-      }
-      def num(rowIdx: Int, c: Int, v: String, style: Int): Unit = {
-        val s = if (style > 0) s""" s="$style"""" else ""
-        w.write(s"""<c r="${colName(c)}$rowIdx"$s><v>$v</v></c>""")
-      }
-      def writeRow(rowIdx: Int, cells: Seq[Any]): Unit = {
-        w.write(s"""<row r="$rowIdx">""")
-        cells.zipWithIndex.foreach { case (v, c) =>
-          v match {
-            case null =>
-            case n: java.lang.Byte => num(rowIdx, c, n.toString, 0)
-            case n: java.lang.Short => num(rowIdx, c, n.toString, 0)
-            case n: java.lang.Integer => num(rowIdx, c, n.toString, 0)
-            case n: java.lang.Long => num(rowIdx, c, n.toString, 0)
-            case n: java.lang.Float if !n.isNaN && !n.isInfinite =>
-              num(rowIdx, c, n.toString, 0)
-            case n: java.lang.Double if !n.isNaN && !n.isInfinite =>
-              num(rowIdx, c, n.toString, 0)
-            case n: java.math.BigDecimal =>
-              // Spark widens decimals (e.g. to (38,18)); the padded
-              // zeros are representation, not value — strip them
-              num(rowIdx, c, n.stripTrailingZeros.toPlainString, 0)
-            case d: java.sql.Date =>
-              dateToSerial(d.toLocalDate) match {
-                case Some(serial) => num(rowIdx, c, serial.toString, StyleDate)
-                case None => text(rowIdx, c, d) // pre-1900: no valid serial
-              }
-            case t: java.sql.Timestamp =>
-              val ldt = t.toLocalDateTime
-              dateToSerial(ldt.toLocalDate) match {
-                case Some(serial) =>
-                  // nano-precision fraction; Locale.ROOT: the f""
-                  // interpolator uses the default locale, and a
-                  // decimal-comma locale would emit a corrupt cell
-                  val frac = ldt.toLocalTime.toNanoOfDay / 86400.0e9
-                  num(rowIdx, c,
-                    String.format(java.util.Locale.ROOT, "%.10f", Double.box(serial + frac)),
-                    StyleDateTime)
-                case None => // pre-1900 fallback keeps ms precision too
-                  text(rowIdx, c,
-                    (if (ldt.getNano != 0) IsoDateTimeMsFmt else IsoDateTimeFmt)
-                      .format(ldt))
-              }
-            case other => text(rowIdx, c, other)
-          }
+    private var rowIdx = 1
+    w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+    w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+    writeRow(header)
+
+    private def text(c: Int, v: Any): Unit = {
+      w.write(s"""<c r="${colName(c)}$rowIdx" t="inlineStr"><is><t>""")
+      w.write(escapeXml(String.valueOf(v)))
+      w.write("</t></is></c>")
+    }
+    private def num(c: Int, v: String, style: Int): Unit = {
+      val s = if (style > 0) s""" s="$style"""" else ""
+      w.write(s"""<c r="${colName(c)}$rowIdx"$s><v>$v</v></c>""")
+    }
+    def writeRow(cells: Seq[Any]): Unit = {
+      w.write(s"""<row r="$rowIdx">""")
+      cells.zipWithIndex.foreach { case (v, c) =>
+        v match {
+          case null =>
+          case n: java.lang.Byte => num(c, n.toString, 0)
+          case n: java.lang.Short => num(c, n.toString, 0)
+          case n: java.lang.Integer => num(c, n.toString, 0)
+          case n: java.lang.Long => num(c, n.toString, 0)
+          case n: java.lang.Float if !n.isNaN && !n.isInfinite => num(c, n.toString, 0)
+          case n: java.lang.Double if !n.isNaN && !n.isInfinite => num(c, n.toString, 0)
+          case n: java.math.BigDecimal =>
+            // Spark widens decimals (e.g. to (38,18)); the padded
+            // zeros are representation, not value — strip them
+            num(c, n.stripTrailingZeros.toPlainString, 0)
+          case d: java.sql.Date =>
+            dateToSerial(d.toLocalDate) match {
+              case Some(serial) => num(c, serial.toString, StyleDate)
+              case None => text(c, d) // pre-1900: no valid serial
+            }
+          case t: java.sql.Timestamp =>
+            val ldt = t.toLocalDateTime
+            dateToSerial(ldt.toLocalDate) match {
+              case Some(serial) =>
+                // nano-precision fraction; Locale.ROOT: the f""
+                // interpolator uses the default locale, and a
+                // decimal-comma locale would emit a corrupt cell
+                val frac = ldt.toLocalTime.toNanoOfDay / 86400.0e9
+                num(c, String.format(java.util.Locale.ROOT, "%.10f", Double.box(serial + frac)),
+                  StyleDateTime)
+              case None => // pre-1900 fallback keeps ms precision too
+                text(c, (if (ldt.getNano != 0) IsoDateTimeMsFmt else IsoDateTimeFmt).format(ldt))
+            }
+          case other => text(c, other)
         }
-        w.write("</row>")
       }
-      writeRow(1, df.columns.toSeq)
-      var r = 2
-      val it = df.toLocalIterator()
-      while (it.hasNext) { writeRow(r, it.next().toSeq); r += 1 }
-      w.write("</sheetData></worksheet>")
-    } finally w.close()
+      w.write("</row>")
+      rowIdx += 1
+    }
+    def finish(): Unit = w.write("</sheetData></worksheet>")
+    def close(): Unit = w.close()
   }
 
   /** cellXfs indices the writer's styles part defines. */

@@ -243,6 +243,66 @@ class PlanSpec extends SparkSpec {
       "sanity: the dense path should plan the (documented) partition-less window")
   }
 
+  test("star facts: the interest-comment pairing is the only shuffle join, under both id strategies") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledJoin}
+    import graft.etl.StarLoader
+
+    // Automatic broadcasting off: on fixture-sized frames every join would
+    // broadcast and hide the shape a survey-sized batch plans. Dimension
+    // joins carry an explicit broadcast hint; anything else that joins
+    // the facts now plans as a shuffle join and is caught here, unless it
+    // is the (id_inquerito, label) interest-comment pairing.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    def shuffleJoins(p: SparkPlan): Seq[SparkPlan] = {
+      val here = p match {
+        case j: ShuffledJoin => Seq(j)
+        case c: CartesianProductExec => Seq(c)
+        case _ => Seq.empty
+      }
+      val below = p match {
+        case a: AdaptiveSparkPlanExec => shuffleJoins(a.inputPlan)
+        case i: InMemoryTableScanExec => shuffleJoins(i.relation.cachedPlan)
+        case other => other.children.flatMap(shuffleJoins)
+      }
+      here ++ below
+    }
+    def isPairing(j: SparkPlan): Boolean = j match {
+      case sj: ShuffledJoin =>
+        sj.leftKeys.collect { case a: Attribute => a.name }.toSet == Set("id_inquerito", "label")
+      case _ => false
+    }
+    val registry = s.read.option("header", "true").csv(Fixtures.path("entidades.csv"))
+    val survey = Readers.csv(s, Fixtures.path("survey_2026.csv"))
+    val result = Pipeline.run(survey, registry, Fixtures.config, 2026)
+    for (ids <- Seq(StarLoader.DenseIds, StarLoader.ScalableIds)) {
+      val star = StarLoader.load(result, idStrategy = ids)
+      Map(
+        "fatoInquerito" -> star.fatoInquerito,
+        "fatoFormacao" -> star.fatoFormacao,
+        "fatoInteresse" -> star.fatoInteresse,
+        "comentario" -> star.comentario,
+        "fatoPreferencia" -> star.fatoPreferencia,
+        "fatoDisponibilidade" -> star.fatoDisponibilidade).foreach { case (name, df) =>
+        val joins = shuffleJoins(df.queryExecution.executedPlan)
+        val other = joins.filterNot(isPairing)
+        assert(other.isEmpty, s"$ids $name plans a shuffle join besides the pairing: " +
+          other.map {
+            case sj: ShuffledJoin => s"${sj.nodeName} on ${sj.leftKeys.mkString(", ")}"
+            case j => j.nodeName
+          }.mkString("; "))
+        if (Set("fatoInteresse", "comentario")(name))
+          assert(joins.exists(isPairing), s"$ids $name: sanity, the pairing should shuffle")
+      }
+      star.unpersist()
+    }
+    result.unpersist()
+  }
+
   test("corpus mixing: thresholds broadcast, corpus never sort-merge-joined") {
     val q = SparkEntry.queries("q59_mix_weights")(spark, "/root/testdata/sf0.001")
     val plan = q.queryExecution.executedPlan.toString

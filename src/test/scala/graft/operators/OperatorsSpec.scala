@@ -214,6 +214,28 @@ class ColsSpec extends SparkSpec {
       Seq(Some(1), Some(0), None, None, None))
   }
 
+  test("simNaoStrict equals the lower() compare for null and every one-code-point substitution") {
+    // every code point but the surrogates, put in each position of
+    // "sim" and "não": case variants, accented and other-script look-alikes
+    val subs = spark.range(0, 0x110000, 1, 8)
+      .filter($"id" < 0xD800 || $"id" > 0xDFFF).as[Long]
+      .flatMap { cp =>
+        val ch = new String(Character.toChars(cp.toInt))
+        for (w <- Seq("sim", "não"); i <- 0 until w.length)
+          yield w.substring(0, i) + ch + w.substring(i + 1)
+      }.toDF("s")
+      .union(Seq[String](null).toDF("s"))
+    val viaLower = when(lower($"s") === "sim", 1).when(lower($"s") === "não", 0)
+      .otherwise(lit(null).cast("int"))
+    val got = subs.select(Cols.simNaoStrict($"s").as("got"), viaLower.as("ref"), $"s")
+      .filter(!($"got" <=> $"ref") || $"ref".isNotNull)
+      .collect()
+    val differ = got.filterNot(r => r.get(0) == r.get(1))
+    assert(differ.isEmpty, differ.take(10).mkString(", "))
+    // each position of each word is hit by its two case variants
+    assert(got.count(_.get(1) == 1) == 6 && got.count(_.get(1) == 0) == 6)
+  }
+
   test("splitSentences column matches kernel") {
     val s = "Muito útil. Repetir em 2027! Sem dúvida"
     val got = Seq(s).toDF("t").select(Cols.splitSentences($"t")).as[Seq[String]].head()

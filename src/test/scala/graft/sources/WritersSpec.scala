@@ -92,4 +92,27 @@ class WritersSpec extends SparkSpec {
       assert(new java.io.File(s"$root/$t/_SUCCESS").exists(), t)
     }
   }
+
+  test("each dimension table writes as one job and one file") {
+    val root = Files.createTempDirectory("graft-star-dims").toString
+    val star = StarLoader.load(result)
+    Seq(star.dimFormacao -> "dim_formacao", star.dimAreaTematica -> "dim_area_tematica",
+        star.dimPreferencia -> "dim_preferencia_ensino", star.dimHorario -> "dim_horario")
+      .foreach { case (df, name) =>
+        val (_, jobs) = jobsDuring(df.write.mode("overwrite").parquet(s"$root/$name"))
+        assert(jobs == 1, s"$name: $jobs jobs")
+        val parts = new java.io.File(s"$root/$name").list().filter(_.startsWith("part-"))
+        assert(parts.length == 1, s"$name: ${parts.mkString(", ")}")
+      }
+    star.unpersist()
+  }
+
+  test("exportSheetsXlsx counts each distinct source frame once") {
+    val path = Files.createTempFile("graft-export-counts", ".xlsx").toString
+    result.valid.count() // build the pipeline's caches outside the measured call
+    val (_, executions) = executionsDuring(Writers.exportSheetsXlsx(result, path))
+    val counts = executions.filter(_.startsWith("count at"))
+    // valid (five group sheets + all_data), duplicados, entidades_invalidas
+    assert(counts.size == 3, executions.mkString("; "))
+  }
 }

@@ -361,4 +361,29 @@ class XlsxSpec extends SparkSpec {
     // every sheet has rendered
     assert(listing(failed).isEmpty)
   }
+
+  test("column views of one frame: one count, the same bytes as projected frames") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, "a & b", 2.5, java.sql.Date.valueOf("2025-01-01"),
+        java.sql.Timestamp.valueOf("2025-01-01 12:34:56")),
+      (2L, null, Double.NaN, java.sql.Date.valueOf("1899-06-15"), null),
+      (3L, "ç", -0.5, null, java.sql.Timestamp.valueOf("2026-08-12 00:00:00.25")))
+      .toDF("id", "texto", "x", "dia", "quando").repartition(2, $"id")
+    val other = Seq(("q", 9)).toDF("k", "v")
+    val projected = Files.createTempFile("graft-projected", ".xlsx").toString
+    Xlsx.writeSheets(Seq("ids" -> df.select("id", "dia"), "textos" -> df.select("quando", "texto"),
+      "outro" -> other, "tudo" -> df), projected)
+    val views = Files.createTempFile("graft-views", ".xlsx").toString
+    val (_, executions) = executionsDuring(Xlsx.writeSheetViews(Seq(("ids", df, Seq(0, 3)),
+      ("textos", df, Seq(4, 1)), ("outro", other, Seq(0, 1)), ("tudo", df, df.columns.indices)),
+      views))
+    assert(executions.count(_.startsWith("count at")) == 2, executions.mkString("; "))
+    def entries(f: String): Seq[(String, Seq[Byte])] = {
+      val z = new java.util.zip.ZipFile(f)
+      try z.entries().asScala.toSeq.map(e => e.getName -> z.getInputStream(e).readAllBytes().toSeq)
+      finally z.close()
+    }
+    assert(entries(views) == entries(projected))
+  }
 }
