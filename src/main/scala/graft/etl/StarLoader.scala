@@ -153,7 +153,8 @@ object StarLoader {
     // ONE cache serves every fact: `valid` with its inquerito ids,
     // materialized eagerly so the ten concurrent star writes read built
     // blocks instead of each racing to compute them. Under DenseIds the
-    // id window leaves it in one partition (survey scale, see above).
+    // id window leaves it in one partition (survey scale, see above;
+    // SCALE.md "Caching discipline" times this shape at 1M rows).
     val valid = cached(idStrategy match {
       case DenseIds => SurrogateKeys.dense(result.valid, "id_inquerito",
         Seq(col(Readers.RowId).asc), offset = idOffset)

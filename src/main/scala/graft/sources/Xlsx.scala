@@ -370,11 +370,13 @@ object Xlsx {
     val sources = firstUse.distinct.map(f => sheets(f)._2 -> sheets.indices.filter(firstUse(_) == f))
     // One count per source before any byte is written: cheap next to the
     // export itself (column-pruned to a count-star scan) and it turns a
-    // driver OOM into an actionable error naming the offending sheet.
+    // driver OOM into an actionable error naming every sheet of the
+    // offending frame.
     DriverThreads.all(sources.map { case (df, idx) => () =>
       val n = df.count()
       require(n + 1 <= MaxExportRows, // +1: the header row the writer adds
-        s"sheet '${sheets(idx.head)._1}' has $n rows; XLSX export is a driver-side artifact " +
+        s"${if (idx.size == 1) "sheet" else "sheets"} '${idx.map(sheets(_)._1).mkString("', '")}' " +
+          s"${if (idx.size == 1) "has" else "each have"} $n rows; XLSX export is a driver-side artifact " +
           s"capped at ${MaxExportRows - 1} data rows (Excel's sheet limit) — " +
           "write parquet/CSV for corpus-scale data")
     })
@@ -501,9 +503,16 @@ object Xlsx {
     private val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       new java.io.FileOutputStream(part.toFile), java.nio.charset.StandardCharsets.UTF_8))
     private var rowIdx = 1
-    w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-    w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
-    writeRow(header)
+    // a part whose header fails never reaches the caller's close list,
+    // so it closes its own stream before rethrowing
+    try {
+      w.write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+      w.write("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""")
+      writeRow(header)
+    } catch { case e: Throwable =>
+      try w.close() catch { case c: Throwable => e.addSuppressed(c) }
+      throw e
+    }
 
     private def text(c: Int, v: Any): Unit = {
       w.write(s"""<c r="${colName(c)}$rowIdx" t="inlineStr"><is><t>""")

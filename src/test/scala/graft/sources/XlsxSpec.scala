@@ -309,6 +309,12 @@ class XlsxSpec extends SparkSpec {
       graft.sources.Xlsx.writeSheets(Seq("ok" -> Seq(1).toDF("id"), "huge" -> big), f)
     }
     assert(e.getMessage.contains("huge") && e.getMessage.contains("parquet"))
+    // a frame that backs several sheets is counted once and named by all
+    val shared = intercept[IllegalArgumentException] {
+      Xlsx.writeSheetViews(Seq(("ok", Seq(1).toDF("id"), Seq(0)),
+        ("first", big, Seq(0)), ("second", big, Seq(0))), f)
+    }
+    assert(shared.getMessage.contains("sheets 'first', 'second' each have"))
     // nothing was written: the guard ran before assembly started
     assert(Files.size(java.nio.file.Paths.get(f)) == 0L)
   }
