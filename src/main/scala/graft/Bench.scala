@@ -22,6 +22,18 @@ import org.apache.spark.sql.SparkSession
   * cold times go to `bench_cold.json` (cwd) instead, and all seconds are
   * rounded to ms.
   *
+  * A query is timed to its whole answer: a `noop` write consumes every
+  * row and column, so the projections, final sort and UDF calls that
+  * Catalyst prunes under `count()` are billed (q74 runs x27 longer).
+  * The composites materialize their outputs by count.
+  *
+  * Query or composite names as arguments restrict the run to that
+  * subset; its detail goes to `bench_detail_partial.json`. The artifact
+  * records load averages and the single-thread and parallel CPU probes
+  * at the start and at the end of the run; they are context for
+  * discarding a loaded run (SCALE.md "Bench artifact load sentinel"),
+  * and nothing is re-run or stamped on their account.
+  *
   * `pipeline_1m` is the end-to-end FEFAL workload at volume: 1M-row
   * synthetic wide survey -> Pipeline.run (identify/split/dedup) ->
   * StarLoader.load, all outputs materialized (same workload as
@@ -75,9 +87,7 @@ object Bench {
     * every thread gets its own core and wall ~= the single-thread cost
     * of 200M (~0.41 s here); under partial contention the threads
     * queue and wall inflates roughly with the oversubscription — the
-    * exact signal that predicts a degraded Spark segment. It is run
-    * BETWEEN bench segments (see `main`), so a ramp is localized to
-    * the entries it actually contaminated.
+    * exact signal that predicts a degraded Spark run.
     */
   private def calibrateParallel(threads: Int): Double = {
     val t0 = System.nanoTime()
@@ -96,25 +106,19 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // Optional args: query or composite names restrict the run to that
+    // subset (isolating one query's numbers)
+    val compositeNames = Seq("pipeline_1m", "pipeline_1m_dense", "curate_docs", "curate_learned")
+    val only = args.toSet
+    val unknown = only -- SparkEntry.queries.keySet -- compositeNames
+    require(unknown.isEmpty, s"unknown bench entries: ${unknown.mkString(", ")}")
+    def wanted(name: String): Boolean = only.isEmpty || only.contains(name)
     val loadBefore = loadavg()
     val calFirst = calibrate()
-    // Optional args: query names restrict the run to that subset (for
-    // isolating one query's numbers without a fresh-JVM BenchOne);
-    // --shared-session additionally reports curate_docs' steady state
-    // (see below).
-    val sharedSession = args.contains("--shared-session")
-    val only = args.filterNot(_.startsWith("--")).toSet
-    def wanted(name: String): Boolean = only.isEmpty || only.contains(name)
+    val probeThreads = math.min(Sessions.cpus, Runtime.getRuntime.availableProcessors)
+    val parFirst = calibrateParallel(probeThreads)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val root = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", graft.Sessions.ExcludedOptimizerRules)
-      .getOrCreate()
-    root.sparkContext.setLogLevel("WARN")
+    val root = Sessions.local()
 
     def ms(v: Double): Double = math.round(v * 1000).toDouble / 1000
 
@@ -123,7 +127,7 @@ object Bench {
       val s = root.newSession()
       val t0 = System.nanoTime()
       val err =
-        try { fn(s, sfDir).count(); None }
+        try { fn(s, sfDir).write.format("noop").mode("overwrite").save(); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
         }
@@ -134,8 +138,7 @@ object Bench {
       // no query's leftovers squeeze a later query's execution memory.
       // (Cache hygiene matters for the measurement itself: a repeated
       // query whose caches survive is substituted by the context
-      // CacheManager and reports a cache READ, not a warm re-compute —
-      // the r6 BenchOne re-timings had exactly that flaw; see BenchOne.)
+      // CacheManager and reports a cache READ, not a warm re-compute.)
       s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc()
       (secs, err)
@@ -155,14 +158,13 @@ object Bench {
       // Heavyweights get a third run and report the better warm: a
       // single warm sample 40+ queries into a shared JVM absorbs
       // whatever GC/heap state the run accumulated (measured ~1-2 s
-      // on q56/q57 against their isolated BenchOne warm), and one
+      // on q56/q57 against their isolated single-query warm), and one
       // retry recovers most of it for ~30 s of extra bench time.
       val (warm, warm2Err) =
         if (warmErr.isEmpty && warm1 > 1.0) {
           val (warm2, e2) = timed(fn)
           // a FAILED retry is fast — its time is not a measurement, so
           // the min is only taken when the retry actually succeeded
-          // (ADVICE r13 #1; same rule as the composite retry below)
           (if (e2.isEmpty) math.min(warm1, warm2) else warm1, e2)
         } else (warm1, None)
       Entry(name, cold, warm, coldErr.orElse(warmErr).orElse(warm2Err))
@@ -196,61 +198,25 @@ object Bench {
       System.gc()
       (secs, err)
     }
-    // A composite warm run that materially exceeds its cold run means
-    // load arrived during the warm leg (warm re-executes what cold
-    // already JIT-compiled) — shared between the retry below and the
-    // post-run stamp so both read the same rule.
-    def warmOverColdFires(cold: Double, warm: Double): Boolean =
-      warm > cold * 1.25 + 0.5
 
     // Cold+warm like the queries: the first run pays one-time codegen,
     // which would otherwise bill whichever variant happens to run first
     // (measured 15.6 vs 11.0 s for identical work when only the
-    // scalable pipeline run was cold). If the warm leg comes out over
-    // cold — the warm-over-cold contention tell — the composite re-runs
-    // its warm leg ONCE before the stamp can fire (ADVICE r12: a long
-    // shared JVM can push a single warm sample over cold on GC/heap
-    // variance alone; one retry separates that blip from real mid-warm
-    // load, mirroring the probe self-heal and the queries' third run).
-    // GRAFT_BENCH_TRACE=1: print composite leg boundaries as they
-    // complete — the hook the SCALE.md fire-side stamp validation keys
-    // its synthetic load ramp on (a ramp that must rise after cold and
-    // subside before the closing probe needs the leg edges observable).
-    // Opt-in; trace lines precede the final JSON line, so the driver's
-    // stdout tail capture still ends with the metric line.
-    val trace = sys.env.get("GRAFT_BENCH_TRACE").contains("1")
-    def tr(msg: String): Unit =
-      if (trace) println(s"TRACE ${System.currentTimeMillis()} $msg")
-
+    // scalable pipeline run was cold).
     def compositeEntry(name: String, run: () => (Double, Option[String])): Entry = {
       val (cold, coldErr) = run()
-      tr(s"$name cold_done ${ms(cold)}")
-      val (warm1, warmErr) = run()
-      tr(s"$name warm1_done ${ms(warm1)}")
-      val (warm, retryErr) =
-        if (coldErr.isEmpty && warmErr.isEmpty && warmOverColdFires(cold, warm1)) {
-          val (warm2, e2) = run()
-          tr(s"$name warm2_done ${ms(warm2)}")
-          // only a SUCCESSFUL retry can lower the warm number: a
-          // fast-failing warm2 is not a measurement and must not land a
-          // meaninglessly low warm in the detail JSON (ADVICE r13 #1)
-          (if (e2.isEmpty) math.min(warm1, warm2) else warm1, e2)
-        } else (warm1, None)
-      Entry(name, cold, warm, coldErr.orElse(warmErr).orElse(retryErr))
+      val (warm, warmErr) = run()
+      Entry(name, cold, warm, coldErr.orElse(warmErr))
     }
-
-    def pipelineEntry(name: String, s: graft.etl.StarLoader.IdStrategy): Entry =
-      compositeEntry(name, () => runPipeline1m(s))
 
     // curate_docs: the composed training-data pipeline (annotate ->
     // exact dedup -> LSH near-dup canonicalize -> decontaminate ->
     // sample -> pack) end-to-end over the SF documents table. Same
     // cold+warm policy as the queries: the warm second run is reported
     // (the ~40-stage composite pays substantial one-time codegen).
-    def runCurate(
-        s: SparkSession,
-        model: Option[graft.operators.QualityClassifier.Model] = None)
+    def runCurate(model: Option[graft.operators.QualityClassifier.Model])
         : (Double, Option[String]) = {
+      val s = root.newSession()
       val t0 = System.nanoTime()
       val err =
         try {
@@ -277,8 +243,6 @@ object Bench {
       System.gc()
       (secs, err)
     }
-    def curateEntry(): Entry =
-      compositeEntry("curate_docs", () => runCurate(root.newSession()))
     // curate_learned: the same composed pipeline with the trained
     // quality-classifier gate on (VERDICT r9 #6). The model trains
     // OUTSIDE the timed region — in production it is an offline
@@ -287,7 +251,7 @@ object Bench {
     // hash, dot over closure-broadcast weights) fused into the
     // stage-1 scan. Threshold 0.3 keeps the word-salad corpus while
     // rejecting spam-shaped docs (the CurationSpec fixture rationale).
-    lazy val learnedGateModel: graft.operators.QualityClassifier.Model = {
+    def learnedGateModel(): graft.operators.QualityClassifier.Model = {
       val s = root.newSession()
       import s.implicits._
       val labeled = ((0 until 80).map(i =>
@@ -297,155 +261,19 @@ object Bench {
         .toDF("text", "label")
       graft.operators.QualityClassifier.train(labeled, "text", "label", numFeatures = 1 << 12)
     }
-    def curateLearnedEntry(): Entry = {
-      val m = Some(learnedGateModel) // force training before the clock
-      compositeEntry("curate_learned", () => runCurate(root.newSession(), m))
-    }
 
-    // ---- Segmented run with inter-segment parallel probes (r10) ----
-    // The run is cut into replayable SEGMENTS — query chunks of 16 plus
-    // one segment per composite — each bracketed by calibrateParallel.
-    // After the full pass, a segment whose bracketing probes exceed the
-    // run's best probe by DegradeFactor is re-run ONCE (self-heal); if
-    // its re-run probes are degraded too, the first-pass numbers are
-    // kept and the segment's entries are stamped into
-    // `degraded_entries` + a top-level `"degraded": true` so a consumer
-    // can discard them machine-readably (the r9 BENCH artifact passed
-    // its own sentinels while recording a 6x-inflated pipeline_1m).
-    val probeThreads = math.min(cpus.toInt, Runtime.getRuntime.availableProcessors)
-    val queryChunks: Seq[(String, () => Seq[Entry])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter(q => wanted(q._1))
-        .grouped(16).zipWithIndex
-        .map { case (chunk, i) =>
-          (s"queries_$i", () => chunk.map { case (n, fn) => timeQuery(n, fn) })
-        }.toSeq
-    val composites: Seq[(String, () => Seq[Entry])] =
-      (if (wanted("pipeline_1m"))
-        Seq("pipeline_1m" -> (() =>
-          Seq(pipelineEntry("pipeline_1m", graft.etl.StarLoader.ScalableIds)))) else Nil) ++
-      (if (wanted("pipeline_1m_dense"))
-        Seq("pipeline_1m_dense" -> (() =>
-          Seq(pipelineEntry("pipeline_1m_dense", graft.etl.StarLoader.DenseIds)))) else Nil) ++
-      (if (wanted("curate_docs"))
-        Seq("curate_docs" -> (() => Seq(curateEntry()))) else Nil) ++
-      (if (wanted("curate_learned"))
-        Seq("curate_learned" -> (() => Seq(curateLearnedEntry()))) else Nil)
-    val segments = queryChunks ++ composites
-
-    var probes = Vector(calibrateParallel(probeThreads))
-    val firstPass = segments.map { case (segName, fn) =>
-      val before = probes.last
-      val entries = fn()
-      val after = calibrateParallel(probeThreads)
-      probes :+= after
-      (segName, fn, entries, before, after)
-    }
-    var minPar = probes.min
-    val DegradeFactor = 1.3
-    val DegradeSlackSec = 0.15 // absolute slack so tiny minima don't flap
-    // r12 (VERDICT r11 #1): the degrade baseline is the QUIETER of the
-    // run's best probe and the recorded quiet-box reference. The r11
-    // artifact shipped a 1.8x-contended pipeline_1m UNSTAMPED because
-    // the box was loaded for the whole run — every probe was uniformly
-    // high, so nothing looked degraded relative to minPar. Anchoring on
-    // the absolute quiet band (SCALE.md: 0.41-0.44 s at <=8 threads on
-    // this box) makes uniform contention stamp every entry it touched,
-    // composites included; a genuinely quiet run is unaffected (minPar
-    // ~= the reference). The reference is THIS box's — recalibrate in
-    // SCALE.md if the driver hardware ever changes.
-    // Overridable per box (ADVICE r12): 0.44 is THIS machine's quiet
-    // parallel-probe wall — hardcoded, any slower box would stamp every
-    // segment degraded forever and pay the full self-heal re-run each
-    // time. Recalibrate by exporting GRAFT_QUIET_PAR_REF with the box's
-    // own quiet calibrateParallel reading (SCALE.md records the recipe).
-    val QuietParRef = sys.env.get("GRAFT_QUIET_PAR_REF")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption).getOrElse(0.44)
-    def probesDegraded(b: Double, a: Double): Boolean = {
-      val worst = math.max(b, a)
-      val base = math.min(minPar, QuietParRef)
-      worst > base * DegradeFactor && worst - base > DegradeSlackSec
-    }
-    val healed = firstPass.map { case (segName, fn, entries, b, a) =>
-      if (!probesDegraded(b, a)) (segName, entries, false)
-      else {
-        val b2 = calibrateParallel(probeThreads)
-        val entries2 = fn()
-        val a2 = calibrateParallel(probeThreads)
-        probes ++= Seq(b2, a2)
-        minPar = math.min(minPar, math.min(b2, a2))
-        if (!probesDegraded(b2, a2)) (segName, entries2, false)
-        else {
-          // Both passes contaminated (VERDICT r14 #7): ship the
-          // per-entry MINIMUM of the two, cold and warm each taken
-          // separately — contention only inflates, so the lower sample
-          // is strictly closer to the quiet truth, and the segment stays
-          // stamped so consumers still know to distrust it. Failed
-          // entries never beat successful ones.
-          val byName = entries2.map(e => e.name -> e).toMap
-          val best = entries.map { e1 =>
-            byName.get(e1.name) match {
-              case Some(e2) if e2.err.isEmpty && e1.err.nonEmpty => e2
-              case Some(e2) if e2.err.isEmpty =>
-                e1.copy(cold = math.min(e1.cold, e2.cold), warm = math.min(e1.warm, e2.warm))
-              case _ => e1
-            }
-          }
-          (segName, best, true)
-        }
-      }
-    }
-    val allEntries: Seq[Entry] = healed.flatMap(_._2)
-    // r12, closing the run-C residual: the parallel probes sample
-    // segment EDGES, so a load ramp that rises after the opening probe
-    // and subsides before the closing one can contaminate a composite
-    // unstamped. For the composites the entry itself carries the
-    // tell: the warm run re-executes what the cold run already
-    // JIT-compiled, so warm materially EXCEEDING cold means load
-    // arrived during the warm run — stamp it. Queries are exempt
-    // (sub-second entries cross this ratio on noise; their third-run
-    // min already absorbs it). Since r13 the stamp fires only if the
-    // one-shot warm retry inside compositeEntry ALSO came out over
-    // cold (e.warm is the min of both legs) — a single GC-variance
-    // blip self-heals, persistent mid-warm load still stamps.
-    val compositeNames = composites.map(_._1).toSet
-    val warmOverCold: Seq[String] = allEntries
-      .filter(e => compositeNames.contains(e.name) && e.err.isEmpty &&
-        warmOverColdFires(e.cold, e.warm))
-      .map(_.name)
-    val degradedEntries: Seq[String] =
-      (healed.filter(_._3).flatMap(_._2.map(_.name)) ++ warmOverCold).distinct
-
-    val queryNames = SparkEntry.queries.keySet
-    val results = allEntries.filter(e => queryNames.contains(e.name))
-      .map(e => (e.name, e.cold, e.warm, e.err))
-    def compositeOf(name: String): Option[Entry] = allEntries.find(_.name == name)
-    val pipeline1m = compositeOf("pipeline_1m").map(_.warm).getOrElse(0.0)
-    val pipelineErr = compositeOf("pipeline_1m").flatMap(_.err)
-    val pipeline1mDense = compositeOf("pipeline_1m_dense").map(_.warm).getOrElse(0.0)
-    val pipelineDenseErr = compositeOf("pipeline_1m_dense").flatMap(_.err)
-    val curateDocs = compositeOf("curate_docs").map(_.warm).getOrElse(0.0)
-    val curateErr = compositeOf("curate_docs").flatMap(_.err)
-    val curateLearned = compositeOf("curate_learned").map(_.warm).getOrElse(0.0)
-    val curateLearnedErr = compositeOf("curate_learned").flatMap(_.err)
-    // --shared-session: the composed ~40-stage curate plan pays ~11 s of
-    // one-time JVM/codegen warmup; production runs it inside a
-    // long-lived session where that cost is already sunk. This mode
-    // re-runs curate in ONE session until the time stabilizes and
-    // reports the steady state next to the fresh-session warm number
-    // (NEXT r4/r6 #2 — closes the last known artifact-vs-real gap).
-    // A failing iteration is FAST — taking a bare min over times would
-    // report a broken steady state as a good one, so the min is over
-    // successful runs only and any error surfaces in the errors map.
-    val steadyRuns: Seq[(Double, Option[String])] =
-      if (sharedSession && wanted("curate_docs")) {
-        val s = root.newSession()
-        (1 to 3).map(_ => runCurate(s))
-      } else Seq.empty
-    val steadyErr = steadyRuns.flatMap(_._2).headOption
-    val curateSteady: Option[Double] = {
-      val okTimes = steadyRuns.collect { case (t, None) => t }
-      if (okTimes.nonEmpty) Some(okTimes.min) else None
+    val queryEntries: Seq[Entry] = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(q => wanted(q._1))
+      .map { case (n, fn) => timeQuery(n, fn) }
+    val compositeEntries: Seq[Entry] = compositeNames.filter(wanted).map {
+      case "pipeline_1m" =>
+        compositeEntry("pipeline_1m", () => runPipeline1m(graft.etl.StarLoader.ScalableIds))
+      case "pipeline_1m_dense" =>
+        compositeEntry("pipeline_1m_dense", () => runPipeline1m(graft.etl.StarLoader.DenseIds))
+      case "curate_docs" => compositeEntry("curate_docs", () => runCurate(None))
+      case "curate_learned" =>
+        val m = Some(learnedGateModel()) // trained before the clock
+        compositeEntry("curate_learned", () => runCurate(m))
     }
 
     def jsonStr(s: String): String =
@@ -459,15 +287,8 @@ object Bench {
       m.map { case (k, v) => jsonStr(k) + ":" + ms(v) }.mkString("{", ",", "}")
 
     val errors: Seq[(String, String)] =
-      results.collect { case (n, _, _, Some(e)) => n -> e } ++
-        pipelineErr.map("pipeline_1m" -> _) ++
-        pipelineDenseErr.map("pipeline_1m_dense" -> _) ++
-        curateErr.map("curate_docs" -> _) ++
-        curateLearnedErr.map("curate_learned" -> _) ++
-        steadyErr.map("curate_docs_steady" -> _)
-    val ok = results.filter(_._4.isEmpty)
-    val warm = ok.map { case (n, _, w, _) => n -> w }
-    val total = warm.map(_._2).sum
+      (queryEntries ++ compositeEntries).collect { case Entry(n, _, _, Some(e)) => n -> e }
+    val total = queryEntries.filter(_.err.isEmpty).map(_.warm).sum
 
     // Per-entry {cold, warm} detail (VERDICT r6 ask #1): the full map
     // goes to a FILE because the driver's stdout tail capture is 2000
@@ -475,9 +296,6 @@ object Bench {
     // maps would truncate the line's head and break the driver's JSON
     // parse. The stdout line carries the warm map plus an explicit
     // "billing":"warm" label and a pointer to the detail file.
-    // Composites are included since r12 (their cold/warm pair is what
-    // the warm-over-cold stamp above reads — keep the evidence next to
-    // the verdict).
     // Composites live under their OWN key (ADVICE r12): r12 mixed them
     // into 'queries', silently changing what a history consumer that
     // sums or enumerates that map aggregates. 'schema_version: 2' marks
@@ -485,62 +303,33 @@ object Bench {
     def detailMap(es: Seq[Entry]): String = es.map { e =>
       jsonStr(e.name) + s""":{"cold":${ms(e.cold)},"warm":${ms(e.warm)}}"""
     }.mkString("{", ",", "}")
-    val detailJson = detailMap(allEntries.filter(e => queryNames.contains(e.name)))
-    val compositeDetailJson =
-      detailMap(allEntries.filterNot(e => queryNames.contains(e.name)))
-    // Subset runs (query-name args) must NOT clobber the full-run
+    // Subset runs (entry-name args) must NOT clobber the full-run
     // detail file with a partial map — a history consumer has no way
     // to tell clobbered detail from a real full run. Partial detail
     // goes to a separate file instead.
     val detailFile = if (only.isEmpty) "bench_detail.json" else "bench_detail_partial.json"
-    // the full degraded list always lives here — the stdout line caps
-    // its inline copy (see below) to survive the driver's tail capture
-    val degradedDetail =
-      s""","degraded_entries":${degradedEntries.map(jsonStr).mkString("[", ",", "]")}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get(detailFile),
-      s"""{"schema_version":2,"queries":$detailJson,"composites":$compositeDetailJson,"billing_note":"stdout line reports the warm second run of each query in a fresh session on a shared context"$degradedDetail,"sf":${jsonStr(sfDir)}}""".getBytes("UTF-8"))
+      s"""{"schema_version":2,"queries":${detailMap(queryEntries)},"composites":${detailMap(compositeEntries)},"billing_note":"stdout line reports the warm second run of each query in a fresh session on a shared context; a query's whole result is consumed by a noop write","sf":${jsonStr(sfDir)}}""".getBytes("UTF-8"))
 
     val errJson = errors.map { case (n, e) => jsonStr(n) + ":" + jsonStr(e) }
       .mkString("{", ",", "}")
     // Unmeasured composites are OMITTED from the JSON, not printed as a
     // literal 0.0 a history consumer could mistake for a measurement.
-    val pipelineField =
-      if (wanted("pipeline_1m")) s""","pipeline_1m":${ms(pipeline1m)}""" else ""
-    val pipelineDenseField =
-      if (wanted("pipeline_1m_dense")) s""","pipeline_1m_dense":${ms(pipeline1mDense)}""" else ""
-    val curateField =
-      if (wanted("curate_docs")) s""","curate_docs":${ms(curateDocs)}""" else ""
-    val curateLearnedField =
-      if (wanted("curate_learned")) s""","curate_learned":${ms(curateLearned)}""" else ""
-    val steadyField = curateSteady.map(v => s""","curate_docs_steady":${ms(v)}""").getOrElse("")
-    // Load sentinel (VERDICT r7 ask #2): loadavg around the run plus the
-    // fixed CPU calibration probe first-and-last. Discard rule lives in
-    // SCALE.md ("Bench artifact load sentinel").
+    val compositeFields = compositeEntries
+      .map(e => s""",${jsonStr(e.name)}:${ms(e.warm)}""").mkString
+    // Load sentinel (VERDICT r7 ask #2): loadavg and both CPU probes at
+    // the start and at the end of the run. Recorded, not acted on: the
+    // discard rule lives in SCALE.md ("Bench artifact load sentinel").
     val loadAfter = loadavg()
     val calLast = calibrate()
+    val parLast = calibrateParallel(probeThreads)
     def jsonArr(xs: Seq[Double]): String = xs.map(ms).mkString("[", ",", "]")
-    // r10: the parallel probe series + the degraded verdict make a
-    // contaminated artifact self-describing — `degraded: true` means
-    // the listed entries were timed under mid-run contention that one
-    // automatic re-run did not escape; discard those numbers, trust
-    // the rest. The full probe series goes to the detail side channel
-    // conceptually; min/max inline are enough for the discard rule.
     val sentinel =
       s""","loadavg":{"before":${jsonArr(loadBefore)},"after":${jsonArr(loadAfter)}}""" +
         s""","calibration":{"first":${ms(calFirst)},"last":${ms(calLast)},""" +
-        s""""parallel":{"threads":$probeThreads,"min":${ms(probes.min)},"max":${ms(probes.max)},"n":${probes.length}}}""" +
-        s""","degraded":${degradedEntries.nonEmpty}""" +
-        // inline list capped at 24 names: a fully-contended run stamps
-        // every entry, and ~125 names would overflow the driver's 2000-
-        // char stdout tail capture and break its JSON parse — "ALL" +
-        // count inline, full list in the detail file (always written)
-        (if (degradedEntries.isEmpty) ""
-        else if (degradedEntries.length <= 24)
-          s""","degraded_entries":${degradedEntries.map(jsonStr).mkString("[", ",", "]")}"""
-        else
-          s""","degraded_entries":["ALL"],"degraded_count":${degradedEntries.length}""")
-    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","billing":"warm","queries":${jsonNumMap(warm)}$pipelineField$pipelineDenseField$curateField$curateLearnedField$steadyField,"detail":${jsonStr(detailFile)}$sentinel,"errors":$errJson,"sf":${jsonStr(sfDir)}}""")
+        s""""parallel":{"threads":$probeThreads,"first":${ms(parFirst)},"last":${ms(parLast)}}}"""
+    println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","billing":"warm","queries":${jsonNumMap(queryEntries.filter(_.err.isEmpty).map(e => e.name -> e.warm))}$compositeFields,"detail":${jsonStr(detailFile)}$sentinel,"errors":$errJson,"sf":${jsonStr(sfDir)}}""")
     root.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

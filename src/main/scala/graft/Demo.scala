@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the flagship pipeline end-to-end from the packaged surface —
   * the same call the driver's smoke test makes (`SparkEntry.entry`).
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", graft.Sessions.ExcludedOptimizerRules)
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val valid = SparkEntry.entry(spark)
     println(s"[demo] entry() valid rows = ${valid.count()}")
     valid.show(5, truncate = false)

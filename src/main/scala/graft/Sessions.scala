@@ -1,6 +1,8 @@
 package graft
 
-/** Session conf every graft entry point shares. */
+import org.apache.spark.sql.SparkSession
+
+/** The one local session every graft entry point builds. */
 object Sessions {
 
   /** Optimizer rules excluded in graft sessions.
@@ -19,4 +21,26 @@ object Sessions {
     */
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions"
+
+  /** Task slots for [[local]]: `SPARK_GRAFT_CPUS`, else every core. */
+  lazy val cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session
+    * time, no UI, [[ExcludedOptimizerRules]] and [[GraftExtensions]], its
+    * log level WARN. `getOrCreate`: a second call returns the same session.
+    */
+  def local(cpus: Int = Sessions.cpus): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

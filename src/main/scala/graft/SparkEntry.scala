@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Cols
 import graft.multimodal.Multimodal
-import graft.operators.{ConnectedComponents, Contamination, CorpusFilters, Dedup, IvfCentroids, Packing, Sampling, EntityResolution, Reshape, Similarity, SurrogateKeys, TextAnalysis, TextDedup}
+import graft.operators.{ConnectedComponents, Contamination, CorpusFilters, Dedup, IvfCentroids, Packing, Sampling, Reshape, Similarity, SurrogateKeys, TextAnalysis, TextDedup}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

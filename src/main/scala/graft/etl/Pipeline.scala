@@ -157,9 +157,7 @@ object Pipeline {
     // --- J1 entity join (broadcast) + W1 dedup + F2 splits ------------
     val reg = registry.select(
       col("id_entidades").cast("long").as("id_entidade"),
-      concat_ws("||",
-        Cols.removePrefixes(col("ent_nome")),
-        Cols.normalizeText(col("ent_tipo"))).as("entity_key"))
+      Cols.entityKey(col("ent_nome"), col("ent_tipo")).as("entity_key"))
 
     // THE fan-out point: all four output frames and every star-loader
     // fact read the post-join frame. Bad-name rows ride through the join

@@ -70,7 +70,7 @@ object ConnectedComponents {
 
   /** [[connectedComponents]] together with the number of alternation
     * rounds it ran (0 when the bounded driver solve answered) — for the
-    * round-count specs and ProfileCC. The count is a local of the call,
+    * round-count specs. The count is a local of the call,
     * so concurrent callers never see each other's rounds.
     */
   private[graft] def componentsWithRounds(

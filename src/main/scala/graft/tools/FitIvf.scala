@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off provenance tool for the frozen IVF coarse quantizer
   * ([[graft.operators.IvfCentroids]]): fits k-means (k=16, seed 42) on
   * the embeddings table of the given SF dir and prints the centroid
@@ -14,11 +12,9 @@ import org.apache.spark.sql.SparkSession
 object FitIvf {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-fit-ivf").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    // 8 slots whatever the machine: KMeans|| initialization depends on
+    // the partition count, and the printed constants must reproduce
+    val spark = graft.Sessions.local(8)
     try {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector

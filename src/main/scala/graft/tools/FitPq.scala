@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off provenance tool for the frozen product-quantization
   * codebooks ([[graft.operators.PqCodebooks]]): fits one k-means
   * (k=16, seed 42) PER SUBSPACE on the 8-dim subvector slices of the
@@ -20,11 +18,8 @@ object FitPq {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .appName("graft-fit-pq").master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    // 8 slots, as in FitIvf: KMeans|| depends on the partition count
+    val spark = graft.Sessions.local(8)
     try {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector

@@ -1,11 +1,11 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall attribution for a declared SparkEntry query: registers a
   * listener that records every job's callsite and duration, runs the
-  * query (cold, then warm in a fresh session, same as Bench), and prints
+  * query (cold, then warm in a fresh session, same as Bench: the whole
+  * result is consumed by a `noop` write), and prints
   * the jobs sorted by the warm run's wall. The callsite string is the
   * action's code location (`count at LshIndex.scala:169`), which is
   * exactly the attribution the optimization loop needs: which eager
@@ -19,15 +19,7 @@ object JobProfile {
     require(args.nonEmpty, "usage: JobProfile <queryName>")
     val name = args(0)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val root = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", graft.Sessions.ExcludedOptimizerRules)
-      .getOrCreate()
-    root.sparkContext.setLogLevel("ERROR")
+    val root = graft.Sessions.local()
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
@@ -71,7 +63,7 @@ object JobProfile {
       jobs.clear(); stages.clear()
       val s = root.newSession()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(s, dir).count()
+      graft.SparkEntry.queries(name)(s, dir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       // settle listener events
       Thread.sleep(500)

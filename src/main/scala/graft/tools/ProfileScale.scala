@@ -35,7 +35,8 @@ object ProfileScale {
   private val Digits = "0123456789"
 
   /** sf0.1 documents, `factor`-way replicated with disjoint ids and
-    * per-copy de-correlated text (length and token shape preserved).
+    * per-copy de-correlated text (length and token shape preserved):
+    * [[scaledLoose]] capped at the rotation's period.
     */
   def scaled(spark: SparkSession, sfDir: String, factor: Int): DataFrame = {
     // The rotation's period is the shortest alphabet (10 digits): copies
@@ -47,17 +48,7 @@ object ProfileScale {
       s"factor must be in [1, ${Digits.length}]: the per-copy alphabet " +
         "rotation repeats past the digit alphabet's period and copies " +
         "would become byte-identical on digit-only tokens")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val span = docs.agg(max("doc_id")).head.getLong(0) + 1
-    (0 until factor).map { k =>
-      def rot(a: String, by: Int) = a.drop(by % a.length) + a.take(by % a.length)
-      val from = Letters + Uppers + Digits
-      val to = rot(Letters, k) + rot(Uppers, k) + rot(Digits, k)
-      docs.select(
-        (col("doc_id") + lit(k * span)).as("doc_id"),
-        (if (k == 0) col("text") else translate(col("text"), from, to)).as("text"),
-        col("lang"))
-    }.reduce(_ union _)
+    scaledLoose(spark, sfDir, factor)
   }
 
   /** [[scaled]] without the rotation-period cap, for factors past 10:
@@ -98,13 +89,7 @@ object ProfileScale {
   def main(args: Array[String]): Unit = {
     val factors = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 4, 10)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val root = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", graft.Sessions.ExcludedOptimizerRules)
-      .getOrCreate()
-    root.sparkContext.setLogLevel("ERROR")
+    val root = graft.Sessions.local()
 
     def timed(fn: SparkSession => DataFrame): (Long, Double, Double) = {
       def once(): (Long, Double) = {

@@ -1,13 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the XLSX source from the CLI: runMain graft.tools.ReadXlsx <path> */
 object ReadXlsx {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     val df = graft.sources.Xlsx.read(spark, args.head)
     df.show(false)
     println(s"[xlsx] rows=${df.count()} cols=${df.columns.length}")

@@ -1,15 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-import graft.etl.{Config, Pipeline, StarLoader}
+import graft.etl.{Pipeline, StarLoader}
 
 /** Pipeline-at-volume harness: synthesizes an N-row wide survey
-  * (distributed — spark.range, no driver loops) against a 50k-entity
-  * registry, runs the full identification + star load, and reports wall
-  * times. Usage: runMain graft.tools.ScalePipeline [nRows] [dense|scalable]
-  * (id strategy defaults to scalable — the at-volume setting).
+  * ([[SyntheticSurvey]]: distributed, no driver loops) against a
+  * 50k-entity registry, runs the full identification + star load, and
+  * reports wall times. Usage:
+  * `sbt "runMain graft.tools.ScalePipeline [nRows] [dense|scalable]"`
+  * (id strategy defaults to scalable — the at-volume setting). The
+  * config is read from the classpath fixtures (`src/main/resources`),
+  * so run it through sbt, or put that directory on the classpath.
   */
 object ScalePipeline {
   def main(args: Array[String]): Unit = {
@@ -17,14 +17,7 @@ object ScalePipeline {
     val idStrategy: StarLoader.IdStrategy =
       if (args.lift(1).contains("dense")) StarLoader.DenseIds
       else StarLoader.ScalableIds
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules", graft.Sessions.ExcludedOptimizerRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -34,60 +27,15 @@ object ScalePipeline {
           println(f"[stage] ${info.stageId}%4d ${secs}%7.1f s  tasks=${info.numTasks}  ${info.name.take(90)}")
       }
     })
-    import spark.implicits._
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[scale] $label%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
     }
 
-    val nEntities = 50000L
-    val registry = spark.range(nEntities).select(
-      ($"id" + 1).as("id_entidades"),
-      concat(lit("Entidade "), $"id").as("ent_nome"),
-      when($"id" % 2 === 0, "municipios").otherwise("freguesias").as("ent_tipo"))
-
-    // wide string survey: ~10% duplicate entities, 1% bad names, 1% unmatched
-    val survey = spark.range(n).select(
-      (when($"id" % 100 === 7, lit(null))
-        .when($"id" % 100 === 8, concat(lit("Fantasma "), $"id"))
-        .otherwise(concat(lit("Município de Entidade "), ($"id" % (nEntities * 11 / 10)) * 2)))
-        .cast("string").as("Nome da Entidade"),
-      lit("Câmara Municipal").as("Tipo de Entidade"),
-      concat(lit("Resp "), $"id").as("Nome do Responsável"),
-      when($"id" % 3 === 0, "Sim").otherwise("Não").as("Existe Responsável"),
-      ($"id" % 101).cast("string").as("Percentagem Preenchido"),
-      date_format(timestamp_seconds(lit(1700000000L) + $"id" % 3600), "yyyy-MM-dd HH:mm:ss").as("Hora de início"),
-      date_format(timestamp_seconds(lit(1700000000L) + $"id" % 3600 + 600), "yyyy-MM-dd HH:mm:ss").as("Hora de conclusão"),
-      date_format(timestamp_seconds(lit(1700100000L)), "yyyy-MM-dd HH:mm:ss").as("Data de submissão"),
-      ($"id" % 30).cast("string").as("Quantos formandos [Excel Avançado]"),
-      ($"id" % 7).cast("string").as("Quantos formandos [SIG Municipal]"),
-      when($"id" % 5 === 0, "garbage").otherwise(($"id" % 9).cast("string")).as("Quantos formandos [Gestão]"),
-      ($"id" % 4).cast("string").as("Quantos formandos [Atendimento]"),
-      when($"id" % 2 === 0, "Sim").otherwise("Não").as("Liderança"),
-      when($"id" % 11 === 0, ($"id" % 40).cast("string"))
-        .when($"id" % 7 === 0, lit("Muito útil. Repetir!")).as("Liderança [comentario]"),
-      ($"id" % 25).cast("string").as("Nº de formandos previstos Liderança"),
-      when($"id" % 3 === 0, "Sim").otherwise("Não").as("Inovação"),
-      lit(null).cast("string").as("Inovação [comentario]"),
-      ($"id" % 12).cast("string").as("Nº de formandos previstos Inovação"),
-      when($"id" % 2 === 0, "Sim").otherwise("Não").as("Presencial - [Dias úteis - manhã]"),
-      when($"id" % 3 === 0, "Sim").otherwise("Não").as("Presencial - [Sábado]"),
-      when($"id" % 5 === 0, "talvez").otherwise("Sim").as("Online - [Dias úteis - manhã]"),
-      when($"id" % 7 === 0, "Não").otherwise("Sim").as("Online - [Sábado]"),
-      ($"id" % 5 + 1).cast("string").as("Preferência: Presencial"),
-      ($"id" % 5 + 1).cast("string").as("Preferência: E-learning"),
-      ($"id" % 5 + 1).cast("string").as("Preferência: B-learning"))
-
-    val config = graft.etl.Config.fromJson(
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(graft.etl.Fixtures.path("config.json"))), "UTF-8"))
-      .copy(groups = Map(
-        "identificacao" -> graft.etl.GroupRange(1, 8),
-        "formacoes" -> graft.etl.GroupRange(9, 12),
-        "interesses" -> graft.etl.GroupRange(13, 18),
-        "disponibilidade" -> graft.etl.GroupRange(19, 22),
-        "tipo de ensino" -> graft.etl.GroupRange(23, 25)))
+    val survey = SyntheticSurvey.survey(spark, n)
+    val registry = SyntheticSurvey.registry(spark)
+    val config = SyntheticSurvey.config
 
     val result = time("pipeline.run (lazy)")(Pipeline.run(survey, registry, config, 2026))
     val counts = time("identification + splits")(

@@ -127,12 +127,17 @@ class EntityResolutionSpec extends SparkSpec {
       (3L, "Outro Lado", "Freguesias")
     ).toDF("id_entidades", "ent_nome", "ent_tipo")
 
-    val r = EntityResolution.resolve(
-      survey, registry,
-      nameCol = "nome_entidade", tipoCol = "tipo_entidade", rowIdCol = "row_id",
-      regIdCol = "id_entidades", regNameCol = "ent_nome", regTipoCol = "ent_tipo",
-      tipoMap = Map("camara municipal" -> "Municípios", "freguesias" -> "Freguesias"),
+    // the identificacao group maps exactly the two survey columns
+    val config = graft.etl.EtlConfig(
+      renames = Seq(
+        graft.etl.ColumnRename("nome_entidade", "nome_entidade", critical = true),
+        graft.etl.ColumnRename("tipo_entidade", "tipo_entidade")),
+      groups = Map("identificacao" -> graft.etl.GroupRange(1, 2)),
+      entityTypes = Seq(
+        graft.etl.EntityTypeMap("Câmara Municipal", "Municípios"),
+        graft.etl.EntityTypeMap("Freguesias", "Freguesias")),
       defaultTipo = "Municípios")
+    val r = graft.etl.Pipeline.run(survey, registry, config, 2026)
 
     assert(r.valid.count() == 2)
     assert(r.duplicates.count() == 1)
@@ -143,6 +148,7 @@ class EntityResolutionSpec extends SparkSpec {
     assert(r.duplicates.select("row_id").as[Long].head() == 1L)
     val total = r.valid.count() + r.duplicates.count() + r.unmatched.count() + r.badName.count()
     assert(total == survey.count())
+    r.unpersist()
   }
 }
 
