@@ -25,7 +25,7 @@ import org.apache.spark.sql.SparkSession
   * A query is timed to its whole answer: a `noop` write consumes every
   * row and column, so the projections, final sort and UDF calls that
   * Catalyst prunes under `count()` are billed (q74 runs x27 longer).
-  * The composites materialize their outputs by count.
+  * The composites consume each of their outputs the same way.
   *
   * Query or composite names as arguments restrict the run to that
   * subset; its detail goes to `bench_detail_partial.json`. The artifact
@@ -122,12 +122,15 @@ object Bench {
 
     def ms(v: Double): Double = math.round(v * 1000).toDouble / 1000
 
+    def consume(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       val s = root.newSession()
       val t0 = System.nanoTime()
       val err =
-        try { fn(s, sfDir).write.format("noop").mode("overwrite").save(); None }
+        try { consume(fn(s, sfDir)); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}")
         }
@@ -187,7 +190,7 @@ object Bench {
           val star = graft.etl.StarLoader.load(res, idStrategy = idStrategy)
           Seq(res.valid, res.duplicates, res.unmatched, res.badName,
             star.fatoInquerito, star.fatoFormacao, star.fatoInteresse,
-            star.fatoDisponibilidade, star.comentario).foreach(_.count())
+            star.fatoDisponibilidade, star.comentario).foreach(consume)
           star.unpersist(); res.unpersist()
           None
         } catch { case e: Throwable =>
@@ -231,7 +234,7 @@ object Bench {
             graft.operators.Curation.CurationParams(
               minQuality = 0.0, maxRepetition = 1.0, maxContamination = 0.5,
               qualityModel = model, minModelScore = 0.3))
-          res.docs.count()
+          consume(res.docs)
           res.unpersist()
           None
         } catch { case e: Throwable =>

@@ -48,7 +48,7 @@ object Bm25Index {
   final case class Meta(nDocs: Long, totTokens: Long)
 
   private def metaString(m: Meta): String =
-    s"v1;nDocs=${m.nDocs};tot=${m.totTokens}"
+    MetaCodec.render("nDocs" -> m.nDocs, "tot" -> m.totTokens)
 
   /** Meta row of `index`. Fails typed on a frame that is not a v1 BM25
     * index (no meta row / unknown version).
@@ -59,11 +59,7 @@ object Bm25Index {
     val rows = index.filter(col("kind") === MetaKind).select(col("params")).collect()
     require(rows.length == 1,
       s"not a BM25 index: expected exactly one meta row (kind = $MetaKind), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown BM25 index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
+    val kv = MetaCodec.parse(rows(0).getString(0), "BM25")
     Meta(nDocs = kv("nDocs").toLong, totTokens = kv("tot").toLong)
   }
 

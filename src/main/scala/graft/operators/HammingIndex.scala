@@ -123,8 +123,9 @@ object HammingIndex {
     }
 
     def render: String =
-      s"v1;segments=${m.segments};" + hasher.fold("")(h => s"hasher=$h;") +
-        s"cap=${m.maxBucketSize};builtDropped=${m.builtDroppedBuckets};nDocs=${m.nDocs}"
+      MetaCodec.render(Seq("segments" -> m.segments) ++ hasher.map("hasher" -> _) ++
+        Seq("cap" -> m.maxBucketSize, "builtDropped" -> m.builtDroppedBuckets,
+          "nDocs" -> m.nDocs): _*)
   }
 
   private def parse(index: DataFrame, name: String): Params = {
@@ -133,11 +134,7 @@ object HammingIndex {
     val rows = index.filter(col("seg") === MetaSeg).select(col("params")).collect()
     require(rows.length == 1,
       s"not a $name index: expected exactly one meta row (seg = $MetaSeg), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown $name index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
+    val kv = MetaCodec.parse(rows(0).getString(0), name)
     Params(Meta(kv("segments").toInt, kv("cap").toInt,
       kv.getOrElse("builtDropped", "0").toLong, kv("nDocs").toLong), kv.get("hasher"))
   }

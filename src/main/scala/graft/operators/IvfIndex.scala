@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Persistable IVF (inverted-file) index: assign the corpus to its
   * frozen-quantizer cells ONCE, probe many times with query batches —
@@ -50,32 +51,156 @@ object IvfIndex {
   /** Frozen build parameters, parsed back from the index's meta row. */
   final case class Meta(dim: Int, nCentroids: Int, nDocs: Long)
 
-  private def metaString(m: Meta): String =
-    s"v1;dim=${m.dim};nCentroids=${m.nCentroids};nDocs=${m.nDocs}"
+  /** What one cell-partitioned family stores and how it scores. The
+    * family's layout is `(id, cell, <codeCol>, ctrs, <model>..., params)`:
+    * `codeCol` is the per-document column (of SQL type `codeType`),
+    * `model` the frozen model columns (name, SQL type) the meta row
+    * carries beside the coarse centroids. Everything else (meta row,
+    * build, append, occupancy, probe) is this object's one kernel;
+    * [[IvfSq8Index]] and [[IvfPqIndex]] are codecs over it.
+    */
+  private[operators] abstract class Codec[M](
+      val name: String,
+      val codeCol: String,
+      val codeType: String,
+      val model: Seq[(String, String)],
+      val scoreName: String) extends Serializable {
+    /** Columns the meta reader insists on: the whole layout. */
+    def required: Seq[String] = Seq("cell", codeCol, "ctrs") ++ model.map(_._1) :+ "params"
+    /** `k=v` params written between `nCentroids` and `nDocs`. */
+    def params(m: M): Seq[(String, Any)] = Nil
+    /** The meta row's model literals, in `model` order. */
+    def literals(m: M): Seq[Column] = Nil
+    /** The model back from the meta row, whose `model` columns start at
+      * index 2 (after `params` and `ctrs`); fails typed on a bad shape.
+      */
+    def read(meta: Row, dim: Int, kv: Map[String, String]): M
+    /** The stored code of a double-vector column; null on a null vector. */
+    def encode(m: M, v: Column): Column
+    /** Per-query scoring inputs, computed from `__qv` once per query. */
+    def queryCols(m: M): Seq[Column] = Nil
+    /** A candidate's score: its `code` column against the probe row. */
+    def score(m: M): Column
+  }
+
+  /** Raw vectors, scored by exact cosine. */
+  private[operators] object Raw extends Codec[Unit]("IVF", "vec", "array<double>", Nil, "sim") {
+    // the coarse meta (params + centroids) of any family reads as IVF, so
+    // cellOccupancyReport serves SQ8 and PQ frames too
+    override def required: Seq[String] = Seq("cell", "params")
+    def read(meta: Row, dim: Int, kv: Map[String, String]): Unit = ()
+    def encode(m: Unit, v: Column): Column = v
+    def score(m: Unit): Column = Similarity.cosine(col("vec"), col("__qv"))
+  }
+
+  /** A family's meta row, parsed: the shared parameters, the coarse
+    * centroids and the family's frozen model.
+    */
+  private[operators] final case class Stored[M](
+      meta: Meta, ctrs: Array[Array[Double]], model: M)
+
+  /** Meta row of a `c`-family index. Fails typed on a frame that is not
+    * a v1 index of that family.
+    */
+  private[operators] def read[M](c: Codec[M], index: DataFrame): Stored[M] = {
+    val cols = Seq("cell", c.codeCol, "ctrs") ++ c.model.map(_._1) :+ "params"
+    require(c.required.forall(index.columns.contains),
+      s"not an ${c.name} index: expected columns (id, ${cols.mkString(", ")})")
+    val rows = index.filter(col("cell") === MetaCell)
+      .select((Seq("params", "ctrs") ++ c.model.map(_._1)).map(col): _*).collect()
+    require(rows.length == 1,
+      s"not an ${c.name} index: expected exactly one meta row (cell = $MetaCell), found ${rows.length}")
+    val kv = MetaCodec.parse(rows(0).getString(0), c.name)
+    val meta = Meta(kv("dim").toInt, kv("nCentroids").toInt, kv("nDocs").toLong)
+    val ctrs = rows(0).getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray
+    require(ctrs.length == meta.nCentroids, s"corrupt ${c.name} index: centroid count mismatch")
+    Stored(meta, ctrs, c.read(rows(0), meta.dim, kv))
+  }
 
   /** Meta row of `index`: frozen params + centroid matrix. Fails typed
     * on a frame that is not a v1 IVF index.
     */
   def readMeta(index: DataFrame): (Meta, Array[Array[Double]]) = {
-    require(index.columns.contains("cell") && index.columns.contains("params"),
-      "not an IVF index: expected columns (id, cell, vec, ctrs, params)")
-    val rows = index.filter(col("cell") === MetaCell)
-      .select(col("params"), col("ctrs")).collect()
-    require(rows.length == 1,
-      s"not an IVF index: expected exactly one meta row (cell = $MetaCell), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown IVF index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
-    val meta = Meta(
-      dim = kv("dim").toInt,
-      nCentroids = kv("nCentroids").toInt,
-      nDocs = kv("nDocs").toLong)
-    val ctrs = rows(0).getSeq[scala.collection.Seq[Double]](1)
-      .map(_.toArray).toArray
-    require(ctrs.length == meta.nCentroids, "corrupt IVF index: centroid count mismatch")
-    (meta, ctrs)
+    val s = read(Raw, index)
+    (s.meta, s.ctrs)
+  }
+
+  /** A doc row in layout order: id, cell and code, with nulls where the
+    * meta row keeps its centroids, models and params.
+    */
+  private[operators] def docColumns(
+      c: Codec[_], id: Column, cell: Column, code: Column): Seq[Column] =
+    Seq(id, cell.as("cell"), code.as(c.codeCol),
+      lit(null).cast("array<array<double>>").as("ctrs")) ++
+      c.model.map { case (n, t) => lit(null).cast(t).as(n) } :+
+      lit(null).cast("string").as("params")
+
+  /** `corpus` as doc rows: each vector assigned to its nearest frozen
+    * centroid (null vectors to [[NullCell]]) and encoded.
+    */
+  private def docRows[M](
+      c: Codec[M], corpus: DataFrame, idCol: String, vecCol: String, s: Stored[M]): DataFrame = {
+    val ctrs = s.ctrs
+    val assignUdf = udf((v: Array[Double]) =>
+      if (v == null) NullCell else Similarity.nearestCells(ctrs, v, 1)(0))
+    corpus.select(col(idCol), Similarity.asDouble(col(vecCol)).as("__v"))
+      .select(docColumns(c, col(idCol), assignUdf(col("__v")), c.encode(s.model, col("__v"))): _*)
+  }
+
+  private[operators] def metaRow[M](
+      c: Codec[M], spark: SparkSession, idCol: String, idType: DataType, s: Stored[M]): DataFrame = {
+    val params = MetaCodec.render(
+      Seq("dim" -> s.meta.dim, "nCentroids" -> s.meta.nCentroids) ++ c.params(s.model) :+
+        ("nDocs" -> s.meta.nDocs): _*)
+    spark.range(1).select(Seq(
+      lit(null).cast(idType).as(idCol),
+      lit(MetaCell).as("cell"),
+      lit(null).cast(c.codeType).as(c.codeCol),
+      typedLit(s.ctrs.map(_.toSeq).toSeq).as("ctrs")) ++
+      c.model.map(_._1).zip(c.literals(s.model)).map { case (n, l) => l.as(n) } :+
+      lit(params).as("params"): _*)
+  }
+
+  /** The one write path of build, append and merge: `docs` persisted and
+    * counted, behind the `kept` doc rows of an existing index (whose
+    * column order wins), under a meta row of `s` whose `nDocs` grows by
+    * the count. Returned frame is persisted and materialized.
+    */
+  private[operators] def commit[M](
+      c: Codec[M], s: Stored[M], kept: Option[DataFrame], docs: DataFrame, idCol: String)
+      : DataFrame = {
+    val fresh = docs.persist()
+    val n = fresh.count()
+    val meta = metaRow(c, docs.sparkSession, idCol, docs.schema(idCol).dataType,
+      s.copy(meta = s.meta.copy(nDocs = s.meta.nDocs + n)))
+    val cols = kept.getOrElse(fresh).columns.map(col)
+    val index = (kept.toSeq ++ Seq(meta, fresh)).map(_.select(cols: _*))
+      .reduce(_ unionAll _).persist()
+    index.count()
+    fresh.unpersist()
+    index
+  }
+
+  /** Build a `c`-family index over `corpus` under frozen `centroids` and
+    * model `m`.
+    */
+  private[operators] def buildWith[M](
+      c: Codec[M], corpus: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Seq[Double]], m: M): DataFrame = {
+    val s = Stored(Meta(centroids.head.length, centroids.length, 0L),
+      centroids.map(_.toArray).toArray, m)
+    commit(c, s, None, docRows(c, corpus, idCol, vecCol, s), idCol)
+  }
+
+  /** Append `newVecs` to a `c`-family index, assigning and encoding ONLY
+    * the new rows with the frozen models from the meta row.
+    */
+  private[operators] def appendWith[M](
+      c: Codec[M], index: DataFrame, newVecs: DataFrame, idCol: String, vecCol: String)
+      : DataFrame = {
+    val s = read(c, index)
+    commit(c, s, Some(index.filter(col("cell") =!= MetaCell)),
+      docRows(c, newVecs, idCol, vecCol, s), idCol)
   }
 
   /** Build the index over the corpus with a frozen quantizer (a fitted
@@ -90,36 +215,15 @@ object IvfIndex {
       idCol: String,
       vecCol: String,
       centroids: Seq[Seq[Double]]): DataFrame = {
+    requireCentroids(centroids)
+    buildWith(Raw, corpus, idCol, vecCol, centroids, ())
+  }
+
+  /** The coarse quantizer must be a non-empty matrix of one width. */
+  private[operators] def requireCentroids(centroids: Seq[Seq[Double]]): Unit = {
     require(centroids.nonEmpty, "centroids must be non-empty")
-    val dim = centroids.head.length
-    require(centroids.forall(_.length == dim), "centroids must share one dimensionality")
-    val ctrs = centroids.map(_.toArray).toArray
-    val assignUdf = udf((v: Array[Double]) =>
-      if (v == null) NullCell else Similarity.nearestCells(ctrs, v, 1)(0))
-
-    val docs = corpus
-      .select(col(idCol), Similarity.asDouble(col(vecCol)).as("vec"))
-      .withColumn("cell", assignUdf(col("vec")))
-      .select(col(idCol), col("cell"),
-        col("vec"),
-        lit(null).cast("array<array<double>>").as("ctrs"),
-        lit(null).cast("string").as("params"))
-      .persist()
-    val nDocs = docs.count()
-
-    val idType = corpus.schema(idCol).dataType
-    val meta = Meta(dim, centroids.length, nDocs)
-    val metaRow = corpus.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaCell).as("cell"),
-      lit(null).cast("array<double>").as("vec"),
-      typedLit(centroids.map(_.toSeq)).as("ctrs"),
-      lit(metaString(meta)).as("params"))
-
-    val index = metaRow.unionAll(docs).persist()
-    index.count()
-    docs.unpersist()
-    index
+    require(centroids.forall(_.length == centroids.head.length),
+      "centroids must share one dimensionality")
   }
 
   /** The number of distinct probed cells up to which the probe inlines
@@ -179,24 +283,40 @@ object IvfIndex {
       vecCol: String,
       k: Int,
       nProbe: Int = 2,
-      maxStaticProbeCells: Int = DefaultMaxStaticProbeCells): DataFrame = {
-    val (m, ctrs) = readMeta(index)
-    require(nProbe > 0 && nProbe <= m.nCentroids,
-      s"nProbe must be in [1, ${m.nCentroids}]")
+      maxStaticProbeCells: Int = DefaultMaxStaticProbeCells): DataFrame =
+    topKWith(Raw, index, read(Raw, index), queries, idCol, vecCol, k, nProbe, maxStaticProbeCells)
+
+  /** `queries` as probe rows `(query_id, __qv, <scoring inputs>, __cell)`,
+    * one per probed cell; null vectors probe nothing. Deliberately NOT
+    * persisted: a persist here left one cached frame per probe call in
+    * the session. The price is that the frame is computed twice, once
+    * for the cell collect and once for the broadcast, so the cell
+    * ranking (|Q| x nCentroids x dim) runs twice per probe.
+    */
+  private def probeRows(
+      queries: DataFrame, idCol: String, vecCol: String,
+      ctrs: Array[Array[Double]], nProbe: Int, inputs: Seq[Column]): DataFrame = {
+    require(nProbe > 0 && nProbe <= ctrs.length, s"nProbe must be in [1, ${ctrs.length}]")
     val probeUdf = udf((v: Array[Double]) =>
       if (v == null) Array.empty[Int] else Similarity.nearestCells(ctrs, v, nProbe))
-    val q = queries
-      .select(col(idCol).as("query_id"), Similarity.asDouble(col(vecCol)).as("__qv"))
+    queries.select(col(idCol).as("query_id"), Similarity.asDouble(col(vecCol)).as("__qv"))
+      .select(Seq(col("query_id"), col("__qv")) ++ inputs: _*)
       .withColumn("__cell", explode(probeUdf(col("__qv"))))
-      .persist()
-    val assigned = cellRestricted(index, q, maxStaticProbeCells)
-      .select(col(idCol).as("neighbor_id"), col("cell").as("__cell"), col("vec").as("__cv"))
-    val out = Similarity.scoreProbedCells(assigned, q, k)
-    // scoreProbedCells ends in a window over fully-derived frames; the
-    // probe cache only needs to live until the caller materializes. Tie
-    // its release to nothing: localCheckpoint would cost a write, so we
-    // leave unpersist to context cleanup of the tiny (|Q| x nProbe) frame.
-    out
+  }
+
+  /** Top-k of `queries` against a `c`-family index whose meta row is `s`:
+    * probe rows, the cell restriction, then the family's score inside the
+    * broadcast cell join (`query_id`, `rank`, `neighbor_id`, score).
+    */
+  private[operators] def topKWith[M](
+      c: Codec[M], index: DataFrame, s: Stored[M], queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, nProbe: Int, maxStaticProbeCells: Int)
+      : DataFrame = {
+    val q = probeRows(queries, idCol, vecCol, s.ctrs, nProbe, c.queryCols(s.model))
+    val cand = cellRestricted(index, q, maxStaticProbeCells)
+      .filter(col(c.codeCol).isNotNull)
+      .select(col(idCol).as("neighbor_id"), col("cell").as("__cell"), col(c.codeCol))
+    Similarity.scoreProbedCells(cand, q, k, c.score(s.model), c.scoreName)
   }
 
   /** The embedding family's drift monitor (r9, completing the
@@ -225,17 +345,24 @@ object IvfIndex {
       skew: Double, // maxCell / (nDocs / nCentroids); 0 on an empty index
       top: Seq[(Int, Long)]) // (cell, docs), occupancy desc
 
-  def cellOccupancyReport(index: DataFrame, topK: Int = 16): CellOccupancy = {
+  def cellOccupancyReport(index: DataFrame, topK: Int = 16): CellOccupancy =
+    occupancy(Seq(index), readMeta(index)._1.nCentroids, topK)
+
+  /** Occupancy of the `nCentroids` shared cells over the doc rows of
+    * `indexes`: one groupBy of the `cell` column, no vector touched.
+    */
+  private[operators] def occupancy(
+      indexes: Seq[DataFrame], nCentroids: Int, topK: Int): CellOccupancy = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
-    val (m, _) = readMeta(index)
-    val occ = index.filter(col("cell") >= 0)
+    val occ = indexes.map(_.filter(col("cell") >= 0).select(col("cell")))
+      .reduce(_ unionAll _)
       .groupBy("cell").agg(count(lit(1)).as("__n"))
       .orderBy(col("__n").desc, col("cell"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
     val nDocs = occ.map(_._2).sum
     val maxCell = occ.headOption.map(_._2).getOrElse(0L)
-    val mean = if (m.nCentroids > 0) nDocs.toDouble / m.nCentroids else 0.0
-    CellOccupancy(nDocs, m.nCentroids, occ.size, maxCell, mean,
+    val mean = if (nCentroids > 0) nDocs.toDouble / nCentroids else 0.0
+    CellOccupancy(nDocs, nCentroids, occ.size, maxCell, mean,
       if (mean > 0) maxCell / mean else 0.0, occ.take(topK))
   }
 
@@ -300,20 +427,9 @@ object IvfIndex {
   def cellOccupancyReportMany(
       indexes: Seq[DataFrame], topK: Int = 16): CellOccupancy = {
     require(indexes.nonEmpty, "need at least one index generation")
-    require(topK >= 1, s"topK must be >= 1, got $topK")
     val metasCtrs = indexes.map(readMeta)
     requireOneQuantizer(metasCtrs.map(_._2))
-    val nCentroids = metasCtrs.head._1.nCentroids
-    val occ = indexes.map(_.filter(col("cell") >= 0).select(col("cell")))
-      .reduce(_ unionAll _)
-      .groupBy("cell").agg(count(lit(1)).as("__n"))
-      .orderBy(col("__n").desc, col("cell"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val nDocs = occ.map(_._2).sum
-    val maxCell = occ.headOption.map(_._2).getOrElse(0L)
-    val mean = if (nCentroids > 0) nDocs.toDouble / nCentroids else 0.0
-    CellOccupancy(nDocs, nCentroids, occ.size, maxCell, mean,
-      if (mean > 0) maxCell / mean else 0.0, occ.take(topK))
+    occupancy(indexes, metasCtrs.head._1.nCentroids, topK)
   }
 
   /** Probe SEVERAL index generations and return the GLOBAL top-k — the
@@ -342,18 +458,13 @@ object IvfIndex {
       nProbe: Int = 2,
       maxStaticProbeCells: Int = DefaultMaxStaticProbeCells): DataFrame = {
     require(indexes.nonEmpty, "need at least one index generation")
-    requireOneQuantizer(indexes.map(readMeta(_)._2))
-    val per = indexes.map(ix =>
-      topKAgainst(ix, queries, idCol, vecCol, k, nProbe, maxStaticProbeCells))
-    val union = per.reduce(_ unionAll _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    union
-      .select("query_id", "neighbor_id", "sim").distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
+    val stored = indexes.map(read(Raw, _))
+    requireOneQuantizer(stored.map(_.ctrs))
+    val per = indexes.zip(stored).map { case (ix, s) =>
+      topKWith(Raw, ix, s, queries, idCol, vecCol, k, nProbe, maxStaticProbeCells)
+    }
+    Similarity.rankTopK(per.reduce(_ unionAll _).select("query_id", "neighbor_id", "sim").distinct(),
+      k, "sim")
   }
 
   /** [[dedupAgainst]] over several index generations: `incoming` minus
@@ -389,26 +500,11 @@ object IvfIndex {
     */
   def mergeMany(indexes: Seq[DataFrame], idCol: String): DataFrame = {
     require(indexes.nonEmpty, "need at least one index generation")
-    val metasCtrs = indexes.map(readMeta)
-    requireOneQuantizer(metasCtrs.map(_._2))
-    val base = metasCtrs.head._1
-    val ctrs = metasCtrs.head._2
-    val docs = indexes.map(_.filter(col("cell") =!= MetaCell)).reduce(_ unionAll _)
-      .persist()
-    val nDocs = docs.count()
-    val idType = indexes.head.schema(idCol).dataType
-    val metaRow = indexes.head.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaCell).as("cell"),
-      lit(null).cast("array<double>").as("vec"),
-      typedLit(ctrs.map(_.toSeq).toSeq).as("ctrs"),
-      lit(metaString(base.copy(nDocs = nDocs))).as("params"))
-    val merged = metaRow.select(indexes.head.columns.map(col): _*)
-      .unionAll(docs.select(indexes.head.columns.map(col): _*))
-      .persist()
-    merged.count()
-    docs.unpersist()
-    merged
+    val stored = indexes.map(read(Raw, _))
+    requireOneQuantizer(stored.map(_.ctrs))
+    val base = stored.head
+    commit(Raw, base.copy(meta = base.meta.copy(nDocs = 0L)), None,
+      indexes.map(_.filter(col("cell") =!= MetaCell)).reduce(_ unionAll _), idCol)
   }
 
   /** Index-backed embedding near-dup gate: `incoming` minus rows whose
@@ -433,21 +529,14 @@ object IvfIndex {
       threshold: Double,
       nProbe: Int = 2,
       maxStaticProbeCells: Int = DefaultMaxStaticProbeCells): DataFrame = {
-    val (m, ctrs) = readMeta(index)
-    require(nProbe > 0 && nProbe <= m.nCentroids,
-      s"nProbe must be in [1, ${m.nCentroids}]")
-    val probeUdf = udf((v: Array[Double]) =>
-      if (v == null) Array.empty[Int] else Similarity.nearestCells(ctrs, v, nProbe))
-    val q = incoming
-      .select(col(idCol).as("__qid"), Similarity.asDouble(col(vecCol)).as("__qv"))
-      .withColumn("__cell", explode(probeUdf(col("__qv"))))
-      .persist()
+    val ctrs = readMeta(index)._2
+    val q = probeRows(incoming, idCol, vecCol, ctrs, nProbe, Nil).persist()
     val dupIds = cellRestricted(index, q, maxStaticProbeCells)
       .select(col(idCol).as("__nid"), col("cell").as("__cell"), col("vec").as("__cv"))
       .join(broadcast(q), "__cell")
-      .filter(col("__nid") =!= col("__qid"))
+      .filter(col("__nid") =!= col("query_id"))
       .filter(Similarity.cosine(col("__cv"), col("__qv")) >= threshold)
-      .select(col("__qid").as(idCol))
+      .select(col("query_id").as(idCol))
       .distinct()
       .localCheckpoint() // materialize before the probe cache is released
     q.unpersist()
@@ -466,33 +555,6 @@ object IvfIndex {
       index: DataFrame,
       newVecs: DataFrame,
       idCol: String,
-      vecCol: String): DataFrame = {
-    val (m, ctrs) = readMeta(index)
-    val assignUdf = udf((v: Array[Double]) =>
-      if (v == null) NullCell else Similarity.nearestCells(ctrs, v, 1)(0))
-    val newDocs = newVecs
-      .select(col(idCol), Similarity.asDouble(col(vecCol)).as("vec"))
-      .withColumn("cell", assignUdf(col("vec")))
-      .select(col(idCol), col("cell"), col("vec"),
-        lit(null).cast("array<array<double>>").as("ctrs"),
-        lit(null).cast("string").as("params"))
-      .persist()
-    val nNew = newDocs.count()
-
-    val idType = newVecs.schema(idCol).dataType
-    val newMetaRow = newVecs.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaCell).as("cell"),
-      lit(null).cast("array<double>").as("vec"),
-      typedLit(ctrs.map(_.toSeq).toSeq).as("ctrs"),
-      lit(metaString(m.copy(nDocs = m.nDocs + nNew))).as("params"))
-
-    val appended = index.filter(col("cell") =!= MetaCell)
-      .unionAll(newMetaRow.select(index.columns.map(col): _*))
-      .unionAll(newDocs.select(index.columns.map(col): _*))
-      .persist()
-    appended.count()
-    newDocs.unpersist()
-    appended
-  }
+      vecCol: String): DataFrame =
+    appendWith(Raw, index, newVecs, idCol, vecCol)
 }

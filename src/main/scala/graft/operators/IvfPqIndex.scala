@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Persistable IVF-PQ index — the production ANN serving layout
@@ -45,64 +45,42 @@ object IvfPqIndex {
 
   final case class Meta(dim: Int, nCentroids: Int, nSub: Int, kCb: Int, nDocs: Long)
 
-  private def metaString(m: Meta): String =
-    s"v1;dim=${m.dim};nCentroids=${m.nCentroids};nSub=${m.nSub};kCb=${m.kCb};nDocs=${m.nDocs}"
+  /** One packed PQ Int per vector under the frozen codebook tensor,
+    * scored by [[Similarity.pqAdcCosUdf]] against each query's ADC table.
+    */
+  private object Pq extends IvfIndex.Codec[Array[Array[Array[Double]]]](
+      "IVF-PQ", "pq_code", "int", Seq("cbs" -> "array<array<array<double>>>"), "adc_cos") {
+    override def params(cbs: Array[Array[Array[Double]]]): Seq[(String, Any)] =
+      Seq("nSub" -> cbs.length, "kCb" -> cbs(0).length)
+    override def literals(cbs: Array[Array[Array[Double]]]): Seq[Column] =
+      Seq(typedLit(cbs.map(_.map(_.toSeq).toSeq).toSeq))
+    def read(meta: Row, dim: Int, kv: Map[String, String]): Array[Array[Array[Double]]] = {
+      val cbs = meta.getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](2)
+        .map(_.map(_.toArray).toArray).toArray
+      require(cbs.length == kv("nSub").toInt && cbs.forall(_.length == kv("kCb").toInt),
+        "corrupt IVF-PQ index: codebook shape mismatch")
+      cbs
+    }
+    def encode(cbs: Array[Array[Array[Double]]], v: Column): Column =
+      udf((x: Array[Double]) =>
+        if (x == null) null
+        else java.lang.Integer.valueOf(Similarity.pqEncodeKernel(cbs, x))).apply(v)
+    override def queryCols(cbs: Array[Array[Array[Double]]]): Seq[Column] =
+      Seq(Similarity.pqTableUdf(cbs)(col("__qv")).as("__tab"),
+        Similarity.vecNorm(col("__qv")).as("__qn"))
+    def score(cbs: Array[Array[Array[Double]]]): Column =
+      Similarity.pqAdcCosUdf(cbs)(col("__tab"), col("__qn"), col("pq_code"))
+  }
 
   /** Meta row of `index`: frozen params + both model tensors. Fails
     * typed on a frame that is not a v1 IVF-PQ index.
     */
   def readMeta(index: DataFrame): (Meta, Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    require(Seq("cell", "pq_code", "ctrs", "cbs", "params").forall(index.columns.contains),
-      "not an IVF-PQ index: expected columns (id, cell, pq_code, ctrs, cbs, params)")
-    val rows = index.filter(col("cell") === MetaCell)
-      .select(col("params"), col("ctrs"), col("cbs")).collect()
-    require(rows.length == 1,
-      s"not an IVF-PQ index: expected exactly one meta row (cell = $MetaCell), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown IVF-PQ index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
-    val meta = Meta(kv("dim").toInt, kv("nCentroids").toInt,
-      kv("nSub").toInt, kv("kCb").toInt, kv("nDocs").toLong)
-    val ctrs = rows(0).getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray
-    val cbs = rows(0).getSeq[scala.collection.Seq[scala.collection.Seq[Double]]](2)
-      .map(_.map(_.toArray).toArray).toArray
-    require(ctrs.length == meta.nCentroids, "corrupt IVF-PQ index: centroid count mismatch")
-    require(cbs.length == meta.nSub && cbs.forall(_.length == meta.kCb),
-      "corrupt IVF-PQ index: codebook shape mismatch")
-    (meta, ctrs, cbs)
+    val s = IvfIndex.read(Pq, index)
+    val cbs = s.model
+    (Meta(s.meta.dim, s.meta.nCentroids, cbs.length, cbs.headOption.fold(0)(_.length),
+      s.meta.nDocs), s.ctrs, cbs)
   }
-
-  private def docRows(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      ctrs: Array[Array[Double]], cbs: Array[Array[Array[Double]]]): DataFrame = {
-    val assignUdf = udf((v: Array[Double]) =>
-      if (v == null) NullCell else Similarity.nearestCells(ctrs, v, 1)(0))
-    val encUdf = udf((v: Array[Double]) =>
-      if (v == null) null
-      else java.lang.Integer.valueOf(Similarity.pqEncodeKernel(cbs, v)))
-    corpus
-      .select(col(idCol), Similarity.asDouble(col(vecCol)).as("__v"))
-      .select(col(idCol),
-        assignUdf(col("__v")).as("cell"),
-        encUdf(col("__v")).as("pq_code"),
-        lit(null).cast("array<array<double>>").as("ctrs"),
-        lit(null).cast("array<array<array<double>>>").as("cbs"),
-        lit(null).cast("string").as("params"))
-  }
-
-  private def metaRow(
-      spark: org.apache.spark.sql.SparkSession, idCol: String,
-      idType: org.apache.spark.sql.types.DataType, m: Meta,
-      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    spark.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaCell).as("cell"),
-      lit(null).cast("int").as("pq_code"),
-      typedLit(centroids.map(_.toSeq)).as("ctrs"),
-      typedLit(codebooks.map(_.map(_.toSeq).toSeq)).as("cbs"),
-      lit(metaString(m)).as("params"))
 
   /** Build the index: one coarse-cell assignment + one PQ encode per
     * vector, both pure per-row kernels of the frozen models. Returned
@@ -114,21 +92,10 @@ object IvfPqIndex {
       vecCol: String,
       centroids: Seq[Seq[Double]] = IvfCentroids.centroids,
       codebooks: Seq[Seq[Seq[Double]]] = PqCodebooks.codebooks): DataFrame = {
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    val dim = centroids.head.length
-    require(centroids.forall(_.length == dim), "centroids must share one dimensionality")
-    val ctrs = centroids.map(_.toArray).toArray
+    IvfIndex.requireCentroids(centroids)
     val cbs = codebooks.map(_.map(_.toArray).toArray).toArray
     Similarity.requirePqShape(cbs)
-    val docs = docRows(corpus, idCol, vecCol, ctrs, cbs).persist()
-    val nDocs = docs.count()
-    val m = Meta(dim, centroids.length, cbs.length, cbs(0).length, nDocs)
-    val index = metaRow(corpus.sparkSession, idCol, corpus.schema(idCol).dataType,
-        m, centroids, codebooks)
-      .unionAll(docs).persist()
-    index.count()
-    docs.unpersist()
-    index
+    IvfIndex.buildWith(Pq, corpus, idCol, vecCol, centroids, cbs)
   }
 
   /** ADC top-k against the stored index: same output contract as
@@ -148,34 +115,9 @@ object IvfPqIndex {
       vecCol: String,
       k: Int,
       nProbe: Int = 2,
-      maxStaticProbeCells: Int = IvfIndex.DefaultMaxStaticProbeCells): DataFrame = {
-    val (m, ctrs, cbs) = readMeta(index)
-    require(nProbe > 0 && nProbe <= m.nCentroids,
-      s"nProbe must be in [1, ${m.nCentroids}]")
-    val probeUdf = udf((v: Array[Double]) =>
-      if (v == null) Array.empty[Int] else Similarity.nearestCells(ctrs, v, nProbe))
-    val q0 = queries.select(
-      col(idCol).as("query_id"), Similarity.asDouble(col(vecCol)).as("__qv"))
-    // Deliberately NOT persisted (r8 ADVICE — a persist here leaked one
-    // cached frame per probe call into executor storage for the life of
-    // the session): q is batch-sized, used twice (cell collect + the
-    // broadcast), and the cells-only sub-plan prunes the ADC-table UDF,
-    // so recomputation costs one pass over the query batch.
-    val q = Similarity.pqQuerySide(q0, "query_id", "__qv", cbs)
-      .join(q0.select(col("query_id"), explode(probeUdf(col("__qv"))).as("__cell")),
-        "query_id")
-    val cand = IvfIndex.cellRestricted(index, q, maxStaticProbeCells)
-      .filter(col("pq_code").isNotNull)
-      .select(col(idCol).as("neighbor_id"), col("cell").as("__cell"), col("pq_code"))
-    val scored = cand.join(broadcast(q), "__cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_cos",
-        Similarity.pqAdcCosUdf(cbs)(col("__tab"), col("__qn"), col("pq_code")))
-    // one cell per doc, so no pair dups — the distinct is the same cheap
-    // safety as IvfIndex's scoreProbedCells tail
-    Similarity.pqRankTopK(
-      scored.select("query_id", "neighbor_id", "adc_cos").distinct(), k)
-  }
+      maxStaticProbeCells: Int = IvfIndex.DefaultMaxStaticProbeCells): DataFrame =
+    IvfIndex.topKWith(Pq, index, IvfIndex.read(Pq, index), queries, idCol, vecCol,
+      k, nProbe, maxStaticProbeCells)
 
   /** Append new vectors, assigning and encoding ONLY the new rows with
     * the frozen models from the meta row. Exact — both models are pure
@@ -187,45 +129,18 @@ object IvfPqIndex {
       index: DataFrame,
       newVecs: DataFrame,
       idCol: String,
-      vecCol: String): DataFrame = {
-    val (m, ctrs, cbs) = readMeta(index)
-    val newDocs = docRows(newVecs, idCol, vecCol, ctrs, cbs).persist()
-    val nNew = newDocs.count()
-    val appended = index.filter(col("cell") =!= MetaCell)
-      .unionAll(metaRow(newVecs.sparkSession, idCol, newVecs.schema(idCol).dataType,
-          m.copy(nDocs = m.nDocs + nNew),
-          ctrs.map(_.toSeq).toSeq, cbs.map(_.map(_.toSeq).toSeq).toSeq)
-        .select(index.columns.map(col): _*))
-      .unionAll(newDocs.select(index.columns.map(col): _*))
-      .persist()
-    appended.count()
-    newDocs.unpersist()
-    appended
-  }
+      vecCol: String): DataFrame =
+    IvfIndex.appendWith(Pq, index, newVecs, idCol, vecCol)
 
   /** Cell-balance report over this index's doc rows — the same
-    * statistic and remedy trigger as [[IvfIndex.cellOccupancyReport]]
-    * (the layouts share the cell-discriminated scheme, not the meta
-    * schema — the [[IvfSq8Index.occupancyReport]] thin-twin pattern).
+    * statistic and remedy trigger as [[IvfIndex.cellOccupancyReport]].
     * The coarse quantizer here skews exactly like IvfIndex's: appends
     * drift the corpus away from the frozen centroids, over-full cells
     * make probes scan their fraction in full, and this one stored-row
-    * groupBy is the measured trigger for [[rebuildIfSkewed]] (r10 —
-    * this was the only persistable index family without a monitor).
+    * groupBy is the measured trigger for [[rebuildIfSkewed]].
     */
-  def occupancyReport(index: DataFrame, topK: Int = 16): IvfIndex.CellOccupancy = {
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    val (m, _, _) = readMeta(index)
-    val occ = index.filter(col("cell") >= 0)
-      .groupBy("cell").agg(count(lit(1)).as("__n"))
-      .orderBy(col("__n").desc, col("cell"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val nDocs = occ.map(_._2).sum
-    val maxCell = occ.headOption.map(_._2).getOrElse(0L)
-    val mean = if (m.nCentroids > 0) nDocs.toDouble / m.nCentroids else 0.0
-    IvfIndex.CellOccupancy(nDocs, m.nCentroids, occ.size, maxCell, mean,
-      if (mean > 0) maxCell / mean else 0.0, occ.take(topK))
-  }
+  def occupancyReport(index: DataFrame, topK: Int = 16): IvfIndex.CellOccupancy =
+    IvfIndex.occupancy(Seq(index), readMeta(index)._1.nCentroids, topK)
 
   /** The monitor-then-remedy loop for the IVF-PQ family. Unlike
     * [[IvfIndex.refitIfSkewed]] the artifact CANNOT heal from itself —

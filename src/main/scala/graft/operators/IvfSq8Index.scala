@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Persistable IVF-SQ8 index — the middle rung of the ANN serving
@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * outside the frozen `(lo, hi)` range) degrades gracefully — encode
   * clamps at the range edge ([[Similarity.sq8EncodeKernel]]) — and the
   * monitor for wholesale distribution drift is the cell-balance report
-  * ([[IvfIndex.cellOccupancyReport]] works on any cell-discriminated
-  * frame of this shape... this one included, via [[occupancyReport]]).
+  * ([[occupancyReport]]). Everything but the stored code and its
+  * scoring is [[IvfIndex]]'s kernel.
   */
 object IvfSq8Index {
 
@@ -40,65 +40,40 @@ object IvfSq8Index {
 
   final case class Meta(dim: Int, nCentroids: Int, nDocs: Long)
 
-  private def metaString(m: Meta): String =
-    s"v1;dim=${m.dim};nCentroids=${m.nCentroids};nDocs=${m.nDocs}"
+  /** One SQ8 byte per dimension under the frozen `(lo, hi)` calibration,
+    * scored by [[Similarity.sq8AdcCosUdf]].
+    */
+  private object Sq8 extends IvfIndex.Codec[(Array[Double], Array[Double])](
+      "IVF-SQ8", "sq_code", "binary",
+      Seq("los" -> "array<double>", "his" -> "array<double>"), "adc_cos") {
+    override def literals(m: (Array[Double], Array[Double])): Seq[Column] =
+      Seq(typedLit(m._1.toSeq), typedLit(m._2.toSeq))
+    def read(meta: Row, dim: Int, kv: Map[String, String]): (Array[Double], Array[Double]) = {
+      val lo = meta.getSeq[Double](2).toArray
+      val hi = meta.getSeq[Double](3).toArray
+      require(lo.length == dim && hi.length == dim,
+        "corrupt IVF-SQ8 index: calibration length mismatch")
+      (lo, hi)
+    }
+    def encode(m: (Array[Double], Array[Double]), v: Column): Column = {
+      val (lo, hi) = m
+      udf((x: Array[Double]) => if (x == null) null else Similarity.sq8EncodeKernel(lo, hi, x))
+        .apply(v)
+    }
+    override def queryCols(m: (Array[Double], Array[Double])): Seq[Column] =
+      Seq(Similarity.vecNorm(col("__qv")).as("__qn"))
+    def score(m: (Array[Double], Array[Double])): Column =
+      Similarity.sq8AdcCosUdf(m._1, m._2)(col("__qv"), col("__qn"), col("sq_code"))
+  }
 
   /** Meta row of `index`: frozen params, coarse centroids, calibration.
     * Fails typed on a frame that is not a v1 IVF-SQ8 index.
     */
   def readMeta(index: DataFrame)
       : (Meta, Array[Array[Double]], Array[Double], Array[Double]) = {
-    require(Seq("cell", "sq_code", "ctrs", "los", "his", "params").forall(index.columns.contains),
-      "not an IVF-SQ8 index: expected columns (id, cell, sq_code, ctrs, los, his, params)")
-    val rows = index.filter(col("cell") === MetaCell)
-      .select(col("params"), col("ctrs"), col("los"), col("his")).collect()
-    require(rows.length == 1,
-      s"not an IVF-SQ8 index: expected exactly one meta row (cell = $MetaCell), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown IVF-SQ8 index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
-    val meta = Meta(kv("dim").toInt, kv("nCentroids").toInt, kv("nDocs").toLong)
-    val ctrs = rows(0).getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray
-    val lo = rows(0).getSeq[Double](2).toArray
-    val hi = rows(0).getSeq[Double](3).toArray
-    require(ctrs.length == meta.nCentroids, "corrupt IVF-SQ8 index: centroid count mismatch")
-    require(lo.length == meta.dim && hi.length == meta.dim,
-      "corrupt IVF-SQ8 index: calibration length mismatch")
-    (meta, ctrs, lo, hi)
+    val s = IvfIndex.read(Sq8, index)
+    (Meta(s.meta.dim, s.meta.nCentroids, s.meta.nDocs), s.ctrs, s.model._1, s.model._2)
   }
-
-  private def docRows(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      ctrs: Array[Array[Double]], lo: Array[Double], hi: Array[Double]): DataFrame = {
-    val assignUdf = udf((v: Array[Double]) =>
-      if (v == null) NullCell else Similarity.nearestCells(ctrs, v, 1)(0))
-    val encUdf = udf((v: Array[Double]) =>
-      if (v == null) null else Similarity.sq8EncodeKernel(lo, hi, v))
-    corpus
-      .select(col(idCol), Similarity.asDouble(col(vecCol)).as("__v"))
-      .select(col(idCol),
-        assignUdf(col("__v")).as("cell"),
-        encUdf(col("__v")).as("sq_code"),
-        lit(null).cast("array<array<double>>").as("ctrs"),
-        lit(null).cast("array<double>").as("los"),
-        lit(null).cast("array<double>").as("his"),
-        lit(null).cast("string").as("params"))
-  }
-
-  private def metaRow(
-      spark: org.apache.spark.sql.SparkSession, idCol: String,
-      idType: org.apache.spark.sql.types.DataType, m: Meta,
-      centroids: Seq[Seq[Double]], lo: Seq[Double], hi: Seq[Double]): DataFrame =
-    spark.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaCell).as("cell"),
-      lit(null).cast("binary").as("sq_code"),
-      typedLit(centroids.map(_.toSeq)).as("ctrs"),
-      typedLit(lo).as("los"),
-      typedLit(hi).as("his"),
-      lit(metaString(m)).as("params"))
 
   /** Build the index: one coarse-cell assignment + one SQ8 encode per
     * vector, both pure per-row kernels of the frozen models. Returned
@@ -111,21 +86,11 @@ object IvfSq8Index {
       centroids: Seq[Seq[Double]],
       lo: Seq[Double],
       hi: Seq[Double]): DataFrame = {
-    require(centroids.nonEmpty, "centroids must be non-empty")
+    IvfIndex.requireCentroids(centroids)
     val dim = centroids.head.length
-    require(centroids.forall(_.length == dim), "centroids must share one dimensionality")
     require(lo.length == dim && hi.length == dim,
       s"calibration must match the centroid dimensionality $dim, got ${lo.length}/${hi.length}")
-    val ctrs = centroids.map(_.toArray).toArray
-    val docs = docRows(corpus, idCol, vecCol, ctrs, lo.toArray, hi.toArray).persist()
-    val nDocs = docs.count()
-    val m = Meta(dim, centroids.length, nDocs)
-    val index = metaRow(corpus.sparkSession, idCol, corpus.schema(idCol).dataType,
-        m, centroids, lo, hi)
-      .unionAll(docs).persist()
-    index.count()
-    docs.unpersist()
-    index
+    IvfIndex.buildWith(Sq8, corpus, idCol, vecCol, centroids, (lo.toArray, hi.toArray))
   }
 
   /** ADC top-k against the stored index: same output contract as
@@ -144,38 +109,9 @@ object IvfSq8Index {
       vecCol: String,
       k: Int,
       nProbe: Int = 2,
-      maxStaticProbeCells: Int = IvfIndex.DefaultMaxStaticProbeCells): DataFrame = {
-    val (m, ctrs, lo, hi) = readMeta(index)
-    require(nProbe > 0 && nProbe <= m.nCentroids,
-      s"nProbe must be in [1, ${m.nCentroids}]")
-    val probeUdf = udf((v: Array[Double]) =>
-      if (v == null) Array.empty[Int] else Similarity.nearestCells(ctrs, v, nProbe))
-    val qnUdf = udf((v: Array[Double]) =>
-      if (v == null) 0.0
-      else {
-        var t = 0.0
-        var i = 0
-        while (i < v.length) { t += v(i) * v(i); i += 1 }
-        math.sqrt(t)
-      })
-    // batch-sized, used twice (cell collect + broadcast) — the IvfPq
-    // no-persist rationale applies verbatim
-    val q = queries.select(
-      col(idCol).as("query_id"),
-      Similarity.asDouble(col(vecCol)).as("__qv"))
-      .filter(col("__qv").isNotNull)
-      .withColumn("__qn", qnUdf(col("__qv")))
-      .withColumn("__cell", explode(probeUdf(col("__qv"))))
-    val cand = IvfIndex.cellRestricted(index, q, maxStaticProbeCells)
-      .filter(col("sq_code").isNotNull)
-      .select(col(idCol).as("neighbor_id"), col("cell").as("__cell"), col("sq_code"))
-    val scored = cand.join(broadcast(q), "__cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adc_cos",
-        Similarity.sq8AdcCosUdf(lo, hi)(col("__qv"), col("__qn"), col("sq_code")))
-    Similarity.pqRankTopK(
-      scored.select("query_id", "neighbor_id", "adc_cos").distinct(), k)
-  }
+      maxStaticProbeCells: Int = IvfIndex.DefaultMaxStaticProbeCells): DataFrame =
+    IvfIndex.topKWith(Sq8, index, IvfIndex.read(Sq8, index), queries, idCol, vecCol,
+      k, nProbe, maxStaticProbeCells)
 
   /** Append new vectors, assigning and encoding ONLY the new rows with
     * the frozen models from the meta row — EXACT (both models are pure
@@ -186,40 +122,14 @@ object IvfSq8Index {
       index: DataFrame,
       newVecs: DataFrame,
       idCol: String,
-      vecCol: String): DataFrame = {
-    val (m, ctrs, lo, hi) = readMeta(index)
-    val newDocs = docRows(newVecs, idCol, vecCol, ctrs, lo, hi).persist()
-    val nNew = newDocs.count()
-    val appended = index.filter(col("cell") =!= MetaCell)
-      .unionAll(metaRow(newVecs.sparkSession, idCol, newVecs.schema(idCol).dataType,
-          m.copy(nDocs = m.nDocs + nNew),
-          ctrs.map(_.toSeq).toSeq, lo.toSeq, hi.toSeq)
-        .select(index.columns.map(col): _*))
-      .unionAll(newDocs.select(index.columns.map(col): _*))
-      .persist()
-    appended.count()
-    newDocs.unpersist()
-    appended
-  }
+      vecCol: String): DataFrame =
+    IvfIndex.appendWith(Sq8, index, newVecs, idCol, vecCol)
 
   /** Cell-balance report over this index's doc rows — the same
-    * statistic and remedy trigger as [[IvfIndex.cellOccupancyReport]]
-    * (the layouts share the cell-discriminated scheme, but not the
-    * meta-row schema, hence the thin twin).
+    * statistic and remedy trigger as [[IvfIndex.cellOccupancyReport]].
     */
-  def occupancyReport(index: DataFrame, topK: Int = 16): IvfIndex.CellOccupancy = {
-    require(topK >= 1, s"topK must be >= 1, got $topK")
-    val (m, _, _, _) = readMeta(index)
-    val occ = index.filter(col("cell") >= 0)
-      .groupBy("cell").agg(count(lit(1)).as("__n"))
-      .orderBy(col("__n").desc, col("cell"))
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val nDocs = occ.map(_._2).sum
-    val maxCell = occ.headOption.map(_._2).getOrElse(0L)
-    val mean = if (m.nCentroids > 0) nDocs.toDouble / m.nCentroids else 0.0
-    IvfIndex.CellOccupancy(nDocs, m.nCentroids, occ.size, maxCell, mean,
-      if (mean > 0) maxCell / mean else 0.0, occ.take(topK))
-  }
+  def occupancyReport(index: DataFrame, topK: Int = 16): IvfIndex.CellOccupancy =
+    IvfIndex.occupancy(Seq(index), readMeta(index)._1.nCentroids, topK)
 
   /** The monitor-then-remedy loop for the IVF-SQ8 family (r10 —
     * completing the remedy symmetry: IVF refits from stored vectors,
@@ -243,7 +153,8 @@ object IvfSq8Index {
     val report = occupancyReport(index)
     if (report.skew <= maxSkew) (index, report)
     else {
-      val (m, _, lo, hi) = readMeta(index)
+      val s = IvfIndex.read(Sq8, index)
+      val (lo, hi) = s.model
       val idCol = index.columns.head
       val reconUdf = udf((code: Array[Byte]) => {
         val v = new Array[Double](lo.length)
@@ -257,19 +168,16 @@ object IvfSq8Index {
       val recon = index.filter(col("cell") >= 0)
         .select(col(idCol), reconUdf(col("sq_code")).as("__v"), col("sq_code"))
         .persist()
-      val ctrs = IvfIndex.fitCentroids(recon, "__v", m.nCentroids, seed)
+      val ctrs = IvfIndex.fitCentroids(recon, "__v", s.meta.nCentroids, seed)
         .map(_.toArray).toArray
       val assignUdf = udf((v: Array[Double]) => Similarity.nearestCells(ctrs, v, 1)(0))
-      val docs = recon.select(col(idCol),
-        assignUdf(col("__v")).as("cell"),
-        col("sq_code"),
-        lit(null).cast("array<array<double>>").as("ctrs"),
-        lit(null).cast("array<double>").as("los"),
-        lit(null).cast("array<double>").as("his"),
-        lit(null).cast("string").as("params"))
-      val rebuilt = metaRow(index.sparkSession, idCol, index.schema(idCol).dataType,
-          m, ctrs.map(_.toSeq).toSeq, lo.toSeq, hi.toSeq)
-        .unionAll(docs.select(index.columns.map(col): _*))
+      val cols = index.columns.map(col)
+      // every doc row is rewritten, so nDocs carries over as it is
+      val rebuilt = IvfIndex.metaRow(Sq8, index.sparkSession, idCol,
+          index.schema(idCol).dataType, s.copy(ctrs = ctrs)).select(cols: _*)
+        .unionAll(recon.select(
+          IvfIndex.docColumns(Sq8, col(idCol), assignUdf(col("__v")), col("sq_code")): _*)
+          .select(cols: _*))
         .unionAll(index.filter(col("cell") === NullCell))
         .persist()
       rebuilt.count()

@@ -48,8 +48,10 @@ object LineFreqIndex {
     new String(h.grouped(2).map(x => Integer.parseInt(x, 16).toByte).toArray, "UTF-8")
 
   private def metaString(m: Meta): String = m.segmenter match {
-    case LineDedup.DelimSegments(re) => s"v1;mode=delim;regex=${hex(re)};nDocs=${m.nDocs}"
-    case LineDedup.WordChunkSegments(k) => s"v1;mode=chunk;k=$k;nDocs=${m.nDocs}"
+    case LineDedup.DelimSegments(re) =>
+      MetaCodec.render("mode" -> "delim", "regex" -> hex(re), "nDocs" -> m.nDocs)
+    case LineDedup.WordChunkSegments(k) =>
+      MetaCodec.render("mode" -> "chunk", "k" -> k, "nDocs" -> m.nDocs)
   }
 
   /** Parse the meta row back. Fails typed on a frame that is not a v1
@@ -59,11 +61,7 @@ object LineFreqIndex {
     val rows = index.filter(col("kind") === MetaKind).select(col("meta")).collect()
     require(rows.length == 1,
       s"not a segment-frequency index: expected exactly one meta row (kind = $MetaKind), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown segment-frequency index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
+    val kv = MetaCodec.parse(rows(0).getString(0), "segment-frequency")
     val seg = kv("mode") match {
       case "delim" => LineDedup.DelimSegments(unhex(kv("regex")))
       case "chunk" => LineDedup.WordChunkSegments(kv("k").toInt)

@@ -66,9 +66,9 @@ object LshIndex {
       maxBucketSize: Int, builtDroppedBuckets: Long, nDocs: Long)
 
   private def metaString(m: Meta): String =
-    s"v1;n=${m.n};numPerm=${m.numPerm};bands=${m.bands};seed=${m.seed};" +
-      s"portable=${m.portableHash};cap=${m.maxBucketSize};" +
-      s"builtDropped=${m.builtDroppedBuckets};nDocs=${m.nDocs}"
+    MetaCodec.render("n" -> m.n, "numPerm" -> m.numPerm, "bands" -> m.bands, "seed" -> m.seed,
+      "portable" -> m.portableHash, "cap" -> m.maxBucketSize,
+      "builtDropped" -> m.builtDroppedBuckets, "nDocs" -> m.nDocs)
 
   /** Meta row + frozen stop set of `index`. Fails typed on a frame that
     * is not a v1 LSH index (no meta row / unknown version).
@@ -78,11 +78,7 @@ object LshIndex {
       .select(col("bucket"), col("sh")).collect()
     require(rows.length == 1,
       s"not an LSH index: expected exactly one meta row (band = $MetaBand), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown LSH index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
+    val kv = MetaCodec.parse(rows(0).getString(0), "LSH")
     val meta = Meta(
       n = kv("n").toInt, numPerm = kv("numPerm").toInt,
       bands = kv("bands").toInt, seed = kv("seed").toLong,

@@ -246,23 +246,32 @@ object Similarity {
   }
 
   /** Shared IVF tail: join corpus cells to the (broadcast) probe rows,
-    * exact cosine inside the candidate set, top-k per query. `distinct`
+    * score inside the candidate set (exact cosine of `__cv` and `__qv`
+    * unless an index family passes its own), top-k per query. `distinct`
     * before the window because a neighbor can appear via several probed
     * cells... it can't within one IVF (a corpus row lives in exactly one
     * cell), but the dedup is free after the bucket join and keeps the
     * tail safe for any multi-assignment caller.
     */
-  private[operators] def scoreProbedCells(assigned: DataFrame, q: DataFrame, k: Int): DataFrame = {
+  private[operators] def scoreProbedCells(
+      assigned: DataFrame, q: DataFrame, k: Int,
+      score: Column = cosine(col("__cv"), col("__qv")),
+      scoreName: String = "sim"): DataFrame = {
     val scored = assigned.join(broadcast(q), "__cell")
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", cosine(col("__cv"), col("__qv")))
+      .withColumn(scoreName, score)
+    rankTopK(scored.select("query_id", "neighbor_id", scoreName).distinct(), k, scoreName)
+  }
+
+  /** Top-k per query by (`scoreName` desc, neighbor asc):
+    * (`query_id`, `rank`, `neighbor_id`, `scoreName`).
+    */
+  private[operators] def rankTopK(scored: DataFrame, k: Int, scoreName: String): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored
-      .select("query_id", "neighbor_id", "sim").distinct()
-      .withColumn("rank", row_number().over(w))
+      .orderBy(col(scoreName).desc, col("neighbor_id").asc)
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"))
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col(scoreName))
   }
 
   /** Nearest `take` cell ids for a vector against a frozen centroid
@@ -484,23 +493,28 @@ object Similarity {
     requirePqShape(cbs)
     val c = codes.select(col(idCol).as("neighbor_id"), col("pq_code"))
       .filter(col("pq_code").isNotNull)
-    val q = pqQuerySide(queries, idCol, vecCol, cbs)
+    // broadcastable query side: the per-query IP lookup table and norm
+    val q = queries
+      .select(col(idCol).as("query_id"),
+        pqTableUdf(cbs)(asDouble(col(vecCol))).as("__tab"),
+        vecNorm(asDouble(col(vecCol))).as("__qn"))
+      .filter(col("__tab").isNotNull)
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_cos", pqAdcCosUdf(cbs)(col("__tab"), col("__qn"), col("pq_code")))
-    pqRankTopK(scored, k)
+    rankTopK(scored, k, "adc_cos")
   }
 
-  /** Broadcastable query side for ADC scoring: `(query_id, __tab,
-    * __qn)` — the per-query IP lookup table and the query norm (dims
-    * accumulated in index order, the oracle contract).
+  /** A query's ADC table ([[pqAdcTable]]); null on a null vector. */
+  private[operators] def pqTableUdf(cbs: Array[Array[Array[Double]]])
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((q: Array[Double]) => if (q == null) null else pqAdcTable(cbs, q))
+
+  /** L2 norm of a double vector, dims accumulated in index order (the
+    * oracle contract); 0 on a null vector.
     */
-  private[operators] def pqQuerySide(
-      queries: DataFrame, idCol: String, vecCol: String,
-      cbs: Array[Array[Array[Double]]]): DataFrame = {
-    val tableUdf = udf((q: Array[Double]) =>
-      if (q == null) null else pqAdcTable(cbs, q))
-    val qnUdf = udf((q: Array[Double]) =>
+  private[operators] val vecNorm: org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf((q: Array[Double]) =>
       if (q == null) 0.0
       else {
         var t = 0.0
@@ -508,12 +522,6 @@ object Similarity {
         while (i < q.length) { t += q(i) * q(i); i += 1 }
         math.sqrt(t)
       })
-    queries
-      .select(col(idCol).as("query_id"),
-        tableUdf(asDouble(col(vecCol))).as("__tab"),
-        qnUdf(asDouble(col(vecCol))).as("__qn"))
-      .filter(col("__tab").isNotNull)
-  }
 
   /** ADC cosine kernel over `(table, queryNorm, code)`: both sums run
     * in subspace order, the division is `ip / (sqrt(rn2) * qn)` — the
@@ -537,15 +545,6 @@ object Similarity {
       val denom = math.sqrt(rn2) * qn
       if (denom > 0) ip / denom else 0.0
     })
-  }
-
-  /** Shared PQ tail: top-k per query by (adc_cos desc, neighbor asc). */
-  private[operators] def pqRankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_cos"))
   }
 
   // ---- SQ8 scalar quantization ---------------------------------------
@@ -677,25 +676,17 @@ object Similarity {
       hi: Seq[Double]): DataFrame = {
     val (l, h) = (lo.toArray, hi.toArray)
     requireSqShape(l, h)
-    val qnUdf = udf((q: Array[Double]) =>
-      if (q == null) 0.0
-      else {
-        var t = 0.0
-        var i = 0
-        while (i < q.length) { t += q(i) * q(i); i += 1 }
-        math.sqrt(t)
-      })
     val q = queries
       .select(col(idCol).as("query_id"),
         asDouble(col(vecCol)).as("__qv"),
-        qnUdf(asDouble(col(vecCol))).as("__qn"))
+        vecNorm(asDouble(col(vecCol))).as("__qn"))
       .filter(col("__qv").isNotNull)
     val c = codes.select(col(idCol).as("neighbor_id"), col("sq_code"))
       .filter(col("sq_code").isNotNull)
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("adc_cos", sq8AdcCosUdf(l, h)(col("__qv"), col("__qn"), col("sq_code")))
-    pqRankTopK(scored, k)
+    rankTopK(scored, k, "adc_cos")
   }
 
   /** Embedding near-duplicate pairs: cosine >= threshold within blocks

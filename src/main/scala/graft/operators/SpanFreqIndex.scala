@@ -48,7 +48,7 @@ object SpanFreqIndex {
 
   final case class Meta(n: Int, nDocs: Long)
 
-  private def metaString(m: Meta): String = s"v1;n=${m.n};nDocs=${m.nDocs}"
+  private def metaString(m: Meta): String = MetaCodec.render("n" -> m.n, "nDocs" -> m.nDocs)
 
   /** Parse the meta row back. Fails typed on a frame that is not a v1
     * window-frequency index.
@@ -57,11 +57,7 @@ object SpanFreqIndex {
     val rows = index.filter(col("kind") === MetaKind).select(col("meta")).collect()
     require(rows.length == 1,
       s"not a window-frequency index: expected exactly one meta row (kind = $MetaKind), found ${rows.length}")
-    val s = rows(0).getString(0)
-    require(s != null && s.startsWith("v1;"), s"unknown window-frequency index version: $s")
-    val kv = s.split(";").drop(1)
-      .map { p => val i = p.indexOf('='); p.substring(0, i) -> p.substring(i + 1) }
-      .toMap
+    val kv = MetaCodec.parse(rows(0).getString(0), "window-frequency")
     Meta(kv("n").toInt, kv("nDocs").toLong)
   }
 

@@ -24,7 +24,11 @@ import graft.etl.{Pipeline, StarLoader}
 object Writers {
 
   /** Write every star-schema table under `root/<table>`, facts
-    * partitioned by `ano` when present.
+    * partitioned by `ano` when present. A root holds one year: every
+    * table is overwritten whole, because only `fato_inquerito` carries
+    * `ano` and a load without `idOffset` numbers `id_inquerito` from 1,
+    * so keeping an earlier year's partition would pair its inquiries
+    * with the new year's facts.
     *
     * The ten writes are independent (distinct frames, distinct
     * directories), so each runs on its own driver thread

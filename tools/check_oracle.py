@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Local pre-validation of SparkEntry queries vs their DuckDB oracles.
 
-Mimics the driver's t2 gate: run graft.Verify first (writes one parquet
-dir per query + oracle_sql.json), then this script replays each oracle in
-DuckDB over the same sf tables and compares (column-name-sorted,
-row-sorted) values exactly.
+Run graft.Verify first (writes one parquet dir per query + oracle_sql.json
+holding the oracles of the queries it ran, all of them or a named subset),
+then this script replays each oracle in DuckDB over the same sf tables
+and compares (column-name-sorted, row-sorted) values exactly.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -85,7 +85,7 @@ def cell_eq(a, b):
     return a == b
 
 
-def main(sf_dir, out_dir, only=None):
+def main(sf_dir, out_dir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -93,8 +93,6 @@ def main(sf_dir, out_dir, only=None):
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracles.items()):
-        if only and name not in only:
-            continue
         try:
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
@@ -144,5 +142,4 @@ def main(sf_dir, out_dir, only=None):
 
 
 if __name__ == "__main__":
-    names = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
-    sys.exit(main(sys.argv[1], sys.argv[2], names))
+    sys.exit(main(sys.argv[1], sys.argv[2]))
