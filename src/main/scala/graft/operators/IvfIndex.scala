@@ -96,7 +96,7 @@ object IvfIndex {
   /** A family's meta row, parsed: the shared parameters, the coarse
     * centroids and the family's frozen model.
     */
-  private[operators] final case class Stored[M](
+  private[graft] final case class Stored[M](
       meta: Meta, ctrs: Array[Array[Double]], model: M)
 
   /** Meta row of a `c`-family index. Fails typed on a frame that is not
@@ -121,9 +121,14 @@ object IvfIndex {
     * on a frame that is not a v1 IVF index.
     */
   def readMeta(index: DataFrame): (Meta, Array[Array[Double]]) = {
-    val s = read(Raw, index)
+    val s = storedOf(index)
     (s.meta, s.ctrs)
   }
+
+  /** The meta row of `index` for a caller that carries it from batch to
+    * batch ([[dedupWith]], [[appendCarried]]) instead of re-reading it.
+    */
+  private[graft] def storedOf(index: DataFrame): Stored[Unit] = read(Raw, index)
 
   /** A doc row in layout order: id, cell and code, with nulls where the
     * meta row keeps its centroids, models and params.
@@ -164,21 +169,21 @@ object IvfIndex {
   /** The one write path of build, append and merge: `docs` persisted and
     * counted, behind the `kept` doc rows of an existing index (whose
     * column order wins), under a meta row of `s` whose `nDocs` grows by
-    * the count. Returned frame is persisted and materialized.
+    * the count. Returns the index, persisted and materialized, and the
+    * meta it carries.
     */
   private[operators] def commit[M](
       c: Codec[M], s: Stored[M], kept: Option[DataFrame], docs: DataFrame, idCol: String)
-      : DataFrame = {
+      : (DataFrame, Stored[M]) = {
     val fresh = docs.persist()
-    val n = fresh.count()
-    val meta = metaRow(c, docs.sparkSession, idCol, docs.schema(idCol).dataType,
-      s.copy(meta = s.meta.copy(nDocs = s.meta.nDocs + n)))
+    val grown = s.copy(meta = s.meta.copy(nDocs = s.meta.nDocs + fresh.count()))
+    val meta = metaRow(c, docs.sparkSession, idCol, docs.schema(idCol).dataType, grown)
     val cols = kept.getOrElse(fresh).columns.map(col)
     val index = (kept.toSeq ++ Seq(meta, fresh)).map(_.select(cols: _*))
       .reduce(_ unionAll _).persist()
     index.count()
     fresh.unpersist()
-    index
+    (index, grown)
   }
 
   /** Build a `c`-family index over `corpus` under frozen `centroids` and
@@ -189,19 +194,18 @@ object IvfIndex {
       centroids: Seq[Seq[Double]], m: M): DataFrame = {
     val s = Stored(Meta(centroids.head.length, centroids.length, 0L),
       centroids.map(_.toArray).toArray, m)
-    commit(c, s, None, docRows(c, corpus, idCol, vecCol, s), idCol)
+    commit(c, s, None, docRows(c, corpus, idCol, vecCol, s), idCol)._1
   }
 
-  /** Append `newVecs` to a `c`-family index, assigning and encoding ONLY
-    * the new rows with the frozen models from the meta row.
+  /** Append `newVecs` to a `c`-family index whose meta is `s`, assigning
+    * and encoding ONLY the new rows with its frozen models; returns the
+    * grown index and its meta.
     */
   private[operators] def appendWith[M](
-      c: Codec[M], index: DataFrame, newVecs: DataFrame, idCol: String, vecCol: String)
-      : DataFrame = {
-    val s = read(c, index)
+      c: Codec[M], s: Stored[M], index: DataFrame, newVecs: DataFrame, idCol: String,
+      vecCol: String): (DataFrame, Stored[M]) =
     commit(c, s, Some(index.filter(col("cell") =!= MetaCell)),
       docRows(c, newVecs, idCol, vecCol, s), idCol)
-  }
 
   /** Build the index over the corpus with a frozen quantizer (a fitted
     * centroid matrix — [[IvfCentroids]] or any [[graft.tools.FitIvf]]
@@ -504,7 +508,7 @@ object IvfIndex {
     requireOneQuantizer(stored.map(_.ctrs))
     val base = stored.head
     commit(Raw, base.copy(meta = base.meta.copy(nDocs = 0L)), None,
-      indexes.map(_.filter(col("cell") =!= MetaCell)).reduce(_ unionAll _), idCol)
+      indexes.map(_.filter(col("cell") =!= MetaCell)).reduce(_ unionAll _), idCol)._1
   }
 
   /** Index-backed embedding near-dup gate: `incoming` minus rows whose
@@ -528,9 +532,21 @@ object IvfIndex {
       vecCol: String,
       threshold: Double,
       nProbe: Int = 2,
+      maxStaticProbeCells: Int = DefaultMaxStaticProbeCells): DataFrame =
+    dedupWith(storedOf(index), index, incoming, idCol, vecCol, threshold, nProbe,
+      maxStaticProbeCells)
+
+  /** [[dedupAgainst]] under the carried meta `s` of `index`. */
+  private[graft] def dedupWith(
+      s: Stored[Unit],
+      index: DataFrame,
+      incoming: DataFrame,
+      idCol: String,
+      vecCol: String,
+      threshold: Double,
+      nProbe: Int,
       maxStaticProbeCells: Int = DefaultMaxStaticProbeCells): DataFrame = {
-    val ctrs = readMeta(index)._2
-    val q = probeRows(incoming, idCol, vecCol, ctrs, nProbe, Nil).persist()
+    val q = probeRows(incoming, idCol, vecCol, s.ctrs, nProbe, Nil).persist()
     val dupIds = cellRestricted(index, q, maxStaticProbeCells)
       .select(col(idCol).as("__nid"), col("cell").as("__cell"), col("vec").as("__cv"))
       .join(broadcast(q), "__cell")
@@ -556,5 +572,13 @@ object IvfIndex {
       newVecs: DataFrame,
       idCol: String,
       vecCol: String): DataFrame =
-    appendWith(Raw, index, newVecs, idCol, vecCol)
+    appendCarried(storedOf(index), index, newVecs, idCol, vecCol)._1
+
+  /** [[append]] under the carried meta `s` of `index`: the grown index
+    * (persisted) and its meta, whose `nDocs` counts the appended rows.
+    */
+  private[graft] def appendCarried(
+      s: Stored[Unit], index: DataFrame, newVecs: DataFrame, idCol: String, vecCol: String)
+      : (DataFrame, Stored[Unit]) =
+    appendWith(Raw, s, index, newVecs, idCol, vecCol)
 }

@@ -130,7 +130,7 @@ object IvfPqIndex {
       newVecs: DataFrame,
       idCol: String,
       vecCol: String): DataFrame =
-    IvfIndex.appendWith(Pq, index, newVecs, idCol, vecCol)
+    IvfIndex.appendWith(Pq, IvfIndex.read(Pq, index), index, newVecs, idCol, vecCol)._1
 
   /** Cell-balance report over this index's doc rows — the same
     * statistic and remedy trigger as [[IvfIndex.cellOccupancyReport]].

@@ -123,7 +123,7 @@ object IvfSq8Index {
       newVecs: DataFrame,
       idCol: String,
       vecCol: String): DataFrame =
-    IvfIndex.appendWith(Sq8, index, newVecs, idCol, vecCol)
+    IvfIndex.appendWith(Sq8, IvfIndex.read(Sq8, index), index, newVecs, idCol, vecCol)._1
 
   /** Cell-balance report over this index's doc rows — the same
     * statistic and remedy trigger as [[IvfIndex.cellOccupancyReport]].

@@ -12,10 +12,9 @@ import graft.etl.{Pipeline, StarLoader}
   * The reference's load is row-at-a-time `INSERT ... RETURNING` over
   * psycopg2 (etl_ui.py:394-664) and a multi-sheet Excel export
   * (etl_ui.py:2144-2159). Here:
-  *  - the star schema writes as parquet partitioned by `ano` — the batch
-  *    year is the natural partition key, so per-year reprocessing
-  *    overwrites one partition and dynamic partition pruning keeps
-  *    year-scoped queries off the rest;
+  *  - the star schema writes as parquet, one root per year: every table
+  *    is overwritten whole, and `fato_inquerito` is partitioned by `ano`
+  *    so year-scoped queries prune to it (see [[writeStar]]);
   *  - the same frames go to any JDBC database via `df.write.jdbc`
   *    (batched inserts, `batchsize` tuned, no per-row round trips);
   *  - the "multi-sheet" export becomes one directory per logical sheet
@@ -159,8 +158,10 @@ object Writers {
   }
 
   /** Re-run a year: overwrite ONLY that `ano` partition (dynamic
-    * partition overwrite), leaving other years untouched — the
-    * reprocessing story for the yearly survey batches.
+    * partition overwrite), leaving other years untouched. Safe only for
+    * a frame whose every row carries `ano` and whose keys are scoped to
+    * the year; the star's other tables meet neither, which is why
+    * [[writeStar]] overwrites each table whole.
     */
   def overwriteYearPartition(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite)

@@ -34,9 +34,9 @@ import graft.operators.Quantiles
   *
   * Everything else is [[HistGate]] verbatim: an OBSERVER
   * ([[Gate.accountBatch]] returns the batch untouched), driver-local
-  * bounded state ([[GateCheckpoints.localizeBounded]] — zero
-  * executor-resident blocks), optional durable checkpoints every N
-  * batches, and the live artifact is bit-equal to a from-scratch
+  * bounded state ([[GateState.account]] — zero executor-resident
+  * blocks), optional durable checkpoints every N batches, and the
+  * live artifact is bit-equal to a from-scratch
   * [[Quantiles.binnedIndex]] over everything ingested (binned masses
   * are commutative, associative sums — spec-pinned).
   */
@@ -76,19 +76,14 @@ object BinnedGate {
           "artifact's own width, or rebuild the artifact deliberately")
     }
 
-    private var hist: DataFrame = initialBinned
-    // false until the artifact holds a row: binnedMerge fails typed on
-    // an all-empty union by design, so all-excluded batches onto an
-    // empty seed are no-ops here instead of crashes
-    private var seeded = seedWidths.nonEmpty
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    private val state =
+      new GateState(initialBinned, (), "binned_", checkpointPath, checkpointEvery)
 
     /** The standing binned artifact (seed + every batch accounted). */
-    def currentBinned: DataFrame = synchronized(hist)
+    def currentBinned: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Exact bin-grain percentiles over everything ingested so far —
       * the true quantile lies in `[value_low, value_high)`, error at
@@ -101,26 +96,18 @@ object BinnedGate {
       * folds them into the standing artifact, and returns the batch
       * UNTOUCHED (accounting observes, never filters).
       */
-    def accountBatch(batch: DataFrame): DataFrame = synchronized {
-      val batchBinned = Quantiles.binnedIndex(batch, keyCol, valueCol, width, weightCol)
-      if (!seeded && batchBinned.isEmpty) {
-        // empty-onto-empty: nothing to fold, and the merge's typed
-        // empty-artifact guard must not fire on a no-op batch (the
-        // emptiness probe is paid only until the first real row)
-        batches += 1
-      } else {
-        hist = GateCheckpoints.localizeBounded(
-          Quantiles.binnedMerge(Seq(hist, batchBinned), keyCol),
-          maxRows, "binned distribution",
-          s"is sized by occupied grid cells (|distinct $keyCol| x |occupied " +
-            s"value range / $width|); widen the bin width or raise maxRows knowingly")
-        seeded = true
-        batches += 1
-        GateCheckpoints.maybeWrite(hist, checkpointPath, checkpointEvery,
-          "binned_", batches).foreach(p => lastCkpt = Some(p))
+    def accountBatch(batch: DataFrame): DataFrame =
+      state.account(batch, maxRows, "binned distribution",
+        s"is sized by occupied grid cells (|distinct $keyCol| x |occupied " +
+          s"value range / $width|); widen the bin width or raise maxRows knowingly") {
+        (hist, b) =>
+          val batchBinned = Quantiles.binnedIndex(b, keyCol, valueCol, width, weightCol)
+          // empty-onto-empty: nothing to fold, and binnedMerge's typed
+          // empty-artifact guard must not fire on a no-op batch (the
+          // emptiness probe is paid only until the artifact holds a row)
+          if (seedWidths.isEmpty && !state.moved && batchBinned.isEmpty) hist
+          else Quantiles.binnedMerge(Seq(hist, batchBinned), keyCol)
       }
-      batch
-    }
   }
 
   /** An empty binned artifact with the family schema — the
@@ -140,5 +127,5 @@ object BinnedGate {
 
   /** Newest `binned_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(spark: SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "binned_")
+    GateState.latest(spark, path, "binned_")
 }

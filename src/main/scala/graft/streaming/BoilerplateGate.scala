@@ -41,8 +41,8 @@ object BoilerplateGate {
     * `checkpointPath`/`checkpointEvery`: when both set, each
     * `checkpointEvery`-th batch also durably writes the post-append
     * index to `<checkpointPath>/line_index_<seq>` — the
-    * [[GateCheckpoints]] family contract (r9); reopen with
-    * [[latestCheckpoint]] on restart.
+    * [[GateState]] contract; reopen with [[latestCheckpoint]] on
+    * restart.
     */
   final class Gate(
       initialIndex: DataFrame,
@@ -53,39 +53,28 @@ object BoilerplateGate {
       checkpointPath: Option[String] = None,
       checkpointEvery: Int = 0) {
 
-    private var index: DataFrame = initialIndex
-    private var owned = false // never unpersist the caller's initial index
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    private val state =
+      new GateState(initialIndex, (), "line_index_", checkpointPath, checkpointEvery)
 
     /** The live index (initial corpus + every raw batch so far). */
-    def currentIndex: DataFrame = synchronized(index)
+    def currentIndex: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Returns the batch rebuilt without over-frequent lines
       * (`(idCol, text_kept, n_total, n_kept)`, one row per batch doc)
       * and appends the raw batch's counts to the index.
       */
-    def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val out = LineFreqIndex
-        .filterAgainst(index, batch, idCol, textCol, maxDocFreq, joiner)
-        .localCheckpoint() // materialize BEFORE the index moves on
-      val next = LineFreqIndex.append(index, batch, idCol, textCol)
-        .localCheckpoint() // sever lineage: state stays flat
-      if (owned) index.unpersist()
-      index = next
-      owned = true
-      batches += 1
-      GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        "line_index_", batches).foreach(p => lastCkpt = Some(p))
-      out
-    }
+    def filterBatch(batch: DataFrame): DataFrame =
+      state.filter((_, index) =>
+        LineFreqIndex.filterAgainst(index, batch, idCol, textCol, maxDocFreq, joiner)) {
+        (_, index, _) => (LineFreqIndex.append(index, batch, idCol, textCol), ())
+      }
   }
 
   /** Newest `line_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "line_index_")
+    GateState.latest(spark, path, "line_index_")
 }

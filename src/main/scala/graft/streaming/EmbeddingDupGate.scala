@@ -51,45 +51,32 @@ object EmbeddingDupGate {
       checkpointPath: Option[String] = None,
       checkpointEvery: Int = 0) {
 
-    private var index: DataFrame = initialIndex
-    private var owned = false // never unpersist the caller's initial index
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    // the index's quantizer, read once here and then carried forward by
+    // every append (which grows its nDocs) instead of re-read per batch
+    private val state = new GateState(initialIndex, IvfIndex.storedOf(initialIndex),
+      "ivf_index_", checkpointPath, checkpointEvery)
 
     /** The live index (initial corpus + all survivors so far). */
-    def currentIndex: DataFrame = synchronized(index)
+    def currentIndex: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any — the
-      * [[GateCheckpoints]] family contract (r9): every
-      * `checkpointEvery`-th batch writes the post-append index to
-      * `<checkpointPath>/ivf_index_<seq>` (write it cell-partitioned
-      * yourself if probes will run straight off the artifact); reopen
-      * with [[latestCheckpoint]] on restart.
+      * [[GateState]] contract: every `checkpointEvery`-th batch writes
+      * the post-append index to `<checkpointPath>/ivf_index_<seq>`
+      * (write it cell-partitioned yourself if probes will run straight
+      * off the artifact); reopen with [[latestCheckpoint]] on restart.
       */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Returns the batch rows that survive the gate (batch columns and
       * order preserved) and appends them to the index.
       */
-    def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val survivors = IvfIndex
-        .dedupAgainst(index, batch, idCol, vecCol, threshold, nProbe)
-        .localCheckpoint() // materialize BEFORE the index moves on
-      val appended = IvfIndex.append(index, survivors, idCol, vecCol)
-      val next = appended.localCheckpoint() // sever lineage: state stays flat
-      appended.unpersist()
-      if (owned) index.unpersist()
-      index = next
-      owned = true
-      batches += 1
-      GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        "ivf_index_", batches).foreach(p => lastCkpt = Some(p))
-      survivors
-    }
+    def filterBatch(batch: DataFrame): DataFrame =
+      state.filter(IvfIndex.dedupWith(_, _, batch, idCol, vecCol, threshold, nProbe))(
+        IvfIndex.appendCarried(_, _, _, idCol, vecCol))
   }
 
   /** Newest `ivf_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "ivf_index_")
+    GateState.latest(spark, path, "ivf_index_")
 }

@@ -20,7 +20,7 @@ import graft.operators.HammingIndex
   * `maxDistance` bits of ANY indexed fingerprint, append the survivors.
   * Null-hash rows pass through unprobed and are NOT appended (no
   * fingerprint, no identity — the family null rule). State is the
-  * index, local-checkpointed per batch; [[GateCheckpoints]] provides
+  * index, local-checkpointed per batch; [[GateState]] provides
   * the durable hook, under `hamming_index_<seq>` or, for a SimHash
   * index, `simhash_index_<seq>`. Appended entry rows carry batch-local
   * bucket counts (the documented `append` under-suppression);
@@ -60,40 +60,24 @@ object FingerprintDupGate {
 
     // the index's recipe, read once here and then carried forward by
     // every append (which grows its nDocs) instead of re-read per batch
-    private var params = HammingIndex.paramsOf(initialIndex)
+    private val params = HammingIndex.paramsOf(initialIndex)
     private val family = params.family
-    private val prefix =
-      if (family eq HammingIndex.SimHash) HammingDupGate.CheckpointPrefix else CheckpointPrefix
-    private var index: DataFrame = initialIndex
-    private var owned = false // never unpersist the caller's initial index
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    private val state = new GateState(initialIndex, params,
+      if (family eq HammingIndex.SimHash) HammingDupGate.CheckpointPrefix else CheckpointPrefix,
+      checkpointPath, checkpointEvery)
 
     /** The live index (initial corpus + all survivors so far). */
-    def currentIndex: DataFrame = synchronized(index)
+    def currentIndex: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Returns the batch rows that survive the gate (batch columns and
       * order preserved) and appends the signed survivors to the index.
       */
-    def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val survivors = family
-        .dedupAgainst(params, index, batch, idCol, hashCol, maxDistance)
-        .localCheckpoint() // materialize BEFORE the index moves on
-      val (appended, grown) = family.append(params, index, survivors, idCol, hashCol)
-      val next = appended.localCheckpoint() // sever lineage: state stays flat
-      appended.unpersist()
-      if (owned) index.unpersist()
-      index = next
-      params = grown
-      owned = true
-      batches += 1
-      GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        prefix, batches).foreach(p => lastCkpt = Some(p))
-      survivors
-    }
+    def filterBatch(batch: DataFrame): DataFrame =
+      state.filter(family.dedupAgainst(_, _, batch, idCol, hashCol, maxDistance))(
+        family.append(_, _, _, idCol, hashCol))
   }
 
   private[streaming] val CheckpointPrefix = "hamming_index_"
@@ -101,5 +85,5 @@ object FingerprintDupGate {
   /** Newest `hamming_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, CheckpointPrefix)
+    GateState.latest(spark, path, CheckpointPrefix)
 }

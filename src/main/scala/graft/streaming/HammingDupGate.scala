@@ -40,5 +40,5 @@ object HammingDupGate {
   /** Newest `simhash_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, CheckpointPrefix)
+    GateState.latest(spark, path, CheckpointPrefix)
 }

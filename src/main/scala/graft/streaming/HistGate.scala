@@ -48,15 +48,13 @@ object HistGate {
       checkpointEvery: Int = 0,
       maxRows: Int = 1 << 20) {
 
-    private var hist: DataFrame = initialHist
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    private val state = new GateState(initialHist, (), "hist_", checkpointPath, checkpointEvery)
 
     /** The standing artifact (initial + every batch accounted so far). */
-    def currentHist: DataFrame = synchronized(hist)
+    def currentHist: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Exact percentiles over everything ingested so far, read off the
       * standing artifact — the stream is never rescanned.
@@ -68,21 +66,15 @@ object HistGate {
       * returns the batch UNTOUCHED (accounting observes, never
       * filters).
       */
-    def accountBatch(batch: DataFrame): DataFrame = synchronized {
-      hist = GateCheckpoints.localizeBounded(
-        Quantiles.histAppend(hist, batch, keyCol, valueCol, weightCol),
-        maxRows, "histogram",
+    def accountBatch(batch: DataFrame): DataFrame =
+      state.account(batch, maxRows, "histogram",
         s"is sized for DISCRETE value domains (|distinct ($keyCol, $valueCol)| " +
-          "rows); bucket continuous values before the gate or raise maxRows knowingly")
-      batches += 1
-      GateCheckpoints.maybeWrite(hist, checkpointPath, checkpointEvery,
-        "hist_", batches).foreach(p => lastCkpt = Some(p))
-      batch
-    }
+          "rows); bucket continuous values before the gate or raise maxRows knowingly")(
+        Quantiles.histAppend(_, _, keyCol, valueCol, weightCol))
   }
 
   /** Newest `hist_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "hist_")
+    GateState.latest(spark, path, "hist_")
 }

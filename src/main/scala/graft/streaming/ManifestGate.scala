@@ -38,8 +38,8 @@ object ManifestGate {
     *
     * `checkpointPath`/`checkpointEvery`: when both set, each
     * `checkpointEvery`-th batch durably writes the post-merge manifest
-    * to `<checkpointPath>/manifest_<seq>` — the [[GateCheckpoints]]
-    * family contract; reopen with [[latestCheckpoint]] on restart.
+    * to `<checkpointPath>/manifest_<seq>` — the [[GateState]]
+    * contract; reopen with [[latestCheckpoint]] on restart.
     *
     * `maxRows` ENFORCES the dimension-sized contract the state design
     * assumes: the merged manifest lives on the driver heap, so a
@@ -57,15 +57,14 @@ object ManifestGate {
       checkpointEvery: Int = 0,
       maxRows: Int = 1 << 20) {
 
-    private var manifest: DataFrame = initialManifest
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    private val state =
+      new GateState(initialManifest, (), "manifest_", checkpointPath, checkpointEvery)
 
     /** The standing manifest (initial + every batch accounted so far). */
-    def currentManifest: DataFrame = synchronized(manifest)
+    def currentManifest: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Folds the batch's manifest into the standing one and returns
       * the batch UNTOUCHED (accounting observes, never filters).
@@ -81,23 +80,17 @@ object ManifestGate {
       * executor block store until GC on a long stream (r10 ADVICE).
       * Nothing executor-resident exists to leak now.
       */
-    def accountBatch(batch: DataFrame): DataFrame = synchronized {
-      manifest = GateCheckpoints.localizeBounded(
-        Manifest.merge(
-          Seq(manifest, Manifest.build(batch, groupCol, hashCols, sizeExpr)),
-          groupCol),
-        maxRows, "manifest",
+    def accountBatch(batch: DataFrame): DataFrame =
+      state.account(batch, maxRows, "manifest",
         s"is sized for DIMENSION-grain manifests (one row per shard/domain, " +
-          s"'$groupCol' here); re-group on a coarser column or raise maxRows knowingly")
-      batches += 1
-      GateCheckpoints.maybeWrite(manifest, checkpointPath, checkpointEvery,
-        "manifest_", batches).foreach(p => lastCkpt = Some(p))
-      batch
-    }
+          s"'$groupCol' here); re-group on a coarser column or raise maxRows knowingly") {
+        (manifest, b) => Manifest.merge(
+          Seq(manifest, Manifest.build(b, groupCol, hashCols, sizeExpr)), groupCol)
+      }
   }
 
   /** Newest `manifest_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "manifest_")
+    GateState.latest(spark, path, "manifest_")
 }

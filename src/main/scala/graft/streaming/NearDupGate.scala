@@ -50,44 +50,30 @@ object NearDupGate {
       checkpointPath: Option[String] = None,
       checkpointEvery: Int = 0) {
 
-    private var index: DataFrame = initialIndex
-    private var owned = false // never unpersist the caller's initial index
-    private var batches = 0L
-    private var lastCkpt: Option[String] = None
+    private val state =
+      new GateState(initialIndex, (), "lsh_index_", checkpointPath, checkpointEvery)
 
     /** The live index (initial corpus + all survivors so far). */
-    def currentIndex: DataFrame = synchronized(index)
+    def currentIndex: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any — the
-      * [[GateCheckpoints]] family contract (r9): every
-      * `checkpointEvery`-th batch writes the post-append index to
-      * `<checkpointPath>/lsh_index_<seq>`; reopen with
-      * [[latestCheckpoint]] on restart.
+      * [[GateState]] contract: every `checkpointEvery`-th batch writes
+      * the post-append index to `<checkpointPath>/lsh_index_<seq>`;
+      * reopen with [[latestCheckpoint]] on restart.
       */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Returns the batch rows that survive the gate (batch columns and
       * order preserved) and appends them to the index.
       */
-    def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val survivors = LshIndex
-        .dedupAgainst(index, batch, idCol, textCol, threshold)
-        .localCheckpoint() // materialize BEFORE the index moves on
-      val appended = LshIndex.append(index, survivors, idCol, textCol)
-      val next = appended.localCheckpoint() // sever lineage: state stays flat
-      appended.unpersist()
-      if (owned) index.unpersist()
-      index = next
-      owned = true
-      batches += 1
-      GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        "lsh_index_", batches).foreach(p => lastCkpt = Some(p))
-      survivors
-    }
+    def filterBatch(batch: DataFrame): DataFrame =
+      state.filter((_, index) => LshIndex.dedupAgainst(index, batch, idCol, textCol, threshold)) {
+        (_, index, survivors) => (LshIndex.append(index, survivors, idCol, textCol), ())
+      }
   }
 
   /** Newest `lsh_index_<seq>` artifact under `path`, or None. */
   def latestCheckpoint(
       spark: org.apache.spark.sql.SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "lsh_index_")
+    GateState.latest(spark, path, "lsh_index_")
 }

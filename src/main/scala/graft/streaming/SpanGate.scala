@@ -77,35 +77,24 @@ object SpanGate {
       checkpointPath: Option[String] = None,
       checkpointEvery: Int = 0) {
 
-    private var index: DataFrame = initialIndex
-    private var owned = false // never unpersist the caller's initial index
-    private var batches = 0L
+    private val state =
+      new GateState(initialIndex, (), "span_index_", checkpointPath, checkpointEvery)
 
     /** The live index (initial corpus + every raw batch so far). */
-    def currentIndex: DataFrame = synchronized(index)
+    def currentIndex: DataFrame = state.current
 
     /** Path of the newest durable checkpoint written, if any. */
-    def lastCheckpoint: Option[String] = synchronized(lastCkpt)
-    private var lastCkpt: Option[String] = None
+    def lastCheckpoint: Option[String] = state.lastCheckpoint
 
     /** Returns the batch rebuilt without corpus-duplicated spans
       * (`(idCol, text_kept, n_words, n_removed)`, one row per batch doc)
       * and appends the raw batch's counts to the index.
       */
-    def filterBatch(batch: DataFrame): DataFrame = synchronized {
-      val out = SpanFreqIndex
-        .removeAgainst(index, batch, idCol, textCol, minDup)
-        .localCheckpoint() // materialize BEFORE the index moves on
-      val next = SpanFreqIndex.append(index, batch, idCol, textCol)
-        .localCheckpoint() // sever lineage: state stays flat
-      if (owned) index.unpersist()
-      index = next
-      owned = true
-      batches += 1
-      GateCheckpoints.maybeWrite(index, checkpointPath, checkpointEvery,
-        "span_index_", batches).foreach(p => lastCkpt = Some(p))
-      out
-    }
+    def filterBatch(batch: DataFrame): DataFrame =
+      state.filter((_, index) =>
+        SpanFreqIndex.removeAgainst(index, batch, idCol, textCol, minDup)) {
+        (_, index, _) => (SpanFreqIndex.append(index, batch, idCol, textCol), ())
+      }
   }
 
   /** Reopen the newest `span_index_<seq>` artifact under `path`, or
@@ -114,5 +103,5 @@ object SpanGate {
     * batches newer than the artifact and seeds a fresh [[Gate]]).
     */
   def latestCheckpoint(spark: SparkSession, path: String): Option[DataFrame] =
-    GateCheckpoints.latest(spark, path, "span_index_")
+    GateState.latest(spark, path, "span_index_")
 }

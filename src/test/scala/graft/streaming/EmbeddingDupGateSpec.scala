@@ -70,4 +70,34 @@ class EmbeddingDupGateSpec extends SparkSpec {
     val (meta, _) = IvfIndex.readMeta(gate.currentIndex)
     assert(meta.nDocs == kept.count())
   }
+
+  test("a gate micro-batch re-reads no meta row: two jobs fewer than the public-call replay, same ids") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val initial = emb.filter($"vec_id" % 4 === 0)
+    val batch = emb.filter($"vec_id" % 4 =!= 0).localCheckpoint()
+    def build() = IvfIndex.build(initial, "vec_id", "embedding", IvfCentroids.centroids)
+
+    val gate = new EmbeddingDupGate.Gate(build(), "vec_id", "embedding",
+      threshold = 0.35, nProbe = 4)
+    val (gated, gateJobs) = jobsDuring(gate.filterBatch(batch))
+
+    // the same micro-batch through the public calls the gate is made of
+    // (each of which reads the index's meta row)
+    val ix = build()
+    val (replayed, replayJobs) = jobsDuring {
+      val survivors = IvfIndex.dedupAgainst(ix, batch, "vec_id", "embedding",
+        threshold = 0.35, nProbe = 4).localCheckpoint()
+      val appended = IvfIndex.append(ix, survivors, "vec_id", "embedding")
+      appended.localCheckpoint()
+      appended.unpersist()
+      survivors
+    }
+    assert(gateJobs == replayJobs - 2, s"gate $gateJobs jobs, replay $replayJobs")
+    val ids = (df: DataFrame) => df.select("vec_id").as[Long].collect().toSet
+    assert(ids(gated) == ids(replayed))
+    assert(ids(gated).nonEmpty && ids(gated).size < batch.count())
+    assert(IvfIndex.readMeta(gate.currentIndex)._1.nDocs ==
+      IvfIndex.readMeta(ix)._1.nDocs + ids(gated).size)
+  }
 }
