@@ -39,4 +39,10 @@ private[graft] object DriverThreads {
       }
     } finally pool.shutdown()
   }
+
+  /** [[all]] over two tasks whose results differ in type. */
+  def both[A, B](a: () => A, b: () => B): (A, B) = {
+    val Seq(x, y) = all[Any](Seq(a, b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
+  }
 }

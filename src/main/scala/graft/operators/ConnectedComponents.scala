@@ -36,9 +36,10 @@ object ConnectedComponents {
     * nightly-turn composites on real batch sizes (a 2k-doc media
     * batch pays the same orchestration as a 2M one); at corpus scale
     * the edge count blows the bar and the distributed alternation
-    * runs unchanged. The edge count is already known before the
-    * choice: the convergence fingerprint's count pass doubles as the
-    * gate, so the fast path adds zero actions when it does not fire.
+    * runs unchanged. The choice is one collect bounded by the bar
+    * (a `limit` over the distinct oriented pairs): below it that
+    * collect IS the solve's whole input, above it the distributed path
+    * pays one extra bounded pass.
     */
   val DefaultDriverSolveMax: Int = 100000
 
@@ -52,7 +53,9 @@ object ConnectedComponents {
     *              at 1M edges + 10k chain: 15 rounds / 41 s at 0,
     *              8 / 34 s at 1, 6 / 31 s at 2.
     * @param driverSolveMax distinct-edge bar for the driver fast path
-    *              ([[DefaultDriverSolveMax]]); 0 forces the
+    *              ([[DefaultDriverSolveMax]]; self-loops do not count
+    *              against it, but more than as many again also send
+    *              the graph down the distributed path); 0 forces the
     *              distributed alternation at any size. Both paths
     *              return identical labels (spec-pinned) — this is a
     *              latency knob, never a semantics knob.
@@ -83,61 +86,65 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
+    val valid = edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+      .filter($"u".isNotNull && $"v".isNotNull)
+    // Pairs oriented child >= parent, deduplicated: the star edges plus
+    // one (x, x) row per self-loop.
+    def oriented(pairs: DataFrame): DataFrame = pairs
+      .select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
+      .distinct()
+
+    // Bounded driver solve: ONE collect, bounded by the bar, tells a
+    // batch-sized graph apart before anything is pinned or any round is
+    // scheduled. It carries the oriented edges and, up to as many again,
+    // the self-loops, so every node is on the driver (a self-loop-only
+    // node is a singleton component) and the labels come back as a
+    // driver-local frame with no lineage to re-analyze. Union-find with
+    // min-label roots (attach the larger root under the smaller — the
+    // root IS the set minimum by invariant) over the collected edges.
+    if (driverSolveMax > 0) {
+      val cap = math.min(2L * driverSolveMax + 1, Int.MaxValue - 1L).toInt
+      val rows = oriented(valid).limit(cap + 1).as[(Long, Long)].collect()
+      val arr = rows.filter { case (u, v) => u != v }
+      if (rows.length <= cap && arr.length <= driverSolveMax) {
+        val parent = new java.util.HashMap[Long, Long]()
+        def find(x0: Long): Long = {
+          var x = x0
+          while (parent.getOrDefault(x, x) != x) x = parent.getOrDefault(x, x)
+          var y = x0 // path compression
+          while (parent.getOrDefault(y, y) != y) { val n = parent.get(y); parent.put(y, x); y = n }
+          x
+        }
+        arr.foreach { case (u, v) =>
+          val (ru, rv) = (find(u), find(v))
+          if (ru != rv) {
+            if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
+          }
+        }
+        val labels: Seq[(Long, Long)] = rows.iterator
+          .flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
+          .map((x: Long) => (x, find(x)))
+        return (labels.toDF("id", "component"), 0)
+      }
+    }
+
     // Materialize the pair list ONCE up front: the upstream that feeds
     // this operator (MinHash/Jaccard pair generation) is expensive, and
     // without this checkpoint every downstream action — star init, the
     // node list, cluster sizing, the final collect — re-runs it from
     // scratch (measured 4x the pair-gen cost on q50).
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter($"u".isNotNull && $"v".isNotNull)
-      .localCheckpoint()
+    val raw = valid.localCheckpoint()
     // Nodes from the UNfiltered pairs: a node seen only in a self-loop
     // is still a (singleton) component.
     val nodes = raw.select($"u".as("id"))
       .union(raw.select($"v".as("id"))).distinct()
-    val base = raw.filter($"u" =!= $"v")
-
     // Star edges oriented child > parent; start from the input pairs.
-    var star = base
-      .select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
-      .distinct()
-      .localCheckpoint()
+    var star = oriented(raw.filter($"u" =!= $"v")).localCheckpoint()
 
     var iter = 0
     var signature = fingerprint(star)
     var converged = signature._1 == 0L
-
-    // Bounded driver solve: the fingerprint already counted the
-    // distinct oriented edges, so a batch-sized graph is known HERE,
-    // before any round is scheduled. Union-find with min-label roots
-    // (attach the larger root under the smaller — the root IS the set
-    // minimum by invariant) over the collected edge array, then the
-    // same left-join tail as the distributed path so self-loop-only
-    // nodes still surface as singletons.
-    if (!converged && signature._1 <= driverSolveMax) {
-      val arr = star.as[(Long, Long)].collect()
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrDefault(x, x) != x) x = parent.getOrDefault(x, x)
-        var y = x0 // path compression
-        while (parent.getOrDefault(y, y) != y) { val n = parent.get(y); parent.put(y, x); y = n }
-        x
-      }
-      arr.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) {
-          if (ru < rv) parent.put(rv, ru) else parent.put(ru, rv)
-        }
-      }
-      val labels: Seq[(Long, Long)] = arr.iterator
-        .flatMap(e => Iterator(e._1, e._2)).toSet.toSeq
-        .map((x: Long) => (x, find(x)))
-      return (nodes
-        .join(labels.toDF("id", "__root"), Seq("id"), "left")
-        .select($"id", coalesce($"__root", $"id").as("component")), 0)
-    }
 
     while (!converged && iter < maxIter) {
       // Large-star: every strictly-larger neighbor of u links to the

@@ -292,7 +292,7 @@ object Contamination {
     * migrates the release directory in place — so this guard only ever
     * fires on a legacy artifact probed OUTSIDE the release lifecycle.
     */
-  private def requireHashedArtifact(index: DataFrame): Unit =
+  private[operators] def requireHashedArtifact(index: DataFrame): Unit =
     require(index.columns.contains("gram_hash"),
       "eval-gram artifact has no 'gram_hash' column — artifacts store md5-64 " +
         "gram hashes (r12); rebuild the artifact with evalGramIndex (a pre-r12 " +
@@ -313,7 +313,12 @@ object Contamination {
     */
   def evalGramAppend(index: DataFrame, newEval: DataFrame, textCol: String): DataFrame = {
     requireHashedArtifact(index)
-    val n = evalGramMeta(index)
+    evalGramAppendWith(index, evalGramMeta(index), newEval, textCol)
+  }
+
+  /** [[evalGramAppend]] under the width `n` already read from `index`. */
+  private[operators] def evalGramAppendWith(
+      index: DataFrame, n: Int, newEval: DataFrame, textCol: String): DataFrame = {
     val spark = index.sparkSession
     val meta = spark.range(1).select(
       lit(EvalGramMetaKind).as("kind"),
@@ -362,7 +367,17 @@ object Contamination {
       textCol: String,
       broadcastIndex: Boolean = false): DataFrame = {
     requireHashedArtifact(index)
-    val n = evalGramMeta(index)
+    overlapAgainstWith(index, evalGramMeta(index), train, idCol, textCol, broadcastIndex)
+  }
+
+  /** [[overlapAgainst]] under the width `n` already read from `index`. */
+  private def overlapAgainstWith(
+      index: DataFrame,
+      n: Int,
+      train: DataFrame,
+      idCol: String,
+      textCol: String,
+      broadcastIndex: Boolean): DataFrame = {
     // r15: the r14 Bloom prefilter on this probe (eager count() +
     // stat.bloomFilter per call, interpreted-UDF scan filter) measured
     // slower across the whole release family (q111 x0.39, q122 x0.32) —
@@ -387,8 +402,24 @@ object Contamination {
       textCol: String,
       maxOverlapNgrams: Long = 0L,
       broadcastIndex: Boolean = false): DataFrame = {
+    requireHashedArtifact(index)
+    removeSplitLeakageAgainstWith(index, evalGramMeta(index), train, idCol, textCol,
+      maxOverlapNgrams, broadcastIndex)
+  }
+
+  /** [[removeSplitLeakageAgainst]] under the width `n` already read
+    * from `index`.
+    */
+  private[operators] def removeSplitLeakageAgainstWith(
+      index: DataFrame,
+      n: Int,
+      train: DataFrame,
+      idCol: String,
+      textCol: String,
+      maxOverlapNgrams: Long,
+      broadcastIndex: Boolean): DataFrame = {
     require(maxOverlapNgrams >= 0, s"maxOverlapNgrams must be >= 0: $maxOverlapNgrams")
-    val okIds = overlapAgainst(index, train, idCol, textCol, broadcastIndex)
+    val okIds = overlapAgainstWith(index, n, train, idCol, textCol, broadcastIndex)
       .filter(col("overlap_ngrams") <= maxOverlapNgrams)
       .select(col(idCol).as("__ok_id"))
     train.join(okIds, train(idCol) <=> col("__ok_id"), "left_semi")

@@ -225,8 +225,37 @@ object Curation {
       textCol: String,
       langCol: String,
       params: CurationParams = CurationParams()): IncrementalResult = {
+    val turn = incrementalTurn(index, LshIndex.readMeta(index), incoming, bench,
+      idCol, textCol, langCol, params)
+    val grown = turn.grow()
+    IncrementalResult(turn.curated, grown, turn.cached :+ grown)
+  }
+
+  /** [[curateIncremental]] in two parts: `curated` (lazy, over the
+    * filled `clean` cache) and `grow`, which appends `clean` to the
+    * index and returns the persisted, materialized grown index. Neither
+    * part waits for the other, so a caller may run them side by side;
+    * `cached` holds the stage caches both read.
+    */
+  private[operators] final case class IncrementalTurn(
+      curated: DataFrame, grow: () => DataFrame, cached: Seq[DataFrame]) {
+    def unpersist(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** The turn behind [[curateIncremental]], under the index recipe
+    * already read from `index`.
+    */
+  private[operators] def incrementalTurn(
+      index: DataFrame,
+      recipe: (LshIndex.Meta, Array[Long]),
+      incoming: DataFrame,
+      bench: DataFrame,
+      idCol: String,
+      textCol: String,
+      langCol: String,
+      params: CurationParams): IncrementalTurn = {
     import org.apache.spark.storage.StorageLevel
-    val (meta, _) = LshIndex.readMeta(index)
+    val meta = recipe._1
     require(meta.n == params.shingleN && meta.portableHash == params.portableHash,
       s"index recipe (n=${meta.n}, portable=${meta.portableHash}) disagrees " +
         s"with params (n=${params.shingleN}, portable=${params.portableHash}) — " +
@@ -252,7 +281,7 @@ object Curation {
       .drop("cluster_id", "cluster_size", "is_canonical")
 
     // 4b: cross-corpus gate — only the batch pays shingling CPU
-    val novel = LshIndex.dedupAgainst(index, canon, idCol, textCol,
+    val novel = LshIndex.dedupAgainstWith(index, recipe, canon, idCol, textCol,
         threshold = params.lshThreshold)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -263,14 +292,17 @@ object Curation {
       .join(contam.filter(col("contamination") <= params.maxContamination)
         .select(id), Seq(idCol), "left_semi")
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // filled once here: both parts read it, and the grow step needs the
+    // count for the index's meta row
+    val nClean = clean.count()
 
-    // grow the kept corpus with today's curated docs (pre-sample)
-    val grown = LshIndex.append(index, clean, idCol, textCol)
-
-    // 6: deterministic training mix — today's contribution
+    // 6: deterministic training mix — today's contribution; the index
+    // grows with today's curated docs (pre-sample)
     val sampled = Sampling.stratifiedSample(
       clean, idCol, langCol, params.sampleRates, params.defaultSampleRate)
-    IncrementalResult(sampled, grown, Seq(exact, novel, clean, pairs, grown))
+    IncrementalTurn(sampled,
+      () => LshIndex.appendWith(index, recipe, clean, nClean, idCol, textCol),
+      Seq(exact, novel, clean, pairs))
   }
 
   /** One incremental curation turn for MEDIA (binary content) — the

@@ -215,19 +215,6 @@ object LshIndex {
     index
   }
 
-  /** Cross-corpus near-dup pairs against the stored index: identical
-    * output contract to [[TextDedup.minHashLshPairsAgainst]]
-    * (`id_existing`, `id_incoming`, `jaccard`) — with the kept side read
-    * from the index instead of re-shingled/re-signed. Only the incoming
-    * batch pays CPU; the stored side is a scan.
-    *
-    * Cap semantics match the one-shot operator exactly: a bucket is
-    * suppressed when its COMBINED size (stored `cnt` + incoming count)
-    * exceeds the frozen `maxBucketSize` — the union bucket size, since
-    * ids are unique across both corpora (same precondition as the
-    * one-shot form). `droppedBuckets` on the result counts buckets
-    * suppressed at probe time; build-time drops are in the meta row.
-    */
   /** Shingle, prune (frozen stop set), sign and band the incoming batch —
     * the probe-side CPU. Returns (`inSh` = id_incoming/sh_b,
     * `inBanded` = id_incoming/band/bucket), both persisted; callers
@@ -257,13 +244,17 @@ object LshIndex {
     (inSh, inBanded)
   }
 
-  def pairsAgainst(
-      index: DataFrame,
-      incoming: DataFrame,
-      idCol: String,
-      textCol: String,
-      threshold: Double = 0.5): TextDedup.LshPairs = {
-    val (m, stop) = readMeta(index)
+  /** The probe under the recipe `m`/`stop` read from `index`: its lazy
+    * pair plan (`id_existing`, `id_incoming`, `jaccard`), the
+    * touched-bucket rows over the cap, and the incoming-side persists
+    * the plan reads (callers unpersist them once the pairs are
+    * materialized). With `dropMetric` set, the plan observes under that
+    * name the number of distinct buckets the cap suppresses.
+    */
+  private def probe(
+      index: DataFrame, m: Meta, stop: Array[Long], incoming: DataFrame,
+      idCol: String, textCol: String, threshold: Double,
+      dropMetric: Option[String]): (DataFrame, DataFrame, Seq[DataFrame]) = {
     val (inSh, inBanded) = signIncoming(m, stop, incoming, idCol, textCol)
 
     // Distinct incoming buckets are bounded by bands * |incoming| — the
@@ -274,26 +265,53 @@ object LshIndex {
       .select(col(idCol).as("id_existing"), col("band"), col("bucket"), col("cnt"))
     // Entries per bucket are capped at build, incoming counts ride the
     // join row, so this frame is bounded by cap * |touched buckets|.
-    val joined = entries.join(inCnt, Seq("band", "bucket")).persist()
-    val droppedBuckets = joined.filter(col("cnt") + col("cnt_i") > m.maxBucketSize)
-      .select("band", "bucket").distinct().count()
-    val cands = joined.filter(col("cnt") + col("cnt_i") <= m.maxBucketSize)
+    val joined = entries.join(inCnt, Seq("band", "bucket"))
+    val over = col("cnt") + col("cnt_i") > m.maxBucketSize
+    val observed = dropMetric.fold(joined)(name => joined.observe(name,
+      size(collect_set(when(over, struct(col("band"), col("bucket"))))).cast("long").as("n")))
+    val cands = observed.filter(!over)
       .join(inBanded, Seq("band", "bucket"))
       .select("id_existing", "id_incoming").distinct()
 
     val docsSh = index.filter(col("band") === DocBand)
       .select(col(idCol).as("id_existing"), col("sh").as("sh_a"))
-    val result = cands
+    val pairs = cands
       .join(docsSh, "id_existing")
       .join(inSh, "id_incoming")
       .withColumn("jaccard", TextDedup.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_existing"), col("id_incoming"), col("jaccard"))
-      .persist()
-    result.count()
-    joined.unpersist()
-    inBanded.unpersist()
-    inSh.unpersist()
+    (pairs, joined.filter(over), Seq(inSh, inBanded))
+  }
+
+  /** Cross-corpus near-dup pairs against the stored index: identical
+    * output contract to [[TextDedup.minHashLshPairsAgainst]]
+    * (`id_existing`, `id_incoming`, `jaccard`) — with the kept side read
+    * from the index instead of re-shingled/re-signed. Only the incoming
+    * batch pays CPU; the stored side is a scan.
+    *
+    * Cap semantics match the one-shot operator exactly: a bucket is
+    * suppressed when its COMBINED size (stored `cnt` + incoming count)
+    * exceeds the frozen `maxBucketSize` — the union bucket size, since
+    * ids are unique across both corpora (same precondition as the
+    * one-shot form). `droppedBuckets` on the result counts buckets
+    * suppressed at probe time (an observed counter on the pair action);
+    * build-time drops are in the meta row.
+    */
+  def pairsAgainst(
+      index: DataFrame,
+      incoming: DataFrame,
+      idCol: String,
+      textCol: String,
+      threshold: Double = 0.5): TextDedup.LshPairs = {
+    val (m, stop) = readMeta(index)
+    val metric = s"lsh_probe_dropped_${java.util.UUID.randomUUID()}"
+    val (pairs, overJoined, cached) =
+      probe(index, m, stop, incoming, idCol, textCol, threshold, Some(metric))
+    val result = pairs.persist()
+    val droppedBuckets = TextDedup.countObserved(result, metric).getOrElse(
+      overJoined.select("band", "bucket").distinct().count())
+    cached.foreach(_.unpersist())
     TextDedup.LshPairs(result, droppedBuckets, stop.length)
   }
 
@@ -309,13 +327,30 @@ object LshIndex {
       incoming: DataFrame,
       idCol: String,
       textCol: String,
-      threshold: Double = 0.8): DataFrame = {
-    val pairs = pairsAgainst(index, incoming, idCol, textCol, threshold)
-    // materialize the drop set before releasing the pair cache (same
-    // rationale as the one-shot operator)
-    val dupIds = pairs.pairs.select(col("id_incoming").as(idCol))
+      threshold: Double = 0.8): DataFrame =
+    dedupAgainstWith(index, readMeta(index), incoming, idCol, textCol, threshold)
+
+  /** [[dedupAgainst]] under the recipe already read from `index`. */
+  private[operators] def dedupAgainstWith(
+      index: DataFrame,
+      recipe: (Meta, Array[Long]),
+      incoming: DataFrame,
+      idCol: String,
+      textCol: String,
+      threshold: Double): DataFrame = {
+    val (m, stop) = recipe
+    val (pairs, _, cached) =
+      probe(index, m, stop, incoming, idCol, textCol, threshold, dropMetric = None)
+    // the drop set is the one materialization: a lazy anti-join against
+    // the probe would re-run it, and its incoming-side persists, at the
+    // caller's first action. The pairs persist is filled by that same
+    // job; it is there for its statistics: the checkpoint then carries
+    // the materialized size, so the anti-join below is planned as a
+    // broadcast, as over any small cached frame.
+    val found = pairs.persist()
+    val dupIds = found.select(col("id_incoming").as(idCol))
       .distinct().localCheckpoint()
-    pairs.unpersist()
+    (found +: cached).foreach(_.unpersist())
     val th = Iterator.from(0).map(i => s"__th$i")
       .find(c => !incoming.columns.contains(c)).get
     val exTextHashes = index.filter(col("band") === DocBand)
@@ -342,8 +377,20 @@ object LshIndex {
       index: DataFrame,
       newDocs: DataFrame,
       idCol: String,
+      textCol: String): DataFrame =
+    appendWith(index, readMeta(index), newDocs, newDocs.count(), idCol, textCol)
+
+  /** [[append]] under the recipe already read from `index`, with the
+    * `nNew` rows of `newDocs` already counted.
+    */
+  private[operators] def appendWith(
+      index: DataFrame,
+      recipe: (Meta, Array[Long]),
+      newDocs: DataFrame,
+      nNew: Long,
+      idCol: String,
       textCol: String): DataFrame = {
-    val (m, stop) = readMeta(index)
+    val (m, stop) = recipe
     val rows = m.numPerm / m.bands
 
     val sh = newDocs.select(
@@ -353,8 +400,7 @@ object LshIndex {
     val docs = shPruned
       .withColumn("sig",
         udf(TextDedup.sigFromHashesKernel(m.numPerm, m.seed)).apply(col("sh")))
-      .persist()
-    val nNew = docs.count()
+      .persist() // filled by the appended index's count below
 
     val entriesRaw = docs.select(
       col(idCol),

@@ -195,10 +195,11 @@ object Release {
       evalGrams: DataFrame,
       manifest: DataFrame,
       cardIndex: DataFrame) {
-    def unpersist(): Unit = {
-      index.unpersist(); evalGrams.unpersist()
-      manifest.unpersist(); cardIndex.unpersist()
-    }
+    /** Release the four pins (each a `localCheckpoint`, which
+      * `DataFrame.unpersist` alone would miss).
+      */
+    def unpersist(): Unit =
+      Seq(index, evalGrams, manifest, cardIndex).foreach(graft.Pins.release)
   }
 
   private def writeArtifacts(
@@ -256,6 +257,17 @@ object Release {
     * corpus (leak-dropped docs INCLUDED — a near-dup of a leaky doc is
     * cheaper to drop at dedup than to re-judge at the gram gate) and
     * the held-out gram artifact.
+    *
+    * Threads: the index build reads only the checkpointed curated
+    * corpus, so it runs on one driver thread while the ship chain
+    * (split, de-leak, data write, then the artifacts) runs on another;
+    * the call returns once both have finished. Failure: the index is
+    * never written, so a failed build still leaves the release the
+    * ship chain wrote complete (data, manifest, card, eval grams) and
+    * reopenable with [[reopenIncremental]], which rebuilds the index
+    * from the shipped data; the build's error is rethrown after the
+    * ship chain ends. A failed ship chain leaves what its failed write
+    * left, as a one-thread turn would.
     */
   def initIncremental(
       docs: DataFrame,
@@ -277,36 +289,48 @@ object Release {
     // index comment below for the measured cost of leaving that live)
     val corpus = core.docs.localCheckpoint()
     core.unpersist()
-    val split = Sampling.assignSplit(
-      corpus, idCol, params.trainFrac, params.valFrac, SplitCol)
-    val shipped = Contamination.removeSplitLeakage(
-        split, idCol, textCol, SplitCol,
-        n = params.leakageN, maxOverlapNgrams = params.maxOverlapNgrams,
-        broadcastBench = params.broadcastLeakGrams)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    shipped.write.mode("overwrite").partitionBy(SplitCol).parquet(s"$path/data")
-    // SEVER the built index from its curation lineage. The standing
-    // index is referenced many times by every future turn (meta read,
-    // stop set, bucket probe, doc join, append union), and Spark embeds
-    // the full LOGICAL plan at each reference BEFORE cache substitution
-    // — so with a live build-over-curateCore lineage the driver re-pays
-    // ANALYSIS of that whole tree per reference, multiplicatively
-    // through the turn's composition (measured: a 250-doc appendTurn
-    // spent ~2 min in driver planning with zero Spark jobs >0.3 s; the
-    // severed twin plans in seconds). The checkpoint stores exactly
-    // what the persist already holds; only the plan is truncated.
-    val built = LshIndex.build(corpus, idCol, textCol,
-      n = params.curation.shingleN, portableHash = params.curation.portableHash,
-      minDocFreq = params.curation.minDocFreq)
-    val index = built.localCheckpoint()
-    built.unpersist()
-    val (m, g, c) = writeArtifacts(path,
-      Manifest.build(shipped, SplitCol, Seq(idCol, textCol), length(col(textCol))),
-      Contamination.evalGramIndex(
-        shipped.filter(col(SplitCol) =!= "train"), textCol, params.leakageN),
-      TextAnalysis.dataCardIndex(shipped, textCol, langCol),
-      langCol)
-    shipped.unpersist(); corpus.unpersist()
+    // The index build reads only `corpus`, so it runs on its own driver
+    // thread beside the ship chain (split -> de-leak -> data write ->
+    // artifacts); see the class doc for the failure semantics.
+    val (index, (m, g, c)) = DriverThreads.both(
+      () => {
+        // SEVER the built index from its curation lineage. The standing
+        // index is referenced many times by every future turn (meta
+        // read, stop set, bucket probe, doc join, append union), and
+        // Spark embeds the full LOGICAL plan at each reference BEFORE
+        // cache substitution — so with a live build-over-curateCore
+        // lineage the driver re-pays ANALYSIS of that whole tree per
+        // reference, multiplicatively through the turn's composition
+        // (measured: a 250-doc appendTurn spent ~2 min in driver
+        // planning with zero Spark jobs >0.3 s; the severed twin plans
+        // in seconds). The checkpoint stores exactly what the persist
+        // already holds; only the plan is truncated.
+        val built = LshIndex.build(corpus, idCol, textCol,
+          n = params.curation.shingleN, portableHash = params.curation.portableHash,
+          minDocFreq = params.curation.minDocFreq)
+        val index = built.localCheckpoint()
+        built.unpersist()
+        index
+      },
+      () => {
+        val split = Sampling.assignSplit(
+          corpus, idCol, params.trainFrac, params.valFrac, SplitCol)
+        val shipped = Contamination.removeSplitLeakage(
+            split, idCol, textCol, SplitCol,
+            n = params.leakageN, maxOverlapNgrams = params.maxOverlapNgrams,
+            broadcastBench = params.broadcastLeakGrams)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        shipped.write.mode("overwrite").partitionBy(SplitCol).parquet(s"$path/data")
+        val artifacts = writeArtifacts(path,
+          Manifest.build(shipped, SplitCol, Seq(idCol, textCol), length(col(textCol))),
+          Contamination.evalGramIndex(
+            shipped.filter(col(SplitCol) =!= "train"), textCol, params.leakageN),
+          TextAnalysis.dataCardIndex(shipped, textCol, langCol),
+          langCol)
+        shipped.unpersist()
+        artifacts
+      })
+    graft.Pins.release(corpus)
     IncrementalRelease(path, index, g, m, c)
   }
 
@@ -328,6 +352,15 @@ object Release {
     * ([[Contamination.removeSplitLeakageAgainst]] doc) — rebuild from
     * [[build]] on the compaction cadence if the corpus needs that
     * guarantee tightened.
+    *
+    * Threads: the curated batch is computed first, once. Then one
+    * driver thread grows and pins the index while another computes the
+    * frames the turn ships: split, eval-gram append, de-leak, and the
+    * pinned batch. Only after both have succeeded does the turn write:
+    * the data append, then the artifacts. Failure: a failed grow or a
+    * failed ship-chain frame writes nothing under `path`, so the
+    * release and `state` stay as they were; a failed write leaves what
+    * that write left, as before.
     */
   def appendTurn(
       state: IncrementalRelease,
@@ -339,31 +372,56 @@ object Release {
       params: ReleaseParams = ReleaseParams()): (IncrementalRelease, DataFrame) = {
     require(!batch.columns.contains(SplitCol),
       s"input already has a '$SplitCol' column — the release assigns its own")
-    val r = Curation.curateIncremental(
-      state.index, scrubbed(batch, textCol, params), bench,
+    // each artifact's recipe is read once per turn and carried
+    val recipe = LshIndex.readMeta(state.index)
+    Contamination.requireHashedArtifact(state.evalGrams)
+    val n = Contamination.evalGramMeta(state.evalGrams)
+    val turn = Curation.incrementalTurn(
+      state.index, recipe, scrubbed(batch, textCol, params), bench,
       idCol, textCol, langCol, params.curation)
-    val split = Sampling.assignSplit(
-      r.curated, idCol, params.trainFrac, params.valFrac, SplitCol)
-    val evalSide = split.filter(col(SplitCol) =!= "train")
-    val grownGrams = Contamination.evalGramAppend(state.evalGrams, evalSide, textCol)
-    // gate needs the artifact usable twice (grow + probe) — checkpoint
-    // happens inside writeArtifacts; probe against the lazy frame here
-    val shippedTrain = Contamination.removeSplitLeakageAgainst(
-      grownGrams, split.filter(col(SplitCol) === "train"), idCol, textCol,
-      maxOverlapNgrams = params.maxOverlapNgrams,
-      broadcastIndex = params.broadcastLeakGrams)
-    // MATERIALIZE the batch BEFORE appending into `path/data`, severed
-    // from any lineage that might read that very directory (a state
-    // whose index was rebuilt from the shipped corpus — [[reopen
-    // Incremental]]). The append's own refreshByPath invalidates every
-    // cache whose plan references the written path, so a mere persist
-    // would silently RECOMPUTE over a listing that now includes the
-    // rows just appended — every batch doc dedups against itself and
-    // the manifest accounts an empty batch while the data grew. The
-    // eager local checkpoint pins content at pre-append state and
-    // guarantees the manifest folds exactly the bytes written; O(batch)
-    // storage, the same class as the write itself.
-    val shipped = shippedTrain.unionByName(evalSide).localCheckpoint()
+    // Only the next turn's state needs the grown index, so it grows and
+    // is pinned on its own driver thread while the ship chain computes
+    // its frames. Nothing is written under `path` until both are done.
+    val (kept, (grownGrams, shipped)) = DriverThreads.both(
+      () => {
+        // sever the grown index exactly as [[initIncremental]] severs
+        // the built one: each turn would otherwise stack its
+        // batch-curation lineage onto the standing index's plan, and
+        // after N turns every index reference re-analyzes N turns of
+        // composition on the driver. The grow step already materialized
+        // the grown data eagerly; the checkpoint copies those blocks
+        // once and truncates the plan.
+        val grown = turn.grow()
+        val kept = grown.localCheckpoint()
+        grown.unpersist()
+        kept
+      },
+      () => {
+        val split = Sampling.assignSplit(
+          turn.curated, idCol, params.trainFrac, params.valFrac, SplitCol)
+        val evalSide = split.filter(col(SplitCol) =!= "train")
+        val grownGrams =
+          Contamination.evalGramAppendWith(state.evalGrams, n, evalSide, textCol)
+        // gate needs the artifact usable twice (grow + probe) —
+        // checkpoint happens inside writeArtifacts; probe against the
+        // lazy frame here
+        val shippedTrain = Contamination.removeSplitLeakageAgainstWith(
+          grownGrams, n, split.filter(col(SplitCol) === "train"), idCol, textCol,
+          params.maxOverlapNgrams, params.broadcastLeakGrams)
+        // MATERIALIZE the batch BEFORE appending into `path/data`,
+        // severed from any lineage that might read that very directory
+        // (a state whose index was rebuilt from the shipped corpus —
+        // [[reopenIncremental]]). The append's own refreshByPath
+        // invalidates every cache whose plan references the written
+        // path, so a mere persist would silently RECOMPUTE over a
+        // listing that now includes the rows just appended — every
+        // batch doc dedups against itself and the manifest accounts an
+        // empty batch while the data grew. The eager local checkpoint
+        // pins content at pre-append state and guarantees the manifest
+        // folds exactly the bytes written; O(batch) storage, the same
+        // class as the write itself.
+        (grownGrams, shippedTrain.unionByName(evalSide).localCheckpoint())
+      })
     shipped.write.mode("append").partitionBy(SplitCol).parquet(s"${state.path}/data")
     val (m, g, c) = writeArtifacts(state.path,
       Manifest.merge(Seq(state.manifest,
@@ -372,14 +430,7 @@ object Release {
       grownGrams,
       TextAnalysis.dataCardAppend(state.cardIndex, shipped, textCol, langCol),
       langCol)
-    // sever the grown index exactly as [[initIncremental]] severs the
-    // built one: each turn would otherwise stack its batch-curation
-    // lineage onto the standing index's plan, and after N turns every
-    // index reference re-analyzes N turns of composition on the driver.
-    // LshIndex.append already materialized the grown data eagerly; the
-    // checkpoint copies those blocks once and truncates the plan.
-    val kept = r.kept.localCheckpoint()
-    r.unpersist()
+    turn.unpersist()
     (IncrementalRelease(state.path, kept, g, m, c), shipped)
   }
 

@@ -237,7 +237,8 @@ object TextDedup {
       minDocFreq: Long = DefaultMinDocFreq): LshPairs =
     lshCore(df.select(col(idCol), col(textCol)), idCol, textCol,
       n, numPerm, bands, threshold, seed, maxBucketSize, maxDocFreqRatio,
-      portableHash, minDocFreq, crossSide = false, outA = "id_a", outB = "id_b")
+      portableHash, minDocFreq, crossSide = false, outA = "id_a", outB = "id_b",
+      countDropped = true)
 
   /** Cross-corpus near-dup pairs: every (existing, incoming) pair whose
     * verified Jaccard reaches `threshold` — the incremental-ingest shape
@@ -274,7 +275,7 @@ object TextDedup {
     lshCore(tagged, idCol, textCol,
       n, numPerm, bands, threshold, seed, maxBucketSize, maxDocFreqRatio,
       portableHash, minDocFreq, crossSide = true,
-      outA = "id_existing", outB = "id_incoming").pairs
+      outA = "id_existing", outB = "id_incoming", countDropped = false).pairs
   }
 
   /** Default [[minHashLshDedup]] `minDocFreq`: chosen so the floor only
@@ -290,7 +291,9 @@ object TextDedup {
     * fix in one path must reach the other). `crossSide = true` expects a
     * `__side` column (0 = existing, 1 = incoming) and pairs across
     * sides only, orienting output as (outA = side 0, outB = side 1);
-    * the self path emits (outA < outB) within buckets.
+    * the self path emits (outA < outB) within buckets. `countDropped =
+    * false` is for callers that discard `droppedBuckets` (it reads 0):
+    * the cap is applied all the same, only its tally is skipped.
     */
   private def lshCore(
       df: DataFrame,
@@ -307,7 +310,8 @@ object TextDedup {
       minDocFreq: Long,
       crossSide: Boolean,
       outA: String,
-      outB: String): LshPairs = {
+      outB: String,
+      countDropped: Boolean): LshPairs = {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     require(maxDocFreqRatio > 0.0, "maxDocFreqRatio must be positive")
     require(minDocFreq >= 0, "minDocFreq must be non-negative")
@@ -348,10 +352,9 @@ object TextDedup {
         val stopSet = stop.toSet
         val pruneF = udf((hs: Seq[Long]) =>
           if (hs == null) null else hs.filterNot(stopSet.contains).toArray)
-        val p = shCached.withColumn("__sh", pruneF(col("__sh"))).persist()
-        p.count()
-        shCached.unpersist()
-        p
+        // filled by the first bucket-size aggregate, from shCached
+        // (which the stop pass above filled; released at the end)
+        shCached.withColumn("__sh", pruneF(col("__sh"))).persist()
       }
 
     // Band bucket key: production uses codegen'd murmur3 of the signature
@@ -382,16 +385,21 @@ object TextDedup {
     // 175s run-to-run). Dropping oversized buckets bounds the join
     // deterministically; true near-dups still meet in their many small,
     // discriminating buckets. The dropped count is surfaced on the
-    // result so callers can see the recall trade actually taken.
-    val bucketSizes = banded.groupBy("__band", "__bucket").count().persist()
-    val droppedBuckets = bucketSizes.filter(col("count") > maxBucketSize).count()
+    // result so callers can see the recall trade actually taken: an
+    // observed counter on the bucket sizes, read off the pair action.
+    val bucketSizes = banded.groupBy("__band", "__bucket").count()
+    val over = col("count") > maxBucketSize
+    val dropMetric = s"lsh_dropped_${java.util.UUID.randomUUID()}"
+    val sized =
+      if (countDropped) bucketSizes.observe(dropMetric, count(when(over, 1)).as("n"))
+      else bucketSizes
     // cnt >= 2: a singleton bucket can never produce a pair, and on real
     // corpora MOST band-buckets are singletons (53,960 buckets for 80k
     // banded rows at sf0.1) — dropping them here removes the majority of
     // the rows shuffled into the chunked self-join's window without
     // changing the pair set (guide §2.3: shuffle fewer bytes).
-    val smallBuckets = bucketSizes
-      .filter(col("count") <= maxBucketSize && col("count") >= 2)
+    val smallBuckets = sized
+      .filter(!over && col("count") >= 2)
       .select("__band", "__bucket")
     val pruned = banded.join(smallBuckets, Seq("__band", "__bucket"))
     // chunked join: bounded key groups regardless of bucket skew
@@ -418,11 +426,27 @@ object TextDedup {
       .filter(col("jaccard") >= threshold)
       .select(col(outA), col(outB), col("jaccard"))
       .persist()
-    result.count()
+    val droppedBuckets =
+      if (!countDropped) { result.count(); 0L }
+      else countObserved(result, dropMetric).getOrElse(bucketSizes.filter(over).count())
     banded.unpersist()
-    bucketSizes.unpersist()
     sh.unpersist()
+    shCached.unpersist() // no-op when nothing was pruned (sh is shCached)
     LshPairs(result, droppedBuckets, stop.length)
+  }
+
+  /** Fill `df`'s persist with one action, and return the `n` field of
+    * the counter that `df`'s plan observes under `metric`, read off that
+    * action's own plan: no listener, so it never waits. None when the
+    * executed plan lost the counter: AQE replaces a subtree whose output
+    * it found empty with an empty relation, observed nodes included.
+    * That happens whenever the action's result is empty, so callers
+    * count the observed frame directly in that case.
+    */
+  private[operators] def countObserved(df: DataFrame, metric: String): Option[Long] = {
+    val counted = df.groupBy().count()
+    counted.collect()
+    counted.queryExecution.observedMetrics.get(metric).map(_.getAs[Long]("n"))
   }
 
   /** Incremental ingest filter: `incoming` minus near-dups of `existing`
@@ -485,8 +509,10 @@ object TextDedup {
       maxDocFreqRatio: Double = 0.5,
       portableHash: Boolean = false,
       minDocFreq: Long = DefaultMinDocFreq): DataFrame =
-    minHashLshDedup(df, idCol, textCol, n, numPerm, bands, threshold, seed,
-      maxBucketSize, maxDocFreqRatio, portableHash, minDocFreq).pairs
+    lshCore(df.select(col(idCol), col(textCol)), idCol, textCol,
+      n, numPerm, bands, threshold, seed, maxBucketSize, maxDocFreqRatio,
+      portableHash, minDocFreq, crossSide = false, outA = "id_a", outB = "id_b",
+      countDropped = false).pairs
 
   /** Distinct murmur3-hashed character n-gram shingles (JVM kernel, same
     * rationale as [[minHashKernel]]). Long-typed so the LSH path is

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one state machine of the eight stateful gates: the index gates
   * ([[NearDupGate]], [[EmbeddingDupGate]], [[FingerprintDupGate]] (also
@@ -75,7 +74,7 @@ private[streaming] final class GateState[M](
     val (appended, grown) = grow(carry, state, out)
     val next = appended.localCheckpoint()
     appended.unpersist()
-    if (owned) release(state)
+    if (owned) graft.Pins.release(state)
     carry = grown
     advance(next)
     out
@@ -112,14 +111,6 @@ private[streaming] final class GateState[M](
       next.write.parquet(p)
       lastCkpt = Some(p)
     }
-  }
-
-  /** `DataFrame.unpersist` misses a `localCheckpoint` frame (the
-    * CacheManager does not hold it), so release the RDD it scans.
-    */
-  private def release(df: DataFrame): Unit = df.queryExecution.logical match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-    case _ =>
   }
 }
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.util.Properties
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -31,6 +30,13 @@ object SparkSpec {
     s
   }
 
+  /** One job a spec observed: its start and end times (ms), the SQL
+    * execution it ran under and that execution's physical plan ("" when
+    * none), and the ids of the RDDs its stages compute.
+    */
+  final case class JobRecord(
+      id: Int, start: Long, end: Long, execution: Option[Long], rdds: Set[Int], plan: String)
+
   /** The local properties `SparkContext.setJobGroup` sets. */
   private val JobGroupId = "spark.jobGroup.id"
   private val JobGroupProps =
@@ -60,27 +66,38 @@ trait SparkSpec extends AnyFunSuite {
     * per-partition jobs) add none.
     */
   def executionsDuring[T](body: => T): (T, Seq[String]) = {
-    val (result, jobs, descriptions) = observeJobs(body)
-    val ids = jobs.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
-    (result, ids.distinct.sorted.map(id => descriptions.getOrElse(id, "")))
+    val (result, jobs, executions) = observeJobs(body)
+    val ids = jobs.flatMap(_.execution)
+    (result, ids.distinct.sorted.map(id => executions.get(id).fold("")(_._1)))
   }
 
-  /** `body`'s result, the local properties of each job it started (in job
-    * order) and the descriptions of the SQL executions started meanwhile.
+  /** `body`'s result and the jobs [[jobsDuring]] counts, in job order. */
+  def jobRecordsDuring[T](body: => T): (T, Seq[SparkSpec.JobRecord]) = {
+    val (result, jobs, executions) = observeJobs(body)
+    (result, jobs.map(j => j.copy(plan = j.execution.flatMap(executions.get).fold("")(_._2))))
+  }
+
+  /** `body`'s result, the jobs it started (in job order, `plan` not yet
+    * filled) and the description and physical plan of each SQL
+    * execution started meanwhile.
     */
-  private def observeJobs[T](body: => T): (T, Seq[Properties], Map[Long, String]) = {
+  private def observeJobs[T](body: => T)
+      : (T, Seq[SparkSpec.JobRecord], Map[Long, (String, String)]) = {
     val sc = spark.sparkContext
     val group = s"jobsDuring-${java.util.UUID.randomUUID()}"
-    val started = new ConcurrentHashMap[Int, Properties]()
-    val ended = ConcurrentHashMap.newKeySet[Int]()
-    val executions = new ConcurrentHashMap[Long, String]()
+    val started = new ConcurrentHashMap[Int, SparkSpec.JobRecord]()
+    val ended = new ConcurrentHashMap[Int, java.lang.Long]()
+    val executions = new ConcurrentHashMap[Long, (String, String)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(SparkSpec.JobGroupId) == group)
-          started.put(e.jobId, e.properties)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+          started.put(e.jobId, SparkSpec.JobRecord(e.jobId, e.time, -1L,
+            Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong),
+            e.stageInfos.flatMap(_.rddInfos.map(_.id)).toSet, ""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, e.time)
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId, x.description)
+        case x: SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId, (x.description, x.physicalPlanDescription))
         case _ =>
       }
     }
@@ -91,9 +108,10 @@ trait SparkSpec extends AnyFunSuite {
     try {
       val result = body
       ListenerBusDrain(sc)
-      val running = started.keySet.asScala.filterNot(ended.contains)
+      val running = started.keySet.asScala.filterNot(ended.containsKey)
       assert(running.isEmpty, s"jobs ${running.mkString(", ")} still running after the body returned")
-      (result, started.asScala.toSeq.sortBy(_._1).map(_._2), executions.asScala.toMap)
+      val jobs = started.asScala.toSeq.sortBy(_._1).map { case (id, j) => j.copy(end = ended.get(id)) }
+      (result, jobs, executions.asScala.toMap)
     } finally {
       saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       sc.removeSparkListener(listener)

@@ -61,6 +61,14 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(below == want && belowRounds > 0)
   }
 
+  test("the driver solve is reached in at most 2 jobs") {
+    val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (1L, 1L), (9L, 9L)).toDF("src", "dst")
+    val ((cc, rounds), jobs) = jobsDuring(ConnectedComponents.componentsWithRounds(edges))
+    assert(rounds == 0 && jobs <= 2, s"$rounds rounds, $jobs jobs")
+    assert(cc.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
+  }
+
   test("converges on a 1000-node chain (worst-case diameter)") {
     // driverSolveMax = 0 throughout: this spec measures the
     // DISTRIBUTED alternation's round counts

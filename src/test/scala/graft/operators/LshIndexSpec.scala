@@ -23,6 +23,39 @@ class LshIndexSpec extends SparkSpec {
         round(col("jaccard"), 9).as("j"))
       .as[(Long, Long, Double)].collect().toSet
 
+  test("droppedBuckets rides the pair action and never waits on an empty one") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def prompt(dropped: => Long): Long = Await.result(Future(dropped), 2.minutes)
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(prompt(TextDedup.minHashLshDedup(empty, "doc_id", "text").droppedBuckets) == 0L)
+    // id-periodic texts share no shingle: every band bucket is a singleton
+    val singletons = (0L until 40L).map(i => (i, s"${i}q" * 10)).toDF("doc_id", "text")
+    val lone = TextDedup.minHashLshDedup(singletons, "doc_id", "text", maxDocFreqRatio = 1.0)
+    assert(prompt(lone.droppedBuckets) == 0L && lone.pairs.isEmpty)
+    lone.unpersist()
+    val index = LshIndex.build(existing, "doc_id", "text")
+    assert(prompt(LshIndex.pairsAgainst(index, incoming.filter(lit(false)),
+      "doc_id", "text").droppedBuckets) == 0L)
+
+    // with pairs to act on, the counter is read off the action: 16 capped
+    // buckets of the identical copies beside the near-dup pair's buckets
+    val near = "the quick brown fox jumps over the lazy dog near the river bank"
+    val copies = (0L until 30L).map(i => (i, "identical text repeated verbatim"))
+    val corpus = (copies :+ ((100L, near)) :+ ((101L, near + "!"))).toDF("doc_id", "text")
+    val capped = TextDedup.minHashLshDedup(corpus, "doc_id", "text",
+      maxBucketSize = 10, maxDocFreqRatio = 1.0)
+    assert(capped.droppedBuckets == 16L && capped.pairs.count() == 1L)
+    capped.unpersist()
+    val ix = LshIndex.build(corpus.filter($"doc_id" < 8L || $"doc_id" === 100L),
+      "doc_id", "text", maxBucketSize = 10, maxDocFreqRatio = 1.0)
+    val probed = LshIndex.pairsAgainst(ix,
+      corpus.filter(($"doc_id" >= 8L && $"doc_id" < 13L) || $"doc_id" === 101L), "doc_id", "text")
+    assert(probed.droppedBuckets == 16L && probed.pairs.count() == 1L)
+    probed.unpersist(); ix.unpersist(); index.unpersist()
+  }
+
   test("pairsAgainst == one-shot operator (default params; floor keeps stop empty)") {
     val index = LshIndex.build(existing, "doc_id", "text")
     val got = LshIndex.pairsAgainst(index, incoming, "doc_id", "text", threshold = 0.7)

@@ -431,6 +431,91 @@ class ReleaseSpec extends SparkSpec {
     st1.unpersist(); st2.unpersist()
   }
 
+  /** 240 synthetic docs, ids [0, 240): id-periodic texts (no shared
+    * grams across ids) plus ten near-copies of the docs 0-9 under fresh
+    * ids, so the within-batch dedup and the index both have work.
+    */
+  private def smallTurn(offset: Long) =
+    ((0L until 230L).map(i => (offset + i, s"${offset + i}z" * 12, "en")) ++
+      (0L until 10L).map(i => (offset + 230L + i, s"${offset + i}z" * 12 + "!", "en")))
+      .toDF("doc_id", "text", "lang")
+
+  private val smallBench = Seq((99999L, "benchmark body unrelated to all corpora", "en"))
+    .toDF("doc_id", "text", "lang")
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("both turns return index rows equal to a sequential replay of their stages") {
+    val p = params.copy(mixAlpha = 1.0)
+    val (t1, t2) = (smallTurn(0L), smallTurn(1000L))
+    val st1 = Release.initIncremental(t1, smallBench, "doc_id", "text", "lang", tmp("rel_replay"), p)
+    val core = Curation.curateCore(t1, smallBench, "doc_id", "text", p.curation)
+    val built = LshIndex.build(core.docs, "doc_id", "text",
+      n = p.curation.shingleN, portableHash = p.curation.portableHash,
+      minDocFreq = p.curation.minDocFreq)
+    assert(sameRows(st1.index, built), "init: index != build over the curated corpus")
+    val (st2, shipped) = Release.appendTurn(st1, t2, smallBench, "doc_id", "text", "lang", p)
+    val replay = Curation.curateIncremental(
+      st1.index, t2, smallBench, "doc_id", "text", "lang", p.curation)
+    assert(sameRows(st2.index, replay.kept), "append: index != curateIncremental's grown index")
+    replay.unpersist(); built.unpersist(); core.unpersist()
+    st1.unpersist(); st2.unpersist(); shipped.unpersist()
+  }
+
+  test("appendTurn starts no write before the grown index's pin has finished") {
+    val p = params.copy(mixAlpha = 1.0)
+    val st1 = Release.initIncremental(
+      smallTurn(0L), smallBench, "doc_id", "text", "lang", tmp("rel_order"), p)
+    val ((st2, shipped), jobs) = jobRecordsDuring(
+      Release.appendTurn(st1, smallTurn(1000L), smallBench, "doc_id", "text", "lang", p))
+    val pinned = st2.index.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case other => fail(s"the grown index is not pinned: ${other.nodeName}")
+    }
+    val pinEnd = jobs.filter(_.rdds.contains(pinned)).map(_.end)
+    val writes = jobs.filter(_.plan.contains("InsertIntoHadoopFsRelationCommand")).map(_.start)
+    assert(pinEnd.nonEmpty && writes.nonEmpty)
+    assert(writes.min >= pinEnd.max,
+      s"a write started at ${writes.min}, before the pin ended at ${pinEnd.max}")
+    st1.unpersist(); st2.unpersist(); shipped.unpersist()
+  }
+
+  test("a failed grow in appendTurn writes nothing under the release path") {
+    val path = tmp("rel_failed_grow")
+    val p = params.copy(mixAlpha = 1.0)
+    val st1 = Release.initIncremental(
+      smallTurn(0L), smallBench, "doc_id", "text", "lang", path, p)
+    def listing: Set[(String, Long, Long)] = {
+      val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+    }
+    val before = listing
+    // the probe reads the index by column name and works; the grow's
+    // positional union with the grown rows fails on the extra column
+    val broken = st1.copy(index = st1.index.withColumn("extra", lit(1)))
+    intercept[Exception] {
+      Release.appendTurn(broken, smallTurn(1000L), smallBench, "doc_id", "text", "lang", p)
+    }
+    assert(listing == before, "a failed grow must leave the release untouched")
+    st1.unpersist()
+  }
+
+  test("unpersist releases every pin of an incremental state") {
+    val st = Release.initIncremental(
+      smallTurn(0L), smallBench, "doc_id", "text", "lang", tmp("rel_pins"), params)
+    val ids = Seq(st.index, st.evalGrams, st.manifest, st.cardIndex)
+      .map(_.queryExecution.logical)
+      .collect { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }
+    def live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ids.size == 4 && ids.forall(live.contains), s"state pins $ids, live $live")
+    st.unpersist()
+    assert(ids.filter(live.contains).isEmpty, s"still persisted after unpersist: $ids")
+  }
+
   test("typed guard: input already carrying a split column") {
     val e = intercept[IllegalArgumentException] {
       Release.build(train.withColumn("split", lit("train")), bench,
