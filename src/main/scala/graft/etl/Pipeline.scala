@@ -1,7 +1,11 @@
 package graft.etl
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
 import graft.functions.Cols
 import graft.operators.Dedup
@@ -29,7 +33,9 @@ import graft.sources.Readers
   * Scale notes: the registry join is broadcast (dimension-sized build
   * side); the only shuffle is the keep-first window hash-partitioned on
   * `id_entidade`; the pct rescale's global max is a 1-row broadcast, not a
-  * single-partition window; everything else is narrow.
+  * single-partition window; everything else is narrow. [[run]] runs one
+  * job besides the registry broadcast: the eager pin of the post-join
+  * frame, from which every output is planned.
   */
 object Pipeline {
 
@@ -39,15 +45,20 @@ object Pipeline {
       unmatched: DataFrame,
       badName: DataFrame,
       plans: Seq[LabelOps.ColPlan],
-      private[etl] val cached: Seq[DataFrame] = Seq.empty) {
+      private[etl] val pins: Seq[DataFrame] = Seq.empty) {
     def colsOfGroup(group: String): Seq[LabelOps.ColPlan] =
       plans.filter(_.group == group)
 
-    /** Release the pipeline's internal caches once the outputs are
-      * written — keeps long-lived sessions (many yearly batches) from
-      * accumulating cached frames.
+    /** Release what the pipeline holds in executor storage (the pinned
+      * post-join rows and the dedup cache) once the outputs and the star
+      * are written — keeps long-lived sessions (many yearly batches) from
+      * accumulating them. A released result cannot be read again: its
+      * frames read the pinned rows, which are gone. Nor is a pin
+      * recomputed if an executor loses one of its blocks (a
+      * `localCheckpoint` severs the lineage), the same trade-off as
+      * [[graft.operators.Release]]'s pins.
       */
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+    def unpersist(): Unit = pins.foreach(graft.Pins.release)
   }
 
   private val helperCols =
@@ -82,7 +93,8 @@ object Pipeline {
       val e: Column = p.role match {
         case LabelOps.Identification => c
         case LabelOps.Measure if p.group == "formacoes" => Cols.validateNumeric(c)
-        case LabelOps.Measure => c.cast("string").try_cast("double").try_cast("int") // X10
+        case LabelOps.Measure =>
+          c.cast(StringType).try_cast(DoubleType).try_cast(IntegerType) // X10
         case LabelOps.Interest => Cols.simNao(c)
         case LabelOps.InterestComment => c
         case LabelOps.InterestFormandos => c
@@ -92,12 +104,16 @@ object Pipeline {
     }
     val selected = withId.select(col(Readers.RowId) +: exprs: _*)
 
-    require(plans.exists(p => p.uniqueName == "nome_entidade"),
+    def has(name: String): Boolean = plans.exists(_.uniqueName == name)
+    require(has("nome_entidade"),
       "identificacao mapping must produce nome_entidade (critical field)")
 
-    // --- identification (F1, X18, X2/X17) -----------------------------
-    val hasTipo = plans.exists(_.uniqueName == "tipo_entidade")
-    val tipoCol = if (hasTipo) col("tipo_entidade") else lit(null).cast("string")
+    // --- identification (F1, X18, X2/X17) + measures (X10-X16) -------
+    // ONE projection over the wide select: each derived column is written
+    // out in terms of `selected`'s columns (a withColumn chain would
+    // re-analyse the whole wide Project once per step). Replaced columns
+    // keep their place, new ones append in this order.
+    val tipoCol = if (has("tipo_entidade")) col("tipo_entidade") else lit(null).cast(StringType)
 
     val badNameP = col("nome_entidade").isNull || Cols.isInvalidName(col("nome_entidade"))
 
@@ -109,85 +125,79 @@ object Pipeline {
         coalesce(element_at(map(kv: _*), Cols.normalizeText(base)), base)
       }
     }
+    val nomeNorm = Cols.removePrefixes(col("nome_entidade"))
 
-    val keyed = selected
-      .withColumn("tipo_entidade", tipoMapped)
-      .withColumn("nome_entidade_norm", Cols.removePrefixes(col("nome_entidade")))
-      .withColumn("entity_key",
-        concat_ws("||", col("nome_entidade_norm"), Cols.normalizeText(col("tipo_entidade"))))
+    // pct is parsed/clamped here but RESCALED only after the pin below:
+    // the global-max subquery then reads the pinned rows instead of a
+    // second full pass over the input.
+    val pct =
+      if (has("percentagem_preenchido")) {
+        val p = col("percentagem_preenchido").cast(StringType).try_cast(DoubleType)
+        when(p < 0, lit(null)).otherwise(p)
+      } else lit(null).cast(DoubleType)
 
-    // --- measures on identificacao (X10-X16) --------------------------
-    // pct is parsed/clamped here but RESCALED only after the single
-    // cache materialization below — the global-max subquery then reads
-    // the cache instead of racing a second full pass over the input.
-    val hasPct = plans.exists(_.uniqueName == "percentagem_preenchido")
-    val withPctRaw =
-      if (hasPct)
-        keyed.withColumn("percentagem_preenchido",
-          col("percentagem_preenchido").cast("string").try_cast("double"))
-          .withColumn("percentagem_preenchido",
-            when(col("percentagem_preenchido") < 0, lit(null)).otherwise(col("percentagem_preenchido")))
-      else keyed.withColumn("percentagem_preenchido", lit(null).cast("double"))
-
-    val hasTimes = Seq("data_inicio", "data_fim").forall(n => plans.exists(_.uniqueName == n))
-    val withTime =
-      if (hasTimes)
-        withPctRaw
-          .withColumn("data_inicio", try_to_timestamp(col("data_inicio")))
-          .withColumn("data_fim", try_to_timestamp(col("data_fim")))
-          .withColumn("tempo_realizacao",
-            Cols.durationSeconds(col("data_inicio"), col("data_fim")))
-      else withPctRaw.withColumn("tempo_realizacao", lit(null).cast("long"))
-
-    val hasSub = plans.exists(_.uniqueName == "data_submissao")
-    val withSub = {
+    val hasTimes = has("data_inicio") && has("data_fim")
+    val inicio = try_to_timestamp(col("data_inicio"))
+    val fim = try_to_timestamp(col("data_fim"))
+    val submissao = {
+      // the type the parser gives "timestamp": spark.sql.timestampType
       val base =
-        if (hasSub) withTime.withColumn("data_submissao", try_to_timestamp(col("data_submissao")))
-        else withTime.withColumn("data_submissao", lit(null).cast("timestamp"))
-      if (hasTimes) base.withColumn("data_submissao", coalesce(col("data_submissao"), col("data_fim")))
-      else base
+        if (has("data_submissao")) try_to_timestamp(col("data_submissao"))
+        else lit(null).cast(SQLConf.get.timestampType)
+      if (hasTimes) coalesce(base, fim) else base
     }
 
-    val hasResp = plans.exists(_.uniqueName == "nome_responsavel")
-    val enriched = withSub
-      .withColumn("ano", lit(year))
-      .withColumn("nome_responsavel",
-        if (hasResp) col("nome_responsavel") else lit(null).cast("string"))
+    val enriched = selected.withColumns(ListMap(
+      "tipo_entidade" -> tipoMapped,
+      "nome_entidade_norm" -> nomeNorm,
+      "entity_key" -> concat_ws("||", nomeNorm, Cols.normalizeText(tipoMapped)),
+      "percentagem_preenchido" -> pct) ++
+      (if (hasTimes) ListMap("data_inicio" -> inicio, "data_fim" -> fim) else ListMap.empty) ++
+      ListMap(
+        "tempo_realizacao" ->
+          (if (hasTimes) Cols.durationSeconds(inicio, fim) else lit(null).cast(LongType)),
+        "data_submissao" -> submissao,
+        "ano" -> lit(year),
+        "nome_responsavel" ->
+          (if (has("nome_responsavel")) col("nome_responsavel") else lit(null).cast(StringType))))
 
     // --- J1 entity join (broadcast) + W1 dedup + F2 splits ------------
     val reg = registry.select(
-      col("id_entidades").cast("long").as("id_entidade"),
+      col("id_entidades").cast(LongType).as("id_entidade"),
       Cols.entityKey(col("ent_nome"), col("ent_tipo")).as("entity_key"))
 
     // THE fan-out point: all four output frames and every star-loader
     // fact read the post-join frame. Bad-name rows ride through the join
-    // (they can never match — registry keys are non-empty) so ONE cache
-    // serves everything; it is materialized eagerly because Spark runs
-    // broadcast/scalar subqueries as concurrent jobs, and an unbuilt
-    // cache would be computed by each of them in parallel (measured 2x
-    // the identification wall time). MEMORY_AND_DISK: spills, never OOMs.
-    val joined = enriched.join(broadcast(reg), Seq("entity_key"), "left_outer").persist()
-    joined.count()
+    // (they can never match — registry keys are non-empty) so ONE pin
+    // serves everything. An eager localCheckpoint runs the join once and
+    // leaves a one-node leaf: every downstream frame analyses and plans
+    // over it instead of over the 100+-column lineage, and no columnar
+    // cache is built. It is filled before this returns because Spark runs
+    // broadcast/scalar subqueries as concurrent jobs, which would each
+    // compute an unbuilt input. The pin leaves out the join's helper
+    // columns, which no output reads. MEMORY_AND_DISK: spills, never OOMs.
+    val joined = enriched.join(broadcast(reg), Seq("entity_key"), "left_outer")
+      .drop(helperCols: _*).localCheckpoint()
 
-    // A1 global max over the F1-filtered candidates (cache read) + X13
+    // A1 global max over the F1-filtered candidates (pin read) + X13
     // rescale with pandas-parity HALF_EVEN rounding (bround).
     val maxDf = joined.filter(!badNameP).agg(max(col("percentagem_preenchido")).as("__max_pct"))
     val rescaled = joined.crossJoin(broadcast(maxDf))
       .withColumn("percentagem_preenchido",
         when(col("__max_pct").isNotNull && col("__max_pct") > 0,
-          bround(col("percentagem_preenchido") / col("__max_pct") * 100).cast("int"))
-          .otherwise(col("percentagem_preenchido").cast("int")))
+          bround(col("percentagem_preenchido") / col("__max_pct") * 100).cast(IntegerType))
+          .otherwise(col("percentagem_preenchido").cast(IntegerType)))
       .drop("__max_pct")
 
     val badName = rescaled.filter(badNameP)
-      .withColumn("id_entidade", lit(null).cast("long"))
+      .withColumn("id_entidade", lit(null).cast(LongType))
     val unmatched = rescaled.filter(!badNameP && col("id_entidade").isNull)
     val matched = rescaled.filter(!badNameP && col("id_entidade").isNotNull)
     val (kept, duplicates, dedupCaches) =
       if (skewAware) {
         val k = Dedup.keepFirstSkewAware(matched, Seq("id_entidade"), Readers.RowId)
         // duplicates = everything the semi-join did not keep (row_id is a
-        // unique key, so the anti-join is exact); both read `joined`'s cache
+        // unique key, so the anti-join is exact); both read `joined`'s pin
         val d = matched.join(k.select(Readers.RowId), Seq(Readers.RowId), "left_anti")
         (k, d, Seq.empty[DataFrame])
       } else {
@@ -196,14 +206,12 @@ object Pipeline {
         (dd.kept, dd.duplicates, dd.ranked.toSeq)
       }
 
-    def clean(df: DataFrame): DataFrame = df.drop(helperCols: _*)
-
     EtlResult(
-      valid = clean(kept),
-      duplicates = clean(duplicates),
-      unmatched = clean(unmatched),
-      badName = clean(badName),
+      valid = kept,
+      duplicates = duplicates,
+      unmatched = unmatched,
+      badName = badName,
       plans = plans,
-      cached = Seq(joined) ++ dedupCaches)
+      pins = Seq(joined) ++ dedupCaches)
   }
 }

@@ -17,7 +17,7 @@ import graft.sources.Readers
   * The reference loads row-at-a-time with `INSERT ... RETURNING id` —
   * O(rows x questions) database round-trips. Here every fact is one
   * unpivot (narrow, stays in codegen) + one broadcast dim join over the
-  * one materialized `valid` cache, which already carries `id_inquerito`.
+  * one pinned `valid` frame, which already carries `id_inquerito`.
   * Every dimension is a get-or-create computed on the driver from the
   * column labels and the collected existing rows (dimension-sized by
   * construction) and returned as a one-partition local relation. Write
@@ -57,12 +57,14 @@ object StarLoader {
       fatoPreferencia: DataFrame,
       dimHorario: DataFrame,
       fatoDisponibilidade: DataFrame,
-      private val caches: Seq[DataFrame] = Seq.empty) {
-    /** Release every cache [[load]] created (valid input with its
-      * inquerito ids, fused interests) once the star frames are written — same
-      * lifecycle contract as [[Dedup.Split]]/[[Pipeline.EtlResult]].
+      private[etl] val pins: Seq[DataFrame] = Seq.empty) {
+    /** Release what [[load]] holds in executor storage (the pinned valid
+      * rows with their inquerito ids, the fused-interest cache) once the
+      * star frames are written — same lifecycle contract as
+      * [[Pipeline.EtlResult.unpersist]]: a released star cannot be read
+      * again, and a pin whose block an executor loses is not recomputed.
       */
-    def unpersist(): Unit = caches.foreach(_.unpersist())
+    def unpersist(): Unit = pins.foreach(graft.Pins.release)
   }
 
   private def emptyDf(spark: SparkSession, fields: (String, DataType)*): DataFrame =
@@ -78,7 +80,7 @@ object StarLoader {
   private def long(
       df: DataFrame,
       plans: Seq[LabelOps.ColPlan],
-      valueType: String,
+      valueType: DataType,
       labelOf: LabelOps.ColPlan => String = _.label): DataFrame = {
     val cols = plans.zipWithIndex.map { case (p, i) =>
       struct(lit(labelOf(p)).as("label"), lit(i).as("pos"),
@@ -148,20 +150,19 @@ object StarLoader {
       idStrategy: IdStrategy = DenseIds): Star = {
 
     val spark = result.valid.sparkSession
-    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cached(df: DataFrame): DataFrame = { caches += df.persist(); df }
-    // ONE cache serves every fact: `valid` with its inquerito ids,
-    // materialized eagerly so the ten concurrent star writes read built
-    // blocks instead of each racing to compute them. Under DenseIds the
-    // id window leaves it in one partition (survey scale, see above;
-    // SCALE.md "Caching discipline" times this shape at 1M rows).
-    val valid = cached(idStrategy match {
+    // ONE pin serves every fact: `valid` with its inquerito ids, an
+    // eager localCheckpoint, so the ten concurrent star writes read
+    // built blocks instead of each racing to compute them, and each fact
+    // is analysed and planned over a one-node leaf, not the pipeline's
+    // lineage. Under DenseIds the id window leaves it in one partition
+    // (survey scale, see above; SCALE.md "Caching discipline" times this
+    // shape at 1M rows).
+    val valid = (idStrategy match {
       case DenseIds => SurrogateKeys.dense(result.valid, "id_inquerito",
         Seq(col(Readers.RowId).asc), offset = idOffset)
       case ScalableIds => SurrogateKeys.scalable(result.valid, "id_inquerito",
         offset = idOffset)
-    })
-    valid.count()
+    }).localCheckpoint()
 
     // ---- FatoInquerito (X7, X23) -------------------------------------
     val hasResp = result.plans.exists(_.uniqueName == "existe_responsavel")
@@ -171,7 +172,7 @@ object StarLoader {
       col("ano"),
       to_date(col("data_submissao")).as("data_submissao"),
       (if (hasResp) Cols.simNaoStrict(col("existe_responsavel"))
-       else lit(null).cast("int")).as("existe_responsavel"),
+       else lit(null).cast(IntegerType)).as("existe_responsavel"),
       col("nome_responsavel"),
       col("percentagem_preenchido"),
       col("tempo_realizacao"))
@@ -187,7 +188,7 @@ object StarLoader {
       if (fPlans.isEmpty)
         emptyDf(spark, "id_inquerito" -> LongType, "id_formacao" -> LongType,
           "n_formandos" -> IntegerType)
-      else long(valid, fPlans, "int")
+      else long(valid, fPlans, IntegerType)
         .filter(col("value").isNotNull && col("value") >= 0)
         .join(broadcast(dimFormacao
             .select(col("id_formacao"), Cols.normalizeText(col("nome_formacao")).as("__k"))),
@@ -200,20 +201,21 @@ object StarLoader {
 
     val dimArea = nameDim(spark, None, iPlans.map(_.label), "id_area_tematica", "nome_area")
 
-    val (fatoInteresse, comentario) =
+    val (fatoInteresse, comentario, interestCache) =
       if (iPlans.isEmpty)
         (emptyDf(spark, "id_resposta" -> LongType, "id_inquerito" -> LongType,
           "id_area_tematica" -> LongType, "tem_interesse" -> IntegerType,
           "n_formandos" -> IntegerType, "comentario" -> StringType),
-         emptyDf(spark, "id_resposta" -> LongType, "texto_comentario" -> StringType))
+         emptyDf(spark, "id_resposta" -> LongType, "texto_comentario" -> StringType),
+         None)
       else {
-        val iLong = long(valid, iPlans, "double")
+        val iLong = long(valid, iPlans, DoubleType)
           .filter(col("value").isNotNull && col("value") > 0)
         val cLong =
           if (cPlans.isEmpty)
             emptyDf(spark, "id_inquerito" -> LongType, "label" -> StringType,
               "texto_raw" -> StringType)
-          else long(valid, cPlans, "string",
+          else long(valid, cPlans, StringType,
               labelOf = p => LabelOps.interestLabelOfComment(p.label, commentKeys))
             .filter(col("value").isNotNull && trim(col("value")) =!= "")
             .select(col("id_inquerito"), col("label"), trim(col("value")).as("texto_raw"))
@@ -223,8 +225,8 @@ object StarLoader {
           .join(broadcast(dimArea), col("label") === col("nome_area"))
           .withColumn("n_formandos",
             when(col("texto_raw").isNotNull && Cols.isNumericString(col("texto_raw")),
-              col("texto_raw").try_cast("double").cast("int"))
-              .otherwise(col("value").cast("int")))
+              col("texto_raw").try_cast(DoubleType).cast(IntegerType))
+              .otherwise(col("value").cast(IntegerType)))
           .withColumn("comentario_texto",
             when(col("texto_raw").isNotNull && !Cols.isNumericString(col("texto_raw")),
               col("texto_raw")))
@@ -233,15 +235,15 @@ object StarLoader {
         // insert order — id_inquerito is dense in row order, so it orders
         // rows; single-partition window, survey-scale only.
         // ScalableIds: unique ids, no window (see object scaladoc).
-        val interesse = cached(idStrategy match {
+        val interesse = (idStrategy match {
           case DenseIds => fused.withColumn("id_resposta",
             // constant partition key: declared single-task window, same
             // execution as bare orderBy (see SurrogateKeys.dense)
             row_number().over(Window.partitionBy(lit(0))
                 .orderBy(col("id_inquerito").asc, col("pos").asc))
-              .cast("long"))
+              .cast(LongType))
           case ScalableIds => SurrogateKeys.scalable(fused, "id_resposta")
-        })
+        }).persist()
 
         (interesse.select(
             col("id_resposta"), col("id_inquerito"), col("id_area_tematica"),
@@ -250,7 +252,8 @@ object StarLoader {
          interesse
            .filter(col("comentario_texto").isNotNull)
            .select(col("id_resposta"),
-             explode(Cols.splitSentences(col("comentario_texto"))).as("texto_comentario")))
+             explode(Cols.splitSentences(col("comentario_texto"))).as("texto_comentario")),
+         Some(interesse))
       }
 
     // ---- M3 preferences ---------------------------------------------
@@ -261,7 +264,7 @@ object StarLoader {
       if (pPlans.isEmpty)
         emptyDf(spark, "id_inquerito" -> LongType, "id_preferencia" -> LongType,
           "valor_preferencia" -> IntegerType)
-      else long(valid, pPlans, "int").filter(col("value").isNotNull)
+      else long(valid, pPlans, IntegerType).filter(col("value").isNotNull)
         .join(broadcast(dimPreferencia), col("label") === col("descricao_preferencia"))
         .select(col("id_inquerito"), col("id_preferencia"),
           col("value").as("valor_preferencia"))
@@ -296,10 +299,10 @@ object StarLoader {
       else {
         val descEntries = dPlans.flatMap(p => Seq(lit(p.label), lit(horarioOfLabel(p.label)._1)))
         val tipoEntries = dPlans.flatMap(p => Seq(lit(p.label),
-          lit(horarioOfLabel(p.label)._2).cast("long")))
+          lit(horarioOfLabel(p.label)._2).cast(LongType)))
         val dh = dimHorario.select(col("id_horario"),
           col("descricao_horario").as("__dh_desc"), col("id_tipo_disp").as("__dh_tipo"))
-        long(valid, dPlans, "int").filter(col("value").isNotNull)
+        long(valid, dPlans, IntegerType).filter(col("value").isNotNull)
           .withColumn("descricao_horario", element_at(map(descEntries: _*), col("label")))
           .withColumn("id_tipo_disp", element_at(map(tipoEntries: _*), col("label")))
           .join(broadcast(dh),
@@ -320,6 +323,6 @@ object StarLoader {
       fatoPreferencia = fatoPreferencia,
       dimHorario = dimHorario,
       fatoDisponibilidade = fatoDisponibilidade,
-      caches = caches.toSeq)
+      pins = valid +: interestCache.toSeq)
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
 
 /** Column-level counterparts of the reference's scalar functions
   * (SURVEY.md §2.8, X1–X23). Everything except accent folding is composed
@@ -40,12 +41,12 @@ object Cols {
     * unparsable/null -> 0.
     */
   def validateNumeric(c: Column): Column =
-    greatest(coalesce(c.cast("string").try_cast("double").try_cast("int"), lit(0)), lit(0))
+    greatest(coalesce(c.cast(StringType).try_cast(DoubleType).try_cast(IntegerType), lit(0)), lit(0))
 
   /** X5 sim/nao -> 1/0 via normalized compare; anything else null. */
   def simNao(c: Column): Column = {
     val n = normalizeText(c)
-    when(n === "sim", 1).when(n === "nao", 0).otherwise(lit(null).cast("int"))
+    when(n === "sim", 1).when(n === "nao", 0).otherwise(lit(null).cast(IntegerType))
   }
 
   /** X6 `map_disp`: sim -> 1, nao -> 0, anything else (incl. null) -> -1. */
@@ -62,7 +63,7 @@ object Cols {
     */
   def simNaoStrict(c: Column): Column =
     when(c.isin(caseVariants("sim"): _*), 1).when(c.isin(caseVariants("não"): _*), 0)
-      .otherwise(lit(null).cast("int"))
+      .otherwise(lit(null).cast(IntegerType))
 
   /** Every spelling of `word` with each letter in lower or upper case. */
   private def caseVariants(word: String): Seq[String] =
@@ -85,7 +86,7 @@ object Cols {
   /** X12 duration in whole seconds between two timestamps; <= 0 -> null. */
   def durationSeconds(start: Column, end: Column): Column = {
     val d = unix_timestamp(end) - unix_timestamp(start)
-    when(d > 0, d).otherwise(lit(null).cast("long"))
+    when(d > 0, d).otherwise(lit(null).cast(LongType))
   }
 
   /** X19 truncate to n chars + "..." when longer. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Surrogate-key assignment replacing the reference's row-at-a-time
   * `INSERT ... RETURNING id` round-trips (etl_ui.py:413-429,446-456,
@@ -29,7 +30,7 @@ object SurrogateKeys {
     */
   def dense(df: DataFrame, idCol: String, orderBy: Seq[Column], offset: Long = 0L): DataFrame =
     df.withColumn(idCol,
-      (row_number().over(Window.partitionBy(lit(0)).orderBy(orderBy: _*)) + offset).cast("long"))
+      (row_number().over(Window.partitionBy(lit(0)).orderBy(orderBy: _*)) + offset).cast(LongType))
 
   /** Unique (non-contiguous) ids without any shuffle: partition-local
     * sequence numbers striped by partition id
@@ -56,11 +57,11 @@ object SurrogateKeys {
       keyCol: String): DataFrame = {
     val fresh = incoming.select(col(keyCol)).distinct()
       .join(existing.select(keyCol), Seq(keyCol), "left_anti")
-    val maxId = existing.agg(coalesce(max(col(idCol)), lit(0L)).cast("long").as("m"))
+    val maxId = existing.agg(coalesce(max(col(idCol)), lit(0L)).cast(LongType).as("m"))
     val created = dense(fresh, idCol, Seq(col(keyCol).asc))
       .crossJoin(broadcast(maxId))
       .select((col(idCol) + col("m")).as(idCol), col(keyCol))
-    existing.select(col(idCol).cast("long").as(idCol), col(keyCol))
+    existing.select(col(idCol).cast(LongType).as(idCol), col(keyCol))
       .unionByName(created)
   }
 }

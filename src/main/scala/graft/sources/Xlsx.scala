@@ -495,7 +495,7 @@ object Xlsx {
   }
 
   /** One worksheet part being written: the header row on open, then one
-    * `writeRow` per data row, then `finish`.
+    * `writeRow` per data row (each as wide as the header), then `finish`.
     */
   private final class SheetPart(part: Path, header: Seq[String]) {
     // an OutputStreamWriter, not Files.newBufferedWriter: it replaces an
@@ -503,6 +503,8 @@ object Xlsx {
     private val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       new java.io.FileOutputStream(part.toFile), java.nio.charset.StandardCharsets.UTF_8))
     private var rowIdx = 1
+    // each column's A1 name, computed once for every row
+    private val colRefs = header.indices.map(colName).toArray
     // a part whose header fails never reaches the caller's close list,
     // so it closes its own stream before rethrowing
     try {
@@ -515,13 +517,13 @@ object Xlsx {
     }
 
     private def text(c: Int, v: Any): Unit = {
-      w.write(s"""<c r="${colName(c)}$rowIdx" t="inlineStr"><is><t>""")
+      w.write(s"""<c r="${colRefs(c)}$rowIdx" t="inlineStr"><is><t>""")
       w.write(escapeXml(String.valueOf(v)))
       w.write("</t></is></c>")
     }
     private def num(c: Int, v: String, style: Int): Unit = {
       val s = if (style > 0) s""" s="$style"""" else ""
-      w.write(s"""<c r="${colName(c)}$rowIdx"$s><v>$v</v></c>""")
+      w.write(s"""<c r="${colRefs(c)}$rowIdx"$s><v>$v</v></c>""")
     }
     def writeRow(cells: Seq[Any]): Unit = {
       w.write(s"""<row r="$rowIdx">""")

@@ -1,5 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.etl.{Fixtures, Pipeline}
 import graft.sources.Readers
 
@@ -10,15 +17,46 @@ import graft.sources.Readers
   */
 class PlanSpec extends SparkSpec {
 
+  /** `body`'s result and the physical plans of the queries session `s`
+    * executed meanwhile, in completion order. `Pipeline.run` and
+    * `StarLoader.load` pin their fan-out frames with an eager
+    * `localCheckpoint`, so what ran before a pin is planned, and read,
+    * here: the pinned frame's own plan starts at a one-node leaf.
+    * Queries of other sessions (other suites share the context) are not
+    * reported to `s`'s listeners.
+    */
+  private def executedDuring[T](s: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      val result = body
+      ListenerBusDrain(s.sparkContext)
+      (result, plans.asScala.toSeq)
+    } finally s.listenerManager.unregister(listener)
+  }
+
   test("entity pipeline: registry join is broadcast, dedup is the only wide exchange") {
-    val registry = spark.read.option("header", "true").csv(Fixtures.path("entidades.csv"))
-    val survey = Readers.csv(spark, Fixtures.path("survey_2026.csv"))
-    val result = Pipeline.run(survey, registry, Fixtures.config, 2026)
-    val plan = result.valid.queryExecution.executedPlan.toString
+    // Automatic broadcasting off: the fixture registry is small enough to
+    // broadcast without the hint, which must be what broadcasts it.
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val registry = s.read.option("header", "true").csv(Fixtures.path("entidades.csv"))
+    val survey = Readers.csv(s, Fixtures.path("survey_2026.csv"))
+    // the registry join runs inside run (the post-join pin); valid's
+    // plan continues from the pin
+    val (result, pinned) = executedDuring(s)(Pipeline.run(survey, registry, Fixtures.config, 2026))
+    assert(pinned.nonEmpty, "sanity: run should execute the post-join pin")
+    val plan = (pinned :+ result.valid.queryExecution.executedPlan).mkString("\n")
     assert(plan.contains("BroadcastHashJoin"), "registry join must broadcast")
     assert(!plan.contains("SortMergeJoin"), "no sort-merge in the identification phase")
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(hashExchanges <= 1, s"expected at most the dedup exchange, got $hashExchanges:\n$plan")
+    result.unpersist()
   }
 
   test("aggregation scan prunes to referenced columns only") {
@@ -186,7 +224,6 @@ class PlanSpec extends SparkSpec {
 
   test("ScalableIds fact path plans no partition-less Window; DenseIds stays contiguous") {
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -197,10 +234,12 @@ class PlanSpec extends SparkSpec {
 
     // Partition-less windows BELOW a broadcast build side are dimension
     // get-or-create (bounded by design: SurrogateKeys.dense scaladoc);
-    // anywhere else in a fact plan they are a one-task serialization
-    // point at scale. The walk descends into cached plans (StarLoader
-    // persists the fact stages, which would otherwise hide a window
-    // from the lineage) and stops at BroadcastExchange.
+    // anywhere else in a fact's lineage they are a one-task
+    // serialization point at scale. The lineage is the fact's own plan
+    // plus the plans that filled its pins (the pipeline's post-join pin
+    // and the star's valid pin, executed inside run and load); the walk
+    // descends into cached plans (the fused interests) and stops at
+    // BroadcastExchange.
     def walk(p: SparkPlan): Seq[String] = p match {
       case _: BroadcastExchangeExec => Seq.empty // dimension build side
       case b: BroadcastHashJoinExec => // AQE inputPlan has no exchanges yet
@@ -214,13 +253,18 @@ class PlanSpec extends SparkSpec {
       case i: InMemoryTableScanExec => walk(i.relation.cachedPlan)
       case other => other.children.flatMap(walk)
     }
-    def factWindows(df: DataFrame): Seq[String] = walk(df.queryExecution.executedPlan)
+    def factWindows(df: DataFrame, pins: Seq[SparkPlan]): Seq[String] =
+      (pins :+ df.queryExecution.executedPlan).flatMap(walk)
 
-    val registry = spark.read.option("header", "true").csv(Fixtures.path("entidades.csv"))
-    val survey = Readers.csv(spark, Fixtures.path("survey_2026.csv"))
-    val result = Pipeline.run(survey, registry, Fixtures.config, 2026)
+    val s = spark.newSession()
+    val registry = s.read.option("header", "true").csv(Fixtures.path("entidades.csv"))
+    val survey = Readers.csv(s, Fixtures.path("survey_2026.csv"))
+    val (result, pipelinePins) =
+      executedDuring(s)(Pipeline.run(survey, registry, Fixtures.config, 2026))
 
-    val scalable = StarLoader.load(result, idStrategy = graft.etl.StarLoader.ScalableIds)
+    val (scalable, scalablePins) =
+      executedDuring(s)(StarLoader.load(result, idStrategy = graft.etl.StarLoader.ScalableIds))
+    assert(scalablePins.nonEmpty, "sanity: load should execute the valid pin")
     val facts = Map(
       "fatoInquerito" -> scalable.fatoInquerito,
       "fatoFormacao" -> scalable.fatoFormacao,
@@ -228,24 +272,25 @@ class PlanSpec extends SparkSpec {
       "fatoPreferencia" -> scalable.fatoPreferencia,
       "fatoDisponibilidade" -> scalable.fatoDisponibilidade)
     facts.foreach { case (name, df) =>
-      val ws = factWindows(df)
+      val ws = factWindows(df, pipelinePins ++ scalablePins)
       assert(ws.isEmpty, s"$name plans a partition-less Window outside a broadcast side:\n${ws.mkString("\n")}")
     }
 
     // DenseIds (the reference-parity default) must still produce ids
     // 1..n in row order — and its window is exactly the one the
     // scalable path eliminates
-    val dense = StarLoader.load(result, idStrategy = graft.etl.StarLoader.DenseIds)
+    val (dense, densePins) =
+      executedDuring(s)(StarLoader.load(result, idStrategy = graft.etl.StarLoader.DenseIds))
     val denseIds = dense.fatoInquerito.select("id_inquerito")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(denseIds == (1L to denseIds.size), s"DenseIds not contiguous: $denseIds")
-    assert(factWindows(dense.fatoInquerito).nonEmpty,
+    assert(factWindows(dense.fatoInquerito, pipelinePins ++ densePins).nonEmpty,
       "sanity: the dense path should plan the (documented) partition-less window")
+    scalable.unpersist(); dense.unpersist(); result.unpersist()
   }
 
   test("star facts: the interest-comment pairing is the only shuffle join, under both id strategies") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
-    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledJoin}
@@ -255,7 +300,8 @@ class PlanSpec extends SparkSpec {
     // broadcast and hide the shape a survey-sized batch plans. Dimension
     // joins carry an explicit broadcast hint; anything else that joins
     // the facts now plans as a shuffle join and is caught here, unless it
-    // is the (id_inquerito, label) interest-comment pairing.
+    // is the (id_inquerito, label) interest-comment pairing. A fact's
+    // lineage includes the plans that filled its pins inside run and load.
     val s = spark.newSession()
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     def shuffleJoins(p: SparkPlan): Seq[SparkPlan] = {
@@ -278,9 +324,10 @@ class PlanSpec extends SparkSpec {
     }
     val registry = s.read.option("header", "true").csv(Fixtures.path("entidades.csv"))
     val survey = Readers.csv(s, Fixtures.path("survey_2026.csv"))
-    val result = Pipeline.run(survey, registry, Fixtures.config, 2026)
+    val (result, pipelinePins) =
+      executedDuring(s)(Pipeline.run(survey, registry, Fixtures.config, 2026))
     for (ids <- Seq(StarLoader.DenseIds, StarLoader.ScalableIds)) {
-      val star = StarLoader.load(result, idStrategy = ids)
+      val (star, starPins) = executedDuring(s)(StarLoader.load(result, idStrategy = ids))
       Map(
         "fatoInquerito" -> star.fatoInquerito,
         "fatoFormacao" -> star.fatoFormacao,
@@ -288,7 +335,8 @@ class PlanSpec extends SparkSpec {
         "comentario" -> star.comentario,
         "fatoPreferencia" -> star.fatoPreferencia,
         "fatoDisponibilidade" -> star.fatoDisponibilidade).foreach { case (name, df) =>
-        val joins = shuffleJoins(df.queryExecution.executedPlan)
+        val joins = (pipelinePins ++ starPins :+ df.queryExecution.executedPlan)
+          .flatMap(shuffleJoins)
         val other = joins.filterNot(isPairing)
         assert(other.isEmpty, s"$ids $name plans a shuffle join besides the pairing: " +
           other.map {

@@ -127,4 +127,37 @@ class PipelineSpec extends SparkSpec {
     assert(Review.summary(sk).total == survey.count())
     sk.unpersist()
   }
+
+  test("run pins the post-join frame in one job, load pins valid in its own") {
+    // inputs resolved first: the CSV header reads are not run's jobs
+    registry.schema; survey.schema
+    val (r, runJobs) = jobsDuring(Pipeline.run(survey, registry, config, 2026))
+    val (st, loadJobs) = jobsDuring(StarLoader.load(r))
+    // Each runs one query, its pin: run's jobs are the registry
+    // broadcast and the post-join pin; load's query stages (the pct max,
+    // the dedup and id-window shuffles) each run as a job before the pin.
+    // A persist + count at either fan-out point adds the count's jobs.
+    assert(runJobs == 2, s"Pipeline.run ran $runJobs jobs")
+    assert(loadJobs == 6, s"StarLoader.load ran $loadJobs jobs")
+    st.unpersist(); r.unpersist()
+  }
+
+  test("unpersist releases every pin of the result and of the star") {
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.execution.LogicalRDD
+    val r = Pipeline.run(survey, registry, config, 2026)
+    val st = StarLoader.load(r)
+    // the lazily filled caches (dedup ranking, fused interests) too
+    Seq(r.duplicates, st.fatoInteresse).foreach(_.write.format("noop").mode("overwrite").save())
+    val cacheManager = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    val ids = (r.pins ++ st.pins).map(df => df.queryExecution.logical match {
+      case p: LogicalRDD => p.rdd.id
+      case _ => cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+        .get.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id
+    })
+    def live = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ids.size == 4 && ids.forall(live.contains), s"pins $ids, live $live")
+    st.unpersist(); r.unpersist()
+    assert(ids.filter(live.contains).isEmpty, s"still persisted after unpersist: $ids")
+  }
 }
