@@ -66,10 +66,12 @@ object HammingIndex {
 
   /** Probe result: `pairs` = (id_existing, id_incoming, hamming),
     * `droppedBuckets` = buckets suppressed by the combined cap at probe
-    * time (buckets deleted earlier are in the meta row).
+    * time (buckets deleted earlier are in the meta row). `pairs` is
+    * persisted, or a local checkpoint over several generations;
+    * [[unpersist]] releases either.
     */
   final case class Probe(pairs: DataFrame, droppedBuckets: Long) {
-    def unpersist(): Unit = pairs.unpersist()
+    def unpersist(): Unit = graft.Pins.release(pairs)
   }
 
   /** Output of [[capDriftReport]]: buckets whose true size exceeds the

@@ -18,6 +18,14 @@ import org.apache.spark.sql.functions._
   * processing, and — when the incoming batch is broadcast-sized, the
   * normal case — no shuffle of the stored entries at all).
   *
+  * One kernel states the lifecycle once: `sign` (shingle, prune with the
+  * frozen stop set, MinHash, band) serves build, append and every probe;
+  * `indexRows` writes the meta, doc and entry rows of build, append and
+  * compact; `recount` applies the frozen cap over exact bucket sizes for
+  * build and compact; `verify` is the Jaccard join that ends every
+  * probe; `without` is the dedup forms' drop-set and md5 rail; `recipe`
+  * is the one build-parameter check across generations.
+  *
   * Index layout: ONE DataFrame (so one Parquet artifact), row kind
   * discriminated by `band`:
   *   - `band == -1` (one row): metadata — `bucket` holds the frozen
@@ -49,9 +57,10 @@ import org.apache.spark.sql.functions._
   * probe results are IDENTICAL to the one-shot operator — pinned by
   * LshIndexSpec.
   *
-  * Bucket keys are stored as strings in both hash modes (casting the
-  * production int key is injective, so bucket groups are unchanged);
-  * one schema means one Parquet artifact regardless of mode.
+  * Bucket keys are [[TextDedup.bandKey]], the one-shot operator's own
+  * keys, stored as strings in both hash modes (casting the production
+  * int key is injective, so bucket groups are unchanged); one schema
+  * means one Parquet artifact regardless of mode.
   */
 object LshIndex {
 
@@ -90,21 +99,214 @@ object LshIndex {
     (meta, stop)
   }
 
-  private def shingleCol(textCol: String, n: Int, portable: Boolean): Column =
-    if (portable) TextDedup.shingleHashesPortable(col(textCol), n)
-    else TextDedup.shingleHashes(col(textCol), n)
+  private def shingleCol(textCol: String, m: Meta): Column =
+    if (m.portableHash) TextDedup.shingleHashesPortable(col(textCol), m.n)
+    else TextDedup.shingleHashes(col(textCol), m.n)
 
-  private def pruneUdf(stop: Array[Long]) = {
-    val stopSet = stop.toSet
-    udf((hs: Seq[Long]) => if (hs == null) null else hs.filterNot(stopSet.contains).toArray)
+  /** `(idCol, text_md5, sh)`: the exact-text digest and the raw shingle
+    * hashes of `df`'s text under `m`'s shingle recipe.
+    */
+  private def shingled(m: Meta, df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), md5(col(textCol)).as("text_md5"), shingleCol(textCol, m).as("sh"))
+
+  /** The signing step under recipe `m` and frozen stop set `stop`:
+    * `shingled`'s `sh` pruned by the stop set, with its MinHash `sig`
+    * (persisted — the caller's first action over the band rows fills
+    * it), and the band rows `(id, band, bucket)` over it.
+    */
+  private def sign(m: Meta, stop: Array[Long], shingled: DataFrame,
+      id: String): (DataFrame, DataFrame) = {
+    val pruned =
+      if (stop.isEmpty) shingled
+      else shingled.withColumn("sh", TextDedup.pruneUdf(stop)(col("sh")))
+    val docs = pruned
+      .withColumn("sig", udf(TextDedup.sigFromHashesKernel(m.numPerm, m.seed)).apply(col("sh")))
+      .persist()
+    val key = TextDedup.bandKey(col("sig"), m.numPerm / m.bands, m.portableHash)
+    (docs, docs.select(col(id), posexplode(transform(sequence(lit(0), lit(m.bands - 1)),
+      b => key(b).cast("string"))).as(Seq("band", "bucket"))))
   }
 
-  /** Band-bucket key over a signature column, as a string — identical
-    * group structure to [[TextDedup]]'s lshCore keys in both modes.
+  /** The index rows: the meta row of `m`/`stop`, a doc row per `docs`
+    * row `(idCol, sh, sig, text_md5)` and an entry row per `entries` row
+    * `(idCol, band, bucket, cnt)`.
     */
-  private def bucketOf(sig: Column, rows: Int, portable: Boolean): Column => Column =
-    if (portable) b => concat_ws(",", transform(slice(sig, b * rows + 1, lit(rows)), _.cast("string")))
-    else b => hash(slice(sig, b * rows + 1, lit(rows)), b).cast("string")
+  private def indexRows(idCol: String, m: Meta, stop: Array[Long],
+      docs: DataFrame, entries: DataFrame): DataFrame = {
+    val noHashes = lit(null).cast("array<bigint>")
+    val noDigest = lit(null).cast("string")
+    docs.sparkSession.range(1).select(
+        lit(null).cast(docs.schema(idCol).dataType).as(idCol), lit(MetaBand).as("band"),
+        lit(metaString(m)).as("bucket"), lit(null).cast("long").as("cnt"),
+        typedLit(stop.toSeq).as("sh"), noHashes.as("sig"), noDigest.as("text_md5"))
+      .unionAll(docs.select(
+        col(idCol), lit(DocBand).as("band"), noDigest.as("bucket"),
+        lit(null).cast("long").as("cnt"), col("sh"), col("sig"), col("text_md5")))
+      .unionAll(entries.select(
+        col(idCol), col("band"), col("bucket"), col("cnt"),
+        noHashes.as("sh"), noHashes.as("sig"), noDigest.as("text_md5")))
+  }
+
+  /** The index over the persisted `docs` and their `(idCol, band,
+    * bucket)` entries under the frozen cap: exact bucket sizes, buckets
+    * over `m`'s cap dropped and their number recorded as
+    * `builtDroppedBuckets`. The result is persisted and materialized;
+    * `docs` is released.
+    */
+  private def recount(idCol: String, m: Meta, stop: Array[Long],
+      docs: DataFrame, entries: DataFrame): DataFrame = {
+    // persisted: read by the dropped count AND by the cap join of the
+    // final materialization — left lazy, that count re-ran the aggregate
+    val counts = entries.groupBy("band", "bucket").agg(count(lit(1)).as("cnt")).persist()
+    val dropped = counts.filter(col("cnt") > m.maxBucketSize).count()
+    val kept = entries.join(counts.filter(col("cnt") <= m.maxBucketSize), Seq("band", "bucket"))
+    val index = indexRows(idCol, m.copy(builtDroppedBuckets = dropped), stop, docs, kept)
+      .persist()
+    index.count()
+    counts.unpersist()
+    docs.unpersist()
+    index
+  }
+
+  /** [[recount]] of the stored doc and entry rows of `rows` (one or more
+    * generations, meta rows ignored) under `recipe`, `nDocs` recounted.
+    */
+  private def compacted(rows: DataFrame, idCol: String, recipe: (Meta, Array[Long])): DataFrame = {
+    val (m, stop) = recipe
+    val docs = rows.filter(col("band") === DocBand)
+      .select(col(idCol), col("sh"), col("sig"), col("text_md5"))
+      .persist()
+    recount(idCol, m.copy(nDocs = docs.count()), stop, docs,
+      rows.filter(col("band") >= 0).select(col(idCol), col("band"), col("bucket")))
+  }
+
+  /** Sign the incoming batch: `(id_incoming, sh, sig)` and its band
+    * rows, both persisted. No eager count: the caller's first action
+    * over the band rows fills both, and every caller materializes its
+    * pairs before releasing them.
+    */
+  private def signIncoming(m: Meta, stop: Array[Long], incoming: DataFrame,
+      idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val (inDocs, inBanded) = sign(m, stop,
+      incoming.select(col(idCol).as("id_incoming"), shingleCol(textCol, m).as("sh")),
+      "id_incoming")
+    (inDocs, inBanded.persist())
+  }
+
+  /** Candidate `(id_existing, id_incoming)` pairs verified by the
+    * Jaccard of their pruned shingle sets: the stored side from
+    * `stored`'s doc rows, the incoming side from `inDocs`. Lazy.
+    */
+  private def verify(cands: DataFrame, stored: Seq[DataFrame], idCol: String,
+      inDocs: DataFrame, threshold: Double): DataFrame = {
+    val docsSh = stored.map(_.filter(col("band") === DocBand)
+      .select(col(idCol).as("id_existing"), col("sh").as("sh_a"))).reduce(_ unionAll _)
+    cands.select("id_existing", "id_incoming").distinct()
+      .join(docsSh, "id_existing")
+      .join(inDocs.select(col("id_incoming"), col("sh").as("sh_b")), "id_incoming")
+      .withColumn("jaccard", TextDedup.jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_existing"), col("id_incoming"), col("jaccard"))
+  }
+
+  /** The probe under the recipe `m`/`stop` read from `index`: its lazy
+    * pair plan (`id_existing`, `id_incoming`, `jaccard`), the
+    * touched-bucket rows over the cap, and the incoming-side persists
+    * the plan reads (callers unpersist them once the pairs are
+    * materialized). With `dropMetric` set, the plan observes under that
+    * name the number of distinct buckets the cap suppresses.
+    */
+  private def probe(
+      index: DataFrame, m: Meta, stop: Array[Long], incoming: DataFrame,
+      idCol: String, textCol: String, threshold: Double,
+      dropMetric: Option[String]): (DataFrame, DataFrame, Seq[DataFrame]) = {
+    val (inDocs, inBanded) = signIncoming(m, stop, incoming, idCol, textCol)
+    // Distinct incoming buckets are bounded by bands * |incoming| — the
+    // incremental-ingest case broadcasts this side, so stored entries
+    // are scanned (band >= 0 pushes to Parquet) but never shuffled.
+    // Entries per bucket are capped at build, incoming counts ride the
+    // join row, so the joined frame is bounded by cap * |touched buckets|.
+    val joined = index.filter(col("band") >= 0)
+      .select(col(idCol).as("id_existing"), col("band"), col("bucket"), col("cnt"))
+      .join(inBanded.groupBy("band", "bucket").agg(count(lit(1)).as("cnt_i")),
+        Seq("band", "bucket"))
+    val over = col("cnt") + col("cnt_i") > m.maxBucketSize
+    val observed = dropMetric.fold(joined)(name => joined.observe(name,
+      size(collect_set(when(over, struct(col("band"), col("bucket"))))).cast("long").as("n")))
+    val cands = observed.filter(!over).join(inBanded, Seq("band", "bucket"))
+    (verify(cands, Seq(index), idCol, inDocs, threshold), joined.filter(over),
+      Seq(inDocs, inBanded))
+  }
+
+  /** [[pairsAgainst]] under the recipe already read from `index`. */
+  private def pairsWith(
+      index: DataFrame, recipe: (Meta, Array[Long]), incoming: DataFrame,
+      idCol: String, textCol: String, threshold: Double): TextDedup.LshPairs = {
+    val (m, stop) = recipe
+    val metric = s"lsh_probe_dropped_${java.util.UUID.randomUUID()}"
+    val (pairs, overJoined, cached) =
+      probe(index, m, stop, incoming, idCol, textCol, threshold, Some(metric))
+    val result = pairs.persist()
+    val droppedBuckets = TextDedup.countObserved(result, metric).getOrElse(
+      overJoined.select("band", "bucket").distinct().count())
+    cached.foreach(_.unpersist())
+    TextDedup.LshPairs(result, droppedBuckets, stop.length)
+  }
+
+  /** `incoming` minus the incoming ids of `pairs` and minus exact-text
+    * matches of `stored`'s doc rows (the md5 rail), columns and order
+    * preserved. The drop set is materialized first, then `pairs` and the
+    * persists in `held` are released: a lazy anti-join against them
+    * would re-run the probe at the caller's first action.
+    */
+  private def without(incoming: DataFrame, idCol: String, textCol: String,
+      pairs: DataFrame, held: Seq[DataFrame], stored: Seq[DataFrame]): DataFrame = {
+    val dupIds = pairs.select(col("id_incoming").as(idCol)).distinct().localCheckpoint()
+    (pairs +: held).foreach(_.unpersist())
+    val th = Iterator.from(0).map(i => s"__th$i").find(c => !incoming.columns.contains(c)).get
+    val exTextHashes = stored.map(_.filter(col("band") === DocBand)
+        .select(col("text_md5").as(th))).reduce(_ unionAll _)
+      .na.drop().distinct()
+    incoming.join(dupIds, Seq(idCol), "left_anti")
+      .withColumn(th, md5(col(textCol)))
+      .join(exTextHashes, Seq(th), "left_anti")
+      .select(incoming.columns.map(col): _*)
+  }
+
+  /** The recipes of `indexes`, which must agree on the build parameters
+    * that place a document in a bucket.
+    */
+  private def recipe(indexes: Seq[DataFrame]): Seq[(Meta, Array[Long])] = {
+    require(indexes.nonEmpty, "need at least one index generation")
+    val recipes = indexes.map(readMeta)
+    val base = recipes.head._1
+    require(recipes.forall { case (m, _) => m.n == base.n && m.numPerm == base.numPerm &&
+      m.bands == base.bands && m.seed == base.seed && m.portableHash == base.portableHash },
+      "index generations disagree on build parameters " +
+        "(n/numPerm/bands/seed/hash mode) — rebuild with one recipe")
+    recipes
+  }
+
+  /** Stored shingles pruned by DIFFERENT stop sets live in different
+    * spaces — comparing or counting them together would be silently
+    * wrong.
+    */
+  private def requireOneStopSet(recipes: Seq[(Meta, Array[Long])]): Unit = {
+    val sets = recipes.map(_._2.sorted.toSeq)
+    require(sets.forall(_ == sets.head),
+      "index generations disagree on the frozen stop set — stored " +
+        "shingles were pruned differently and share no comparable space; " +
+        "rebuild the generations from raw text with one recipe")
+  }
+
+  /** The global-cap / merge compatibility bar: one cap and one frozen
+    * stop set across generations.
+    */
+  private def requireOneShingleSpace(recipes: Seq[(Meta, Array[Long])]): Unit = {
+    require(recipes.forall(_._1.maxBucketSize == recipes.head._1.maxBucketSize),
+      "index generations disagree on maxBucketSize — a global cap needs one cap")
+    requireOneStopSet(recipes)
+  }
 
   /** Build the index over the kept corpus. Returned frame is persisted
     * (call `.unpersist()` once written); write it with
@@ -132,156 +334,34 @@ object LshIndex {
     require(numPerm % bands == 0, "numPerm must divide into bands")
     require(maxDocFreqRatio > 0.0, "maxDocFreqRatio must be positive")
     require(minDocFreq >= 0, "minDocFreq must be non-negative")
-    val rows = numPerm / bands
-
-    // nDocs from a column-pruned scan of the input — the former
-    // shCached.count() materialized md5 + the shingle kernel into a
-    // cache just to count rows, paying a full kernel pass before any
-    // consumer needed it (r15; guide §5: don't cache corpus-sized
-    // intermediates the plan doesn't re-read)
-    val nDocs = df.count()
-    val shRaw = df
-      .select(col(idCol), md5(col(textCol)).as("text_md5"),
-        shingleCol(textCol, n, portableHash).as("sh"))
+    // nDocs from a column-pruned scan of the input: counting the
+    // shingle frame would pay a full kernel pass before any consumer
+    // needed it
+    val m = Meta(n, numPerm, bands, seed, portableHash, maxBucketSize, 0L, df.count())
     // same two-bar policy as lshCore: ratio with an absolute floor,
     // both recomputed from THIS corpus; the result is then frozen.
     // The shingle frame is persisted ONLY when a stop pass will read it
-    // before the doc-row persist does (ratio < 1): with pruning
-    // disabled the docs persist below is the sole consumer and an
-    // extra cache layer is pure memory pressure.
-    val shCached = if (maxDocFreqRatio >= 1.0) shRaw else shRaw.persist()
+    // before the doc persist does: with pruning disabled that persist
+    // is the sole consumer and an extra cache layer is pure memory
+    // pressure.
+    val pruning = maxDocFreqRatio < 1.0
+    val sh = if (pruning) shingled(m, df, idCol, textCol).persist()
+      else shingled(m, df, idCol, textCol)
     val stop: Array[Long] =
-      if (maxDocFreqRatio >= 1.0) Array.empty
+      if (!pruning) Array.empty
       else {
-        val cutoff = math.max((nDocs * maxDocFreqRatio).toLong, minDocFreq)
-        shCached.select(explode(col("sh")).as("__h"))
+        val cutoff = math.max((m.nDocs * maxDocFreqRatio).toLong, minDocFreq)
+        sh.select(explode(col("sh")).as("__h"))
           .groupBy("__h").count()
           .filter(col("count") > cutoff)
           .select("__h").collect().map(_.getLong(0))
       }
-    val pruned =
-      if (stop.isEmpty) shCached
-      else shCached.withColumn("sh", pruneUdf(stop)(col("sh")))
-    val docs = pruned
-      .withColumn("sig",
-        udf(TextDedup.sigFromHashesKernel(numPerm, seed)).apply(col("sh")))
-      .persist()
-    // no eager docs.count(): the builtDropped count below is the first
-    // action over this subtree and fills the persist in the same pass
-    // (an explicit count was one extra scheduled job per build — the
-    // r11 lshCore rule applied here, r14). The pruned layer is no
-    // longer separately persisted/counted either (r15): the docs
-    // persist holds the pruned shingles column itself, so the former
-    // intermediate cache duplicated the biggest column one layer down.
-
-    val entriesRaw = docs.select(
-      col(idCol),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        bucketOf(col("sig"), rows, portableHash))).as(Seq("band", "bucket")))
-    // persisted: consumed by the dropped-bucket count here AND by the
-    // entry-row cap join inside the final index materialization — left
-    // lazy, the final count re-ran the whole bucket aggregate (r14)
-    val counts = entriesRaw.groupBy("band", "bucket").agg(count(lit(1)).as("cnt"))
-      .persist()
-    val builtDropped = counts.filter(col("cnt") > maxBucketSize).count()
-    val entries = entriesRaw
-      .join(counts.filter(col("cnt") <= maxBucketSize), Seq("band", "bucket"))
-
-    val idType = df.schema(idCol).dataType
-    val meta = Meta(n, numPerm, bands, seed, portableHash, maxBucketSize, builtDropped, nDocs)
-    val metaRow = df.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaBand).as("band"),
-      lit(metaString(meta)).as("bucket"),
-      lit(null).cast("long").as("cnt"),
-      typedLit(stop.toSeq).as("sh"),
-      lit(null).cast("array<bigint>").as("sig"),
-      lit(null).cast("string").as("text_md5"))
-    val docRows = docs.select(
-      col(idCol), lit(DocBand).as("band"),
-      lit(null).cast("string").as("bucket"), lit(null).cast("long").as("cnt"),
-      col("sh"), col("sig"), col("text_md5"))
-    val entryRows = entries.select(
-      col(idCol), col("band"), col("bucket"), col("cnt"),
-      lit(null).cast("array<bigint>").as("sh"),
-      lit(null).cast("array<bigint>").as("sig"),
-      lit(null).cast("string").as("text_md5"))
-
-    val index = metaRow.unionAll(docRows).unionAll(entryRows).persist()
-    index.count()
-    counts.unpersist()
-    docs.unpersist()
-    shCached.unpersist() // no-op when the stop pass never persisted it
+    // no eager count of the signed docs: the dropped-bucket count is the
+    // first action over them and fills their persist in the same pass
+    val (docs, entries) = sign(m, stop, sh, idCol)
+    val index = recount(idCol, m, stop, docs, entries)
+    sh.unpersist() // no-op when the stop pass never persisted it
     index
-  }
-
-  /** Shingle, prune (frozen stop set), sign and band the incoming batch —
-    * the probe-side CPU. Returns (`inSh` = id_incoming/sh_b,
-    * `inBanded` = id_incoming/band/bucket), both persisted; callers
-    * unpersist.
-    */
-  private def signIncoming(
-      m: Meta, stop: Array[Long], incoming: DataFrame,
-      idCol: String, textCol: String): (DataFrame, DataFrame) = {
-    val rows = m.numPerm / m.bands
-    val inShRaw = incoming.select(
-      col(idCol).as("id_incoming"),
-      shingleCol(textCol, m.n, m.portableHash).as("sh_b"))
-    val inSh =
-      (if (stop.isEmpty) inShRaw
-       else inShRaw.withColumn("sh_b", pruneUdf(stop)(col("sh_b")))).persist()
-    val inBanded = inSh
-      .select(col("id_incoming"),
-        udf(TextDedup.sigFromHashesKernel(m.numPerm, m.seed)).apply(col("sh_b")).as("sig"))
-      .select(col("id_incoming"),
-        posexplode(transform(sequence(lit(0), lit(m.bands - 1)),
-          bucketOf(col("sig"), rows, m.portableHash))).as(Seq("band", "bucket")))
-      .persist()
-    // No eager counts: the caller's first action over inBanded fills
-    // BOTH persists in one pass (inSh is inBanded's parent), and every
-    // caller materializes its result before unpersisting these — two
-    // explicit counts here were two extra scheduled jobs per probe (r11).
-    (inSh, inBanded)
-  }
-
-  /** The probe under the recipe `m`/`stop` read from `index`: its lazy
-    * pair plan (`id_existing`, `id_incoming`, `jaccard`), the
-    * touched-bucket rows over the cap, and the incoming-side persists
-    * the plan reads (callers unpersist them once the pairs are
-    * materialized). With `dropMetric` set, the plan observes under that
-    * name the number of distinct buckets the cap suppresses.
-    */
-  private def probe(
-      index: DataFrame, m: Meta, stop: Array[Long], incoming: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      dropMetric: Option[String]): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val (inSh, inBanded) = signIncoming(m, stop, incoming, idCol, textCol)
-
-    // Distinct incoming buckets are bounded by bands * |incoming| — the
-    // incremental-ingest case broadcasts this side, so stored entries
-    // are scanned (band >= 0 pushes to Parquet) but never shuffled.
-    val inCnt = inBanded.groupBy("band", "bucket").agg(count(lit(1)).as("cnt_i"))
-    val entries = index.filter(col("band") >= 0)
-      .select(col(idCol).as("id_existing"), col("band"), col("bucket"), col("cnt"))
-    // Entries per bucket are capped at build, incoming counts ride the
-    // join row, so this frame is bounded by cap * |touched buckets|.
-    val joined = entries.join(inCnt, Seq("band", "bucket"))
-    val over = col("cnt") + col("cnt_i") > m.maxBucketSize
-    val observed = dropMetric.fold(joined)(name => joined.observe(name,
-      size(collect_set(when(over, struct(col("band"), col("bucket"))))).cast("long").as("n")))
-    val cands = observed.filter(!over)
-      .join(inBanded, Seq("band", "bucket"))
-      .select("id_existing", "id_incoming").distinct()
-
-    val docsSh = index.filter(col("band") === DocBand)
-      .select(col(idCol).as("id_existing"), col("sh").as("sh_a"))
-    val pairs = cands
-      .join(docsSh, "id_existing")
-      .join(inSh, "id_incoming")
-      .withColumn("jaccard", TextDedup.jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_existing"), col("id_incoming"), col("jaccard"))
-    (pairs, joined.filter(over), Seq(inSh, inBanded))
   }
 
   /** Cross-corpus near-dup pairs against the stored index: identical
@@ -303,17 +383,8 @@ object LshIndex {
       incoming: DataFrame,
       idCol: String,
       textCol: String,
-      threshold: Double = 0.5): TextDedup.LshPairs = {
-    val (m, stop) = readMeta(index)
-    val metric = s"lsh_probe_dropped_${java.util.UUID.randomUUID()}"
-    val (pairs, overJoined, cached) =
-      probe(index, m, stop, incoming, idCol, textCol, threshold, Some(metric))
-    val result = pairs.persist()
-    val droppedBuckets = TextDedup.countObserved(result, metric).getOrElse(
-      overJoined.select("band", "bucket").distinct().count())
-    cached.foreach(_.unpersist())
-    TextDedup.LshPairs(result, droppedBuckets, stop.length)
-  }
+      threshold: Double = 0.5): TextDedup.LshPairs =
+    pairsWith(index, readMeta(index), incoming, idCol, textCol, threshold)
 
   /** Index-backed twin of [[TextDedup.dedupAgainst]]: `incoming` minus
     * near-dups of the indexed corpus (LSH pairs at `threshold`) minus
@@ -330,7 +401,12 @@ object LshIndex {
       threshold: Double = 0.8): DataFrame =
     dedupAgainstWith(index, readMeta(index), incoming, idCol, textCol, threshold)
 
-  /** [[dedupAgainst]] under the recipe already read from `index`. */
+  /** [[dedupAgainst]] under the recipe already read from `index`. The
+    * pairs persist is filled by the drop set's job; it is there for its
+    * statistics: the checkpoint then carries the materialized size, so
+    * the anti-join is planned as a broadcast, as over any small cached
+    * frame.
+    */
   private[operators] def dedupAgainstWith(
       index: DataFrame,
       recipe: (Meta, Array[Long]),
@@ -341,24 +417,7 @@ object LshIndex {
     val (m, stop) = recipe
     val (pairs, _, cached) =
       probe(index, m, stop, incoming, idCol, textCol, threshold, dropMetric = None)
-    // the drop set is the one materialization: a lazy anti-join against
-    // the probe would re-run it, and its incoming-side persists, at the
-    // caller's first action. The pairs persist is filled by that same
-    // job; it is there for its statistics: the checkpoint then carries
-    // the materialized size, so the anti-join below is planned as a
-    // broadcast, as over any small cached frame.
-    val found = pairs.persist()
-    val dupIds = found.select(col("id_incoming").as(idCol))
-      .distinct().localCheckpoint()
-    (found +: cached).foreach(_.unpersist())
-    val th = Iterator.from(0).map(i => s"__th$i")
-      .find(c => !incoming.columns.contains(c)).get
-    val exTextHashes = index.filter(col("band") === DocBand)
-      .select(col("text_md5").as(th)).na.drop().distinct()
-    incoming.join(dupIds, Seq(idCol), "left_anti")
-      .withColumn(th, md5(col(textCol)))
-      .join(exTextHashes, Seq(th), "left_anti")
-      .select(incoming.columns.map(col): _*)
+    without(incoming, idCol, textCol, pairs.persist(), cached, Seq(index))
   }
 
   /** Append new documents (already deduped — the caller's survivors) to
@@ -391,52 +450,19 @@ object LshIndex {
       idCol: String,
       textCol: String): DataFrame = {
     val (m, stop) = recipe
-    val rows = m.numPerm / m.bands
-
-    val sh = newDocs.select(
-      col(idCol), md5(col(textCol)).as("text_md5"),
-      shingleCol(textCol, m.n, m.portableHash).as("sh"))
-    val shPruned = if (stop.isEmpty) sh else sh.withColumn("sh", pruneUdf(stop)(col("sh")))
-    val docs = shPruned
-      .withColumn("sig",
-        udf(TextDedup.sigFromHashesKernel(m.numPerm, m.seed)).apply(col("sh")))
-      .persist() // filled by the appended index's count below
-
-    val entriesRaw = docs.select(
-      col(idCol),
-      posexplode(transform(sequence(lit(0), lit(m.bands - 1)),
-        bucketOf(col("sig"), rows, m.portableHash))).as(Seq("band", "bucket")))
-    val counts = entriesRaw.groupBy("band", "bucket").agg(count(lit(1)).as("cnt"))
-
-    val idType = newDocs.schema(idCol).dataType
-    val newMetaRow = newDocs.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaBand).as("band"),
-      lit(metaString(m.copy(nDocs = m.nDocs + nNew))).as("bucket"),
-      lit(null).cast("long").as("cnt"),
-      typedLit(stop.toSeq).as("sh"),
-      lit(null).cast("array<bigint>").as("sig"),
-      lit(null).cast("string").as("text_md5"))
-    val docRows = docs.select(
-      col(idCol), lit(DocBand).as("band"),
-      lit(null).cast("string").as("bucket"), lit(null).cast("long").as("cnt"),
-      col("sh"), col("sig"), col("text_md5"))
-    val entryRows = entriesRaw.join(counts, Seq("band", "bucket")).select(
-      col(idCol), col("band"), col("bucket"), col("cnt"),
-      lit(null).cast("array<bigint>").as("sh"),
-      lit(null).cast("array<bigint>").as("sig"),
-      lit(null).cast("string").as("text_md5"))
-
+    val (docs, entries) = sign(m, stop, shingled(m, newDocs, idCol, textCol), idCol)
+    val counted = entries.join(
+      entries.groupBy("band", "bucket").agg(count(lit(1)).as("cnt")), Seq("band", "bucket"))
     val appended = index.filter(col("band") =!= MetaBand)
-      .unionAll(newMetaRow).unionAll(docRows).unionAll(entryRows)
+      .unionAll(indexRows(idCol, m.copy(nDocs = m.nDocs + nNew), stop, docs, counted))
       .persist()
-    appended.count()
+    appended.count() // fills the docs persist too
     docs.unpersist()
     appended
   }
 
-  /** The staleness monitor (r9, closing the SCALE.md `staleness`
-    * record's loop): reports whether any shingle ABSENT from the frozen
+  /** The staleness monitor, closing the SCALE.md `staleness` record's
+    * loop: reports whether any shingle ABSENT from the frozen
     * stop set has grown past the stop-set bar in the CURRENT corpus —
     * the exact condition under which the measured staleness defects
     * switch on (4-5x probe cost, several-fold spurious pairs, silently
@@ -463,21 +489,8 @@ object LshIndex {
       index: DataFrame,
       maxDocFreqRatio: Double = 0.5,
       minDocFreq: Long = TextDedup.DefaultMinDocFreq,
-      maxOffenders: Int = 100): StalenessReport = {
-    require(maxDocFreqRatio > 0.0 && maxDocFreqRatio < 1.0,
-      s"maxDocFreqRatio must be in (0,1) for a meaningful bar, got $maxDocFreqRatio")
-    require(maxOffenders >= 1, s"maxOffenders must be >= 1, got $maxOffenders")
-    val (m, _) = readMeta(index)
-    val cutoff = math.max((m.nDocs * maxDocFreqRatio).toLong, minDocFreq)
-    val offenders = index.filter(col("band") === DocBand)
-      .select(explode(col("sh")).as("__h"))
-      .groupBy("__h").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") > cutoff)
-      .orderBy(col("__df").desc, col("__h"))
-      .limit(maxOffenders)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    StalenessReport(m.nDocs, cutoff, offenders.nonEmpty, offenders)
-  }
+      maxOffenders: Int = 100): StalenessReport =
+    stalenessReportMany(Seq(index), maxDocFreqRatio, minDocFreq, maxOffenders)
 
   /** The monitor-then-rebuild nightly loop as one call: run
     * [[stalenessReport]]; if it fires, [[build]] a fresh index over
@@ -501,8 +514,9 @@ object LshIndex {
       textCol: String,
       maxDocFreqRatio: Double = 0.5,
       minDocFreq: Long = TextDedup.DefaultMinDocFreq): (DataFrame, StalenessReport) = {
-    val (m, _) = readMeta(index)
-    val report = stalenessReport(index, maxDocFreqRatio, minDocFreq)
+    val recipe = readMeta(index)
+    val m = recipe._1
+    val report = staleness(Seq(index), Seq(recipe), maxDocFreqRatio, minDocFreq, 100)
     if (!report.crossed) (index, report)
     else {
       val n = corpus.count()
@@ -536,22 +550,29 @@ object LshIndex {
       indexes: Seq[DataFrame],
       maxDocFreqRatio: Double = 0.5,
       minDocFreq: Long = TextDedup.DefaultMinDocFreq,
-      maxOffenders: Int = 100): StalenessReport = {
+      maxOffenders: Int = 100): StalenessReport =
+    staleness(indexes, indexes.map(readMeta), maxDocFreqRatio, minDocFreq, maxOffenders)
+
+  /** [[stalenessReportMany]] under the `recipes` of `indexes`, read
+    * only once the arguments are checked.
+    */
+  private def staleness(
+      indexes: Seq[DataFrame],
+      recipes: => Seq[(Meta, Array[Long])],
+      maxDocFreqRatio: Double,
+      minDocFreq: Long,
+      maxOffenders: Int): StalenessReport = {
     require(indexes.nonEmpty, "need at least one index generation")
     require(maxDocFreqRatio > 0.0 && maxDocFreqRatio < 1.0,
       s"maxDocFreqRatio must be in (0,1) for a meaningful bar, got $maxDocFreqRatio")
     require(maxOffenders >= 1, s"maxOffenders must be >= 1, got $maxOffenders")
-    val metasStops = indexes.map(readMeta)
-    val metas = metasStops.map(_._1)
+    val rs = recipes
+    val metas = rs.map(_._1)
     require(metas.forall(m => m.n == metas.head.n &&
       m.portableHash == metas.head.portableHash),
       "index generations disagree on the shingle recipe (n / hash mode) — " +
         "their stored shingle hashes share no comparable space")
-    val stops = metasStops.map(_._2.sorted.toSeq)
-    require(stops.forall(_ == stops.head),
-      "index generations disagree on the frozen stop set — stored " +
-        "shingles were pruned differently and share no comparable space; " +
-        "rebuild the generations from raw text with one recipe")
+    requireOneStopSet(rs)
     val nDocs = metas.map(_.nDocs).sum
     val cutoff = math.max((nDocs * maxDocFreqRatio).toLong, minDocFreq)
     val offenders = indexes
@@ -577,9 +598,8 @@ object LshIndex {
     * typed); ids must be unique across ALL generations and the batch.
     *
     * Bucket-cap semantics are selectable, and OPT-IN strictness is the
-    * family default — the r9 decision closing r8 VERDICT ask #3:
-    * `globalCap = false` everywhere ([[pairsAgainstMany]] /
-    * [[dedupAgainstMany]] here, both `SimHashIndex.*AgainstMany`
+    * family default: `globalCap = false` everywhere ([[pairsAgainstMany]]
+    * / [[dedupAgainstMany]] here, both `SimHashIndex.*AgainstMany`
     * fan-outs), because default-on would (a) bolt the cross-generation
     * count pass onto every probe that never asked for union-cap parity,
     * and (b) silently impose the stricter compatibility bar (shared cap
@@ -598,7 +618,9 @@ object LshIndex {
     * generations is capped by each generation's combined count, not the
     * global one; generations stay fully independent artifacts and may
     * even disagree on frozen stop sets (the incoming batch is re-pruned
-    * per generation). With `globalCap = true` the probe runs ONE
+    * per generation). The returned pairs are a local checkpoint;
+    * `LshPairs.unpersist` releases it. With `globalCap = true` the
+    * probe runs ONE
     * cross-generation count pass — union of the touched buckets' entry
     * rows, grouped by (band, bucket) — and suppresses buckets whose
     * GLOBAL size (all generations + incoming) exceeds the shared cap:
@@ -618,26 +640,20 @@ object LshIndex {
       textCol: String,
       threshold: Double = 0.5,
       globalCap: Boolean = false): TextDedup.LshPairs = {
-    require(indexes.nonEmpty, "need at least one index generation")
-    val metasStops = indexes.map(readMeta)
-    val metas = metasStops.map(_._1)
-    val base = metas.head
-    require(metas.forall(m => m.n == base.n && m.numPerm == base.numPerm &&
-      m.bands == base.bands && m.seed == base.seed &&
-      m.portableHash == base.portableHash),
-      "index generations disagree on build parameters " +
-        "(n/numPerm/bands/seed/hash mode) — rebuild with one recipe")
+    val recipes = recipe(indexes)
     if (!globalCap) {
-      val probes = indexes.map(ix => pairsAgainst(ix, incoming, idCol, textCol, threshold))
+      val probes = indexes.zip(recipes).map { case (ix, r) =>
+        pairsWith(ix, r, incoming, idCol, textCol, threshold)
+      }
       val pairs = probes.map(_.pairs).reduce(_ unionAll _)
         .localCheckpoint() // materialize before releasing per-probe caches
       probes.foreach(_.unpersist())
       TextDedup.LshPairs(pairs,
         probes.map(_.droppedBuckets).sum, probes.map(_.prunedShingles).max)
     } else {
-      requireOneShingleSpace(metas, metasStops.map(_._2))
-      val stop = metasStops.head._2
-      val (inSh, inBanded) = signIncoming(base, stop, incoming, idCol, textCol)
+      requireOneShingleSpace(recipes)
+      val (m, stop) = recipes.head
+      val (inDocs, inBanded) = signIncoming(m, stop, incoming, idCol, textCol)
       val inCnt = inBanded.groupBy("band", "bucket").agg(count(lit(1)).as("cnt_i"))
       // stored entries of TOUCHED buckets only, all generations — the
       // cross-generation count pass never reads an unprobed bucket
@@ -650,27 +666,14 @@ object LshIndex {
       // (the compact counting rule — stored cnts are never trusted here)
       val counts = touched.groupBy("band", "bucket")
         .agg(count(lit(1)).as("cnt_g"), first("cnt_i").as("cnt_i"))
-      val droppedBuckets = counts
-        .filter(col("cnt_g") + col("cnt_i") > base.maxBucketSize).count()
+      val over = col("cnt_g") + col("cnt_i") > m.maxBucketSize
+      val droppedBuckets = counts.filter(over).count()
       val cands = touched
-        .join(counts.filter(col("cnt_g") + col("cnt_i") <= base.maxBucketSize)
-          .select("band", "bucket"), Seq("band", "bucket"))
+        .join(counts.filter(!over).select("band", "bucket"), Seq("band", "bucket"))
         .join(inBanded, Seq("band", "bucket"))
-        .select("id_existing", "id_incoming").distinct()
-      val docsSh = indexes.map(_.filter(col("band") === DocBand)
-          .select(col(idCol).as("id_existing"), col("sh").as("sh_a")))
-        .reduce(_ unionAll _)
-      val result = cands
-        .join(docsSh, "id_existing")
-        .join(inSh, "id_incoming")
-        .withColumn("jaccard", TextDedup.jaccard(col("sh_a"), col("sh_b")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_existing"), col("id_incoming"), col("jaccard"))
-        .persist()
+      val result = verify(cands, indexes, idCol, inDocs, threshold).persist()
       result.count()
-      touched.unpersist()
-      inBanded.unpersist()
-      inSh.unpersist()
+      Seq(touched, inBanded, inDocs).foreach(_.unpersist())
       TextDedup.LshPairs(result, droppedBuckets, stop.length)
     }
   }
@@ -692,46 +695,18 @@ object LshIndex {
     if (!globalCap)
       indexes.foldLeft(incoming)((acc, ix) =>
         dedupAgainst(ix, acc, idCol, textCol, threshold))
-    else {
-      val pairs = pairsAgainstMany(indexes, incoming, idCol, textCol, threshold,
-        globalCap = true)
-      val dupIds = pairs.pairs.select(col("id_incoming").as(idCol))
-        .distinct().localCheckpoint()
-      pairs.unpersist()
-      val th = Iterator.from(0).map(i => s"__th$i")
-        .find(c => !incoming.columns.contains(c)).get
-      val exTextHashes = indexes.map(_.filter(col("band") === DocBand)
-          .select(col("text_md5").as(th))).reduce(_ unionAll _)
-        .na.drop().distinct()
-      incoming.join(dupIds, Seq(idCol), "left_anti")
-        .withColumn(th, md5(col(textCol)))
-        .join(exTextHashes, Seq(th), "left_anti")
-        .select(incoming.columns.map(col): _*)
-    }
-
-  /** The global-cap / merge compatibility bar: one cap and one frozen
-    * stop set across generations (stored shingles pruned by DIFFERENT
-    * stop sets live in different spaces — comparing or counting them
-    * together would be silently wrong).
-    */
-  private def requireOneShingleSpace(
-      metas: Seq[Meta], stops: Seq[Array[Long]]): Unit = {
-    require(metas.forall(_.maxBucketSize == metas.head.maxBucketSize),
-      "index generations disagree on maxBucketSize — a global cap needs one cap")
-    val sets = stops.map(_.sorted.toSeq)
-    require(sets.forall(_ == sets.head),
-      "index generations disagree on the frozen stop set — stored " +
-        "shingles were pruned differently and share no comparable space; " +
-        "rebuild the generations from raw text with one recipe")
-  }
+    else
+      without(incoming, idCol, textCol, pairsAgainstMany(indexes, incoming, idCol, textCol,
+        threshold, globalCap = true).pairs, Nil, indexes)
 
   /** Merge several compatible generations into ONE index artifact —
     * the consolidation step of the monthly-artifact lifecycle (probe
     * many small generations daily, merge to a single artifact monthly)
     * — WITHOUT touching any raw text: stored doc/entry rows are
-    * unioned and [[compact]] recomputes exact corpus-wide bucket
-    * counts, re-applies the shared cap, and rewrites the meta row's
-    * doc count. Generations must agree on build parameters, cap and
+    * unioned and recounted exactly as [[compact]] does (exact
+    * corpus-wide bucket counts, the shared cap re-applied, the doc count
+    * rewritten) under the first generation's recipe and stop set.
+    * Generations must agree on build parameters, cap and
     * frozen stop set (typed error otherwise — see the shingle-space
     * rule on [[pairsAgainstMany]]); ids must be unique across all
     * generations. With stop sets empty (the common case under the DF
@@ -741,22 +716,10 @@ object LshIndex {
     * generation's own build.
     */
   def mergeMany(indexes: Seq[DataFrame], idCol: String): DataFrame = {
-    require(indexes.nonEmpty, "need at least one index generation")
-    val metasStops = indexes.map(readMeta)
-    val metas = metasStops.map(_._1)
-    val base = metas.head
-    require(metas.forall(m => m.n == base.n && m.numPerm == base.numPerm &&
-      m.bands == base.bands && m.seed == base.seed &&
-      m.portableHash == base.portableHash),
-      "index generations disagree on build parameters " +
-        "(n/numPerm/bands/seed/hash mode) — rebuild with one recipe")
-    requireOneShingleSpace(metas, metasStops.map(_._2))
-    // head's meta row carries the shared recipe + stop set; compact
-    // recomputes nDocs, exact counts and the dropped-bucket tally from
-    // the unioned stored rows
-    val combined = indexes.head.filter(col("band") === MetaBand)
-      .unionAll(indexes.map(_.filter(col("band") =!= MetaBand)).reduce(_ unionAll _))
-    compact(combined, idCol)
+    val recipes = recipe(indexes)
+    requireOneShingleSpace(recipes)
+    compacted(indexes.map(_.filter(col("band") =!= MetaBand)).reduce(_ unionAll _), idCol,
+      recipes.head)
   }
 
   /** Compaction: repair what [[append]] leaves approximate — WITHOUT
@@ -786,49 +749,6 @@ object LshIndex {
     * Harmless (bounded by the cap, pairs still verified), and the
     * nightly [[build]] restores strict parity.
     */
-  def compact(index: DataFrame, idCol: String): DataFrame = {
-    val (m, stop) = readMeta(index)
-    val docs = index.filter(col("band") === DocBand)
-      .select(col(idCol), col("sh"), col("sig"), col("text_md5"))
-      .persist()
-    val nDocs = docs.count()
-
-    val entries = index.filter(col("band") >= 0)
-      .select(col(idCol), col("band"), col("bucket"))
-    // persisted: read by the dropped count AND the entry-row cap join in
-    // the final materialization (the build()-side rule, r14)
-    val counts = entries.groupBy("band", "bucket").agg(count(lit(1)).as("cnt"))
-      .persist()
-    val dropped = counts.filter(col("cnt") > m.maxBucketSize).count()
-    val entryRows = entries
-      .join(counts.filter(col("cnt") <= m.maxBucketSize), Seq("band", "bucket"))
-      .select(
-        col(idCol), col("band"), col("bucket"), col("cnt"),
-        lit(null).cast("array<bigint>").as("sh"),
-        lit(null).cast("array<bigint>").as("sig"),
-        lit(null).cast("string").as("text_md5"))
-
-    val idType = index.schema(idCol).dataType
-    val metaRow = index.sparkSession.range(1).select(
-      lit(null).cast(idType).as(idCol),
-      lit(MetaBand).as("band"),
-      lit(metaString(m.copy(nDocs = nDocs, builtDroppedBuckets = dropped))).as("bucket"),
-      lit(null).cast("long").as("cnt"),
-      typedLit(stop.toSeq).as("sh"),
-      lit(null).cast("array<bigint>").as("sig"),
-      lit(null).cast("string").as("text_md5"))
-    val docRows = docs.select(
-      col(idCol), lit(DocBand).as("band"),
-      lit(null).cast("string").as("bucket"), lit(null).cast("long").as("cnt"),
-      col("sh"), col("sig"), col("text_md5"))
-
-    val compacted = metaRow.select(index.columns.map(col): _*)
-      .unionAll(docRows.select(index.columns.map(col): _*))
-      .unionAll(entryRows.select(index.columns.map(col): _*))
-      .persist()
-    compacted.count()
-    counts.unpersist()
-    docs.unpersist()
-    compacted
-  }
+  def compact(index: DataFrame, idCol: String): DataFrame =
+    compacted(index, idCol, readMeta(index))
 }

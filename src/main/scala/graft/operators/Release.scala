@@ -293,25 +293,7 @@ object Release {
     // thread beside the ship chain (split -> de-leak -> data write ->
     // artifacts); see the class doc for the failure semantics.
     val (index, (m, g, c)) = DriverThreads.both(
-      () => {
-        // SEVER the built index from its curation lineage. The standing
-        // index is referenced many times by every future turn (meta
-        // read, stop set, bucket probe, doc join, append union), and
-        // Spark embeds the full LOGICAL plan at each reference BEFORE
-        // cache substitution — so with a live build-over-curateCore
-        // lineage the driver re-pays ANALYSIS of that whole tree per
-        // reference, multiplicatively through the turn's composition
-        // (measured: a 250-doc appendTurn spent ~2 min in driver
-        // planning with zero Spark jobs >0.3 s; the severed twin plans
-        // in seconds). The checkpoint stores exactly what the persist
-        // already holds; only the plan is truncated.
-        val built = LshIndex.build(corpus, idCol, textCol,
-          n = params.curation.shingleN, portableHash = params.curation.portableHash,
-          minDocFreq = params.curation.minDocFreq)
-        val index = built.localCheckpoint()
-        built.unpersist()
-        index
-      },
+      () => dedupIndex(corpus, idCol, textCol, params),
       () => {
         val split = Sampling.assignSplit(
           corpus, idCol, params.trainFrac, params.valFrac, SplitCol)
@@ -455,20 +437,9 @@ object Release {
       textCol: String,
       params: ReleaseParams = ReleaseParams()): IncrementalRelease = {
     val data = open(spark, path, idCol, textCol)
-    val built = LshIndex.build(data, idCol, textCol,
-      n = params.curation.shingleN, portableHash = params.curation.portableHash,
-      minDocFreq = params.curation.minDocFreq)
-    // sever the rebuilt index from `path/data`: the next [[appendTurn]]
-    // APPENDS there, and the write's refreshByPath would invalidate a
-    // merely-persisted index plan — recomputing it over a listing that
-    // includes the new batch, so the batch dedups against itself. The
-    // eager local checkpoint is the reopened twin of what a live state
-    // holds anyway (the grown signature frame in executor storage).
-    val index = built.localCheckpoint()
-    built.unpersist()
     IncrementalRelease(
       path,
-      index,
+      dedupIndex(data, idCol, textCol, params),
       reopenEvalGrams(spark, path, data, textCol),
       spark.read.parquet(s"$path/manifest").localCheckpoint(),
       spark.read.parquet(s"$path/cardix").localCheckpoint())
@@ -621,13 +592,38 @@ object Release {
         spark.read.parquet(s"$path/evalgrams"),
         TextAnalysis.dataCardIndex(keep, textCol, langCol),
         langCol)
-      val built = LshIndex.build(keep, idCol, textCol,
-        n = params.curation.shingleN, portableHash = params.curation.portableHash,
-        minDocFreq = params.curation.minDocFreq)
-      val index = built.localCheckpoint()
-      built.unpersist()
-      (IncrementalRelease(path, index, g, m, c), nLeaky)
+      (IncrementalRelease(path, dedupIndex(keep, idCol, textCol, params), g, m, c), nLeaky)
     }
+  }
+
+  /** The dedup index over `docs` under the release's curation recipe,
+    * held as an eager local checkpoint that SEVERS it from `docs`'
+    * lineage, for two reasons:
+    *   - The standing index is referenced many times by every future
+    *     turn (meta read, stop set, bucket probe, doc join, append
+    *     union), and Spark embeds the full LOGICAL plan at each
+    *     reference BEFORE cache substitution. With a live
+    *     build-over-curateCore lineage the driver re-pays ANALYSIS of
+    *     that whole tree per reference, multiplicatively through the
+    *     turn's composition (measured: a 250-doc appendTurn spent ~2 min
+    *     in driver planning with zero Spark jobs >0.3 s; the severed
+    *     twin plans in seconds).
+    *   - An index built over `path/data` must not read it again: the
+    *     next [[appendTurn]] APPENDS there, and the write's
+    *     refreshByPath would invalidate a merely-persisted index plan,
+    *     recomputing it over a listing that includes the new batch, so
+    *     the batch dedups against itself.
+    * The checkpoint stores exactly what the persist already holds; only
+    * the plan is truncated.
+    */
+  private def dedupIndex(docs: DataFrame, idCol: String, textCol: String,
+      params: ReleaseParams): DataFrame = {
+    val built = LshIndex.build(docs, idCol, textCol,
+      n = params.curation.shingleN, portableHash = params.curation.portableHash,
+      minDocFreq = params.curation.minDocFreq)
+    val index = built.localCheckpoint()
+    built.unpersist()
+    index
   }
 
   /** Consumer-side reopen: [[Manifest.readVerified]] under the

@@ -171,6 +171,24 @@ object TextDedup {
     }
   }
 
+  /** Drops the hashes in the stop set `stop` from a shingle-hash array. */
+  private[operators] def pruneUdf(stop: Array[Long]) = {
+    val stopSet = stop.toSet
+    udf((hs: Seq[Long]) => if (hs == null) null else hs.filterNot(stopSet.contains).toArray)
+  }
+
+  /** Bucket key of band `b` of signature column `sig`, `rows` signature
+    * values a band. Production uses codegen'd murmur3 of the signature slice
+    * (salted by the band index — an int key, the smallest shuffle).
+    * Portable mode keys on the literal signature values so an external
+    * engine groups bit-for-bit identically (no cross-engine hash, no
+    * collision asymmetry); only correctness replay pays the wider
+    * string key.
+    */
+  private[operators] def bandKey(sig: Column, rows: Int, portable: Boolean): Column => Column =
+    if (portable) b => concat_ws(",", transform(slice(sig, b * rows + 1, lit(rows)), _.cast("string")))
+    else b => hash(slice(sig, b * rows + 1, lit(rows)), b)
+
   /** The fixed-seed permutation parameters (a_j, b_j), public so an
     * external oracle can replay `sig_j = min (a_j*(h mod p) + b_j) mod p`
     * with the exact constants the kernel uses.
@@ -181,11 +199,13 @@ object TextDedup {
     * LSH buckets were discarded by `maxBucketSize` and how many shingles
     * by document-frequency pruning — "found all pairs" vs "found all
     * pairs outside degenerate buckets" must be distinguishable to the
-    * caller. `pairs` is persisted (the operator's intermediates are
-    * already released); call [[unpersist]] when consumed.
+    * caller. `pairs` is pinned (the operator's intermediates are
+    * already released): persisted, or a local checkpoint where several
+    * index generations' pairs are unioned; [[unpersist]] releases
+    * either once consumed.
     */
   final case class LshPairs(pairs: DataFrame, droppedBuckets: Long, prunedShingles: Int) {
-    def unpersist(): Unit = pairs.unpersist()
+    def unpersist(): Unit = graft.Pins.release(pairs)
   }
 
   /** LSH candidate pairs from banded MinHash signatures: signatures agree
@@ -348,24 +368,11 @@ object TextDedup {
       }
     val sh =
       if (stop.isEmpty) shCached
-      else {
-        val stopSet = stop.toSet
-        val pruneF = udf((hs: Seq[Long]) =>
-          if (hs == null) null else hs.filterNot(stopSet.contains).toArray)
-        // filled by the first bucket-size aggregate, from shCached
-        // (which the stop pass above filled; released at the end)
-        shCached.withColumn("__sh", pruneF(col("__sh"))).persist()
-      }
+      // filled by the first bucket-size aggregate, from shCached
+      // (which the stop pass above filled; released at the end)
+      else shCached.withColumn("__sh", pruneUdf(stop)(col("__sh"))).persist()
 
-    // Band bucket key: production uses codegen'd murmur3 of the signature
-    // slice (salted by band idx — int key, smallest shuffle). Portable
-    // mode keys on the literal signature values so an external engine
-    // groups bit-for-bit identically (no cross-engine hash, no collision
-    // asymmetry); only correctness replay pays the wider string key.
-    val bucketOf: Column => Column =
-      if (portableHash) b =>
-        concat_ws(",", transform(slice(col("__sig"), b * rows + 1, lit(rows)), _.cast("string")))
-      else b => hash(slice(col("__sig"), b * rows + 1, lit(rows)), b)
+    val bucketOf = bandKey(col("__sig"), rows, portableHash)
     val banded = sh.select(
       col(idCol) +: sideCols.map(col) :+
         udf(sigFromHashesKernel(numPerm, seed)).apply(col("__sh")).as("__sig"): _*)

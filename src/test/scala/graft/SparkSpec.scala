@@ -46,6 +46,18 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
 
+  /** Ids of the RDDs that the local checkpoints `df` reads hold in
+    * executor storage.
+    */
+  def checkpointRdds(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+
+  /** The ids of `rdds` still in executor storage. */
+  def stillPersisted(rdds: Seq[Int]): Seq[Int] =
+    rdds.filter(spark.sparkContext.getPersistentRDDs.contains)
+
   /** `body`'s result and the number of Spark jobs it started. Counted by
     * a listener over a job group set on the calling thread for the
     * duration of `body`, so jobs that other suites run concurrently on

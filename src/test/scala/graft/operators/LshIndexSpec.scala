@@ -388,6 +388,17 @@ class LshIndexSpec extends SparkSpec {
     ok.unpersist(); gen1.unpersist(); gen2.unpersist()
   }
 
+  test("unpersist releases the many-generation pairs' checkpoint") {
+    val (stored, batch, in) = LshCompatSpec.corpus(spark)
+    val gens = Seq(stored, batch).map(LshIndex.build(_, "doc_id", "text"))
+    val probe = LshIndex.pairsAgainstMany(gens, in, "doc_id", "text")
+    val rdds = checkpointRdds(probe.pairs)
+    assert(rdds.nonEmpty && stillPersisted(rdds) == rdds)
+    probe.unpersist()
+    assert(stillPersisted(rdds).isEmpty, s"still persisted after unpersist: $rdds")
+    gens.foreach(_.unpersist())
+  }
+
   test("readMeta fails typed on a frame that is not an index") {
     val notIndex = Seq((1, "x")).toDF("band", "bucket")
     val e = intercept[IllegalArgumentException] {

@@ -154,6 +154,17 @@ class LshStalenessSpec extends SparkSpec {
     built.unpersist(); stale.unpersist(); fresh.unpersist(); direct.unpersist()
   }
 
+  test("rebuildIfStale's quiet path reads the meta row once: the report's jobs and no more") {
+    val (stored, _, _) = LshCompatSpec.corpus(spark)
+    val built = LshIndex.build(stored, "doc_id", "text")
+    val (report, reportJobs) = jobsDuring(LshIndex.stalenessReport(built))
+    val ((same, quiet), quietJobs) =
+      jobsDuring(LshIndex.rebuildIfStale(built, stored, "doc_id", "text"))
+    assert(!report.crossed && (same eq built) && quiet == report)
+    assert(quietJobs == reportJobs, s"quiet path ran $quietJobs jobs, the report $reportJobs")
+    built.unpersist()
+  }
+
   test("SimHash capDriftReport: appends grow a bucket past the frozen cap unnoticed; compact repairs and silences") {
     // identical texts share every segment bucket; batch-local appended
     // counts (6 per batch) each stay under the cap of 10 while the TRUE

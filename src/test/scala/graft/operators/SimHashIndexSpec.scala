@@ -203,4 +203,16 @@ class SimHashIndexSpec extends SparkSpec {
     assert(e3.getMessage.contains("not a SimHash index"))
     gen1.unpersist(); gen2.unpersist()
   }
+
+  test("unpersist releases the many-generation pairs' checkpoint") {
+    val (stored, in) = HammingCompatSpec.textCorpus(spark)
+    val gens = Seq(stored.filter($"doc_id" < 20L), stored.filter($"doc_id" >= 20L))
+      .map(SimHashIndex.build(_, "doc_id", "text"))
+    val probe = SimHashIndex.pairsAgainstMany(gens, in, "doc_id", "text", maxDistance = 3)
+    val rdds = checkpointRdds(probe.pairs)
+    assert(rdds.nonEmpty && stillPersisted(rdds) == rdds)
+    probe.unpersist()
+    assert(stillPersisted(rdds).isEmpty, s"still persisted after unpersist: $rdds")
+    gens.foreach(_.unpersist())
+  }
 }
