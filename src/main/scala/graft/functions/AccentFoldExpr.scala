@@ -48,6 +48,45 @@ object AccentFoldExpr {
   }
 }
 
+/** Lowercasing, exactly as Spark's `lower` computes it on a UTF8_BINARY
+  * string under the default ICU case mappings
+  * (`spark.sql.icu.caseMappings.enabled`): ASCII inputs lowercase
+  * byte-wise, anything else goes through ICU's full case mapping (final
+  * sigma, `İ` -> `i̇`), with invalid UTF-8 first replaced the way
+  * `toValidString` replaces it. Spark's `lower` reaches that same
+  * mapping through `CollationAwareUTF8String`, whose class initializer
+  * builds a title-case lookup table over every code point: the first
+  * `lower` in a JVM pays it on an executor thread (about 2 s of one
+  * cold release turn). This expression never loads that class.
+  */
+case class LowerExpr(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+
+  override def nullSafeEval(input: Any): Any =
+    LowerExpr.lower(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.LowerExpr.lower($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): LowerExpr =
+    copy(child = newChild)
+}
+
+object LowerExpr {
+
+  /** Static kernel invoked from generated code. */
+  def lower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString))
+
+  def apply(c: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    ColumnBridge.column(LowerExpr(ColumnBridge.expression(c)))
+  }
+}
+
 /** X1 `normalize_text` as one fused kernel call: trim + accent-fold +
   * whitespace-collapse + lowercase in a single pass over the string,
   * instead of a 4-deep regexp/lower/trim expression chain that

@@ -45,14 +45,14 @@ object UrlOps {
 
   /** Lowercased scheme (`https`), null for non-URLs. */
   def scheme(url: Column): Column =
-    whenUrl(url, lower(regexp_extract(url, SchemeRe, 1)))
+    whenUrl(url, LowerExpr(regexp_extract(url, SchemeRe, 1)))
 
   /** Lowercased host: authority minus userinfo and port. Null for
     * non-URLs; empty string for a degenerate empty authority.
     */
   def host(url: Column): Column =
     whenUrl(url,
-      lower(regexp_extract(url, SchemePre + "(?:[^/?#@]*@)?([^/?#:]*)", 1)))
+      LowerExpr(regexp_extract(url, SchemePre + "(?:[^/?#@]*@)?([^/?#:]*)", 1)))
 
   /** [[host]] with one leading `www.` stripped — the per-site grouping
     * key (domain mixing, per-site caps). NOT a public-suffix
@@ -86,8 +86,8 @@ object UrlOps {
     * columns — whole-stage-codegen HOFs, no UDF.
     */
   def normalize(url: Column): Column = {
-    val sch = lower(regexp_extract(url, SchemeRe, 1))
-    val hst = lower(regexp_extract(url, SchemePre + "(?:[^/?#@]*@)?([^/?#:]*)", 1))
+    val sch = LowerExpr(regexp_extract(url, SchemeRe, 1))
+    val hst = LowerExpr(regexp_extract(url, SchemePre + "(?:[^/?#@]*@)?([^/?#:]*)", 1))
     val prt = regexp_extract(url, SchemePre + "(?:[^/?#@]*@)?[^/?#:]*:(\\d+)", 1)
     val keepPort = prt =!= "" &&
       !(sch === "http" && prt === "80") && !(sch === "https" && prt === "443")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.LowerExpr
+
 /** C4/Gopher-style heuristic document filters — the rule battery every
   * web-scale pretraining corpus goes through before dedup/decontam
   * (C4: boilerplate markers, brace/code leakage, terminal punctuation;
@@ -181,7 +183,7 @@ object CorpusFilters {
       (hashes + hellip + dots).cast("double") / wc.cast("double"))
       .otherwise(lit(0.0))
 
-    val lower = org.apache.spark.sql.functions.lower(c)
+    val lower = LowerExpr(c)
     val hasLorem = lower.contains("lorem ipsum").cast("int")
     val hasBrace = c.contains("{").cast("int")
     val hasJs = lower.contains("javascript").cast("int")

@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *  6. sample: deterministic per-language training mix;
   *  7. pack: concat-and-chunk token spans for the loader.
   *
-  * Everything stays one lazy DataFrame program except the two points
+  * Each stage boundary is an eager pin (see [[curateCore]]); between
+  * them every stage is one lazy DataFrame program, and the two points
   * that are semantically iterative (connected components) or
-  * pair-generating (LSH), which are internally bounded and checkpointed.
+  * pair-generating (LSH) are internally bounded and checkpointed.
   * Shuffle inventory: exact-dedup groupBy, LSH band bucket join, CC
   * rounds (decaying), contamination fold-back, packing shard window —
   * each justified in SCALE.md; nothing quadratic, nothing driver-side.
@@ -65,11 +66,26 @@ object Curation {
       minModelScore: Double = 0.5)
 
   /** Curated corpus (`docs`: one row per surviving doc with annotations
-    * and packed span) plus the stage caches backing it — call
-    * [[CurationResult.unpersist]] once consumed.
+    * and packed span) plus the stage pins backing it — call
+    * [[CurationResult.unpersist]] once consumed. A released result
+    * cannot be read again: `docs` reads the pinned rows, which are gone.
     */
   final case class CurationResult(docs: DataFrame, cached: Seq[DataFrame]) {
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+    def unpersist(): Unit = cached.foreach(graft.Pins.release)
+  }
+
+  /** `df` pinned (an eager `localCheckpoint`) and its row count, read
+    * off the pin's own fill (an observed counter, as
+    * [[TextDedup.countObserved]] reads one). The fill loses the counter
+    * when AQE finds the result empty and drops the observed subtree; the
+    * pin is then counted directly.
+    */
+  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val metric = s"curation_rows_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(metric, count(lit(1)).as("n"))
+    val pinned = observed.localCheckpoint()
+    (pinned, observed.queryExecution.observedMetrics.get(metric)
+      .map(_.getAs[Long]("n")).getOrElse(pinned.count()))
   }
 
   /** Stages 1-2 shared by both pipelines: annotate with the quality /
@@ -104,11 +120,19 @@ object Curation {
   /** Stage outputs that fan out to more than one consumer (the exact-
     * dedup survivors feed both LSH and canonicalize; the canonical set
     * feeds both contamination and the survivor join; the sample feeds
-    * its own packing join) are persisted MEMORY_AND_DISK — without
-    * this, every fan-out re-runs the whole upstream including the LSH
-    * pipeline (measured 5x end-to-end at sf0.1). On a real 100-TB run
-    * these are the natural stage boundaries to write to storage
-    * instead; the persists mark exactly those points.
+    * its own packing join) are PINNED: each is an eager
+    * `localCheckpoint` (MEMORY_AND_DISK), filled once where it is
+    * defined — without a pin, every fan-out re-runs the whole upstream
+    * including the LSH pipeline (measured 5x end-to-end at sf0.1).
+    * Every query past a pin analyses and plans a one-node leaf, not the
+    * annotate -> dedup -> LSH -> components -> contamination lineage,
+    * and the SQL status store records that leaf instead of a cached plan
+    * per execution. Once the next pin is filled, the call releases the
+    * pin (and the LSH pairs) it supersedes. What the pins give up —
+    * lineage, the columnar cache's compression — is in SCALE.md
+    * "Caching discipline". On a real 100-TB run these are the natural
+    * stage boundaries to write to storage instead; the pins mark
+    * exactly those points.
     *
     * Stages 1-5 — the decontaminated canonical corpus BEFORE the
     * training-mix sample and packing: what [[curate]] feeds its stage
@@ -116,8 +140,8 @@ object Curation {
     * with split assignment, split-leakage removal, and its own
     * mix+pack (a release must pin split membership before any
     * sampling, so the mix cannot run inside this call). The returned
-    * docs frame is persisted: every downstream consumer fans out over
-    * it at least twice.
+    * docs frame is the one pin the result holds: every downstream
+    * consumer fans out over it at least twice.
     */
   def curateCore(
       docs: DataFrame,
@@ -125,15 +149,13 @@ object Curation {
       idCol: String,
       textCol: String,
       params: CurationParams = CurationParams()): CurationResult = {
-    import org.apache.spark.storage.StorageLevel
     val id = col(idCol)
 
     // 1-2: annotate + quality gate (single scan, all per-row kernels)
     val annotated = annotateAndGate(docs, textCol, params)
 
     // 3: exact dedup on the text, deterministic least-id survivor
-    val exact = Dedup.exactByColumns(annotated, Seq(textCol), idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exact = Dedup.exactByColumns(annotated, Seq(textCol), idCol).localCheckpoint()
 
     // 4: near-dup clusters -> canonical survivor per cluster
     val pairs = TextDedup.minHashLshPairs(
@@ -147,7 +169,8 @@ object Curation {
     val canon = clustered
       .filter(col("is_canonical") === 1)
       .drop("cluster_id", "cluster_size", "is_canonical")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
+    Seq(exact, pairs).foreach(graft.Pins.release)
 
     // 5: decontaminate against the benchmark corpus
     val contam = Contamination.ngramContamination(
@@ -155,8 +178,9 @@ object Curation {
     val cleanDocs = canon
       .join(contam.filter(col("contamination") <= params.maxContamination)
         .select(id), Seq(idCol), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    CurationResult(cleanDocs, Seq(exact, canon, cleanDocs, pairs))
+      .localCheckpoint()
+    graft.Pins.release(canon)
+    CurationResult(cleanDocs, Seq(cleanDocs))
   }
 
   def curate(
@@ -166,13 +190,13 @@ object Curation {
       textCol: String,
       langCol: String,
       params: CurationParams = CurationParams()): CurationResult = {
-    import org.apache.spark.storage.StorageLevel
     val core = curateCore(docs, bench, idCol, textCol, params)
 
     // 6: deterministic training mix
     val sampled = Sampling.stratifiedSample(
       core.docs, idCol, langCol, params.sampleRates, params.defaultSampleRate)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
+    core.unpersist()
 
     // 7: packed spans for the loader
     val packed = sampled.join(
@@ -180,16 +204,18 @@ object Curation {
         params.packBudget, params.packShards)
         .drop("n_tokens"),
       Seq(idCol))
-    CurationResult(packed, core.cached :+ sampled)
+    CurationResult(packed, Seq(sampled))
   }
 
   /** One incremental (nightly-crawl) turn of the pipeline: `curated` =
     * the batch's training contribution (annotated, sampled), `kept` =
-    * the grown index to persist for tomorrow's turn.
+    * the grown index to persist for tomorrow's turn. `cached` holds the
+    * stage pin `curated` reads and the grown index; once released,
+    * neither frame can be read again.
     */
   final case class IncrementalResult(
       curated: DataFrame, kept: DataFrame, cached: Seq[DataFrame]) {
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+    def unpersist(): Unit = cached.foreach(graft.Pins.release)
   }
 
   /** Incremental curation over a PERSISTED kept-corpus index — stages
@@ -228,18 +254,18 @@ object Curation {
     val turn = incrementalTurn(index, LshIndex.readMeta(index), incoming, bench,
       idCol, textCol, langCol, params)
     val grown = turn.grow()
-    IncrementalResult(turn.curated, grown, turn.cached :+ grown)
+    IncrementalResult(turn.curated, grown, turn.pins :+ grown)
   }
 
   /** [[curateIncremental]] in two parts: `curated` (lazy, over the
-    * filled `clean` cache) and `grow`, which appends `clean` to the
-    * index and returns the persisted, materialized grown index. Neither
-    * part waits for the other, so a caller may run them side by side;
-    * `cached` holds the stage caches both read.
+    * `clean` pin) and `grow`, which appends `clean` to the index and
+    * returns the persisted, materialized grown index. Neither part
+    * waits for the other, so a caller may run them side by side; `pins`
+    * holds the one stage pin both read.
     */
   private[operators] final case class IncrementalTurn(
-      curated: DataFrame, grow: () => DataFrame, cached: Seq[DataFrame]) {
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+      curated: DataFrame, grow: () => DataFrame, pins: Seq[DataFrame]) {
+    def unpersist(): Unit = pins.foreach(graft.Pins.release)
   }
 
   /** The turn behind [[curateIncremental]], under the index recipe
@@ -254,7 +280,6 @@ object Curation {
       textCol: String,
       langCol: String,
       params: CurationParams): IncrementalTurn = {
-    import org.apache.spark.storage.StorageLevel
     val meta = recipe._1
     require(meta.n == params.shingleN && meta.portableHash == params.portableHash,
       s"index recipe (n=${meta.n}, portable=${meta.portableHash}) disagrees " +
@@ -266,8 +291,7 @@ object Curation {
     val annotated = annotateAndGate(incoming, textCol, params)
 
     // 3-4a within the batch: exact dedup + near-dup canonicalize
-    val exact = Dedup.exactByColumns(annotated, Seq(textCol), idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exact = Dedup.exactByColumns(annotated, Seq(textCol), idCol).localCheckpoint()
     val pairs = TextDedup.minHashLshPairs(
       exact, idCol, textCol, n = params.shingleN,
       threshold = params.lshThreshold, portableHash = params.portableHash,
@@ -280,21 +304,21 @@ object Curation {
       .filter(col("is_canonical") === 1)
       .drop("cluster_id", "cluster_size", "is_canonical")
 
-    // 4b: cross-corpus gate — only the batch pays shingling CPU
-    val novel = LshIndex.dedupAgainstWith(index, recipe, canon, idCol, textCol,
+    // 4b: cross-corpus gate — only the batch pays shingling CPU; the
+    // probe's drop set is released once the survivors are pinned
+    val (gated, dupIds) = LshIndex.dedupAgainstWith(index, recipe, canon, idCol, textCol,
         threshold = params.lshThreshold)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val novel = gated.localCheckpoint()
+    Seq(exact, pairs, dupIds).foreach(graft.Pins.release)
 
-    // 5: decontaminate against the benchmark corpus
+    // 5: decontaminate against the benchmark corpus. Both parts read the
+    // pin, and the grow step needs its count for the index's meta row.
     val contam = Contamination.ngramContamination(
       novel, bench, idCol, textCol, params.contaminationN)
-    val clean = novel
+    val (clean, nClean) = pinCounted(novel
       .join(contam.filter(col("contamination") <= params.maxContamination)
-        .select(id), Seq(idCol), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // filled once here: both parts read it, and the grow step needs the
-    // count for the index's meta row
-    val nClean = clean.count()
+        .select(id), Seq(idCol), "left_semi"))
+    graft.Pins.release(novel)
 
     // 6: deterministic training mix — today's contribution; the index
     // grows with today's curated docs (pre-sample)
@@ -302,7 +326,7 @@ object Curation {
       clean, idCol, langCol, params.sampleRates, params.defaultSampleRate)
     IncrementalTurn(sampled,
       () => LshIndex.appendWith(index, recipe, clean, nClean, idCol, textCol),
-      Seq(exact, novel, clean, pairs))
+      Seq(clean))
   }
 
   /** One incremental curation turn for MEDIA (binary content) — the
@@ -341,7 +365,6 @@ object Curation {
       idCol: String,
       fpCol: String,
       maxDistance: Int = 3): IncrementalResult = {
-    import org.apache.spark.storage.StorageLevel
     val m = HammingIndex.readMeta(index)
     require(maxDistance >= 0 && maxDistance < m.segments,
       s"index blocks on ${m.segments} segments: maxDistance must be < ${m.segments}, " +
@@ -361,8 +384,7 @@ object Curation {
     val decoded = incoming.filter(col(fpCol).isNotNull)
 
     // 2: exact dedup on the fingerprint, least-id survivor
-    val exact = Dedup.exactByColumns(decoded, Seq(fpCol), idCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val exact = Dedup.exactByColumns(decoded, Seq(fpCol), idCol).localCheckpoint()
 
     // 3: within-batch near-dup via a batch-local index self-probe;
     // (a, b) and (b, a) both appear — keep one direction
@@ -378,11 +400,12 @@ object Curation {
 
     // 4: cross-corpus gate — only the batch pays decode + segment CPU
     val novel = HammingIndex.dedupAgainst(index, canon, idCol, fpCol, maxDistance)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
+    Seq(exact, batchIdx, probe.pairs).foreach(graft.Pins.release)
 
     // 5: grow the kept-corpus artifact
     val grown = HammingIndex.append(index, novel, idCol, fpCol)
-    IncrementalResult(novel, grown, Seq(exact, batchIdx, probe.pairs, novel, grown))
+    IncrementalResult(novel, grown, Seq(novel, grown))
   }
 
   /** [[curateFingerprinted]] with the fingerprint stage included:

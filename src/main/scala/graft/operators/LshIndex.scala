@@ -255,22 +255,25 @@ object LshIndex {
 
   /** `incoming` minus the incoming ids of `pairs` and minus exact-text
     * matches of `stored`'s doc rows (the md5 rail), columns and order
-    * preserved. The drop set is materialized first, then `pairs` and the
+    * preserved, and the drop set that result reads. The drop set is
+    * materialized first (a `localCheckpoint`), then `pairs` and the
     * persists in `held` are released: a lazy anti-join against them
-    * would re-run the probe at the caller's first action.
+    * would re-run the probe at the caller's first action. The drop set
+    * stays pinned until the caller releases it.
     */
   private def without(incoming: DataFrame, idCol: String, textCol: String,
-      pairs: DataFrame, held: Seq[DataFrame], stored: Seq[DataFrame]): DataFrame = {
+      pairs: DataFrame, held: Seq[DataFrame], stored: Seq[DataFrame])
+      : (DataFrame, DataFrame) = {
     val dupIds = pairs.select(col("id_incoming").as(idCol)).distinct().localCheckpoint()
     (pairs +: held).foreach(_.unpersist())
     val th = Iterator.from(0).map(i => s"__th$i").find(c => !incoming.columns.contains(c)).get
     val exTextHashes = stored.map(_.filter(col("band") === DocBand)
         .select(col("text_md5").as(th))).reduce(_ unionAll _)
       .na.drop().distinct()
-    incoming.join(dupIds, Seq(idCol), "left_anti")
+    (incoming.join(dupIds, Seq(idCol), "left_anti")
       .withColumn(th, md5(col(textCol)))
       .join(exTextHashes, Seq(th), "left_anti")
-      .select(incoming.columns.map(col): _*)
+      .select(incoming.columns.map(col): _*), dupIds)
   }
 
   /** The recipes of `indexes`, which must agree on the build parameters
@@ -399,9 +402,11 @@ object LshIndex {
       idCol: String,
       textCol: String,
       threshold: Double = 0.8): DataFrame =
-    dedupAgainstWith(index, readMeta(index), incoming, idCol, textCol, threshold)
+    dedupAgainstWith(index, readMeta(index), incoming, idCol, textCol, threshold)._1
 
-  /** [[dedupAgainst]] under the recipe already read from `index`. The
+  /** [[dedupAgainst]] under the recipe already read from `index`, and the
+    * drop set the result reads: a `localCheckpoint` the caller releases
+    * ([[graft.Pins.release]]) once the result is materialized. The
     * pairs persist is filled by the drop set's job; it is there for its
     * statistics: the checkpoint then carries the materialized size, so
     * the anti-join is planned as a broadcast, as over any small cached
@@ -413,7 +418,7 @@ object LshIndex {
       incoming: DataFrame,
       idCol: String,
       textCol: String,
-      threshold: Double): DataFrame = {
+      threshold: Double): (DataFrame, DataFrame) = {
     val (m, stop) = recipe
     val (pairs, _, cached) =
       probe(index, m, stop, incoming, idCol, textCol, threshold, dropMetric = None)
@@ -697,7 +702,7 @@ object LshIndex {
         dedupAgainst(ix, acc, idCol, textCol, threshold))
     else
       without(incoming, idCol, textCol, pairsAgainstMany(indexes, incoming, idCol, textCol,
-        threshold, globalCap = true).pairs, Nil, indexes)
+        threshold, globalCap = true).pairs, Nil, indexes)._1
 
   /** Merge several compatible generations into ONE index artifact —
     * the consolidation step of the monthly-artifact lifecycle (probe

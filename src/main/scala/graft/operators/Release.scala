@@ -39,11 +39,13 @@ import graft.DriverThreads
   *
   * Scale shape: nothing here is new machinery — every stage is the
   * already-audited operator (shuffle inventory per stage in SCALE.md),
-  * and the only additions are the two stage-boundary persists (the
-  * corpus fans out to the leak join's two sides and to pack+write) and
-  * the final partitioned write. The write is the release's natural
-  * storage boundary; on a 100-TB run each stage boundary persist
-  * becomes a storage checkpoint the same way.
+  * and the only additions are the two stage-boundary pins (eager
+  * `localCheckpoint`s, as [[Curation.curateCore]]'s stages are: the
+  * mixed corpus fans out to pack and to the data card, the packed
+  * corpus to the write and the caller) and the final partitioned
+  * write. The write is the release's natural storage boundary; on a
+  * 100-TB run each stage-boundary pin becomes a storage checkpoint the
+  * same way.
   */
 object Release {
 
@@ -85,7 +87,9 @@ object Release {
 
   /** The shipped release: `docs` (what was written — curated,
     * split-assigned, de-leaked, mixed, packed), `manifest` and `card`
-    * as reopened from the written artifacts, and the stage caches.
+    * as reopened from the written artifacts, and the stage pins. Once
+    * released, `docs` cannot be read again (reopen the written release
+    * with [[open]]).
     */
   final case class ReleaseResult(
       docs: DataFrame,
@@ -93,7 +97,7 @@ object Release {
       card: DataFrame,
       path: String,
       cached: Seq[DataFrame]) {
-    def unpersist(): Unit = cached.foreach(_.unpersist())
+    def unpersist(): Unit = cached.foreach(graft.Pins.release)
   }
 
   /** Scrub-at-ingest (see [[ReleaseParams.piiMask]]): everything
@@ -126,7 +130,6 @@ object Release {
       langCol: String,
       path: String,
       params: ReleaseParams = ReleaseParams()): ReleaseResult = {
-    import org.apache.spark.storage.StorageLevel
     require(!docs.columns.contains(SplitCol),
       s"input already has a '$SplitCol' column — the release assigns its own")
     val spark = docs.sparkSession
@@ -151,20 +154,18 @@ object Release {
     val corpus = mixedTrain(
         deLeaked.filter(col(SplitCol) === "train"), idCol, langCol, params)
       .unionByName(deLeaked.filter(col(SplitCol) =!= "train"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
+    core.unpersist()
 
     // 5: pack the corpus that actually ships
     val packed = corpus.join(
       Packing.packSequences(corpus, idCol, textCol,
         params.curation.packBudget, params.curation.packShards),
       Seq(idCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
 
-    // 6: ship — data + manifest in one call, data card next to them.
-    // Deliberately SEQUENTIAL (unlike writeArtifacts below): the card
-    // reads the corpus persist that the data write is the first to
-    // fill — run concurrently they'd race the cold cache and duplicate
-    // the curation lineage; run in this order the card is a cache read.
+    // 6: ship — data + manifest in one call, data card next to them;
+    // both read pins, so neither recomputes the curation lineage.
     Manifest.writeWithManifest(
       packed, path, SplitCol, Seq(idCol, textCol), length(col(textCol)))
     TextAnalysis.dataCard(corpus, textCol, langCol)
@@ -175,7 +176,7 @@ object Release {
       spark.read.parquet(s"$path/manifest"),
       spark.read.parquet(s"$path/card"),
       path,
-      core.cached ++ Seq(corpus, packed))
+      Seq(corpus, packed))
   }
 
   /** Standing artifacts of an INCREMENTAL release (T84, r11) — the
@@ -258,7 +259,7 @@ object Release {
     * cheaper to drop at dedup than to re-judge at the gram gate) and
     * the held-out gram artifact.
     *
-    * Threads: the index build reads only the checkpointed curated
+    * Threads: the index build reads only the pinned curated
     * corpus, so it runs on one driver thread while the ship chain
     * (split, de-leak, data write, then the artifacts) runs on another;
     * the call returns once both have finished. Failure: the index is
@@ -282,13 +283,12 @@ object Release {
       s"input already has a '$SplitCol' column — the release assigns its own")
     val core = Curation.curateCore(
       scrubbed(docs, textCol, params), bench, idCol, textCol, params.curation)
-    // sever the curated corpus from its curation lineage: it is
-    // referenced five more times below (two split filters, both sides
-    // of the leak-gram join, the index build), and each reference
-    // re-embeds the full curateCore plan at analysis time (see the
-    // index comment below for the measured cost of leaving that live)
-    val corpus = core.docs.localCheckpoint()
-    core.unpersist()
+    // the curated corpus is already a pin, severed from its curation
+    // lineage: it is referenced five more times below (two split
+    // filters, both sides of the leak-gram join, the index build), and a
+    // live lineage would be re-analysed at each reference (see the index
+    // comment below for the measured cost)
+    val corpus = core.docs
     // The index build reads only `corpus`, so it runs on its own driver
     // thread beside the ship chain (split -> de-leak -> data write ->
     // artifacts); see the class doc for the failure semantics.
@@ -312,7 +312,7 @@ object Release {
         shipped.unpersist()
         artifacts
       })
-    graft.Pins.release(corpus)
+    core.unpersist()
     IncrementalRelease(path, index, g, m, c)
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.LowerExpr
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * language-ID, quality scoring, token statistics, document
   * fingerprinting. All pure `functions._` compositions (whole-stage
@@ -16,7 +18,7 @@ object TextAnalysis {
   def tokens(c: Column): Column = {
     val t = trim(c)
     when(c.isNull || t === "", array().cast("array<string>"))
-      .otherwise(split(lower(t), "\\s+"))
+      .otherwise(split(LowerExpr(t), "\\s+"))
   }
 
   /** Overlapping token-window chunking — the SPLIT-side complement of
@@ -716,7 +718,7 @@ object TextAnalysis {
       ref: org.apache.spark.sql.DataFrame,
       textCol: String,
       n: Int): LmModel = {
-    val lc = lower(col(textCol))
+    val lc = LowerExpr(col(textCol))
     val grams = ref.select(
       explode(
         when(length(lc) >= n,

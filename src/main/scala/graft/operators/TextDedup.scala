@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.LowerExpr
+
 /** Near-duplicate detection for text corpora — the dedup ladder of a
   * training-data pipeline: exact (see [[Dedup.exactByColumns]]),
   * n-gram Jaccard, MinHash+LSH, SimHash.
@@ -23,7 +25,7 @@ object TextDedup {
     * shingles for short docs and make all empty docs mutual near-dups.
     */
   def shingles(c: Column, n: Int): Column = {
-    val lc = lower(c)
+    val lc = LowerExpr(c)
     when(length(lc) >= n,
       array_distinct(
         transform(
@@ -579,7 +581,7 @@ object TextDedup {
     * reference; the hot path uses the kernel.
     */
   def shingleHashesPortableExpr(c: Column, n: Int): Column = {
-    val lc = lower(c)
+    val lc = LowerExpr(c)
     // Same short-text guard as [[shingles]]: sequence(1, 0) is the
     // DESCENDING [1, 0] in Spark, which would hash the truncated text
     // instead of producing the empty set the JVM kernel and the DuckDB

@@ -3,8 +3,10 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.{ExecutionEndQe, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.etl.{Fixtures, Pipeline}
@@ -38,6 +40,31 @@ class PlanSpec extends SparkSpec {
       ListenerBusDrain(s.sparkContext)
       (result, plans.asScala.toSeq)
     } finally s.listenerManager.unregister(listener)
+  }
+
+  /** `body`'s result and, for each query session `s` executed meanwhile
+    * (in execution order), its description and physical plan. With no
+    * job description set, a query is described by its action and call
+    * site, such as "localCheckpoint at Curation.scala:100".
+    */
+  private def describedDuring[T](s: SparkSession)(body: => T): (T, Seq[(String, SparkPlan)]) = {
+    val descriptions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val plans = new java.util.concurrent.ConcurrentSkipListMap[Long, SparkPlan]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => descriptions.put(x.executionId, x.description)
+        case x: SparkListenerSQLExecutionEnd =>
+          Option(ExecutionEndQe(x)).filter(_.sparkSession eq s)
+            .foreach(qe => plans.put(x.executionId, qe.executedPlan))
+        case _ =>
+      }
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      val result = body
+      ListenerBusDrain(s.sparkContext)
+      (result, plans.asScala.toSeq.map { case (id, p) => descriptions.get(id) -> p })
+    } finally s.sparkContext.removeSparkListener(listener)
   }
 
   test("entity pipeline: registry join is broadcast, dedup is the only wide exchange") {
@@ -375,18 +402,25 @@ class PlanSpec extends SparkSpec {
     // keep-best election) didn't smuggle a HOF form back in, and that
     // the 12-field signals struct is ONE kernel call in the gate, not
     // one per field reference.
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val res = Curation.curate(
+    // Each stage boundary is a pin, so what ran before it is planned,
+    // and inventoried, in the plan that filled the pin.
+    val s = spark.newSession()
+    val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val (res, described) = describedDuring(s)(Curation.curate(
       docs.filter(org.apache.spark.sql.functions.col("doc_id") % 97 =!= 0),
       docs.filter(org.apache.spark.sql.functions.col("doc_id") % 97 === 0),
       "doc_id", "text", "lang",
       Curation.CurationParams(
         minQuality = 0.0, maxRepetition = 1.0, maxContamination = 0.5,
-        useHeuristicGate = true, keepBestQuality = true))
+        useHeuristicGate = true, keepBestQuality = true)))
+    val pinFills = described.collect {
+      case (d, p) if d.startsWith("localCheckpoint at Curation.scala:") => p }
+    assert(pinFills.size == 4, s"curate pins exact, canon, clean and sampled: ${described.map(_._1)}")
 
-    // Transitive expression inventory: descend into cached relations
-    // (each counted ONCE — a cache is filled once however many times
-    // it is scanned) and AQE input plans.
+    // Transitive expression inventory over the pins' fill plans and the
+    // result's own: descend into cached relations (each counted ONCE —
+    // a cache is filled once however many times it is scanned) and AQE
+    // input plans.
     val seenCaches = scala.collection.mutable.Set.empty[Long]
     def planExprs(p: SparkPlan): Seq[Expression] = {
       // a file scan's dataFilters echo the parent Filter's condition
@@ -405,7 +439,7 @@ class PlanSpec extends SparkSpec {
       }
       here ++ below ++ p.children.flatMap(planExprs)
     }
-    val exprs = planExprs(res.docs.queryExecution.executedPlan)
+    val exprs = (pinFills :+ res.docs.queryExecution.executedPlan).flatMap(planExprs)
 
     // 1. no interpreted higher-order function anywhere in the composed
     //    tree — fingerprint/tokenStats/langId HOF forms are the
@@ -432,6 +466,77 @@ class PlanSpec extends SparkSpec {
     val udfs = exprs.collect { case u: ScalaUDF => u }
     assert(udfs.size <= 9, s"unexpected kernel call sites: ${udfs.size}")
     res.unpersist()
+  }
+
+  /** The nodes of `p`, descending into AQE input plans and, with
+    * `caches`, into the plans of the cached relations it scans.
+    */
+  private def planNodes(p: SparkPlan, caches: Boolean): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p +: ((p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case i: InMemoryTableScanExec if caches => Seq(i.relation.cacheBuilder.cachedPlan)
+      case _ => Seq.empty
+    }) ++ p.children ++ p.subqueries).flatMap(planNodes(_, caches))
+  }
+
+  private val curationParams = graft.operators.Curation.CurationParams(
+    minQuality = 0.0, maxRepetition = 1.0, maxContamination = 0.5)
+
+  test("curateCore's docs and an incremental turn's curated frame plan over one-node pins") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Curation, LshIndex}
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "lang", "text")
+    val bench = docs.filter(col("doc_id") % 97 === 0)
+    val core = Curation.curateCore(docs.filter(col("doc_id") % 3 === 0), bench,
+      "doc_id", "text", curationParams)
+    val coreLeaf = core.docs.queryExecution.logical
+    assert(coreLeaf.isInstanceOf[LogicalRDD],
+      s"curateCore's docs should be a one-node pin:\n$coreLeaf")
+    val index = LshIndex.build(core.docs, "doc_id", "text")
+    val turn = Curation.curateIncremental(index, docs.filter(col("doc_id") % 3 === 1),
+      bench, "doc_id", "text", "lang", curationParams)
+    val plan = turn.curated.queryExecution.withCachedData
+    val leaves = plan.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.isInstanceOf[LogicalRDD],
+      s"the curated batch should plan over the one clean pin:\n$plan")
+    assert(plan.collect { case r: InMemoryRelation => r }.isEmpty,
+      s"the curated batch scans a cache:\n$plan")
+    turn.unpersist(); index.unpersist(); core.unpersist()
+  }
+
+  test("no plan appendTurn executes scans a cache of the annotated batch") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, ScalaUDF}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Release
+    val s = spark.newSession()
+    val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "lang", "text")
+    val bench = docs.filter(col("doc_id") % 97 === 0)
+    val params = Release.ReleaseParams(curation = curationParams)
+    val path = java.nio.file.Files.createTempDirectory("plan_turn").toString + "/rel"
+    val st1 = Release.initIncremental(docs.filter(col("doc_id") % 3 === 0), bench,
+      "doc_id", "text", "lang", path, params)
+    val ((st2, shipped), executed) = executedDuring(s)(Release.appendTurn(
+      st1, docs.filter(col("doc_id") % 3 === 1), bench, "doc_id", "text", "lang", params))
+    assert(executed.nonEmpty, "sanity: appendTurn should execute queries")
+    // annotateAndGate's kernels: the quality and repetition UDF columns
+    def annotates(p: SparkPlan): Boolean = planNodes(p, caches = false).exists(
+      _.expressions.exists(_.exists {
+        case Alias(_: ScalaUDF, name) => name == "quality" || name == "repetition"
+        case _ => false
+      }))
+    val annotatedCaches = executed.flatMap(planNodes(_, caches = true))
+      .collect { case i: InMemoryTableScanExec => i.relation.cacheBuilder.cachedPlan }
+      .filter(annotates)
+    assert(annotatedCaches.isEmpty,
+      s"a cache holds the annotate stage:\n${annotatedCaches.mkString("\n")}")
+    st1.unpersist(); st2.unpersist(); graft.Pins.release(shipped)
   }
 
   test("normalize runs as a native expression, not a UDF") {

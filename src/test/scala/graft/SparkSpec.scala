@@ -31,11 +31,13 @@ object SparkSpec {
   }
 
   /** One job a spec observed: its start and end times (ms), the SQL
-    * execution it ran under and that execution's physical plan ("" when
-    * none), and the ids of the RDDs its stages compute.
+    * execution it ran under and that execution's physical plan and
+    * description ("" when none), and the ids of the RDDs its stages
+    * compute.
     */
   final case class JobRecord(
-      id: Int, start: Long, end: Long, execution: Option[Long], rdds: Set[Int], plan: String)
+      id: Int, start: Long, end: Long, execution: Option[Long], rdds: Set[Int], plan: String,
+      description: String = "")
 
   /** The local properties `SparkContext.setJobGroup` sets. */
   private val JobGroupId = "spark.jobGroup.id"
@@ -86,7 +88,10 @@ trait SparkSpec extends AnyFunSuite {
   /** `body`'s result and the jobs [[jobsDuring]] counts, in job order. */
   def jobRecordsDuring[T](body: => T): (T, Seq[SparkSpec.JobRecord]) = {
     val (result, jobs, executions) = observeJobs(body)
-    (result, jobs.map(j => j.copy(plan = j.execution.flatMap(executions.get).fold("")(_._2))))
+    (result, jobs.map { j =>
+      val (description, plan) = j.execution.flatMap(executions.get).getOrElse(("", ""))
+      j.copy(plan = plan, description = description)
+    })
   }
 
   /** `body`'s result, the jobs it started (in job order, `plan` not yet

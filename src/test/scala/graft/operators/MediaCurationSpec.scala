@@ -70,7 +70,6 @@ class MediaCurationSpec extends SparkSpec {
     val memIds = mem.curated.select("id").as[Long].collect().toSet
     val memDocs = docRows(mem.kept)
     val memMeta = HammingIndex.readMeta(mem.kept)
-    mem.unpersist()
 
     // fresh-session run off the reopened artifact
     val s2 = spark.newSession()
@@ -102,7 +101,8 @@ class MediaCurationSpec extends SparkSpec {
         .toDF("id", "content"),
       "id", "content", "image")
     assert(mem2.curated.isEmpty)
-    mem2.unpersist()
+    // released last: `mem.kept` reads the turn's pinned survivors
+    mem2.unpersist(); mem.unpersist()
   }
 
   test("curateMedia(audio): gain-scaled duplicate gated, new envelope survives") {

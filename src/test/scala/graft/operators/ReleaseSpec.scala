@@ -516,6 +516,25 @@ class ReleaseSpec extends SparkSpec {
     assert(ids.filter(live.contains).isEmpty, s"still persisted after unpersist: $ids")
   }
 
+  test("an append turn's curation pins and its probe's drop set are released with the states") {
+    val p = params.copy(mixAlpha = 1.0)
+    val st1 = Release.initIncremental(
+      smallTurn(0L), smallBench, "doc_id", "text", "lang", tmp("rel_turn_pins"), p)
+    val ((st2, shipped), jobs) = jobRecordsDuring(
+      Release.appendTurn(st1, smallTurn(1000L), smallBench, "doc_id", "text", "lang", p))
+    // each eager localCheckpoint pins the newest RDD its execution computes
+    def pinsFilledAt(file: String): Seq[Int] = jobs
+      .filter(_.description.startsWith(s"localCheckpoint at $file:"))
+      .groupBy(_.execution).values.map(_.flatMap(_.rdds).max).toSeq
+    val curation = pinsFilledAt("Curation.scala")
+    val dropSet = pinsFilledAt("LshIndex.scala")
+    assert(dropSet.size == 1, s"the turn's probe pins one drop set: $dropSet")
+    st1.unpersist(); st2.unpersist(); graft.Pins.release(shipped)
+    assert(stillPersisted(dropSet).isEmpty, s"the probe's drop set still persisted: $dropSet")
+    assert(curation.size == 3, s"the turn pins exact, novel and clean: $curation")
+    assert(stillPersisted(curation).isEmpty, s"curation pins still persisted: $curation")
+  }
+
   test("typed guard: input already carrying a split column") {
     val e = intercept[IllegalArgumentException] {
       Release.build(train.withColumn("split", lit("train")), bench,
