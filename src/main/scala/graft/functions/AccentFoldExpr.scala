@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -58,10 +58,17 @@ object AccentFoldExpr {
   * builds a title-case lookup table over every code point: the first
   * `lower` in a JVM pays it on an executor thread (about 2 s of one
   * cold release turn). This expression never loads that class.
+  *
+  * A non-string input is cast to a string first, as `lower` casts it.
+  * Two things `lower` honours are not honoured here: it always uses the
+  * ICU mapping, whatever `spark.sql.icu.caseMappings.enabled` says, and
+  * a collated input is cast to UTF8_BINARY and lowercased as that.
   */
-case class LowerExpr(child: Expression) extends UnaryExpression {
+case class LowerExpr(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
 
   override def dataType: DataType = StringType
+  // typed by inference: `AbstractDataType` is private to Spark's sql package
+  override def inputTypes = Seq(StringType)
   override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(input: Any): Any =

@@ -74,20 +74,6 @@ object Curation {
     def unpersist(): Unit = cached.foreach(graft.Pins.release)
   }
 
-  /** `df` pinned (an eager `localCheckpoint`) and its row count, read
-    * off the pin's own fill (an observed counter, as
-    * [[TextDedup.countObserved]] reads one). The fill loses the counter
-    * when AQE finds the result empty and drops the observed subtree; the
-    * pin is then counted directly.
-    */
-  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
-    val metric = s"curation_rows_${java.util.UUID.randomUUID()}"
-    val observed = df.observe(metric, count(lit(1)).as("n"))
-    val pinned = observed.localCheckpoint()
-    (pinned, observed.queryExecution.observedMetrics.get(metric)
-      .map(_.getAs[Long]("n")).getOrElse(pinned.count()))
-  }
-
   /** Stages 1-2 shared by both pipelines: annotate with the quality /
     * repetition kernels, gate on the thresholds, then the optional
     * heuristic rule battery and the optional learned-classifier gate —
@@ -210,8 +196,10 @@ object Curation {
   /** One incremental (nightly-crawl) turn of the pipeline: `curated` =
     * the batch's training contribution (annotated, sampled), `kept` =
     * the grown index to persist for tomorrow's turn. `cached` holds the
-    * stage pin `curated` reads and the grown index; once released,
-    * neither frame can be read again.
+    * stage pin both frames read and the grown index; once released,
+    * neither frame can be read again, not even by recomputing it. To
+    * carry `kept` into tomorrow's turn, pin it (`localCheckpoint`) or
+    * write it BEFORE [[unpersist]].
     */
   final case class IncrementalResult(
       curated: DataFrame, kept: DataFrame, cached: Seq[DataFrame]) {
@@ -242,6 +230,9 @@ object Curation {
     * tomorrow's duplicates, or the corpus drifts toward
     * double-representation. Rebuild the index on the compaction cadence
     * [[LshIndex.append]] documents.
+    *
+    * `kept` reads the turn's pinned survivors: pin or write it before
+    * [[IncrementalResult.unpersist]] (see [[IncrementalResult]]).
     */
   def curateIncremental(
       index: DataFrame,
@@ -315,9 +306,11 @@ object Curation {
     // pin, and the grow step needs its count for the index's meta row.
     val contam = Contamination.ngramContamination(
       novel, bench, idCol, textCol, params.contaminationN)
-    val (clean, nClean) = pinCounted(novel
+    val clean = novel
       .join(contam.filter(col("contamination") <= params.maxContamination)
-        .select(id), Seq(idCol), "left_semi"))
+        .select(id), Seq(idCol), "left_semi")
+      .localCheckpoint()
+    val nClean = clean.count()
     graft.Pins.release(novel)
 
     // 6: deterministic training mix — today's contribution; the index
@@ -358,6 +351,9 @@ object Curation {
     * cross-corpus blocking share one recall guarantee. Survivors keep
     * their fingerprint column as an annotation (the
     * `learned_quality` discipline).
+    *
+    * `kept` reads the turn's pinned survivors: pin or write it before
+    * [[IncrementalResult.unpersist]] (see [[IncrementalResult]]).
     */
   def curateFingerprinted(
       index: DataFrame,
@@ -365,7 +361,8 @@ object Curation {
       idCol: String,
       fpCol: String,
       maxDistance: Int = 3): IncrementalResult = {
-    val m = HammingIndex.readMeta(index)
+    val p = HammingIndex.Hamming.params(index)
+    val m = p.m
     require(maxDistance >= 0 && maxDistance < m.segments,
       s"index blocks on ${m.segments} segments: maxDistance must be < ${m.segments}, " +
         s"got $maxDistance")
@@ -398,13 +395,15 @@ object Curation {
       .filter(col("is_canonical") === 1)
       .drop("cluster_id", "cluster_size", "is_canonical")
 
-    // 4: cross-corpus gate — only the batch pays decode + segment CPU
-    val novel = HammingIndex.dedupAgainst(index, canon, idCol, fpCol, maxDistance)
-      .localCheckpoint()
-    Seq(exact, batchIdx, probe.pairs).foreach(graft.Pins.release)
+    // 4: cross-corpus gate — only the batch pays decode + segment CPU;
+    // the probe's drop set is released once the survivors are pinned
+    val (gated, dupIds) =
+      HammingIndex.Hamming.dedupAgainstWith(p, index, canon, idCol, fpCol, maxDistance)
+    val novel = gated.localCheckpoint()
+    Seq(exact, batchIdx, probe.pairs, dupIds).foreach(graft.Pins.release)
 
     // 5: grow the kept-corpus artifact
-    val grown = HammingIndex.append(index, novel, idCol, fpCol)
+    val grown = HammingIndex.Hamming.append(p, index, novel, idCol, fpCol)._1
     IncrementalResult(novel, grown, Seq(novel, grown))
   }
 
@@ -414,7 +413,8 @@ object Curation {
     * (energy-envelope eHash over decodable audio bytes, `ehash`
     * column). Typed error on anything else; video has no JDK decode
     * path ([[graft.multimodal.Multimodal.StubCodec]]) so it is
-    * deliberately NOT accepted here.
+    * deliberately NOT accepted here. As with [[curateFingerprinted]],
+    * pin or write `kept` before [[IncrementalResult.unpersist]].
     */
   def curateMedia(
       index: DataFrame,

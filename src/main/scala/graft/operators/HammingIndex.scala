@@ -211,12 +211,15 @@ object HammingIndex {
   }
 
   /** `incoming` minus the incoming ids of `probe`'s pairs, columns and
-    * order preserved.
+    * order preserved, and the drop set that result reads: a
+    * `localCheckpoint`, filled before the probe is released, that stays
+    * pinned until the caller releases it.
     */
-  private def without(incoming: DataFrame, idCol: String, probe: Probe): DataFrame = {
+  private def without(incoming: DataFrame, idCol: String, probe: Probe)
+      : (DataFrame, DataFrame) = {
     val dupIds = probe.pairs.select(col("id_incoming").as(idCol)).distinct().localCheckpoint()
     probe.unpersist()
-    incoming.join(dupIds, Seq(idCol), "left_anti").select(incoming.columns.map(col): _*)
+    (incoming.join(dupIds, Seq(idCol), "left_anti").select(incoming.columns.map(col): _*), dupIds)
   }
 
   /** The kernel's lifecycle for one fingerprint family. `name` is the
@@ -298,6 +301,14 @@ object HammingIndex {
 
     def dedupAgainst(p: Params, index: DataFrame, incoming: DataFrame, idCol: String, c: String,
         maxDistance: Int): DataFrame =
+      dedupAgainstWith(p, index, incoming, idCol, c, maxDistance)._1
+
+    /** [[dedupAgainst]] and the drop set its result reads, which the
+      * caller releases ([[graft.Pins.release]]) once the result is
+      * materialized.
+      */
+    def dedupAgainstWith(p: Params, index: DataFrame, incoming: DataFrame, idCol: String,
+        c: String, maxDistance: Int): (DataFrame, DataFrame) =
       without(incoming, idCol, pairsAgainst(p, index, incoming, idCol, c, maxDistance))
 
     /** The grown index (persisted) and its recipe. */
@@ -387,7 +398,7 @@ object HammingIndex {
           dedupAgainst(params(ix), ix, acc, idCol, c, maxDistance))
       else
         without(incoming, idCol,
-          pairsAgainstMany(indexes, incoming, idCol, c, maxDistance, globalCap = true))
+          pairsAgainstMany(indexes, incoming, idCol, c, maxDistance, globalCap = true))._1
   }
 
   /** Caller-supplied 64-bit fingerprints (this object's public API). */

@@ -50,6 +50,18 @@ class LowerExprSpec extends SparkSpec {
     assert(LowerExpr.lower(UTF8String.fromString("İ")).toString == "i\u0307")
   }
 
+  test("LowerExpr casts a non-string input as lower casts it") {
+    val df = Seq((12, 2.5, true), (-7, 1e20, false)).toDF("i", "d", "b")
+    Seq("i", "d", "b").foreach { c =>
+      assert(df.select(LowerExpr(col(c))).collect().toSeq ==
+        df.select(lower(col(c))).collect().toSeq, s"differs on column $c")
+    }
+    // a text operator handed a non-string column reads it as its string
+    val n = Seq(1234567L, 42L).toDF("n")
+    assert(n.select(TextDedup.shingles(col("n"), 3)).collect().toSeq ==
+      n.select(TextDedup.shingles(col("n").cast("string"), 3)).collect().toSeq)
+  }
+
   test("the text operators lowercase with LowerExpr, never with Spark's Lower") {
     val t = col("t")
     val built: Seq[(String, Column)] = Seq(

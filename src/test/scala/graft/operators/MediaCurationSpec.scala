@@ -70,6 +70,9 @@ class MediaCurationSpec extends SparkSpec {
     val memIds = mem.curated.select("id").as[Long].collect().toSet
     val memDocs = docRows(mem.kept)
     val memMeta = HammingIndex.readMeta(mem.kept)
+    // `kept` reads the turn's pins: pinned on its own, it outlives them
+    val memKept = mem.kept.localCheckpoint()
+    mem.unpersist()
 
     // fresh-session run off the reopened artifact
     val s2 = spark.newSession()
@@ -96,13 +99,12 @@ class MediaCurationSpec extends SparkSpec {
     // first-arrived across turns: tomorrow's near-dup of TODAY'S
     // survivor is gated by the grown artifact
     val mem2 = Curation.curateMedia(
-      mem.kept, // the grown artifact IS tomorrow's index
+      memKept, // the grown artifact IS tomorrow's index
       Seq((20L, img9x8((x, y) => if (x == 6 && y == 3) 220 else if (x < 4) 0 else 200)))
         .toDF("id", "content"),
       "id", "content", "image")
     assert(mem2.curated.isEmpty)
-    // released last: `mem.kept` reads the turn's pinned survivors
-    mem2.unpersist(); mem.unpersist()
+    mem2.unpersist(); graft.Pins.release(memKept)
   }
 
   test("curateMedia(audio): gain-scaled duplicate gated, new envelope survives") {
@@ -127,11 +129,20 @@ class MediaCurationSpec extends SparkSpec {
       (12L, keep.take(30)),                  // truncated -> undecodable
       (13L, "junk".getBytes)                 // not audio
     ).toDF("id", "content")
-    val r = Curation.curateMedia(index, batch, "id", "content", "audio")
-    assert(r.curated.select("id").as[Long].collect().toSet == Set(11L))
-    assert(HammingIndex.readMeta(r.kept).nDocs == 2L)
-    assert(docRows(r.kept) == Set((1L, hKeep), (11L, hFresh)))
+    // RDD ids grow monotonically: the turn's own RDDs all lie past this one
+    val mark = spark.sparkContext.emptyRDD[Int].id
+    val (r, jobs) = jobRecordsDuring {
+      val r = Curation.curateMedia(index, batch, "id", "content", "audio")
+      assert(r.curated.select("id").as[Long].collect().toSet == Set(11L))
+      assert(HammingIndex.readMeta(r.kept).nDocs == 2L)
+      assert(docRows(r.kept) == Set((1L, hKeep), (11L, hFresh)))
+      r
+    }
     r.unpersist()
+    // the turn leaves nothing persisted: its pins, the batch-local index
+    // and the cross-corpus probe's drop set are all released
+    val left = stillPersisted(jobs.flatMap(_.rdds).distinct.filter(_ > mark))
+    assert(left.isEmpty, s"persisted after the turn's release: $left")
   }
 
   test("degenerate turns: empty batch, all-duplicate batch, all-undecodable batch") {

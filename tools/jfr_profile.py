@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Attribute the CPU samples of a JFR recording of a Spark JVM.
 
-Reads execution samples as `jfr print --json` writes them and splits them
-two ways, separately for the driver's threads and the executor's task
-threads (in local mode both live in one JVM; a task thread is named
-"Executor task launch worker ..."):
+Reads the execution samples of a `.jfr` recording and splits them two
+ways, separately for the driver's threads and the executor's task threads
+(in local mode both live in one JVM; a task thread is named "Executor
+task launch worker ..."):
 
   * by Spark phase: analysis, optimizer, AQE, codegen generate, codegen
     compile, task (de)serialization, static init (a class initializer on
@@ -16,20 +16,48 @@ Record a run with the JDK's flight recorder, for example the benchmark:
 
     JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=/tmp/run.jfr,settings=profile" \\
         python3 perfbench/run.py --workload release_turn --seed 11 --seconds 1
-    jfr print --json --stack-depth 256 --events jdk.ExecutionSample /tmp/run.jfr > /tmp/run.json
-    python3 tools/jfr_profile.py /tmp/run.json
+    python3 tools/jfr_profile.py /tmp/run.jfr
 
-A `.jfr` argument is converted with that same `jfr print` command first.
-Seconds are samples times `--period-ms`, the sampling period of the
-recording's settings (20 ms under `default`, 10 ms under `profile`).
+Samples are read with `jfr print --json --stack-depth 256 --events
+jdk.ExecutionSample`. Seconds are samples times the sampling period the
+recording ran under (its `jdk.ActiveSetting` for jdk.ExecutionSample:
+20 ms under `default`, 10 ms under `profile`), which the JDK's `java`
+reads off the recording.
 """
 import argparse
 import collections
 import json
+import os
 import subprocess
-import sys
+import tempfile
 
 EXECUTOR_THREAD = "Executor task launch worker"
+TOP = 15     # rows per table
+LEAVES = 3   # leaf frames shown under each graft frame
+
+# `jfr print` writes an ActiveSetting's event type as a bare id, so the
+# id of jdk.ExecutionSample is looked up through the consumer API.
+PERIOD_JAVA = """
+import jdk.jfr.consumer.*;
+public class SamplePeriod {
+  public static void main(String[] a) throws Exception {
+    try (RecordingFile f = new RecordingFile(java.nio.file.Path.of(a[0]))) {
+      long id = f.readEventTypes().stream()
+        .filter(t -> t.getName().equals("jdk.ExecutionSample")).findFirst().get().getId();
+      while (f.hasMoreEvents()) {
+        RecordedEvent e = f.readEvent();
+        if (e.getEventType().getName().equals("jdk.ActiveSetting")
+            && e.getLong("id") == id && e.getString("name").equals("period"))
+          System.out.println(e.getString("value"));
+      }
+    }
+  }
+}
+"""
+UNIT_MS = {"ns": 1e-6, "us": 1e-3, "ms": 1.0, "s": 1000.0}
+# the JDK tools run without the recording options a run was started
+# with, or they would record themselves over the file they read
+JDK_ENV = {k: v for k, v in os.environ.items() if k != "JAVA_TOOL_OPTIONS"}
 
 # (phase, predicate over one frame's "class.method"), first match wins:
 # the most specific phase a sample is in, whatever runs it.
@@ -82,49 +110,53 @@ def first_graft(frames):
 
 
 def load(path):
-    if path.endswith(".jfr"):
-        raw = subprocess.run(
-            ["jfr", "print", "--json", "--stack-depth", "256",
-             "--events", "jdk.ExecutionSample", path],
-            check=True, stdout=subprocess.PIPE).stdout
-        doc = json.loads(raw)
-    elif path == "-":
-        doc = json.load(sys.stdin)
-    else:
-        with open(path) as fh:
-            doc = json.load(fh)
-    return [e for e in doc["recording"]["events"] if e.get("type") == "jdk.ExecutionSample"]
+    raw = subprocess.run(
+        ["jfr", "print", "--json", "--stack-depth", "256",
+         "--events", "jdk.ExecutionSample", path],
+        check=True, stdout=subprocess.PIPE, env=JDK_ENV).stdout
+    return json.loads(raw)["recording"]["events"]
 
 
-def table(title, counts, total, period_ms, limit):
+def period_ms(path):
+    """The one execution-sample period the recording ran under, in ms."""
+    with tempfile.TemporaryDirectory() as d:
+        src = os.path.join(d, "SamplePeriod.java")
+        with open(src, "w") as fh:
+            fh.write(PERIOD_JAVA)
+        out = subprocess.run(["java", src, path], check=True,
+                             stdout=subprocess.PIPE, text=True, env=JDK_ENV).stdout
+    periods = {line.strip() for line in out.splitlines() if line.strip()}
+    if len(periods) != 1:
+        raise SystemExit(f"expected one jdk.ExecutionSample period in {path}, got {sorted(periods)}")
+    value, unit = periods.pop().split()
+    return float(value) * UNIT_MS[unit]
+
+
+def table(title, counts, total, period):
     print(f"  {title}")
-    for key, n in counts.most_common(limit):
-        print(f"    {n:7d} {n * period_ms / 1000:8.2f} s {100.0 * n / max(total, 1):5.1f}%  {key}")
+    for key, n in counts.most_common(TOP):
+        print(f"    {n:7d} {n * period / 1000:8.2f} s {100.0 * n / max(total, 1):5.1f}%  {key}")
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("path", help="jfr print --json output, '-' for stdin, or a .jfr file")
-    ap.add_argument("--period-ms", type=float, default=10.0,
-                    help="sampling period of the recording (default 10, the profile settings)")
-    ap.add_argument("--top", type=int, default=15, help="rows per table (default 15)")
-    ap.add_argument("--leaves", type=int, default=3,
-                    help="leaf frames shown under each graft frame (default 3)")
-    a = ap.parse_args()
+    ap.add_argument("path", help="a .jfr recording")
+    path = ap.parse_args().path
+    period = period_ms(path)
 
     by_side = collections.defaultdict(list)
-    for e in load(a.path):
+    for e in load(path):
         side = "executor" if thread_of(e).startswith(EXECUTOR_THREAD) else "driver"
         by_side[side].append(frames_of(e))
 
+    print(f"sampling period {period:g} ms")
     for side in ("driver", "executor"):
         samples = by_side.get(side, [])
         total = len(samples)
-        print(f"{side}: {total} samples, {total * a.period_ms / 1000:.2f} s")
+        print(f"{side}: {total} samples, {total * period / 1000:.2f} s")
         if not total:
             continue
-        table("by phase", collections.Counter(phase_of(f) for f in samples),
-              total, a.period_ms, a.top)
+        table("by phase", collections.Counter(phase_of(f) for f in samples), total, period)
         graft = collections.Counter()
         leaves = collections.defaultdict(collections.Counter)
         for f in samples:
@@ -132,9 +164,9 @@ def main():
             graft[g] += 1
             leaves[g][f[0] if f else "?"] += 1
         print("  by first graft frame (leaf frames under it)")
-        for g, n in graft.most_common(a.top):
-            print(f"    {n:7d} {n * a.period_ms / 1000:8.2f} s {100.0 * n / total:5.1f}%  {g}")
-            for leaf, m in leaves[g].most_common(a.leaves):
+        for g, n in graft.most_common(TOP):
+            print(f"    {n:7d} {n * period / 1000:8.2f} s {100.0 * n / total:5.1f}%  {g}")
+            for leaf, m in leaves[g].most_common(LEAVES):
                 print(f"    {'':7s} {'':10s} {m:6d}  <- {leaf}")
 
 
